@@ -59,17 +59,33 @@ _FOLLOWUPS_CSV = f"{DATASETS_DIR}/followups_manual_entry.csv"
 _BT_LABELING_CSV = f"{DATASETS_DIR}/bt_special_effect_labeling.csv"
 
 
+def _require_csv(path: str) -> str:
+    """`path`, or a FileNotFoundError naming the env var that locates it
+    (instead of a JVM PATH_NOT_FOUND trace from the CSV scan)."""
+    if not os.path.isfile(path):
+        raise FileNotFoundError(
+            f"manual-table CSV {path} not found: set SPARK_GRAFT_REFERENCE_DATASETS "
+            "to the directory holding followups_manual_entry.csv and "
+            "bt_special_effect_labeling.csv"
+        )
+    return path
+
+
 def load_followups(spark: SparkSession) -> DataFrame:
     """Staged real followups_manual_entry.csv (latin-1, 15 columns)."""
     return stage_followups_file(
-        read_manual_entry_csv(spark, _FOLLOWUPS_CSV, FOLLOWUPS_MANUAL_ENTRY_FILE)
+        read_manual_entry_csv(
+            spark, _require_csv(_FOLLOWUPS_CSV), FOLLOWUPS_MANUAL_ENTRY_FILE
+        )
     )
 
 
 def load_bt_labeling(spark: SparkSession) -> DataFrame:
     """Staged real bt_special_effect_labeling.csv (trailing-comma layout)."""
     return stage_bt_labeling(
-        read_manual_entry_csv(spark, _BT_LABELING_CSV, BT_SPECIAL_EFFECT_LABELING_FILE)
+        read_manual_entry_csv(
+            spark, _require_csv(_BT_LABELING_CSV), BT_SPECIAL_EFFECT_LABELING_FILE
+        )
     )
 
 

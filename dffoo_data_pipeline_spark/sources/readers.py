@@ -18,67 +18,58 @@ from dffoo_data_pipeline_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Per-process parquet schema memo, keyed by resolved table path.  A bare
-# `spark.read.parquet(path)` runs a footer-reading schema-inference JOB at
-# DataFrame-construction time — ~0.25s + one Spark job per call on this
-# host (measured; guide §1.4/§6: metadata work is not engine work).  Every
-# query constructs its scans fresh, so repeated plans re-paid that job per
-# table per run.  r13 (verdict item 7): the first read no longer pays the
-# job either — `_footer_schema` reads the parquet footer DRIVER-SIDE
-# (pyarrow, local metadata only, no Spark job) and maps it through the
-# exact physical-type rules Spark's own inference applies under this
-# engine's session invariants (nanosAsLong ns→bigint, tz-less→TIMESTAMP_NTZ,
-# everything read-nullable), so the physical-type adaptivity the events
-# table needs survives (the declared schemas in schemas.py stay the
-# documented logical contract; frozen-schema reads would break the
-# variant-shape test fixtures, e.g. the 3-column lineitem in
-# test_properties.py).  Non-local paths or exotic types fall back to one
-# inference job, exactly the old behavior.  Schema only — never data,
-# never results: the scan itself re-reads the files on every execution.
-# Staleness (r12 ADVICE): entries carry an os.stat token of the path, so
-# an in-place rewrite with a new schema self-invalidates.
-_SCHEMA_CACHE: dict[str, tuple[tuple | None, object]] = {}
+# Per-process parquet schema memo: (path, nanosAsLong) -> (stat token,
+# schema).  A bare `spark.read.parquet(path)` runs a schema-inference Spark
+# job at DataFrame-construction time; every read in this package instead
+# passes an explicit schema from `parquet_schema`, so building a scan runs
+# no job before its sink.  Invariants:
+# - the schema comes from ONE parquet footer, read driver-side, and is
+#   mapped through the same physical-type rules Spark's own inference
+#   applies (pinned equal by
+#   tests/test_sources.py::test_footer_schema_matches_spark_inference);
+# - a path the footer map cannot cover (remote storage, unmapped types)
+#   falls back to Spark's inference job, never to a guess;
+# - entries hold schemas only, never rows or results, and carry a stat
+#   token of the path, so an in-place rewrite or a swapped-in directory
+#   re-derives the schema.
+_SCHEMA_CACHE: dict[tuple[str, bool], tuple[tuple | None, object]] = {}
 
-# Per-process scan-partition-count memo for `ensure_min_partitions`.
-# Keyed by the frame's SEMANTIC plan hash (r12 ADVICE: the old
-# (sorted inputFiles, min_parts) key collided between a raw 1-partition
-# scan and a post-shuffle frame over the same file set, so a hit could
-# skip a needed fan-out — serializing the Arrow stage onto one core — or
-# fire a redundant one; the partition count is a function of the plan,
-# so the plan's canonicalized hash is the correct key).  Same
-# metadata-only contract as _SCHEMA_CACHE: never rows, never results.
+# Per-process scan-partition-count memo for `ensure_min_partitions`, keyed
+# by the frame's semantic plan hash: the partition count is a function of
+# the plan, so two different plans over the same files never share an
+# entry.  Same metadata-only contract as _SCHEMA_CACHE.
 _PARTS_CACHE: dict[tuple, int] = {}
 
 
 def _stat_token(path: str) -> tuple | None:
-    """(mtime_ns, size) of a local path — the schema memo's staleness
-    token.  None for non-local/unstatable paths (those entries simply
-    never self-invalidate, the pre-r13 behavior)."""
+    """(inode, mtime_ns, size) of a local path — the schema memo's
+    staleness token.  None for non-local or unstatable paths (their
+    entries never self-invalidate)."""
     p = path[7:] if path.startswith("file://") else path
     try:
         st = os.stat(p)
-        return (st.st_mtime_ns, st.st_size)
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
     except OSError:
         return None
 
 
-def _footer_schema(path: str):
-    """Parquet schema via a DRIVER-SIDE footer read — no Spark job.
+def _footer_schema(path: str, nanos_as_long: bool):
+    """Parquet schema from one driver-side footer read — no Spark job.
 
-    Maps the arrow schema through the same rules Spark's parquet
-    inference applies under this engine's pinned session configs:
+    `path` is a parquet file, or a directory whose first data file (by
+    name) supplies the footer.  The arrow schema is mapped through the
+    rules Spark's parquet inference applies, with the physical type of
+    each leaf column read from the same footer:
 
-    - timestamp[ns] → bigint  (``nanosAsLong=true`` is set by load_table)
+    - physical INT96 → TIMESTAMP (Spark's default ``outputTimestampType``;
+      arrow reports it as timestamp[ns], indistinguishable by type alone)
+    - INT64 timestamp[ns] → bigint when ``nanos_as_long`` (the session's
+      ``spark.sql.legacy.parquet.nanosAsLong``); otherwise unmapped
     - timestamp with a zone → TIMESTAMP; zone-less → TIMESTAMP_NTZ
-      (``parquet.inferTimestampNTZ`` is on by default in Spark 4)
-    - every field read-nullable (Spark converts all parquet columns to
-      nullable for compatibility)
+    - every field read-nullable, as Spark converts all parquet columns
 
-    Returns None when the path is not a local parquet file/dir or a type
-    falls outside the verified map — callers then run the one-job Spark
-    inference, the pre-r13 behavior.  The mapping is pinned equal to
-    Spark's inference for every driver table and fixture variant by
-    tests/test_sources.py::test_footer_schema_matches_spark_inference.
+    Returns None when the path is not a local parquet file or directory,
+    or a type falls outside the map; callers then run Spark's inference.
     """
     p = path[7:] if path.startswith("file://") else path
     if "://" in p:
@@ -87,6 +78,7 @@ def _footer_schema(path: str):
         datafiles = sorted(
             f for f in os.listdir(p)
             if not f.startswith(("_", ".")) and not f.endswith(".crc")
+            and os.path.isfile(os.path.join(p, f))
         )
         if not datafiles:
             return None
@@ -96,14 +88,36 @@ def _footer_schema(path: str):
     try:
         import pyarrow.parquet as papq
 
-        arrow = papq.read_schema(p)
+        with papq.ParquetFile(p) as pf:
+            arrow = pf.schema_arrow
+            physical_types = [
+                pf.schema.column(i).physical_type for i in range(pf.metadata.num_columns)
+            ]
     except Exception:
         return None
+    # leaf columns in footer order = depth-first order of the arrow leaves
+    leaves = iter(physical_types)
     from pyspark.sql import types as T
 
     import pyarrow as pa
 
     def conv(t):
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            elem = conv(t.value_type)
+            return T.ArrayType(elem, True) if elem is not None else None
+        if pa.types.is_struct(t):
+            fields = []
+            for i in range(t.num_fields):
+                f = t.field(i)
+                ft = conv(f.type)
+                if ft is None:
+                    return None
+                fields.append(T.StructField(f.name, ft, True))
+            return T.StructType(fields)
+        if pa.types.is_map(t):
+            kt, vt = conv(t.key_type), conv(t.item_type)
+            return T.MapType(kt, vt, True) if kt is not None and vt is not None else None
+        physical = next(leaves, None)
         if pa.types.is_boolean(t):
             return T.BooleanType()
         if pa.types.is_int8(t):
@@ -127,25 +141,12 @@ def _footer_schema(path: str):
         if pa.types.is_decimal(t):
             return T.DecimalType(t.precision, t.scale)
         if pa.types.is_timestamp(t):
+            if physical == "INT96":
+                return T.TimestampType()
             if t.unit == "ns":
-                return T.LongType()  # session pins nanosAsLong=true
+                return T.LongType() if nanos_as_long else None
             return T.TimestampType() if t.tz else T.TimestampNTZType()
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            elem = conv(t.value_type)
-            return T.ArrayType(elem, True) if elem is not None else None
-        if pa.types.is_struct(t):
-            fields = []
-            for i in range(t.num_fields):
-                f = t.field(i)
-                ft = conv(f.type)
-                if ft is None:
-                    return None
-                fields.append(T.StructField(f.name, ft, True))
-            return T.StructType(fields)
-        if pa.types.is_map(t):
-            kt, vt = conv(t.key_type), conv(t.item_type)
-            return T.MapType(kt, vt, True) if kt is not None and vt is not None else None
-        return None  # uint/int96/nested-exotic: fall back to Spark inference
+        return None  # uint and other unmapped types: Spark inference decides
 
     fields = []
     for name, typ in zip(arrow.names, arrow.types):
@@ -154,6 +155,26 @@ def _footer_schema(path: str):
             return None
         fields.append(T.StructField(name, ft, True))
     return T.StructType(fields)
+
+
+def parquet_schema(spark: SparkSession, path: str):
+    """Schema of the parquet file or directory at `path`, for
+    ``spark.read.schema(...)``: the memo when its stat token still
+    matches, else one driver-side footer read, else (remote path or
+    unmapped type) Spark's own inference job.  Partition columns of a
+    partitioned directory are not part of it; Spark appends them from
+    the directory names at scan time."""
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    key = (path, nanos)
+    tok = _stat_token(path)
+    cached = _SCHEMA_CACHE.get(key)
+    if cached is not None and cached[0] == tok:
+        return cached[1]
+    schema = _footer_schema(path, nanos)
+    if schema is None:
+        schema = spark.read.parquet(path).schema  # Spark's inference job
+    _SCHEMA_CACHE[key] = (tok, schema)
+    return schema
 
 
 def load_table(
@@ -191,16 +212,7 @@ def load_table(
     # tz-invariant; this makes both variants driver-tz-proof.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    tok = _stat_token(path)
-    cached = _SCHEMA_CACHE.get(path)
-    if cached is not None and cached[0] == tok:
-        schema = cached[1]
-    else:
-        schema = _footer_schema(path)  # driver-side footer read, no job
-        if schema is None:
-            schema = spark.read.parquet(path).schema  # one-job fallback
-        _SCHEMA_CACHE[path] = (tok, schema)
-    df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -239,14 +251,13 @@ def ensure_min_partitions(df: DataFrame, *cols: str, min_parts: int | None = Non
     """
     min_parts = min_parts or df.sparkSession.sparkContext.defaultParallelism
     # `df.rdd` runs the full physical planner on every fresh frame
-    # (~0.1-0.2s of driver time per call on this host); the partition
-    # count of a frame is a function of its PLAN and the session's split
-    # config, so memoize it per canonicalized plan hash (semanticHash —
-    # analysis already ran at construction, so the hash is a cheap py4j
-    # call, not a planner run).  r12 ADVICE: the old inputFiles-based key
-    # collided between a raw 1-partition scan and a derived/post-shuffle
-    # frame over the same files, silently skipping or duplicating the
-    # fan-out.  A stale memo can only mis-decide the fan-out (perf,
+    # (~0.1-0.2 s of driver time per call); the partition count of a
+    # frame is a function of its PLAN and the session's split config, so
+    # memoize it per canonicalized plan hash (semanticHash — analysis
+    # already ran at construction, so the hash is a cheap py4j call, not
+    # a planner run).  A key on the input files alone would collide
+    # between a raw 1-partition scan and a post-shuffle frame over the
+    # same files.  A stale memo can only mis-decide the fan-out (perf,
     # never correctness): the repartition itself is what guarantees
     # layout, not the probe.
     key = None

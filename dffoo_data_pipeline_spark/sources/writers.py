@@ -22,7 +22,15 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dffoo_data_pipeline_spark.sources.readers import parquet_schema
+
 _RUN_ID_RE = re.compile(r"[A-Za-z]*\d+")
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Scan a parquet table with its footer schema: building the frame
+    runs no Spark job (see readers.parquet_schema)."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def _swap_in(staging: str, path: str) -> None:
@@ -122,18 +130,45 @@ def format_run_id(seq: int, prefix: str = "r", width: int = 6) -> str:
     return f"{prefix}{seq:0{width}d}"
 
 
+def _run_ids(spark: SparkSession, path: str) -> list[str]:
+    """Run ids of a run-stamped table: the names of its ``run_id=<id>``
+    child directories, listed through the path's Hadoop FileSystem (one
+    code path for local and remote storage; no Spark job).  Only run
+    directories are read — files, hidden/staging entries and names that
+    are not valid run ids are skipped."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(root, "run_id=*")) or []
+    names = [st.getPath().getName()[len("run_id="):] for st in found if st.isDirectory()]
+    return [r for r in names if _RUN_ID_RE.fullmatch(r)]
+
+
 def read_latest_run(spark: SparkSession, path: str) -> DataFrame:
     """Latest-run view over a run-stamped append table (partition-pruned).
 
-    (length, value) max = numeric order for prefix+digits ids, so
-    ``r10`` > ``r2`` even though plain lexicographic MAX would say
-    otherwise; zero-padded ids (`format_run_id`) order identically."""
-    runs = spark.read.parquet(path).select("run_id").distinct()
-    latest = runs.agg(
-        F.max(F.struct(F.length("run_id").alias("l"), F.col("run_id").alias("r")))
-    ).collect()[0][0]["r"]
-    # equality filter on the partition column ⇒ partition pruning at scan
-    return spark.read.parquet(path).where(F.col("run_id") == latest)
+    Invariants: no Spark job runs before the caller's sink — the latest
+    run comes from the directory listing (`_run_ids`) and the schema from
+    one footer of the latest run's directory; the scan keeps an equality
+    filter on the ``run_id`` partition column, so Spark prunes every
+    other run at the file listing.
+
+    Order: (length, value), which is numeric order for prefix+digits
+    ids, so ``r10`` > ``r2`` even though plain lexicographic MAX would
+    say otherwise; zero-padded ids (`format_run_id`) order identically.
+    Digit-only ids are partition-inferred as integers, so they order by
+    value and keep their inferred type in the returned frame.
+
+    Raises ValueError naming `path` when it holds no run partitions."""
+    runs = _run_ids(spark, path)
+    if not runs:
+        raise ValueError(f"{path} has no run_id=<id> partitions to read the latest run from")
+    if all(r.isdigit() for r in runs):
+        latest = max(runs, key=int)
+    else:
+        latest = max(runs, key=lambda r: (len(r), r))
+    schema = parquet_schema(spark, f"{path.rstrip('/')}/run_id={latest}")
+    return spark.read.schema(schema).parquet(path).where(F.col("run_id") == latest)
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
@@ -283,6 +318,12 @@ def upsert_by_key(
     plan — anti-join + union — is identical there, so swapping the sink
     for a MERGE INTO is a one-line change.
 
+    Invariants: the current table is read with its footer schema, so no
+    job runs before the rewrite; the key side is not de-duplicated,
+    because an anti-join tests existence only and duplicate keys cannot
+    change its output.  AQE picks a broadcast or shuffle join from
+    runtime sizes (a small update batch costs one broadcast job).
+
     Existence goes through `recover_swap` (heals an interrupted swap
     first) and never a bare try/except: treating a transient read error
     as "table never existed" would overwrite the table with one batch's
@@ -291,8 +332,8 @@ def upsert_by_key(
     if not recover_swap(path):
         updates.write.mode("overwrite").parquet(path)
         return
-    current = spark.read.parquet(path)  # real read errors must propagate
-    kept = current.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
+    current = _read_parquet(spark, path)  # real read errors must propagate
+    kept = current.join(updates.select(*key_cols), key_cols, "left_anti")
     merged = kept.unionByName(updates)
     # stage ADJACENT to the table (same filesystem → rename is atomic),
     # then promote by rename: never read and overwrite the same files in
@@ -320,8 +361,9 @@ def delete_by_key(
     floor without a table format's file index.
     """
     recover_swap(path)  # heal an interrupted swap before reading
-    current = spark.read.parquet(path)
-    k = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
+    current = _read_parquet(spark, path)
+    # anti- and semi-joins test existence only: duplicate keys are harmless
+    k = keys.select(F.col(keys.columns[0]).alias(key_col))
     kept = current.join(k, [key_col], "left_anti")
     # one semi-join count (key columns only reach the scan) instead of
     # counting both sides — the rewrite below is the second, final scan
@@ -333,10 +375,15 @@ def delete_by_key(
 
 
 def compact(spark: SparkSession, path: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
-    """Small-files compaction: rewrite a parquet directory into
+    """Small-files compaction: rewrite a parquet directory into at most
     ceil(total_bytes / target) files.  Streaming sinks and per-batch
     appends fragment tables; scan cost at 100 TB is dominated by file
-    count once files drop below ~100 MB.  Returns the new file count.
+    count once files drop below ~100 MB.  Returns the number of part
+    files actually written.
+
+    Invariants: one Spark job and no shuffle — the table is read with its
+    footer schema and the scan's partitions (each at most
+    ``spark.sql.files.maxPartitionBytes``) are merged by ``coalesce``.
     """
     import math
     import os
@@ -350,9 +397,10 @@ def compact(spark: SparkSession, path: str, target_file_bytes: int = 128 * 1024 
     )
     n = max(1, math.ceil(total / target_file_bytes))
     staging = f"{path.rstrip('/')}.__staging__"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(staging)
+    _read_parquet(spark, path).coalesce(n).write.mode("overwrite").parquet(staging)
+    written = sum(1 for f in os.listdir(staging) if f.endswith(".parquet"))
     _swap_in(staging, path)
-    return n
+    return written
 
 
 def write_jdbc_append(df: DataFrame, url: str, table: str, properties: dict) -> None:

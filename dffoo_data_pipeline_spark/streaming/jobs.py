@@ -101,13 +101,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same type adaptation as the batch reader so stream and oracle agree:
     INT64-nanos files are truncated to µs; TIMESTAMP(MICROS) files pass
-    through.  A one-off batch metadata read (footer only, no data scan)
-    decides which physical type the staged file carries.
+    through.  The batch file's footer schema (no Spark job) decides which
+    physical type the staged file carries.
     """
+    from dffoo_data_pipeline_spark.sources.readers import parquet_schema
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema["ts"].dataType
-    )
+    ts_type = parquet_schema(spark, f"{sf_dir.rstrip('/')}/events.parquet")["ts"].dataType
     raw = (
         spark.readStream.schema(_events_raw_schema(ts_type))
         .format("parquet")
@@ -1566,7 +1566,11 @@ def apply_cdc_batch(
     """
     from pyspark.sql import Window
 
-    from dffoo_data_pipeline_spark.sources.writers import _swap_in, recover_swap
+    from dffoo_data_pipeline_spark.sources.writers import (
+        _read_parquet,
+        _swap_in,
+        recover_swap,
+    )
 
     batch = batch.where(F.col(op_col).isNotNull() & F.col(seq_col).isNotNull())
     tie = F.xxhash64(*[F.col(c) for c in batch.columns])
@@ -1583,7 +1587,7 @@ def apply_cdc_batch(
     if not recover_swap(path):
         upserts.write.mode("overwrite").parquet(path)
         return
-    current = spark.read.parquet(path)  # real read errors must propagate
+    current = _read_parquet(spark, path)  # real read errors must propagate
     kept = current.join(touched, key_cols, "left_anti")
     staging = f"{path.rstrip('/')}.__staging__"
     kept.unionByName(upserts).write.mode("overwrite").parquet(staging)

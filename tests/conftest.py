@@ -14,6 +14,33 @@ if str(REPO) not in sys.path:
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+from dffoo_data_pipeline_spark.plans.manual_tables import DATASETS_DIR  # noqa: E402
+
+# Registered queries that read the reference's manual-table CSVs.
+REFERENCE_QUERIES = ("abilities_followups_enriched", "bt_labeling_corrections")
+
+
+def reference_present() -> bool:
+    """Whether the reference checkout's datasets directory exists
+    (SPARK_GRAFT_REFERENCE_DATASETS; its golden CSVs sit beside it)."""
+    return os.path.isdir(DATASETS_DIR)
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "reference: reads the reference checkout (SPARK_GRAFT_REFERENCE_DATASETS "
+        "and the golden CSVs beside it); skipped when it is absent",
+    )
+
+
+def pytest_runtest_setup(item):
+    if item.get_closest_marker("reference") and not reference_present():
+        pytest.skip(
+            f"reference datasets not found at {DATASETS_DIR} "
+            "(set SPARK_GRAFT_REFERENCE_DATASETS); reference files are not vendored"
+        )
+
 
 @pytest.fixture(scope="session")
 def spark():

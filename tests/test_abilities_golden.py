@@ -10,7 +10,9 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-GOLDEN_DIR = Path("/root/reference/character_ability_test_cases")
+from dffoo_data_pipeline_spark.plans.manual_tables import DATASETS_DIR
+
+GOLDEN_DIR = Path(DATASETS_DIR).parent / "character_ability_test_cases"
 CHARS = ["aerith", "astos", "auron", "lenna", "paine", "sherlotta", "warrioroflight"]
 
 
@@ -44,6 +46,7 @@ def parsed(spark):
     return out
 
 
+@pytest.mark.reference
 @pytest.mark.parametrize("char", CHARS)
 def test_parser_matches_reference_golden(parsed, char):
     expected = _golden_rows(char)
@@ -120,6 +123,7 @@ def test_seymour_synthetic_row(spark):
     assert cs["attribute_list"] == ["Magic", "FollowUp"]
 
 
+@pytest.mark.reference
 def test_pystr_serialization_matches_reference_csv(spark):
     """F9 parity: serializing the parsed attribute lists with pystr_list
     must reproduce the reference's raw_abilities.csv strings exactly
@@ -130,7 +134,7 @@ def test_pystr_serialization_matches_reference_csv(spark):
 
     from dffoo_data_pipeline_spark.plans.abilities import pystr_list
 
-    with open("/root/reference/datasets/raw_abilities.csv") as f:
+    with open(f"{DATASETS_DIR}/raw_abilities.csv") as f:
         csv_strings = sorted({r["attribute_list"] for r in csv.DictReader(f)})
     assert "['Melee']" in csv_strings and "[]" in csv_strings
     assert any(", " in s for s in csv_strings)  # multi-element form present

@@ -32,6 +32,17 @@ FIXTURE_CHARS = {
 }
 
 
+def test_missing_csv_names_the_env_var(spark, tmp_path, monkeypatch):
+    """Without the reference checkout the CSV-backed queries fail with an
+    error that says how to point them at the files, not a JVM trace."""
+    from dffoo_data_pipeline_spark.plans import manual_tables
+
+    monkeypatch.setattr(manual_tables, "_BT_LABELING_CSV", str(tmp_path / "missing.csv"))
+    with pytest.raises(FileNotFoundError, match="SPARK_GRAFT_REFERENCE_DATASETS"):
+        bt_labeling_corrections(spark, "")
+
+
+@pytest.mark.reference
 def test_followups_real_file_staging(spark):
     f = load_followups(spark).cache()
     assert f.count() == 206  # every CSV record survives the latin-1 read
@@ -47,6 +58,7 @@ def test_followups_real_file_staging(spark):
     f.unpersist()
 
 
+@pytest.mark.reference
 def test_bt_labeling_real_file_staging(spark):
     b = load_bt_labeling(spark).cache()
     assert b.count() == 138
@@ -65,6 +77,7 @@ def test_bt_labeling_real_file_staging(spark):
     b.unpersist()
 
 
+@pytest.mark.reference
 def test_followups_oracle_drop_contract():
     """The DuckDB oracle reads the followups CSV with ignore_errors=true
     (no latin-1 support in DuckDB 1.0).  That is only sound while every
@@ -85,6 +98,7 @@ def test_followups_oracle_drop_contract():
         assert all(max(line, default=0) <= 0x7F for line in fh)
 
 
+@pytest.mark.reference
 def test_bt_corrections_rules(spark):
     out = {
         (r.char_name, r.game_version): r
@@ -130,6 +144,7 @@ def test_effective_cap_tiers(spark):
     }
 
 
+@pytest.mark.reference
 def test_enrichment_joins_are_broadcast(spark):
     from dffoo_data_pipeline_spark.plans.manual_tables import (
         abilities_followups_enriched,

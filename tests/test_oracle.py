@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import REFERENCE_QUERIES
 from tests.oracle_utils import compare, duckdb_conn
 
 
@@ -27,7 +28,10 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", NAMES)
+@pytest.mark.parametrize(
+    "name",
+    [pytest.param(n, marks=pytest.mark.reference) if n in REFERENCE_QUERIES else n for n in NAMES],
+)
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     df = QUERIES[name](spark, sf_dir)
     if name not in ORACLES:

@@ -26,7 +26,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-REF = "/root/reference/datasets"
+from dffoo_data_pipeline_spark.plans.manual_tables import DATASETS_DIR as REF
+
+pytestmark = pytest.mark.reference
 
 _ABILITY_COLS = [
     "char_name", "ability_name", "ability_id", "main_target_hp_attacks",

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from dffoo_data_pipeline_spark.schemas import FOLLOWUPS_MANUAL_ENTRY_RAW
 from dffoo_data_pipeline_spark.sources.readers import (
     read_manual_entry_csv,
@@ -113,6 +115,7 @@ def test_jsonl_and_orc_round_trips(spark):
     assert sorted(map(tuple, back_o.collect())) == a
 
 
+@pytest.mark.reference
 def test_game_version_char2_constraint(spark):
     """CHARACTER(2) semantics from reference stg_abilities.sql:5-14: every
     game_version the pipeline emits is exactly 2 characters (GL/JP), across
@@ -123,6 +126,7 @@ def test_game_version_char2_constraint(spark):
 
     from dffoo_data_pipeline_spark.fixtures import ability_line_rows
     from dffoo_data_pipeline_spark.plans.abilities import ability_pipeline
+    from dffoo_data_pipeline_spark.plans.manual_tables import DATASETS_DIR
     from dffoo_data_pipeline_spark.schemas import ABILITY_HTML_LINES
 
     lines = spark.createDataFrame(ability_line_rows(), ABILITY_HTML_LINES)
@@ -131,7 +135,7 @@ def test_game_version_char2_constraint(spark):
         F.col("game_version").isNull() | (F.length("game_version") != 2)
     ).count()
     assert bad == 0
-    with open("/root/reference/datasets/raw_abilities.csv") as f:
+    with open(f"{DATASETS_DIR}/raw_abilities.csv") as f:
         assert {r["game_version"] for r in csv.DictReader(f)} == {"GL", "JP"}
 
 
@@ -239,14 +243,14 @@ def test_foreign_session_timezone_cannot_shift_results(spark, sf_dir):
 
 
 def test_footer_schema_matches_spark_inference(spark, tmp_path):
-    """_footer_schema (driver-side pyarrow footer read, r13: kills the
-    schema-inference Spark JOB on every load_table read) must equal
-    Spark's own parquet inference under this engine's session invariants
-    for every driver table AND the fixture variants the suite writes —
-    the nanos→bigint events variant, a 3-column lineitem, nested
-    arrays/structs.  Any divergence falls back to inference, so a gap
-    here is perf-only; equality is what lets the fast path carry every
-    read."""
+    """_footer_schema (the driver-side footer read that replaces Spark's
+    schema-inference job on every parquet read) must equal Spark's own
+    parquet inference for every driver table AND the fixture variants the
+    suite writes — the nanos→bigint events variant, a 3-column lineitem,
+    nested arrays/structs, and Spark's default INT96 timestamps (top-level
+    and nested).  An unmapped type falls back to inference, so a gap
+    there is perf-only; a WRONG mapping fails the scan, which is what the
+    equality here guards."""
     import pyarrow as pa
     import pyarrow.parquet as papq
 
@@ -255,7 +259,7 @@ def test_footer_schema_matches_spark_inference(spark, tmp_path):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def check(path):
-        got = _footer_schema(path)
+        got = _footer_schema(path, nanos_as_long=True)
         assert got is not None, f"footer path fell back for {path}"
         expect = spark.read.parquet(path).schema
         assert got == expect, f"{path}: {got} != {expect}"
@@ -275,6 +279,31 @@ def test_footer_schema_matches_spark_inference(spark, tmp_path):
         str(ns),
     )
     check(str(ns))
+    # without nanosAsLong Spark cannot read INT64 nanos as bigint: the
+    # footer map must not claim it can
+    assert _footer_schema(str(ns), nanos_as_long=False) is None
+
+    # Spark's default outputTimestampType: INT96, which arrow reports as
+    # timestamp[ns] just like the nanos variant above
+    int96 = str(tmp_path / "int96.parquet")
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.sql(
+            "SELECT 1L AS id, TIMESTAMP'2024-01-01 00:00:00' AS ts, "
+            "array(named_struct('t', TIMESTAMP'2024-01-02 00:00:00')) AS nested, "
+            "map('k', TIMESTAMP'2024-01-03 00:00:00') AS m"
+        ).coalesce(1).write.parquet(int96)
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    import glob
+
+    part = papq.ParquetFile(glob.glob(f"{int96}/*.parquet")[0])
+    assert part.schema.column(1).physical_type == "INT96"
+    check(int96)
+    assert _footer_schema(int96, nanos_as_long=False) == _footer_schema(
+        int96, nanos_as_long=True
+    )
 
     # variant-shape fixture (3-column lineitem written as a DIRECTORY by
     # a spark writer, like test_properties.py's integrity fixture)
@@ -301,7 +330,7 @@ def test_footer_schema_matches_spark_inference(spark, tmp_path):
 
 def test_schema_memo_self_invalidates_on_rewrite(spark, tmp_path):
     """An in-place path rewrite with a NEW schema must re-derive the
-    schema (r12 ADVICE: the old memo served the stale one)."""
+    schema, not serve the memoized one."""
     import time as _time
 
     from dffoo_data_pipeline_spark.sources.readers import load_table
@@ -320,9 +349,9 @@ def test_schema_memo_self_invalidates_on_rewrite(spark, tmp_path):
 
 def test_parts_memo_keyed_by_plan_not_files(spark, tmp_path):
     """A derived wide frame and a raw 1-partition scan over the SAME file
-    set must not share a partition-count memo entry (r12 ADVICE: the old
-    inputFiles key collided, so a cached wide count skipped the raw
-    scan's fan-out and serialized the Arrow stage onto one core)."""
+    set must not share a partition-count memo entry (a key on the input
+    files alone would collide, so a cached wide count would skip the raw
+    scan's fan-out and serialize the Arrow stage onto one core)."""
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
     p = str(tmp_path / "one.parquet")

@@ -166,8 +166,94 @@ def test_run_id_validation_and_numeric_order(spark):
     writers.write_run_stamped(_chars_df(spark, [("a", "GL", 10)]), path, "r10")
     got = writers.read_latest_run(spark, path).collect()
     assert [r.cap for r in got] == [10]
+    # digit-only ids: partition inference types them as integers, so they
+    # order by value and the latest-run frame keeps the inferred type
+    digits = tempfile.mkdtemp(prefix="sg_runid_digits_") + "/t"
+    writers.write_run_stamped(_chars_df(spark, [("a", "GL", 2)]), digits, "2")
+    writers.write_run_stamped(_chars_df(spark, [("a", "GL", 10)]), digits, "10")
+    latest = writers.read_latest_run(spark, digits)
+    assert [(r.cap, r.run_id) for r in latest.collect()] == [(10, 10)]
+    inferred = spark.read.parquet(digits).schema["run_id"].dataType
+    assert latest.schema["run_id"].dataType == inferred
     assert writers.format_run_id(42) == "r000042"
     assert not os.path.exists(path.rstrip("/") + ".__staging__")
+
+
+def test_read_latest_run_without_runs_names_the_path(spark, tmp_path):
+    import re
+
+    import pytest
+
+    plain = str(tmp_path / "plain")
+    spark.range(3).write.parquet(plain)
+    for path in (plain, str(tmp_path / "missing")):
+        with pytest.raises(ValueError, match=re.escape(path)):
+            writers.read_latest_run(spark, path)
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs started while `fn` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"writers-pin-{id(fn)}"
+    sc.setJobGroup(group, "writer job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_writer_reads_run_no_planning_jobs(spark, tmp_path):
+    """The load stage's writer-side reads run no Spark job before their
+    sink: the latest run comes from the directory listing and every
+    schema from a parquet footer.  Pinned on a small table: latest-run
+    read + noop sink = 1 job, compaction = 1 job (no shuffle), an upsert
+    onto an existing table at most 2 (key-side broadcast + rewrite)."""
+    raw, cur = str(tmp_path / "raw"), str(tmp_path / "cur")
+    for i, run in enumerate(["b000001", "b000002"]):
+        batch = spark.range(i * 100, i * 100 + 200, numPartitions=4)
+        writers.write_run_stamped(batch.selectExpr("id AS k", "id * 2 AS v"), raw, run)
+    writers.upsert_by_key(spark, spark.read.parquet(raw).where("run_id = 'b000001'"), cur, ["k"])
+
+    def read_latest():
+        writers.read_latest_run(spark, raw).write.mode("overwrite").format("noop").save()
+
+    assert _count_jobs(spark, read_latest) == 1
+    upsert = lambda: writers.upsert_by_key(spark, writers.read_latest_run(spark, raw), cur, ["k"])  # noqa: E731
+    assert _count_jobs(spark, upsert) <= 2
+    assert _count_jobs(spark, lambda: writers.compact(spark, cur)) == 1
+    got = {r.k: r.v for r in spark.read.parquet(cur).collect()}
+    assert got == {k: 2 * k for k in range(300)}
+
+
+def test_writers_round_trip_spark_default_timestamps(spark, tmp_path):
+    """Tables written with Spark's default INT96 timestamps go through the
+    whole writer path: run-stamped write → latest-run read, two upserts
+    (the second reads the INT96 table back through its footer schema) →
+    compaction → read back, timestamps intact."""
+    import datetime as dt
+
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        raw, cur = str(tmp_path / "raw"), str(tmp_path / "cur")
+        day = lambda d: dt.datetime(2024, 1, d)  # noqa: E731
+        batches = {
+            "r1": [(1, day(1), 1.0), (2, day(2), 2.0)],
+            "r2": [(2, day(3), 20.0), (3, day(4), 30.0)],
+        }
+        for run, rows in batches.items():
+            df = spark.createDataFrame(rows, "k long, ts timestamp, v double")
+            writers.write_run_stamped(df, raw, run)
+            latest = writers.read_latest_run(spark, raw)
+            assert sorted((r.k, r.ts, r.v) for r in latest.collect()) == rows
+            writers.upsert_by_key(spark, latest, cur, ["k"])
+        writers.compact(spark, cur)
+        got = sorted((r.k, r.ts, r.v, r.run_id) for r in spark.read.parquet(cur).collect())
+        assert got == [(1, day(1), 1.0, "r1"), (2, day(3), 20.0, "r2"), (3, day(4), 30.0, "r2")]
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
 
 
 def test_upsert_and_compact_leave_no_staging(spark):
