@@ -1446,11 +1446,10 @@ def shingle_containment_pairs(
 # the number of buckets grows with the corpus) and potentially quadratic
 # in near-duplicate density for the lossless prefix-filter audit — so an
 # UNCONDITIONAL broadcast trades the old corpus-broadcast scale bug for a
-# candidate-broadcast OOM on dup-heavy corpora (r12 verdict, what's-wrong
-# #1).  10M rows of two ids is tens-to-hundreds of MB built — comfortably
-# under the 8 GB / 512M-row broadcast relation cap with headroom for
-# string ids; override per deployment via
-# SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS.
+# candidate-broadcast OOM on dup-heavy corpora.  10M rows of two ids is
+# tens-to-hundreds of MB built — comfortably under the 8 GB / 512M-row
+# broadcast relation cap with headroom for string ids; override per
+# deployment via SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS.
 _VERIFY_BROADCAST_MAX_ROWS = 10_000_000
 
 
@@ -1469,17 +1468,23 @@ def _verify_exact_jaccard(
     attaches run as shuffled hash joins, whose build side is
     per-partition-bounded instead of whole-relation-in-every-executor.
     The corpus-sized shingle relation is NEVER the broadcast side in
-    either branch (the r12 fix), and the second attach stays a shuffled
-    hash join (sort-merge would re-sort doc-length arrays).
+    either branch, and the second attach stays a shuffled hash join
+    (sort-merge would re-sort doc-length arrays).  A value of
+    SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS that is not a non-negative
+    integer raises ValueError naming it, before any job runs.
     """
     import os
 
-    cand = cand.localCheckpoint(eager=False)
-    limit = int(
-        os.environ.get(
-            "SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS", str(_VERIFY_BROADCAST_MAX_ROWS)
-        )
+    raw = os.environ.get(
+        "SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS", str(_VERIFY_BROADCAST_MAX_ROWS)
     )
+    if not (raw.isascii() and raw.isdigit()):
+        raise ValueError(
+            f"SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS={raw!r}: expected a "
+            "non-negative integer row count"
+        )
+    limit = int(raw)
+    cand = cand.localCheckpoint(eager=False)
     lhs = F.broadcast(cand) if cand.count() <= limit else cand.hint("shuffle_hash")
     a = sh.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))

@@ -5,35 +5,49 @@ DataFrame) and ``ORACLES`` (name → DuckDB-runnable ANSI SQL).  The driver
 contract (`__spark_entry__.py`) aggregates them; tests replicate the
 driver's DuckDB comparison locally.
 
-Registration order matters: the correctness driver verifies roughly the
-first 50 entries of the registry per round.  ``_PRIORITY`` below front-
-loads the queries that have not yet earned a driver-green CORRECTNESS row
-(round 1 verified registry positions 0-49, i.e. the first 50 relational
-queries); everything verified in round 1 is appended afterwards in its
-original module order so it stays registered (its green row from r01
-stands).  Rotate this list each round until every query has a green row.
+Registration order matters: each correctness certification run covers
+the first 50 entries of the registry.  ``_PRIORITY`` below front-loads the
+queries that need a fresh certification; every other query follows in
+module order, so it stays registered and its existing certification
+stands.
 """
 
 from __future__ import annotations
 
-# Round-13 window (50 slots + overflow).  The r12 window came back all
-# green (47 oracled PASS + 3 rows-only, CORRECTNESS_r12.json).  This
-# rotation, per the r12 verdict item 9 (keep the rotation running; the
-# r07-stale oracled rows are next):
-# (a) first-certifies the 1 query NEW this round — similarity_pq_indexed,
-# the PQ persisted-codes steady-state path (r12 verdict item 6; same
-# oracle as similarity_pq_topk, so the driver value-checks that
-# persisting the codes changes nothing);
-# (b) promotes the r12 overflow queue IN ORDER: the remaining rows-only
-# freshness entries, the 8 relational-fix re-certs, then the r07-stale
-# oracled rows in registry order.
-# The last 10 overflow entries queue as r14's window base.  Everything
-# previously verified follows in module order via all_queries()'s tail
-# append, so its existing green row stands.
+# The first 50 entries are the certification window; the rest
+# queue for the next one.  Order: queries whose plan changed and that
+# no window has re-certified since, then queries whose oracle SQL was
+# rebuilt (same rows, new text), then the queue carried over from the
+# previous window, in its order.  Queries not listed follow in module
+# order and keep their existing certification.
 _PRIORITY = [
-    # ---- (a) NEW this round: the PQ persisted-codes path ----
+    # ---- plans rebuilt on the shared exact-truth helper ----
+    "similarity_lsh_recall_report",
+    "similarity_lsh_recall_sampled",
+    "similarity_lsh_multiprobe_recall_report",
+    "similarity_lsh_probe_recall_report",
+    "similarity_ivf_recall_report",
+    # ---- changed plans awaiting re-certification ----
+    "linkage_blocked_match",
+    "graph_pagerank_nations",
+    "graph_triangle_count",
+    "similarity_cosine_topk",
+    "similarity_int8_topk",
+    "events_ordered_funnel",
     "similarity_pq_indexed",
-    # ---- (b) the r12 overflow queue, promoted in order ----
+    # ---- oracle SQL rebuilt from shared templates, same rows ----
+    "similarity_lsh_topk",
+    "similarity_ivf_topk",
+    "similarity_lsh_multiprobe_topk",
+    "similarity_lsh_probe_topk",
+    "similarity_lsh_probe_indexed",
+    "streaming_ann_probe",
+    "similarity_ivfpq_recall_report",
+    "similarity_ivfpq_rerank_recall_report",
+    "dedup_ngram_jaccard_pairs",
+    "dedup_prefix_filter_pairs",
+    "dedup_lsh_verified",
+    # ---- carried-over queue ----
     "corpus_bpe_learn",
     "corpus_bpe_encode",
     "profile_approx_quantiles_lineitem",
@@ -48,19 +62,14 @@ _PRIORITY = [
     "scalar_map_functions",
     "orders_market_basket",
     "abilities_parse_scaled",
-    # (scalar_null_semantics, also relational-fixed, sits in the r07
-    # block below)
     "scalar_variant_extraction",
     "integrity_report",
     "scalar_null_semantics",
     "events_ks_test",
-    "dedup_prefix_filter_pairs",
     "text_sequence_packing",
-    "similarity_lsh_topk",
     "text_gopher_rules",
     "udaf_trimmed_mean_length",
     "curation_gate_overlap",
-    "dedup_lsh_verified",
     "curation_leakage_safe_split",
     "curation_k_anonymity",
     "curation_mix_temperature",
@@ -87,11 +96,8 @@ _PRIORITY = [
     "text_bm25_topk",
     "retrieval_hybrid_rrf",
     "text_classifier_train",
-    "graph_pagerank_nations",
-    "graph_triangle_count",
     "hierarchy_rollup_closure",
     "graph_khop_distances",
-    "linkage_blocked_match",
     "bt_labeling_corrections",
     "abilities_followups_enriched",
     "abilities_effective_cap",

@@ -17,7 +17,11 @@ from dffoo_data_pipeline_spark.functions import numeric as N
 from dffoo_data_pipeline_spark.functions import text as TX
 from dffoo_data_pipeline_spark.operators import dedup, similarity
 from dffoo_data_pipeline_spark.plans.embeddings import (
-    _PQ_TOPK_ORACLE as _PQ_TOPK_ORACLE_FOR_INDEXED,
+    _IVFPQ_ORACLE,
+    _IVFPQ_RERANK_ORACLE,
+    _PQ_TOPK_ORACLE,
+    CODES_NORMS_SQL,
+    int8_codes,
 )
 from dffoo_data_pipeline_spark.sources.readers import load_table
 
@@ -829,11 +833,16 @@ def text_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-dup: n-gram Jaccard (oracle-checked) + MinHash/SimHash (Spark-native)
 # ---------------------------------------------------------------------------
 
-_JACCARD_ORACLE = """
+
+def _jaccard_oracle(threshold: float, doc_where: str = "TRUE") -> str:
+    """The exhaustive 3-gram-shingle Jaccard pairs ≥ `threshold` among
+    the `doc_where` documents."""
+    return f"""
 WITH toks AS (
     SELECT doc_id,
            list_filter(string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '), t -> t <> '') AS t
     FROM documents
+    WHERE {doc_where}
 ),
 shingles AS (
     SELECT DISTINCT doc_id,
@@ -851,11 +860,11 @@ SELECT i.doc_a, i.doc_b,
        ROUND(i.isect * 1.0 / (sa.sz + sb.sz - i.isect), 4) AS jaccard
 FROM inter i JOIN sizes sa ON i.doc_a = sa.doc_id
              JOIN sizes sb ON i.doc_b = sb.doc_id
-WHERE i.isect * 1.0 / (sa.sz + sb.sz - i.isect) >= 0.2
+WHERE i.isect * 1.0 / (sa.sz + sb.sz - i.isect) >= {threshold}
 """
 
 
-@_register("dedup_ngram_jaccard_pairs", _JACCARD_ORACLE)
+@_register("dedup_ngram_jaccard_pairs", _jaccard_oracle(0.2))
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-gram-shingle Jaccard near-dup pairs (threshold 0.2).
 
@@ -871,10 +880,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the exhaustive exact computation at t=0.5 — hash-equality against it
 # IS the losslessness proof for the prefix filter
-_PREFIX_PAIRS_ORACLE = _JACCARD_ORACLE.replace(">= 0.2", ">= 0.5")
-
-
-@_register("dedup_prefix_filter_pairs", _PREFIX_PAIRS_ORACLE)
+@_register("dedup_prefix_filter_pairs", _jaccard_oracle(0.5))
 def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs Jaccard ≥ 0.5 via PREFIX FILTERING
     (operators/dedup.py:prefix_filter_pairs, after Bayardo et al. 2007):
@@ -903,14 +909,10 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the same exhaustive oracle restricted to the md5-prefix corpus slice:
 # the sampled audit must be EXACT for every pair within the slice
-_PREFIX_SAMPLED_ORACLE = _PREFIX_PAIRS_ORACLE.replace(
-    "FROM documents",
-    "FROM documents\n"
-    "    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'",
+@_register(
+    "dedup_prefix_filter_sampled",
+    _jaccard_oracle(0.5, "substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'"),
 )
-
-
-@_register("dedup_prefix_filter_sampled", _PREFIX_SAMPLED_ORACLE)
 def dedup_prefix_filter_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAMPLED prefix-filter audit — `dedup_prefix_filter_pairs` with
     ``sample_hex_cutoff="4000"``: only documents whose md5(doc_id) 4-hex
@@ -940,15 +942,14 @@ def dedup_prefix_filter_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the NEXT rotation window of the same audit — disjoint from the sampled
 # query's ["0000","4000") slice, proving the walk-the-corpus claim with
 # two certified windows instead of one
-_PREFIX_ROTATED_ORACLE = _PREFIX_PAIRS_ORACLE.replace(
-    "FROM documents",
-    "FROM documents\n"
-    "    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) >= '4000'\n"
-    "      AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'",
+@_register(
+    "dedup_prefix_filter_rotated",
+    _jaccard_oracle(
+        0.5,
+        "substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) >= '4000'\n"
+        "      AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'",
+    ),
 )
-
-
-@_register("dedup_prefix_filter_rotated", _PREFIX_ROTATED_ORACLE)
 def dedup_prefix_filter_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ROTATION step of the sampled prefix-filter audit:
     ``sample_hex_window=("4000", "8000")`` — the ¼ md5 slice immediately
@@ -1477,12 +1478,99 @@ def text_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences_deterministic(d, "doc_id", "n_tokens", budget=512)
 
 
-def _ivf_int_oracle() -> str:
-    from dffoo_data_pipeline_spark.plans.embeddings import CODES_NORMS_SQL
+# ---------------------------------------------------------------------------
+# Integer ANN paths and their recall reports.  Every path ranks candidate
+# pairs (query_id, neighbor_id, d, na2, nb2) by one exact key: d·|d| /
+# (na2·nb2), integers ≤ 2^40 through one IEEE division, ties broken on
+# neighbor_id.  The same key ranks each path's top-5, its DuckDB oracle,
+# and the exact truth its recall report measures against, so every
+# number below is engine-exact.
+# ---------------------------------------------------------------------------
 
+# search(queries, index): the query batch and the indexed corpus
+_PROBE_SLICES = ("vec_id % 10 = 0", "vec_id % 10 <> 0")
+# deterministic, partitioning-independent quarter of the queries
+_SAMPLE_SLICE = "substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) < '4'"
+
+
+def _int_pairs_sql(left: str, right: str, on: str) -> str:
+    """Pairs (query_id, neighbor_id, d, na2, nb2) of two code relations
+    (vec_id, c, n2), aliased a (queries) and b (neighbors)."""
+    return f"""
+    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+           CAST(list_sum(list_transform(list_zip(a.c, b.c),
+                                        z -> z[1] * z[2])) AS BIGINT) AS d,
+           a.n2 AS na2, b.n2 AS nb2
+    FROM {left} a JOIN {right} b ON {on}"""
+
+
+def _int_top5_sql(pairs: str) -> str:
+    """The top-5 rows of relation `pairs` per query, by the exact key."""
+    return f"""
+    SELECT * FROM (
+        SELECT query_id, neighbor_id, d, na2, nb2,
+               ROW_NUMBER() OVER (PARTITION BY query_id
+                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
+                            neighbor_id) AS rn
+        FROM {pairs})
+    WHERE rn <= 5"""
+
+
+def _recall_summary_sql(
+    keys: tuple[str, str] = ("query_id", "neighbor_id"),
+    recall_col: str = "recall_at_5",
+) -> str:
+    """The SQL twin of `_recall_summary`: how much of CTE `truth` the CTE
+    `hits` covers, as one (n_queries, n_truth, n_hits, <recall_col>) row."""
+    q, n = keys
+    hit = f"CASE WHEN h.{q} IS NOT NULL THEN 1 ELSE 0 END"
+    return f"""
+SELECT CAST(COUNT(DISTINCT t.{q}) AS BIGINT) AS n_queries,
+       CAST(COUNT(*) AS BIGINT) AS n_truth,
+       CAST(SUM({hit}) AS BIGINT) AS n_hits,
+       FLOOR(SUM({hit}) * 1.0 / COUNT(*) * 1000000 + 0.5) / 1000000 AS {recall_col}
+FROM truth t LEFT JOIN hits h ON t.{q} = h.{q} AND t.{n} = h.{n}
+"""
+
+
+def _int_topk_oracle(cands: str) -> str:
+    """A path's top-5 with cosine; `cands` is its WITH list, ending in
+    the candidate-pair CTE `cand`."""
+    return (
+        cands
+        + f""",
+ranked AS ({_int_top5_sql("cand")})
+SELECT query_id, neighbor_id,
+       CAST(d AS DOUBLE) / sqrt(CAST(na2 * nb2 AS DOUBLE)) AS cos_sim
+FROM ranked
+"""
+    )
+
+
+def _int_recall_oracle(
+    cands: str, query_where: str = "TRUE", index_where: str = "TRUE"
+) -> str:
+    """Recall@5 of a path (`cands` as in `_int_topk_oracle`) against the
+    exact top-5 of the live query slice over the live index slice — the
+    SQL twin of `_recall_summary(_exact_topk_int(queries, index), path)`."""
+    return (
+        cands
+        + f""",
+hits AS ({_int_top5_sql("cand")}),
+qlive AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0 AND {query_where}),
+ilive AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0 AND {index_where}),
+truth_cand AS ({_int_pairs_sql("qlive", "ilive", "a.vec_id <> b.vec_id")}),
+truth AS ({_int_top5_sql("truth_cand")})"""
+        + _recall_summary_sql()
+    )
+
+
+def _ivf_cands_sql() -> str:
+    """Seeded-IVF candidates: cells seeded by the 16 lowest-id live codes,
+    each code indexed in its nearest cell and probing its 2 nearest."""
     return (
         CODES_NORMS_SQL
-        + """,
+        + f""",
 seeds AS (
     SELECT vec_id AS cell, c AS sc, n2 AS sn2
     FROM norms WHERE vec_id < 16 AND n2 > 0),
@@ -1503,26 +1591,60 @@ members AS (
 probes AS (
     SELECT a.vec_id, a.cell, n.c, n.n2
     FROM assigned a JOIN norms n USING (vec_id) WHERE a.rn <= 2),
-cand AS (
-    SELECT q.vec_id AS query_id, m.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(q.c, m.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           q.n2 AS na2, m.n2 AS nb2
-    FROM probes q JOIN members m ON q.cell = m.cell AND q.vec_id <> m.vec_id),
-ranked AS (
-    SELECT query_id, neighbor_id, d, na2, nb2,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                        neighbor_id) AS rn
-    FROM cand)
-SELECT query_id, neighbor_id,
-       CAST(d AS DOUBLE) / sqrt(CAST(na2 * nb2 AS DOUBLE)) AS cos_sim
-FROM ranked WHERE rn <= 5
-"""
+cand AS ({_int_pairs_sql("probes", "members", "a.cell = b.cell AND a.vec_id <> b.vec_id")})"""
     )
 
 
-@_register("similarity_ivf_topk", _ivf_int_oracle())
+def _lsh_cands_sql(
+    n_flip: int = 0, query_where: str = "TRUE", index_where: str = "TRUE"
+) -> str:
+    """Sign-LSH candidates over the 6 integer lattice planes
+    (`int_lsh_weights`): the index_where codes sit in their own bucket;
+    each query_where code probes its own bucket plus the `n_flip` buckets
+    across its lowest-|projection| planes (ties on plane index).
+    n_flip=0 is single-probe LSH."""
+    W = similarity.int_lsh_weights(64, 6)
+    plane_rows = ",\n  ".join(f"({p}, {W[p]}::BIGINT[])" for p in range(6))
+    return (
+        CODES_NORMS_SQL
+        + f""",
+planes(p, w) AS (VALUES
+  {plane_rows}),
+dots AS (
+    SELECT n.vec_id, pl.p,
+           CAST(list_sum(list_transform(range(1, 65),
+                          i -> n.c[i] * pl.w[i])) AS BIGINT) AS d
+    FROM norms n CROSS JOIN planes pl WHERE n.n2 > 0),
+buckets AS (
+    SELECT vec_id,
+           CAST(SUM(CASE WHEN d > 0 THEN (CAST(1 AS BIGINT) << p)
+                    ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
+    FROM dots GROUP BY vec_id),
+flips AS (
+    SELECT vec_id, p FROM (
+        SELECT vec_id, p,
+               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY abs(d), p) AS rn
+        FROM dots WHERE {query_where})
+    WHERE rn <= {n_flip}),
+qbuckets AS (
+    SELECT vec_id, bucket FROM buckets WHERE {query_where}
+    UNION ALL
+    SELECT f.vec_id, xor(b.bucket, (CAST(1 AS BIGINT) << f.p))
+    FROM flips f JOIN buckets b USING (vec_id)),
+mem AS (
+    SELECT b.vec_id, b.bucket, n.c, n.n2
+    FROM buckets b JOIN norms n USING (vec_id) WHERE {index_where}),
+qm AS (
+    SELECT q.vec_id, q.bucket, n.c, n.n2
+    FROM qbuckets q JOIN norms n USING (vec_id)),
+cand AS ({_int_pairs_sql("qm", "mem", "a.bucket = b.bucket AND a.vec_id <> b.vec_id")})"""
+    )
+
+
+_LSH_PROBE_ORACLE = _int_topk_oracle(_lsh_cands_sql(2, *_PROBE_SLICES))
+
+
+@_register("similarity_ivf_topk", _int_topk_oracle(_ivf_cands_sql()))
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat ANN, driver-verifiable form: cells seeded by the 16
     lowest-id vectors over centered int8 codes, every vector indexed in
@@ -1538,56 +1660,12 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator fans it into seed scoring, members, and probes, and without
     a barrier CollapseProject re-inlines the 64-element quantization
     transform into every consumer (measured 3.4 s → 2.2 s at sf0.1)."""
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)
     return similarity.ivf_topk_int(codes, k=5, n_cells=16, n_probe=2)
 
 
-def _lsh_int_oracle() -> str:
-    from dffoo_data_pipeline_spark.operators.similarity import int_lsh_weights
-    from dffoo_data_pipeline_spark.plans.embeddings import CODES_NORMS_SQL
-
-    W = int_lsh_weights(64, 6)
-    plane_rows = ",\n  ".join(f"({p}, {W[p]}::BIGINT[])" for p in range(6))
-    return (
-        CODES_NORMS_SQL
-        + f""",
-planes(p, w) AS (VALUES
-  {plane_rows}),
-bits AS (
-    SELECT n.vec_id, pl.p,
-           CASE WHEN CAST(list_sum(list_transform(range(1, 65),
-                          i -> n.c[i] * pl.w[i])) AS BIGINT) > 0
-                THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bit
-    FROM norms n CROSS JOIN planes pl WHERE n.n2 > 0),
-buckets AS (
-    SELECT vec_id, CAST(SUM(bit * (CAST(1 AS BIGINT) << p)) AS BIGINT) AS bucket
-    FROM bits GROUP BY vec_id),
-mem AS (
-    SELECT b.vec_id, b.bucket, n.c, n.n2
-    FROM buckets b JOIN norms n USING (vec_id)),
-cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM mem a JOIN mem b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-ranked AS (
-    SELECT query_id, neighbor_id, d, na2, nb2,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                        neighbor_id) AS rn
-    FROM cand)
-SELECT query_id, neighbor_id,
-       CAST(d AS DOUBLE) / sqrt(CAST(na2 * nb2 AS DOUBLE)) AS cos_sim
-FROM ranked WHERE rn <= 5
-"""
-    )
-
-
-@_register("similarity_lsh_topk", _lsh_int_oracle())
+@_register("similarity_lsh_topk", _int_topk_oracle(_lsh_cands_sql()))
 def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via sign-LSH bucketing, driver-verifiable form: buckets from
     integer hyperplane projections over centered int8 codes
@@ -1602,71 +1680,12 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplane dots + n2 each re-inline the quantization transform when
     CollapseProject flattens the projection chain (measured 2.8 s →
     2.3 s at sf0.1)."""
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)
     return similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64)
 
 
-def _lsh_multiprobe_oracle(n_flip: int = 2) -> str:
-    from dffoo_data_pipeline_spark.operators.similarity import int_lsh_weights
-    from dffoo_data_pipeline_spark.plans.embeddings import CODES_NORMS_SQL
-
-    W = int_lsh_weights(64, 6)
-    plane_rows = ",\n  ".join(f"({p}, {W[p]}::BIGINT[])" for p in range(6))
-    return (
-        CODES_NORMS_SQL
-        + f""",
-planes(p, w) AS (VALUES
-  {plane_rows}),
-dots AS (
-    SELECT n.vec_id, pl.p,
-           CAST(list_sum(list_transform(range(1, 65),
-                          i -> n.c[i] * pl.w[i])) AS BIGINT) AS d
-    FROM norms n CROSS JOIN planes pl WHERE n.n2 > 0),
-buckets AS (
-    SELECT vec_id,
-           CAST(SUM(CASE WHEN d > 0 THEN (CAST(1 AS BIGINT) << p)
-                    ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-    FROM dots GROUP BY vec_id),
-flips AS (
-    SELECT vec_id, p FROM (
-        SELECT vec_id, p,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY abs(d), p) AS rn
-        FROM dots)
-    WHERE rn <= {n_flip}),
-qbuckets AS (
-    SELECT vec_id, bucket FROM buckets
-    UNION ALL
-    SELECT f.vec_id, xor(b.bucket, (CAST(1 AS BIGINT) << f.p))
-    FROM flips f JOIN buckets b USING (vec_id)),
-mem AS (
-    SELECT b.vec_id, b.bucket, n.c, n.n2
-    FROM buckets b JOIN norms n USING (vec_id)),
-qm AS (
-    SELECT q.vec_id, q.bucket, n.c, n.n2
-    FROM qbuckets q JOIN norms n USING (vec_id)),
-cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM qm a JOIN mem b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-ranked AS (
-    SELECT query_id, neighbor_id, d, na2, nb2,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                        neighbor_id) AS rn
-    FROM cand)
-SELECT query_id, neighbor_id,
-       CAST(d AS DOUBLE) / sqrt(CAST(na2 * nb2 AS DOUBLE)) AS cos_sim
-FROM ranked WHERE rn <= 5
-"""
-    )
-
-
-@_register("similarity_lsh_multiprobe_topk", _lsh_multiprobe_oracle())
+@_register("similarity_lsh_multiprobe_topk", _int_topk_oracle(_lsh_cands_sql(n_flip=2)))
 def similarity_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH ANN (Lv et al. 2007): each query probes its
     own bucket PLUS the 2 buckets across its lowest-|projection| sign
@@ -1679,8 +1698,6 @@ def similarity_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFram
     pipeline is value-hash oracled against DuckDB — the multiprobe
     sibling of similarity_lsh_topk.
     """
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     # no codes checkpoint here: the operator materializes its own
     # (bucket, flips) frame and codes has a single consumer before it
@@ -1689,67 +1706,7 @@ def similarity_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _lsh_probe_oracle(n_flip: int = 2) -> str:
-    # the multiprobe pipeline's CTEs made ASYMMETRIC: queries are the
-    # vec_id % 10 == 0 slice (own bucket + flip probes), the index is
-    # everything else (single-bucket membership) — search(queries, index)
-    from dffoo_data_pipeline_spark.operators.similarity import int_lsh_weights
-    from dffoo_data_pipeline_spark.plans.embeddings import CODES_NORMS_SQL
-
-    W = int_lsh_weights(64, 6)
-    plane_rows = ",\n  ".join(f"({p}, {W[p]}::BIGINT[])" for p in range(6))
-    return (
-        CODES_NORMS_SQL
-        + f""",
-planes(p, w) AS (VALUES
-  {plane_rows}),
-dots AS (
-    SELECT n.vec_id, pl.p,
-           CAST(list_sum(list_transform(range(1, 65),
-                          i -> n.c[i] * pl.w[i])) AS BIGINT) AS d
-    FROM norms n CROSS JOIN planes pl WHERE n.n2 > 0),
-buckets AS (
-    SELECT vec_id,
-           CAST(SUM(CASE WHEN d > 0 THEN (CAST(1 AS BIGINT) << p)
-                    ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-    FROM dots GROUP BY vec_id),
-flips AS (
-    SELECT vec_id, p FROM (
-        SELECT vec_id, p,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY abs(d), p) AS rn
-        FROM dots WHERE vec_id % 10 = 0)
-    WHERE rn <= {n_flip}),
-qbuckets AS (
-    SELECT vec_id, bucket FROM buckets WHERE vec_id % 10 = 0
-    UNION ALL
-    SELECT f.vec_id, xor(b.bucket, (CAST(1 AS BIGINT) << f.p))
-    FROM flips f JOIN buckets b USING (vec_id)),
-mem AS (
-    SELECT b.vec_id, b.bucket, n.c, n.n2
-    FROM buckets b JOIN norms n USING (vec_id) WHERE b.vec_id % 10 <> 0),
-qm AS (
-    SELECT q.vec_id, q.bucket, n.c, n.n2
-    FROM qbuckets q JOIN norms n USING (vec_id)),
-cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM qm a JOIN mem b ON a.bucket = b.bucket),
-ranked AS (
-    SELECT query_id, neighbor_id, d, na2, nb2,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                        neighbor_id) AS rn
-    FROM cand)
-SELECT query_id, neighbor_id,
-       CAST(d AS DOUBLE) / sqrt(CAST(na2 * nb2 AS DOUBLE)) AS cos_sim
-FROM ranked WHERE rn <= 5
-"""
-    )
-
-
-@_register("similarity_lsh_probe_topk", _lsh_probe_oracle())
+@_register("similarity_lsh_probe_topk", _LSH_PROBE_ORACLE)
 def similarity_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASYMMETRIC ANN search — search(queries, index), the API every
     retrieval/near-dup ingest pipeline actually calls, as opposed to the
@@ -1768,8 +1725,6 @@ def similarity_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query/index fan-out — both slices re-inline the 64-element
     quantization transform otherwise (the CollapseProject idiom,
     measured on similarity_lsh_topk)."""
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)
     return similarity.lsh_probe_topk_int(
@@ -1782,82 +1737,23 @@ def similarity_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_probe_recall_oracle(n_flip: int = 2) -> str:
-    # the asymmetric probe pipeline's CTEs, re-terminated as a recall
-    # summary; truth = exact top-5 INDEX members per query (other
-    # queries are not searchable, so they are not truth either)
-    base = _lsh_probe_oracle(n_flip)
-    head, _tail = base.split("ranked AS (", 1)
-    return (
-        head
-        + """mp AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM cand)
-    WHERE rn <= 5),
-qlive AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0 AND vec_id % 10 = 0),
-ilive AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0 AND vec_id % 10 <> 0),
-truth_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM qlive a JOIN ilive b ON a.vec_id <> b.vec_id),
-truth AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM truth_cand)
-    WHERE rn <= 5)
-SELECT CAST(COUNT(DISTINCT t.query_id) AS BIGINT) AS n_queries,
-       CAST(COUNT(*) AS BIGINT) AS n_truth,
-       CAST(SUM(CASE WHEN m.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       FLOOR(SUM(CASE WHEN m.query_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*) * 1000000 + 0.5) / 1000000 AS recall_at_5
-FROM truth t LEFT JOIN mp m
-  ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-"""
-    )
+def _exact_topk_int(queries: DataFrame, index: DataFrame, k: int = 5) -> DataFrame:
+    """EXACT top-k (query_id, neighbor_id) of the `queries` codes against
+    the `index` codes (int8_codes frames: vec_id, c, n2): live rows
+    (n2 > 0) only, self-pairs excluded, ranked by the ANN paths' own key
+    with a neighbor_id tiebreak — the truth of every integer recall
+    report.
 
-
-@_register("similarity_lsh_probe_recall_report", _lsh_probe_recall_oracle())
-def similarity_lsh_probe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the ASYMMETRIC probe path (similarity_lsh_probe_topk's
-    exact plan) against the exact top-5 INDEX members per query — the
-    fourth member of the oracle-checked recall family (LSH, IVF,
-    multiprobe-LSH, probe), so the new search(queries, index) API ships
-    with the same measured-quality discipline as every other ANN path.
-    Truth excludes other queries: they are not searchable through the
-    index, so they are not truth either — recall measures what the probe
-    COULD have found.
-
-    Scale: the probe side is the linear production plan (query-batch-
-    sized exchange against the bucketed index); the truth side is
-    query-slice × index — already the sampled shape, since the query
-    batch IS the slice.
-    """
+    Scale: a broadcast-NLJ all-pairs rank, quadratic by design — it is
+    the auditor, not the audited path.  At 100 TB pass it a deterministic
+    md5-prefix query slice (similarity_lsh_recall_sampled), never the
+    full corpus."""
     from pyspark.sql.window import Window
 
-    from dffoo_data_pipeline_spark.functions.numeric import round_det
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
-    e = load_table(spark, sf_dir, "embeddings")
-    codes = int8_codes(e).localCheckpoint(eager=False)  # probe + truth
-    qcodes = codes.where(F.col("vec_id") % 10 == 0)
-    icodes = codes.where(F.col("vec_id") % 10 != 0)
-    pr5 = similarity.lsh_probe_topk_int(
-        qcodes, icodes, k=5, prefix_bits=6, dim=64, n_flip=2
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    a = qcodes.where(F.col("n2") > 0).select(
+    a = queries.where(F.col("n2") > 0).select(
         F.col("vec_id").alias("query_id"), F.col("c").alias("ca"), F.col("n2").alias("na2")
     )
-    b = icodes.where(F.col("n2") > 0).select(
+    b = index.where(F.col("n2") > 0).select(
         F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cb"), F.col("n2").alias("nb2")
     )
     d = F.aggregate(
@@ -1874,89 +1770,59 @@ def similarity_lsh_probe_recall_report(spark: SparkSession, sf_dir: str) -> Data
         F.col("na2") * F.col("nb2")
     ).cast("double")
     w = Window.partitionBy("query_id").orderBy(F.desc(key), F.col("neighbor_id"))
-    truth5 = (
+    return (
         pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
+        .where(F.col("rn") <= k)
         .select("query_id", "neighbor_id")
     )
-    joined = truth5.join(pr5, ["query_id", "neighbor_id"], "left")
-    return joined.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-    ).select(
-        "n_queries",
-        "n_truth",
-        "n_hits",
-        round_det(F.col("n_hits") / F.col("n_truth"), 6).alias("recall_at_5"),
+
+
+def _recall_summary(
+    truth: DataFrame,
+    approx: DataFrame,
+    keys: tuple[str, str] = ("query_id", "neighbor_id"),
+    recall_col: str = "recall_at_5",
+) -> DataFrame:
+    """One-row (n_queries, n_truth, n_hits, <recall_col>) summary of how
+    much of `truth` the `approx` pairs cover — the shared tail of every
+    oracled recall report (`_recall_summary_sql` is its DuckDB twin)."""
+    from dffoo_data_pipeline_spark.functions.numeric import round_det
+
+    hits = approx.select(*keys, F.lit(1).alias("hit"))
+    n_truth = F.count(F.lit(1))
+    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0)))
+    return truth.join(hits, list(keys), "left").agg(
+        F.countDistinct(keys[0]).cast("bigint").alias("n_queries"),
+        n_truth.cast("bigint").alias("n_truth"),
+        n_hits.cast("bigint").alias("n_hits"),
+        round_det(n_hits / n_truth, 6).alias(recall_col),
     )
 
 
-def _lsh_recall_oracle() -> str:
-    from dffoo_data_pipeline_spark.operators.similarity import int_lsh_weights
-    from dffoo_data_pipeline_spark.plans.embeddings import CODES_NORMS_SQL
-
-    W = int_lsh_weights(64, 6)
-    plane_rows = ",\n  ".join(f"({p}, {W[p]}::BIGINT[])" for p in range(6))
-    return (
-        CODES_NORMS_SQL
-        + f""",
-planes(p, w) AS (VALUES
-  {plane_rows}),
-bits AS (
-    SELECT n.vec_id, pl.p,
-           CASE WHEN CAST(list_sum(list_transform(range(1, 65),
-                          i -> n.c[i] * pl.w[i])) AS BIGINT) > 0
-                THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bit
-    FROM norms n CROSS JOIN planes pl WHERE n.n2 > 0),
-buckets AS (
-    SELECT vec_id, CAST(SUM(bit * (CAST(1 AS BIGINT) << p)) AS BIGINT) AS bucket
-    FROM bits GROUP BY vec_id),
-mem AS (
-    SELECT b.vec_id, b.bucket, n.c, n.n2
-    FROM buckets b JOIN norms n USING (vec_id)),
-lsh_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM mem a JOIN mem b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-lsh AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM lsh_cand)
-    WHERE rn <= 5),
-live AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0),
-truth_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM live a JOIN live b ON a.vec_id <> b.vec_id),
-truth AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM truth_cand)
-    WHERE rn <= 5)
-SELECT CAST(COUNT(DISTINCT t.query_id) AS BIGINT) AS n_queries,
-       CAST(COUNT(*) AS BIGINT) AS n_truth,
-       CAST(SUM(CASE WHEN l.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       FLOOR(SUM(CASE WHEN l.query_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*) * 1000000 + 0.5) / 1000000 AS recall_at_5
-FROM truth t LEFT JOIN lsh l
-  ON t.query_id = l.query_id AND t.neighbor_id = l.neighbor_id
-"""
+@_register(
+    "similarity_lsh_probe_recall_report",
+    _int_recall_oracle(_lsh_cands_sql(2, *_PROBE_SLICES), *_PROBE_SLICES),
+)
+def similarity_lsh_probe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 of the ASYMMETRIC probe path (similarity_lsh_probe_topk's
+    exact plan) against the exact top-5 INDEX members per query, so the
+    search(queries, index) API ships with the same measured quality as
+    every other ANN path.  Truth excludes other queries: they are not
+    searchable through the index, so recall measures what the probe
+    COULD have found.  The truth side is query-slice × index — already
+    the sampled shape, since the query batch IS the slice.
+    """
+    e = load_table(spark, sf_dir, "embeddings")
+    codes = int8_codes(e).localCheckpoint(eager=False)  # feeds probe + truth
+    queries = codes.where(F.col("vec_id") % 10 == 0)
+    index = codes.where(F.col("vec_id") % 10 != 0)
+    probe = similarity.lsh_probe_topk_int(
+        queries, index, k=5, prefix_bits=6, dim=64, n_flip=2
     )
+    return _recall_summary(_exact_topk_int(queries, index), probe)
 
 
-@_register("similarity_lsh_recall_report", _lsh_recall_oracle())
+@_register("similarity_lsh_recall_report", _int_recall_oracle(_lsh_cands_sql()))
 def similarity_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the integer-lattice sign-LSH path against the EXACT
     top-5 over the same int8 codes — one summary row (n_queries, n_truth,
@@ -1967,12 +1833,6 @@ def similarity_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is value-hash oracled against DuckDB (the ANN analog of
     dedup_portable_quality_report).
 
-    Scale: the LSH side is the linear production plan being audited; the
-    exact side is the quadratic auditor — a broadcast-NLJ all-pairs rank
-    (the sanctioned audit shape; at 100 TB run it on a deterministic
-    md5-prefix corpus slice, the prefix-filter `sample_hex_cutoff`
-    idiom, never the full corpus).
-
     Interpreting the number: single-probe 6-bit sign-LSH restricts
     candidates to one 64-bucket cell, so recall on the near-uniform
     synthetic embeddings is low by design (~0.05–0.09 here, agreeing
@@ -1982,347 +1842,58 @@ def similarity_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (n_probe=2) measures ~3–5× higher on the same data.  The point
     of this query is that the audit itself is engine-exact.
     """
-    from pyspark.sql.window import Window
-
-    from dffoo_data_pipeline_spark.functions.numeric import round_det
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds LSH + truth
-    lsh5 = similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    live = codes.where(F.col("n2") > 0)
-    a = live.select(
-        F.col("vec_id").alias("query_id"), F.col("c").alias("ca"), F.col("n2").alias("na2")
-    )
-    b = live.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cb"), F.col("n2").alias("nb2")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d.alias("d"), "na2", "nb2")
-    )
-    # same monotone-in-cosine integer key as the LSH re-rank: exact ints
-    # ≤2^40 through one IEEE division — deterministic in any engine
-    key = (F.col("d") * F.abs("d")).cast("double") / (
-        F.col("na2") * F.col("nb2")
-    ).cast("double")
-    w = Window.partitionBy("query_id").orderBy(F.desc(key), F.col("neighbor_id"))
-    truth5 = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    joined = truth5.join(lsh5, ["query_id", "neighbor_id"], "left")
-    return joined.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-    ).select(
-        "n_queries",
-        "n_truth",
-        "n_hits",
-        round_det(F.col("n_hits") / F.col("n_truth"), 6).alias("recall_at_5"),
-    )
+    lsh = similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64)
+    return _recall_summary(_exact_topk_int(codes, codes), lsh)
 
 
-def _lsh_recall_sampled_oracle() -> str:
-    # the lsh recall oracle with BOTH rankings' query side restricted to
-    # the md5(vec_id) < '4' quarter-slice; the index/membership side
-    # stays FULL — the sampled audit ranks slice queries against the
-    # whole corpus, which is what the 100 TB variant does
-    base = _lsh_recall_oracle()
-    return base.replace(
-        """lsh_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM mem a JOIN mem b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),""",
-        """lsh_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM mem a JOIN mem b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    WHERE substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 1) < '4'),""",
-    ).replace(
-        """truth_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM live a JOIN live b ON a.vec_id <> b.vec_id),""",
-        """truth_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM live a JOIN live b ON a.vec_id <> b.vec_id
-    WHERE substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 1) < '4'),""",
-    )
-
-
-@_register("similarity_lsh_recall_sampled", _lsh_recall_sampled_oracle())
+@_register(
+    "similarity_lsh_recall_sampled",
+    _int_recall_oracle(_lsh_cands_sql(), query_where=_SAMPLE_SLICE),
+)
 def similarity_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAMPLED form of similarity_lsh_recall_report — the shape its
-    docstring prescribes for 100 TB, now a first-class artifact (the ANN
-    twin of dedup_prefix_filter_sampled): recall@5 is measured only for
-    queries in the deterministic md5(vec_id) < '4' quarter-slice, while
-    BOTH rankings still run against the FULL index — the exact-truth
-    side's quadratic cost drops by the slice factor, the number it
-    estimates is unchanged in expectation, and the slice is
-    partitioning-independent so any engine draws the same one.  The
-    oracle applies the identical slice predicate: the sampled audit is
-    value-hash verified end to end.
+    """The SAMPLED form of similarity_lsh_recall_report, the shape the
+    exact truth takes at 100 TB (the ANN twin of
+    dedup_prefix_filter_sampled): recall@5 is measured only for queries
+    in the deterministic md5(vec_id) < '4' quarter-slice, while BOTH
+    rankings still run against the FULL index — the exact-truth side's
+    quadratic cost drops by the slice factor, the number it estimates is
+    unchanged in expectation, and the slice is partitioning-independent
+    so any engine draws the same one.
     """
-    from pyspark.sql.window import Window
-
-    from dffoo_data_pipeline_spark.functions.numeric import round_det
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds LSH + truth
-    in_slice = F.substring(F.md5(F.col("query_id").cast("string")), 1, 1) < F.lit("4")
-    lsh5 = (
-        similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64)
-        .where(in_slice)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    live = codes.where(F.col("n2") > 0)
-    a = live.select(
-        F.col("vec_id").alias("query_id"), F.col("c").alias("ca"), F.col("n2").alias("na2")
-    ).where(in_slice)  # slice the QUERY side before the quadratic join
-    b = live.select(  # index side stays FULL — slice queries, not members
-        F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cb"), F.col("n2").alias("nb2")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d.alias("d"), "na2", "nb2")
-    )
-    key = (F.col("d") * F.abs("d")).cast("double") / (
-        F.col("na2") * F.col("nb2")
-    ).cast("double")
-    w = Window.partitionBy("query_id").orderBy(F.desc(key), F.col("neighbor_id"))
-    truth5 = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    joined = truth5.join(lsh5, ["query_id", "neighbor_id"], "left")
-    return joined.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-    ).select(
-        "n_queries",
-        "n_truth",
-        "n_hits",
-        round_det(F.col("n_hits") / F.col("n_truth"), 6).alias("recall_at_5"),
-    )
+    in_slice = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) < F.lit("4")
+    lsh = similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64)
+    return _recall_summary(_exact_topk_int(codes.where(in_slice), codes), lsh)
 
 
-def _lsh_multiprobe_recall_oracle(n_flip: int = 2) -> str:
-    # the multiprobe pipeline's CTEs, re-terminated as a recall summary
-    # against the exact top-5 over the same codes (the lsh/ivf recall
-    # reports' truth block verbatim)
-    base = _lsh_multiprobe_oracle(n_flip)
-    head, _tail = base.split("ranked AS (", 1)
-    return (
-        head
-        + """mp AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM cand)
-    WHERE rn <= 5),
-live AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0),
-truth_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM live a JOIN live b ON a.vec_id <> b.vec_id),
-truth AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM truth_cand)
-    WHERE rn <= 5)
-SELECT CAST(COUNT(DISTINCT t.query_id) AS BIGINT) AS n_queries,
-       CAST(COUNT(*) AS BIGINT) AS n_truth,
-       CAST(SUM(CASE WHEN m.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       FLOOR(SUM(CASE WHEN m.query_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*) * 1000000 + 0.5) / 1000000 AS recall_at_5
-FROM truth t LEFT JOIN mp m
-  ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-"""
-    )
-
-
-@_register("similarity_lsh_multiprobe_recall_report", _lsh_multiprobe_recall_oracle())
+@_register(
+    "similarity_lsh_multiprobe_recall_report",
+    _int_recall_oracle(_lsh_cands_sql(n_flip=2)),
+)
 def similarity_lsh_multiprobe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the MULTI-PROBE sign-LSH path against the exact top-5
-    over the same int8 codes — the third member of the oracle-checked
-    recall family (LSH, IVF, multiprobe-LSH), and the measurement that
-    justifies the multiprobe trade: at sf0.01 the 2-flip schedule lifts
-    recall 0.088 → 0.176 (2.0×) over single-probe for ZERO extra index,
-    only a 3× query-side probe fan-out.  Every quantity is exact integer
-    arithmetic, so the measurement itself is value-hash oracled.
-
-    Scale: the multiprobe side is the linear production plan; the truth
-    side is the quadratic auditor, run at 100 TB on a deterministic
-    md5-prefix corpus slice like the other recall audits.
+    over the same int8 codes — the measurement that justifies the
+    multiprobe trade: at sf0.01 the 2-flip schedule lifts recall
+    0.088 → 0.176 (2.0×) over single-probe for ZERO extra index, only a
+    3× query-side probe fan-out.
     """
-    from pyspark.sql.window import Window
-
-    from dffoo_data_pipeline_spark.functions.numeric import round_det
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds probe + truth
-    mp5 = similarity.lsh_multiprobe_topk_int(
-        codes, k=5, prefix_bits=6, dim=64, n_flip=2
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    live = codes.where(F.col("n2") > 0)
-    a = live.select(
-        F.col("vec_id").alias("query_id"), F.col("c").alias("ca"), F.col("n2").alias("na2")
-    )
-    b = live.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cb"), F.col("n2").alias("nb2")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d.alias("d"), "na2", "nb2")
-    )
-    key = (F.col("d") * F.abs("d")).cast("double") / (
-        F.col("na2") * F.col("nb2")
-    ).cast("double")
-    w = Window.partitionBy("query_id").orderBy(F.desc(key), F.col("neighbor_id"))
-    truth5 = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    joined = truth5.join(mp5, ["query_id", "neighbor_id"], "left")
-    return joined.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-    ).select(
-        "n_queries",
-        "n_truth",
-        "n_hits",
-        round_det(F.col("n_hits") / F.col("n_truth"), 6).alias("recall_at_5"),
-    )
+    mp = similarity.lsh_multiprobe_topk_int(codes, k=5, prefix_bits=6, dim=64, n_flip=2)
+    return _recall_summary(_exact_topk_int(codes, codes), mp)
 
 
-def _ivf_recall_oracle() -> str:
-    from dffoo_data_pipeline_spark.plans.embeddings import CODES_NORMS_SQL
-
-    return (
-        CODES_NORMS_SQL
-        + """,
-seeds AS (
-    SELECT vec_id AS cell, c AS sc, n2 AS sn2
-    FROM norms WHERE vec_id < 16 AND n2 > 0),
-scored AS (
-    SELECT v.vec_id, s.cell, s.sn2,
-           CAST(list_sum(list_transform(list_zip(v.c, s.sc),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d
-    FROM norms v CROSS JOIN seeds s WHERE v.n2 > 0),
-assigned AS (
-    SELECT vec_id, cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(sn2 AS DOUBLE) DESC,
-                        cell) AS rn
-    FROM scored),
-members AS (
-    SELECT a.vec_id, a.cell, n.c, n.n2
-    FROM assigned a JOIN norms n USING (vec_id) WHERE a.rn = 1),
-probes AS (
-    SELECT a.vec_id, a.cell, n.c, n.n2
-    FROM assigned a JOIN norms n USING (vec_id) WHERE a.rn <= 2),
-ivf_cand AS (
-    SELECT q.vec_id AS query_id, m.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(q.c, m.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           q.n2 AS na2, m.n2 AS nb2
-    FROM probes q JOIN members m ON q.cell = m.cell AND q.vec_id <> m.vec_id),
-ivf AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM ivf_cand)
-    WHERE rn <= 5),
-live AS (SELECT vec_id, c, n2 FROM norms WHERE n2 > 0),
-truth_cand AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(list_sum(list_transform(list_zip(a.c, b.c),
-                                        z -> z[1] * z[2])) AS BIGINT) AS d,
-           a.n2 AS na2, b.n2 AS nb2
-    FROM live a JOIN live b ON a.vec_id <> b.vec_id),
-truth AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY CAST(d * abs(d) AS DOUBLE) / CAST(na2 * nb2 AS DOUBLE) DESC,
-                            neighbor_id) AS rn
-        FROM truth_cand)
-    WHERE rn <= 5)
-SELECT CAST(COUNT(DISTINCT t.query_id) AS BIGINT) AS n_queries,
-       CAST(COUNT(*) AS BIGINT) AS n_truth,
-       CAST(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       FLOOR(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*) * 1000000 + 0.5) / 1000000 AS recall_at_5
-FROM truth t LEFT JOIN ivf i
-  ON t.query_id = i.query_id AND t.neighbor_id = i.neighbor_id
-"""
-    )
-
-
-@_register("similarity_ivf_recall_report", _ivf_recall_oracle())
+@_register("similarity_ivf_recall_report", _int_recall_oracle(_ivf_cands_sql()))
 def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the seeded-IVF path (similarity_ivf_topk's exact plan:
     16 lowest-id seed cells, n_probe=2, exact-integer re-rank) against
-    the EXACT top-5 over the same int8 codes — one summary row
-    (n_queries, n_truth, n_hits, recall_at_5), the IVF twin of
-    similarity_lsh_recall_report.  Both rankings and the overlap count
-    are exact integer arithmetic through single IEEE divisions, so the
-    recall MEASUREMENT itself is value-hash oracled against DuckDB.
-
-    Scale: the IVF side is the linear production plan being audited
-    (one broadcast of 16 seed code rows + one shuffle on cell id); the
-    exact side is the quadratic auditor — at 100 TB run it on a
-    deterministic md5-prefix corpus slice (the prefix-filter
-    `sample_hex_cutoff` idiom), never the full corpus.
+    the EXACT top-5 over the same int8 codes — the IVF twin of
+    similarity_lsh_recall_report.  The IVF side is the linear production
+    plan being audited (one broadcast of 16 seed code rows + one shuffle
+    on cell id).
 
     Interpreting the number: 16 cells / 2 probes covers 2/16 of the
     space per query on the near-uniform synthetic embeddings, so expect
@@ -2330,45 +1901,10 @@ def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity_ann_recall_report) but far below a trained index; the
     point of this query is that the audit itself is engine-exact.
     """
-    from pyspark.sql.window import Window
-
-    from dffoo_data_pipeline_spark.functions.numeric import round_det
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
-
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds IVF + truth
-    ivf5 = similarity.ivf_topk_int(codes, k=5, n_cells=16, n_probe=2).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    live = codes.where(F.col("n2") > 0)
-    a = live.select(
-        F.col("vec_id").alias("query_id"), F.col("c").alias("ca"), F.col("n2").alias("na2")
-    )
-    b = live.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cb"), F.col("n2").alias("nb2")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d.alias("d"), "na2", "nb2")
-    )
-    key = (F.col("d") * F.abs("d")).cast("double") / (
-        F.col("na2") * F.col("nb2")
-    ).cast("double")
-    w = Window.partitionBy("query_id").orderBy(F.desc(key), F.col("neighbor_id"))
-    truth5 = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    return _recall_summary(
-        truth5, ivf5, keys=("query_id", "neighbor_id"), recall_col="recall_at_5"
-    )
+    ivf = similarity.ivf_topk_int(codes, k=5, n_cells=16, n_probe=2)
+    return _recall_summary(_exact_topk_int(codes, codes), ivf)
 
 
 def _exact_l2_truth_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2404,27 +1940,6 @@ def _exact_l2_truth_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_summary(
-    truth: DataFrame,
-    hits: DataFrame,
-    keys: tuple[str, str] = ("vec_id", "index_id"),
-    recall_col: str = "recall_at_3",
-) -> DataFrame:
-    """One-row (n_queries, n_truth, n_hits, <recall_col>) summary of how
-    much of `truth` the `hits` frame (keys + hit=1) covers — the shared
-    tail of every oracled recall report."""
-    from dffoo_data_pipeline_spark.functions.numeric import round_det
-
-    n_truth = F.count(F.lit(1))
-    n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-    return truth.join(hits, list(keys), "left").agg(
-        F.countDistinct(keys[0]).cast("bigint").alias("n_queries"),
-        n_truth.cast("bigint").alias("n_truth"),
-        n_hits.cast("bigint").alias("n_hits"),
-        round_det(n_hits / n_truth, 6).alias(recall_col),
-    )
-
-
 def _ivfpq_recall_report_sql(inner_sql: str) -> str:
     """The shared truth+summary SQL of the IVF-PQ recall-report pair:
     nest the measured plan's full oracle as the `hits` CTE.  ONE
@@ -2444,25 +1959,10 @@ truth AS (
                          * 1000000 + 0.5) / 1000000,
                    i.vec_id) AS rn
         FROM base2 q JOIN base2 i ON i.vec_id < {_PQ_N_INDEX})
-    WHERE rn <= {_PQ_TOPK})
-SELECT CAST(COUNT(DISTINCT t.vec_id) AS BIGINT) AS n_queries,
-       CAST(COUNT(*) AS BIGINT) AS n_truth,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       FLOOR(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*) * 1000000 + 0.5) / 1000000 AS recall_at_3
-FROM truth t LEFT JOIN hits p
-  ON t.vec_id = p.vec_id AND t.index_id = p.index_id
-"""
+    WHERE rn <= {_PQ_TOPK})""" + _recall_summary_sql(("vec_id", "index_id"), "recall_at_3")
 
 
-def _ivfpq_recall_oracle() -> str:
-    from dffoo_data_pipeline_spark.plans.embeddings import _IVFPQ_ORACLE
-
-    return _ivfpq_recall_report_sql(_IVFPQ_ORACLE)
-
-
-@_register("similarity_ivfpq_recall_report", _ivfpq_recall_oracle())
+@_register("similarity_ivfpq_recall_report", _ivfpq_recall_report_sql(_IVFPQ_ORACLE))
 def similarity_ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@3 of the IVF-PQ path (similarity_ivfpq_topk's exact plan)
     against the EXACT squared-L2 top-3 over the same 64-vector index —
@@ -2483,19 +1983,17 @@ def similarity_ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFram
     """
     from dffoo_data_pipeline_spark.plans import embeddings as EMB
 
-    ivfpq = EMB.QUERIES["similarity_ivfpq_topk"](spark, sf_dir).select(
-        "vec_id", "index_id", F.lit(1).alias("hit")
+    return _recall_summary(
+        _exact_l2_truth_top3(spark, sf_dir),
+        EMB.QUERIES["similarity_ivfpq_topk"](spark, sf_dir),
+        keys=("vec_id", "index_id"),
+        recall_col="recall_at_3",
     )
-    return _recall_summary(_exact_l2_truth_top3(spark, sf_dir), ivfpq)
 
 
-def _ivfpq_rerank_recall_oracle() -> str:
-    from dffoo_data_pipeline_spark.plans.embeddings import _IVFPQ_RERANK_ORACLE
-
-    return _ivfpq_recall_report_sql(_IVFPQ_RERANK_ORACLE)
-
-
-@_register("similarity_ivfpq_rerank_recall_report", _ivfpq_rerank_recall_oracle())
+@_register(
+    "similarity_ivfpq_rerank_recall_report", _ivfpq_recall_report_sql(_IVFPQ_RERANK_ORACLE)
+)
 def similarity_ivfpq_rerank_recall_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2510,10 +2008,12 @@ def similarity_ivfpq_rerank_recall_report(
     """
     from dffoo_data_pipeline_spark.plans import embeddings as EMB
 
-    rr = EMB.QUERIES["similarity_ivfpq_rerank_topk"](spark, sf_dir).select(
-        "vec_id", "index_id", F.lit(1).alias("hit")
+    return _recall_summary(
+        _exact_l2_truth_top3(spark, sf_dir),
+        EMB.QUERIES["similarity_ivfpq_rerank_topk"](spark, sf_dir),
+        keys=("vec_id", "index_id"),
+        recall_col="recall_at_3",
     )
-    return _recall_summary(_exact_l2_truth_top3(spark, sf_dir), rr)
 
 
 _CONTAINMENT_ORACLE = r"""
@@ -3139,10 +2639,10 @@ def pipeline_ingest_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# Persisted-index bookkeeping (round-8 ADVICE: the old fixed-name eager
-# overwrite leaked a mkdtemp dir per invocation): one live (table,
-# external path) per logical index, previous run dropped before the next
-# is built, final one removed at interpreter exit.  The lifecycle lives
+# Persisted-index bookkeeping: one live (table, external path) per
+# logical index, the previous run dropped before the next is built (so
+# repeated invocations leak no directories), the final one removed at
+# interpreter exit.  The lifecycle lives
 # in sources/writers.RunScopedTable so the band (dedup) and bucket (ANN)
 # indexes share it.
 _RUN_SCOPED: dict = {}  # lazily constructed RunScopedTables, one per logical index
@@ -3222,7 +2722,7 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("similarity_lsh_probe_indexed", _lsh_probe_oracle())
+@_register("similarity_lsh_probe_indexed", _LSH_PROBE_ORACLE)
 def similarity_lsh_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """similarity_lsh_probe_topk through the STEADY-STATE path — the ANN
     member of the persisted-index pair (the dedup member is
@@ -3243,7 +2743,6 @@ def similarity_lsh_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from another family never collide, so without the check a mismatch
     would 'work' and return garbage neighbors.
     """
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
     from dffoo_data_pipeline_spark.sources.writers import expect_table_properties
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -3269,11 +2768,11 @@ def similarity_lsh_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("similarity_pq_indexed", _PQ_TOPK_ORACLE_FOR_INDEXED)
+@_register("similarity_pq_indexed", _PQ_TOPK_ORACLE)
 def similarity_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """similarity_pq_topk through the STEADY-STATE path — the PQ member
-    of the persisted-index family (r12 verdict item 6; siblings:
-    dedup_incremental_indexed, similarity_lsh_probe_indexed): the
+    of the persisted-index family (siblings: dedup_incremental_indexed,
+    similarity_lsh_probe_indexed): the
     codebook and the PQ CODES of the indexed vectors are built once and
     PERSISTED (plain bucketed parquet tables with the build parameters
     in TBLPROPERTIES), and the probe batch scores the index by joining
@@ -3286,10 +2785,11 @@ def similarity_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is how PQ is actually deployed — encode the corpus once
     (the expensive argmin over K codebook entries per subspace), then
     every query batch pays only its own LUT build (|batch|·M·K partial
-    distances) plus the broadcast-join ADC sum over the M-byte codes.
-    The codes table is 32× smaller than the float vectors, so the
-    broadcastable-index ceiling moves 32× up; past it the same plan
-    shuffle-joins on (m, cid).  The probe refuses a codes table whose
+    distances) plus the join-ADC sum over the M-byte codes.  The join
+    carries no hint: the size-based planner broadcasts the codes table
+    while it fits under the broadcast threshold (it is 32× smaller than
+    the float vectors, so that ceiling moves 32× up) and shuffle-joins
+    on (m, cid) past it.  The probe refuses a codes table whose
     stored (m, sub, k, n_index) differ from its own — codes from a
     different quantizer family would 'work' and return garbage."""
     from dffoo_data_pipeline_spark.plans.embeddings import (
@@ -3326,7 +2826,7 @@ def similarity_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     expect_table_properties(spark, codes_table, params)
     lut = _pq_lut(e, spark.table(cb_table))
     adc = (
-        lut.join(F.broadcast(spark.table(codes_table)), ["m", "cid"])
+        lut.join(spark.table(codes_table), ["m", "cid"])
         .groupBy("vec_id", "index_id")
         .agg(F.sum("pd").alias("adist"))
     )
@@ -3385,8 +2885,6 @@ def similarity_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(recall, 0.1)"), 4).alias("p10_recall"),
             F.round(F.min("recall"), 4).alias("min_recall"),
         )
-
-    from dffoo_data_pipeline_spark.plans.embeddings import int8_codes
 
     codes = int8_codes(e).localCheckpoint(eager=False)  # shared by both int paths
     rows = [
@@ -3572,7 +3070,7 @@ def curation_gate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("dedup_lsh_verified", _PREFIX_PAIRS_ORACLE)
+@_register("dedup_lsh_verified", _jaccard_oracle(0.5))
 def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-bounded exact near-dup: MinHash-LSH candidates verified
     with true Jaccard on the candidate set only

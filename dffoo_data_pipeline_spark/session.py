@@ -86,13 +86,19 @@ def find_jdbc_jar() -> str | None:
     return found
 
 
-def get_spark(app_name: str = "dffoo-data-pipeline-spark") -> SparkSession:
+def get_spark(
+    app_name: str = "dffoo-data-pipeline-spark", extra_conf: dict | None = None
+) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
     Deploy target comes from SPARK_GRAFT_MASTER (default: local[$CPUS]).
     Pointing it at a yarn/k8s/standalone master is the ONLY change needed
     to run every query on a real cluster — plans are already shaped for
     multi-executor execution (broadcasts, partitioning, AQE).
+
+    `extra_conf` adds settings on top of the standard ones (the query
+    profiler's event log).  As for every setting here, static ones take
+    effect only when this call creates the session.
     """
     # make the package importable by Python WORKERS even when the driver
     # process found it via sys.path alone (e.g. launched from another
@@ -148,6 +154,8 @@ def get_spark(app_name: str = "dffoo-data-pipeline-spark") -> SparkSession:
         builder = builder.config(
             "spark.jars", ",".join(filter(None, [existing, jdbc_jar]))
         )
+    for key, value in (extra_conf or {}).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     # reliable checkpointing for iterative operators (operators/graph.py):
     # point this at durable shared storage (HDFS/S3) on a real cluster so

@@ -1423,9 +1423,9 @@ def streaming_embedding_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_ann_oracle() -> str:
-    from dffoo_data_pipeline_spark.plans.llm_ops import _lsh_probe_oracle
+    from dffoo_data_pipeline_spark.plans.llm_ops import _LSH_PROBE_ORACLE
 
-    return _lsh_probe_oracle()
+    return _LSH_PROBE_ORACLE
 
 
 @_register("streaming_ann_probe", _streaming_ann_oracle())

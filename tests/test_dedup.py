@@ -1178,10 +1178,11 @@ def test_shingler_uses_ascii_whitespace_spec(spark):
 
 
 def test_verify_join_size_guard_switches_off_broadcast(spark, monkeypatch):
-    """r13 (verdict item 2): past SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS
-    the candidate attach must plan as a shuffled hash join — no
-    BroadcastExchange of an unbounded candidate set — and the emitted
-    pairs must be identical to the broadcast path's."""
+    """Past SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS the candidate attach
+    must plan as a shuffled hash join — no BroadcastExchange of an
+    unbounded candidate set — and the emitted pairs must be identical to
+    the broadcast path's.  A bound that is not a non-negative integer
+    raises ValueError naming the variable and its value."""
     from dffoo_data_pipeline_spark.operators.dedup import prefix_filter_pairs
 
     # dup-heavy corpus: three near-dup clusters → multiple candidates
@@ -1209,6 +1210,14 @@ def test_verify_join_size_guard_switches_off_broadcast(spark, monkeypatch):
     # the candidate build past the bound, neither verify attach may build
     # a broadcast relation (the corpus side was already pinned off it)
     assert "BroadcastExchange" not in guarded_plan
+
+    # a bad bound fails naming the variable and its value, not in int()
+    for bad in ("ten", "-1"):
+        monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS", bad)
+        with pytest.raises(
+            ValueError, match=f"SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS='{bad}'"
+        ):
+            prefix_filter_pairs(docs, "doc_id", "text", threshold=0.5)
 
 
 def test_prefix_filter_lossless_at_leakage_threshold(spark, sf_dir):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -320,3 +322,62 @@ def test_lsh_probe_rejects_foreign_bucket_domain(spark, emb):
         codes.limit(5), k=3, prefix_bits=6, indexed=ok_idx
     ).collect()
     assert len(got) > 0
+
+
+# (n_queries, n_truth, n_hits, recall) of each oracled recall report,
+# keyed by scale.  The Spark reports share `_exact_topk_int` /
+# `_recall_summary` and their DuckDB oracles share one SQL template, so a
+# mistake common to both would still pass the oracle comparison; these
+# numbers pin the measurement itself.
+_RECALL_PINS = {
+    "sf0.001": {
+        "similarity_lsh_recall_report": (500, 2500, 124, 0.0496),
+        "similarity_lsh_recall_sampled": (140, 700, 37, 0.052857),
+        "similarity_lsh_multiprobe_recall_report": (500, 2500, 359, 0.1436),
+        "similarity_lsh_probe_recall_report": (50, 250, 27, 0.108),
+        "similarity_ivf_recall_report": (500, 2500, 857, 0.3428),
+        "similarity_ivfpq_recall_report": (500, 1500, 374, 0.249333),
+        "similarity_ivfpq_rerank_recall_report": (500, 1500, 749, 0.499333),
+    },
+    "sf0.01": {
+        "similarity_lsh_recall_report": (500, 2500, 221, 0.0884),
+        "similarity_lsh_recall_sampled": (140, 700, 51, 0.072857),
+        "similarity_lsh_multiprobe_recall_report": (500, 2500, 440, 0.176),
+        "similarity_lsh_probe_recall_report": (50, 250, 50, 0.2),
+        "similarity_ivf_recall_report": (500, 2500, 1013, 0.4052),
+        "similarity_ivfpq_recall_report": (500, 1500, 394, 0.262667),
+        "similarity_ivfpq_rerank_recall_report": (500, 1500, 717, 0.478),
+    },
+    "sf0.1": {
+        "similarity_lsh_recall_report": (2000, 10000, 745, 0.0745),
+        "similarity_lsh_recall_sampled": (509, 2545, 207, 0.081336),
+        "similarity_lsh_multiprobe_recall_report": (2000, 10000, 1767, 0.1767),
+        "similarity_lsh_probe_recall_report": (200, 1000, 166, 0.166),
+        "similarity_ivf_recall_report": (2000, 10000, 3611, 0.3611),
+        "similarity_ivfpq_recall_report": (2000, 6000, 1484, 0.247333),
+        "similarity_ivfpq_rerank_recall_report": (2000, 6000, 2889, 0.4815),
+    },
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RECALL_PINS["sf0.001"]))
+def test_recall_report_values_pinned(name, spark, sf_dir):
+    """Each oracled recall report, in Spark and through its DuckDB
+    oracle, returns the pinned (n_queries, n_truth, n_hits, recall)."""
+    import __spark_entry__ as entrymod
+
+    from tests.oracle_utils import duckdb_conn
+
+    pins = _RECALL_PINS.get(os.path.basename(os.path.normpath(sf_dir)))
+    if pins is None:
+        pytest.skip(f"no recall pins for {sf_dir}")
+    want = pins[name]
+    # the recall column sits on a 1e-6 grid: any tolerance below that is exact
+    (row,) = entrymod.queries()[name](spark, sf_dir).collect()
+    assert tuple(row) == pytest.approx(want, abs=1e-9)
+    con = duckdb_conn(sf_dir)
+    try:
+        (oracle_row,) = con.execute(entrymod.oracle_sql()[name]).fetchall()
+    finally:
+        con.close()
+    assert tuple(oracle_row) == pytest.approx(want, abs=1e-9)

@@ -13,9 +13,9 @@ The gap between per-rep wall and the sum of job walls is driver-side
 planning/dispatch; the gap between a job's wall and its stages' task
 time is scheduling + AQE re-planning overhead.
 
-The session mirrors session.get_spark's configs exactly (same shuffle
-partitions, AQE, Arrow, broadcast threshold) — only the event log is
-added, which does not change planning.
+The session is session.get_spark's (same shuffle partitions, AQE,
+Arrow, broadcast threshold, JDBC jar, checkpoint dir) plus the event
+log, which does not change planning.
 """
 
 from __future__ import annotations
@@ -31,56 +31,21 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 LOGDIR = "/tmp/spark-eventlogs"
-
-
-def make_session():
-    from pyspark.sql import SparkSession
-
-    repo_root = _REPO
-    pp = os.environ.get("PYTHONPATH", "")
-    if repo_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = f"{repo_root}{os.pathsep}{pp}" if pp else repo_root
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    return (
-        SparkSession.builder.appName("profile-query")
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_AQE", "true"))
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.sql.ansi.enabled", os.environ.get("SPARK_GRAFT_ANSI", "true"))
-        .config("spark.sql.legacy.sizeOfNull", "false")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{LOGDIR}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
-
-
-def attach_checkpoint_dir(spark) -> None:
-    # mirror session.get_spark: iterative operators (graph/CC) need a
-    # checkpoint dir when SPARK_GRAFT_CHECKPOINT_DIR is set — without the
-    # passthrough those queries could not be profiled (r12 ADVICE)
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt_dir and spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
+EVENT_LOG_CONF = {
+    "spark.eventLog.enabled": "true",
+    "spark.eventLog.dir": f"file://{LOGDIR}",
+    "spark.eventLog.compress": "false",
+    "spark.eventLog.rolling.enabled": "false",
+}
 
 
 def main() -> None:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     os.makedirs(LOGDIR, exist_ok=True)
-    spark = make_session()
-    attach_checkpoint_dir(spark)
+    from dffoo_data_pipeline_spark.session import get_spark
+
+    spark = get_spark("profile-query", extra_conf=EVENT_LOG_CONF)
     from dffoo_data_pipeline_spark.plans import all_queries
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -103,7 +68,7 @@ def main() -> None:
     # Spark 4 rolling layout: eventlog_v2_<appId>/events_*_<appId>; fall
     # back to the single-file layout of older versions.  Segments sort
     # NUMERICALLY by index (events_10 would lexicographically sort before
-    # events_2 and apply stage updates out of order; r12 ADVICE).
+    # events_2 and apply stage updates out of order).
     def _seg_index(p: Path) -> tuple:
         parts = p.name.split("_")
         return (int(parts[1]),) if len(parts) > 1 and parts[1].isdigit() else (0,)
@@ -157,8 +122,7 @@ def main() -> None:
     print(f"query={name} walls={['%.3f' % w for w in walls]} (first=warm)")
     for ri in range(reps):
         # attribute jobs by the thread-local rep tag each run sets (exact),
-        # not by wall-clock windows (the old ±50/100ms heuristic could
-        # misassign jobs; r12 ADVICE)
+        # not by wall-clock windows, which can misassign jobs
         rjobs = {j: v for j, v in jobs.items() if v.get("desc") == f"rep{ri}:{name}"}
         tot_job_wall = sum((v["t1"] - v["t0"]) for v in rjobs.values() if "t1" in v)
         print(
