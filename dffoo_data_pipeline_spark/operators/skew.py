@@ -29,15 +29,19 @@ def salted_agg(
     Only algebraic aggregates decompose this way (sum/count/min/max; avg =
     sum+count recombined by the caller).
 
+    The salt hashes every column of `df`: project to keys + aggregate
+    inputs first.  Any other column is read only to be hashed, which
+    defeats column pruning at the scan.
+
     The salt is a per-row CONTENT hash, not F.rand: a nondeterministic
     expression evaluated before a shuffle is a known Spark correctness
     hazard — after a shuffle-fetch failure the recomputed map partition
     re-draws different salts for the same rows, so a row can land in two
-    salt partials (double-counted) or none.  xxhash64 over the full row
+    salt partials (double-counted) or none.  xxhash64 over the row
     re-derives the SAME salt on recompute.  A hot key spreads over the
-    salts as long as its rows differ anywhere outside the group keys
-    (payload columns); fully identical rows share a salt — acceptable,
-    since identical rows collapse in map-side combine anyway.
+    salts as long as its rows differ in the aggregate inputs; rows
+    identical in every hashed column share a salt — acceptable, since
+    identical rows collapse in map-side combine anyway.
 
     Note Spark's built-in hash aggregate already does map-side partial
     combine, which absorbs MOST skew; explicit salting is the tool for the

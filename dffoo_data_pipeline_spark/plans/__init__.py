@@ -35,6 +35,9 @@ _PRIORITY = [
     "similarity_int8_topk",
     "events_ordered_funnel",
     "similarity_pq_indexed",
+    "q3_shipping_priority",
+    "agg_salted_hot_keys",
+    "events_sketch_rollup",
     # ---- oracle SQL rebuilt from shared templates, same rows ----
     "similarity_lsh_topk",
     "similarity_ivf_topk",
@@ -53,7 +56,6 @@ _PRIORITY = [
     "profile_approx_quantiles_lineitem",
     "dedup_incremental_neardup",
     "embedding_pca_project",
-    "events_sketch_rollup",
     "similarity_ann_recall_report",
     "agg_skew_safe_count_distinct",
     "skew_heavy_hitter_report",

@@ -163,6 +163,12 @@ def events_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts at 100 TB: sketches commute with union, exact counts don't.
     Accuracy (~2% for lgConfigK=12) is asserted against exact
     COUNT(DISTINCT) in tests/test_linkage.py.
+
+    Invariant: the final sort runs in one partition.  Its input is
+    |days| + 1 rows at any scale, so a range sort's sampling job and
+    range shuffle cost more than the sort.  ``coalesce(1)`` drops both,
+    so the query runs 3 jobs: the daily sketch stage, the rollup stage
+    and the sorted result.
     """
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("period")).agg(
@@ -198,6 +204,7 @@ def events_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_estimate("sk").cast("bigint").alias("est_users"),
             F.col("n_events").cast("bigint").alias("n_events"),
         )
+        .coalesce(1)
         .orderBy("scope", F.col("period").asc_nulls_last())
     )
 

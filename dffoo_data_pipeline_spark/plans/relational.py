@@ -113,12 +113,19 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape — filtered fact joins, size-based join strategy.
 
+    Invariant: the fact table streams, never broadcasts.  The joins are
+    left-deep with lineitem first (the q5 shape).  Without CBO, Spark
+    estimates an inner join's size as the product of its two sides, so
+    a bushy ``orders ⋈ customer`` side never looks smaller than the
+    lineitem scan and the planner would broadcast lineitem instead.
+    Left-deep, every join's smaller side is one filtered dimension, so
+    size-based selection broadcasts orders, then customer.
+
     Scale: customer and orders GROW with the corpus even after their
-    filters, so no broadcast hint — AQE's runtime size check picks
-    broadcast when the filtered side actually fits (it does at test SF)
-    and falls back to shuffle when it doesn't (100 TB).  Top-k is a
-    global sort of the small aggregated result, ordered with a unique
-    tiebreak so LIMIT is stable.
+    filters, so no broadcast hint — the same size check shuffles them
+    once they no longer fit (100 TB).  Top-k is a global sort of the
+    small aggregated result, ordered with a unique tiebreak so LIMIT is
+    stable.
     """
     c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders").where(
@@ -128,8 +135,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
     return (
-        l.join(o.join(c, o.o_custkey == c.c_custkey),
-               l.l_orderkey == o.o_orderkey)
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(N.money_sum(N.dec2("l_extendedprice") * (1 - N.dec_small("l_discount"))).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -955,12 +962,17 @@ def agg_salted_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_returnflag has 3 values over the whole fact table, the worst case
     for a one-reducer-per-key shuffle (operators/skew.py:salted_agg).
 
+    Invariant: the scan reads only the key and the aggregate input.
+    The salt hashes every column it is given, so lineitem is projected
+    to (l_returnflag, l_quantity) first; salting the full row would read
+    all 16 columns.
+
     Scale: phase 1 shuffles (key × 32 salts) partials, phase 2 reduces at
     most 32 rows per key; no single reducer ever sees more than 1/32 of a
     hot key."""
     from dffoo_data_pipeline_spark.operators.skew import salted_agg
 
-    li = load_table(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     return salted_agg(
         li,
         keys=["l_returnflag"],

@@ -72,3 +72,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECTNESS
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started while `fn` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"job-count-pin-{id(fn)}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -122,7 +122,14 @@ def test_bucketed_join_values_match_plain(spark, sf_dir, bucketed_tables):
 def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     """Z-ordered files must have materially narrower per-file min/max
     ranges on BOTH pruning columns than a layout sorted by only the
-    first column (where the second column's ranges span ~everything)."""
+    first column (where the second column's ranges span ~everything).
+
+    The range partitioner seeds its boundary sample with the RDD id, so
+    with the default sample size the file boundaries (and the z-order
+    ratio, 0.58–0.60 of the span here) depend on how many RDDs the
+    session built before this test.  The sample size is pinned so that
+    every input row is sampled: the boundaries are then exact and the
+    layout is the same in any test order."""
     from pyspark.sql import functions as F
 
     from dffoo_data_pipeline_spark.sources.readers import load_table
@@ -133,13 +140,20 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     )
     zpath = str(tmp_path / "zorder")
     spath = str(tmp_path / "single")
-    write_zordered(li, zpath, ["l_partkey", "l_suppkey"], n_files=8)
-    (
-        li.repartitionByRange(8, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
+    sample_conf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old_sample = spark.conf.get(sample_conf)
+    # 3 × 8 files × 10k samples ≥ the ~60k sf0.01 lineitem rows
+    spark.conf.set(sample_conf, "10000")
+    try:
+        write_zordered(li, zpath, ["l_partkey", "l_suppkey"], n_files=8)
+        (
+            li.repartitionByRange(8, "l_partkey")
+            .sortWithinPartitions("l_partkey")
+            .write.mode("overwrite")
+            .parquet(spath)
+        )
+    finally:
+        spark.conf.set(sample_conf, old_sample)
 
     def avg_file_range(path, col):
         per_file = (

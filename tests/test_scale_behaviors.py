@@ -90,6 +90,72 @@ def test_aqe_broadcasts_unhinted_dims_at_test_scale(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _subtrees(plan: str, node: str) -> list[str]:
+    """Each subtree of a physical-plan tree string rooted at an operator
+    named `node`: its own line plus the deeper-indented lines below it."""
+    lines = plan.splitlines()
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))  # noqa: E731
+    out = []
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-").startswith(node):
+            j = i + 1
+            while j < len(lines) and depth(lines[j]) > depth(line):
+                j += 1
+            out.append("\n".join(lines[i:j]))
+    return out
+
+
+def _executed_plan(df) -> str:
+    """Run `df` into a noop sink and return its adaptive plan string
+    (final and initial plans)."""
+    df.write.mode("overwrite").format("noop").save()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_q3_streams_lineitem_never_broadcasts_it(spark, sf_dir):
+    """q3 joins left-deep with the fact table first, so no broadcast
+    carries lineitem rows: without CBO an inner join's size estimate is
+    the product of its sides, and a bushy orders ⋈ customer side would
+    make the planner broadcast the filtered lineitem scan instead."""
+    from dffoo_data_pipeline_spark.plans.relational import QUERIES
+
+    plan = _executed_plan(QUERIES["q3_shipping_priority"](spark, sf_dir))
+    broadcasts = _subtrees(plan, "BroadcastExchange")
+    assert broadcasts, plan
+    fact = [b for b in broadcasts if "lineitem.parquet" in b]
+    assert not fact, fact[0]
+
+
+def test_salted_agg_reads_only_key_and_input(spark, sf_dir):
+    """The salt hashes every column it is given, so agg_salted_hot_keys
+    projects lineitem to its key and aggregate input before salting:
+    the scan reads 2 columns, not the whole row."""
+    from dffoo_data_pipeline_spark.plans.relational import QUERIES
+
+    plan = _executed_plan(QUERIES["agg_salted_hot_keys"](spark, sf_dir))
+    scans = [ln for ln in plan.splitlines() if "lineitem.parquet" in ln]
+    assert scans, plan
+    for scan in scans:
+        # a long schema prints truncated ("...") and without its closing ">"
+        schema = re.search(r"ReadSchema: struct<([^>]*)", scan).group(1)
+        assert len(schema.split(",")) == 2, scan
+
+
+def test_sketch_rollup_sorts_in_one_partition(spark, sf_dir):
+    """events_sketch_rollup sorts its |days| + 1 rows in one partition:
+    no range exchange, so no sampling job and no range shuffle — 3 jobs
+    per run (warm run first, as in the benchmark's job-count pin)."""
+    from dffoo_data_pipeline_spark.plans.linkage import QUERIES
+    from tests.conftest import count_jobs
+
+    def run():
+        return _executed_plan(QUERIES["events_sketch_rollup"](spark, sf_dir))
+
+    plan = run()  # warm-up run
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert count_jobs(spark, run) == 3
+
+
 def test_runtime_bloom_filter_prunes_selective_join(spark, tmp_path):
     """Runtime row-level filtering: when a shuffle join has a selective
     creation side, Spark injects a bloom filter (might_contain) on the

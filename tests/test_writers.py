@@ -14,6 +14,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from dffoo_data_pipeline_spark.sources import writers
+from tests.conftest import count_jobs
 
 
 def _chars_df(spark, rows):
@@ -191,19 +192,6 @@ def test_read_latest_run_without_runs_names_the_path(spark, tmp_path):
             writers.read_latest_run(spark, path)
 
 
-def _count_jobs(spark, fn) -> int:
-    """Spark jobs started while `fn` runs, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"writers-pin-{id(fn)}"
-    sc.setJobGroup(group, "writer job-count pin")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_writer_reads_run_no_planning_jobs(spark, tmp_path):
     """The load stage's writer-side reads run no Spark job before their
     sink: the latest run comes from the directory listing and every
@@ -219,10 +207,10 @@ def test_writer_reads_run_no_planning_jobs(spark, tmp_path):
     def read_latest():
         writers.read_latest_run(spark, raw).write.mode("overwrite").format("noop").save()
 
-    assert _count_jobs(spark, read_latest) == 1
+    assert count_jobs(spark, read_latest) == 1
     upsert = lambda: writers.upsert_by_key(spark, writers.read_latest_run(spark, raw), cur, ["k"])  # noqa: E731
-    assert _count_jobs(spark, upsert) <= 2
-    assert _count_jobs(spark, lambda: writers.compact(spark, cur)) == 1
+    assert count_jobs(spark, upsert) <= 2
+    assert count_jobs(spark, lambda: writers.compact(spark, cur)) == 1
     got = {r.k: r.v for r in spark.read.parquet(cur).collect()}
     assert got == {k: 2 * k for k in range(300)}
 
