@@ -542,110 +542,124 @@ def _bloom_positions(col, num_bits: int, num_hashes: int, family: str = "xx64"):
     raise ValueError(f"unknown bloom family {family!r} (xx64 or md5)")
 
 
+# seed column for shard ROUTING — outside [0, num_hashes), so the shard
+# hash is independent of every bit-position hash (a shared seed would
+# correlate shard membership with bit 0, biasing per-shard fill)
+_BLOOM_SHARD_SEED = -1
+
+
+def _bloom_shard_of(col, shards: int, family: str = "xx64"):
+    """Shard router.  ``xx64``: seeded xxhash64.  ``md5``: the first 8
+    hex chars of a FRESH md5 over the fingerprint string, mod ``shards``.
+    Re-hashing — rather than reusing one of the fp's own four 8-hex
+    probe windows — keeps the routing value statistically independent
+    of the bit positions: with power-of-two shards and num_bits, a
+    window-reusing router would fix ``position % shards`` per shard and
+    concentrate that probe's bits on 1/shards of each bitmap.  Any
+    md5-capable engine reproduces the routing bit-for-bit (DuckDB:
+    ``('0x' || substr(md5(fp), 1, 8))::BIGINT % shards``), so the
+    sharded bitmap artifact is cross-engine too.  A NULL fingerprint
+    routes to a NULL shard under ``md5``."""
+    if family == "md5":
+        return F.pmod(
+            F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint"),
+            F.lit(shards),
+        )
+    if family != "xx64":
+        raise ValueError(f"unknown bloom family {family!r} (xx64 or md5)")
+    return F.pmod(F.xxhash64(col, F.lit(_BLOOM_SHARD_SEED)), F.lit(shards))
+
+
+# the build parameters every bitmap row carries: a probe or union with a
+# different routing modulus, geometry or family would test bits the
+# build never set (silent false negatives), so each use compares them
+_BLOOM_STAMP = ("bloom_shards", "bloom_num_bits", "bloom_num_hashes", "bloom_family")
+
+
 def bloom_bitmap(
     fingerprints: DataFrame,
     *,
     fp_col: str = "fp",
+    shards: int = 1,
     num_bits: int = 1 << 16,
     num_hashes: int = 4,
     family: str = "xx64",
 ) -> DataFrame:
-    """Aggregate a fingerprint ledger into a packed Bloom bitmap: a
-    ONE-ROW DataFrame with column ``bloom`` = array of ``num_bits // 64``
-    longs (bit ``b`` lives at ``bloom[b div 64]`` position ``b mod 64``).
+    """Aggregate a fingerprint ledger into a sharded, packed Bloom bitmap:
+    exactly one row per shard id in ``[0, shards)``, with columns
+    ``shard``, ``bloom`` (array of ``num_bits // 64`` longs; bit ``b``
+    lives at ``bloom[b div 64]`` position ``b mod 64``), the stamps
+    ``bloom_shards``, ``bloom_num_bits``, ``bloom_num_hashes``,
+    ``bloom_family``, and ``bloom_fill_ratio`` (popcount/num_bits).
 
-    Fully lazy and fully distributed: each ledger row emits its
-    ``num_hashes`` bit positions (xxhash64 seeded by the probe index),
-    the OR-fold runs as a map-side partial ``bit_or`` per 64-bit word,
-    and the final densify step (map → fixed-length array) touches at
-    most ``num_bits/64`` rows.  Nothing is collected to the driver — the
-    bitmap is a broadcastable 1-row relation (8 KiB at the 2^16-bit
-    default), so at 100 TB the only cost is the one ledger scan.
+    Each fingerprint routes to one shard (`_bloom_shard_of`) and sets
+    its ``num_hashes`` positions (`_bloom_positions`) in that shard's
+    row.  A shard that receives no fingerprint gets the all-zeros row,
+    so the relation is dense and a missing row always means corruption.
+    The fold is one shuffle on (shard, word) with map-side ``bit_or``
+    partials, then one on shard; nothing is collected to the driver.
+    A NULL fingerprint under ``md5`` derives no positions and sets no
+    bit; the probe answers it not-seen, as the exact anti-join does.
 
-    Sizing (the caller's responsibility — an UNDER-sized bitmap is
-    correct but useless): for a target false-positive rate ``fpp`` over
-    ``n`` distinct fingerprints, ``num_bits ≈ 1.44 · n · log2(1/fpp)``
-    (≈ 9.6 bits/fp at fpp=1%), with ``num_hashes ≈ 0.69 · num_bits/n``.
-    An over-filled bitmap saturates toward all-ones and the prefilter
-    silently degrades to a no-op (every probe answers "maybe", the whole
-    batch pays the exact join) — so the row is STAMPED with
-    ``bloom_fill_ratio`` (popcount/num_bits; ≈50% at the optimal
-    operating point) and probes REFUSE a bitmap past ``max_fill``
-    instead of failing slow.  ``max_fill`` defaults to 0.55, NOT 0.5:
-    a correctly-sized bitmap sits AT the 50% operating point, so a
-    refusal threshold of exactly 0.5 would reject it on sampling noise
-    alone (r11 ADVICE) — the default leaves headroom above the design
-    point while still firing long before the filter degrades (fpp
-    rises ~(fill)^k, still < 2× design fpp at 55%).  Ceiling: the 1-row packed
-    array must fit a broadcast/driver row, which bounds ``num_bits`` to
-    the low billions (~10^9 bits ≈ 128 MiB); a multi-billion-fingerprint
-    ledger at useful fpp needs more — shard the ledger (e.g. by
-    ``pmod(xxhash64(fp), S)``) and build one bitmap per shard, probing
-    each batch row against its shard's bitmap, rather than one giant row.
-    """
+    Sizing is the caller's job; an under-sized bitmap is correct but
+    useless.  For ``n`` distinct fingerprints at false-positive rate
+    ``fpp``, give each shard ``num_bits ≈ 1.44·(n/shards)·log2(1/fpp)``
+    (≈ 9.6 bits per fingerprint at 1%) and ``num_hashes ≈ 0.69 ·
+    num_bits·shards/n``.  A well-sized bitmap sits near 50% fill; probes
+    refuse any shard past ``max_fill`` (see `bloom_probe`).  One row
+    must fit a broadcast and a driver row, which bounds ``num_bits`` to
+    about 10^9 (128 MiB); past that, raise ``shards``, which grows the
+    capacity at constant row size."""
     if num_bits % 64:
         raise ValueError(f"num_bits must be a multiple of 64, got {num_bits}")
+    if shards < 1:
+        raise ValueError(f"shards must be >= 1, got {shards}")
+    keys = ["shard"] if shards > 1 else []
     bits = fingerprints.select(
+        _bloom_shard_of(F.col(fp_col), shards, family).alias("shard"),
         F.explode(
             F.array(*_bloom_positions(F.col(fp_col), num_bits, num_hashes, family))
-        ).alias("bit")
+        ).alias("bit"),
+    ).where(F.col("bit").isNotNull())  # NULL map keys are refused by Spark
+    masks = bits.select(
+        *keys,
+        F.floor(F.col("bit") / 64).cast("int").alias("word_idx"),
+        # shiftleft's Python wrapper only takes int positions; the SQL
+        # expression form takes any int expression
+        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pmod(bit, 64) AS INT))").alias(
+            "mask"
+        ),
     )
-    # the build geometry is STAMPED into the row: a probe or union with
-    # different num_bits/num_hashes/family would otherwise produce silent
-    # false negatives (bits tested that the build never set) — the same
-    # param-mismatch hole the persisted band/ANN indexes close with
-    # TBLPROPERTIES, closed here with in-row metadata asserted at use
+    if keys:
+        # a zero mask in word 0 of every shard id: a shard that receives
+        # no fingerprint folds to the all-zeros row instead of no row
+        masks = masks.unionByName(
+            fingerprints.sparkSession.range(shards).select(
+                F.col("id").alias("shard"),
+                F.lit(0).alias("word_idx"),
+                F.lit(0).cast("bigint").alias("mask"),
+            )
+        )
+    # with no keys the fold is a global aggregate: one row even over no
+    # input, and a one-row size estimate for the plans that join it
+    words = masks.groupBy(*keys, "word_idx").agg(F.bit_or("mask").alias("word"))
     return (
-        _bloom_fold_words(bits, num_bits // 64)
+        words.groupBy(*keys)
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("word_idx", "word"))).alias("m")
+        )
         .select(
-            "bloom",
+            F.col("shard") if keys else F.lit(0).cast("bigint").alias("shard"),
+            F.expr(
+                f"transform(sequence(0, {num_bits // 64 - 1}),"
+                " i -> coalesce(try_element_at(m, i), CAST(0 AS BIGINT)))"
+            ).alias("bloom"),
+            F.lit(shards).alias("bloom_shards"),
             F.lit(num_bits).alias("bloom_num_bits"),
             F.lit(num_hashes).alias("bloom_num_hashes"),
             F.lit(family).alias("bloom_family"),
         )
         .withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
-    )
-
-
-def _bloom_fold_words(bits: DataFrame, num_words: int, *group_cols: str) -> DataFrame:
-    """Fold exploded bit positions into packed 64-long-word arrays: input
-    (*group_cols, bit), output (*group_cols, bloom).  The OR-fold runs as
-    a map-side partial ``bit_or`` per (group, word); the densify step
-    (map → fixed-length array) touches ``num_words`` entries per group.
-    With no group columns the fold is a GLOBAL aggregate — exactly one
-    output row even over empty input (the all-zeros bitmap); with groups
-    (the sharded form), empty groups simply have no row.  NULL bit
-    positions (a NULL fingerprint under the md5 family, which derives
-    positions from the fp hex itself) are dropped here — a NULL fp sets
-    no bits, matching the probe side where it tests none and is answered
-    not-seen, and keeping NULL out of ``map_from_entries`` (NULL map
-    keys are refused by Spark)."""
-    words = (
-        bits.where(F.col("bit").isNotNull())
-        .select(
-            *group_cols,
-            F.floor(F.col("bit") / 64).cast("int").alias("word_idx"),
-            # shiftleft's Python wrapper only takes int positions; the SQL
-            # expression form takes any int expression
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pmod(bit, 64) AS INT))"
-            ).alias("mask"),
-        )
-        .groupBy(*group_cols, "word_idx")
-        .agg(F.bit_or("mask").alias("word"))
-    )
-    return (
-        words.groupBy(*group_cols)  # no cols == global agg: 1 row always
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("word_idx", "word"))).alias("m")
-        )
-        .select(
-            *group_cols,
-            F.expr(
-                f"transform(sequence(0, {num_words - 1}),"
-                "           i -> coalesce(try_element_at(m, i), CAST(0 AS BIGINT)))"
-            ).alias("bloom"),
-        )
     )
 
 
@@ -662,161 +676,102 @@ def _bloom_fill_ratio(bloom_col: str):
     ).cast("double")
 
 
-def _bloom_checked(
-    bitmap: DataFrame,
-    num_bits: int,
-    num_hashes: int,
-    *,
-    family: str = "xx64",
-    max_fill: float = 0.55,
-) -> DataFrame:
-    """Refuse a malformed or saturated bitmap LOUDLY, before it can
-    silently corrupt (or silently un-optimize) a probe:
+def _bloom_stats(bitmap: DataFrame, prefix: str = "") -> DataFrame:
+    """One row of facts about a bitmap relation: its sorted shard ids,
+    its lowest and highest stamp, and its worst fill ratio.  A global
+    aggregate, so it has one row even over an empty (or statically
+    empty) relation — the refusal it feeds cannot be optimized away."""
+    stamp = f"struct({', '.join(_BLOOM_STAMP)})"
+    return bitmap.agg(
+        F.expr(f"array_sort(collect_list(shard)) AS {prefix}ids"),
+        F.expr(f"min({stamp}) AS {prefix}lo"),
+        F.expr(f"max({stamp}) AS {prefix}hi"),
+        F.expr(f"max(bloom_fill_ratio) AS {prefix}fill"),
+    )
 
-    - not exactly one row: a 0-row bitmap would empty the crossJoin and
-      drop the whole batch (neither novel nor dupe); an N-row one (plain
-      union of two bitmaps) would fan every probe doc out N×.  The check
-      is an AGGREGATE count — the bitmap reduces to a guaranteed-one-row
-      relation first, so the refusal fires even on 0 rows, where any
-      per-row assert is vacuous.
-    - stamped build geometry differs from the probe's: bits would be
-      tested that the build never set → silent false negatives.
-    - fill ratio past ``max_fill`` (default 0.55 — just above the 0.5
-      optimal operating point, so a correctly-sized bitmap sitting AT
-      its design fill isn't spuriously refused): a saturated bitmap
-      answers "maybe" for
-      everything, degrading the prefilter to a no-op — correct answers,
-      zero pruning, the failure mode that should fail loud, not slow.
-      Re-size per the rule in `bloom_bitmap`'s docstring (num_bits ≈
-      1.44·n·log2(1/fpp)) or shard the ledger.
 
-    All checks run on a ≤1-row relation — free."""
-    if "bloom_fill_ratio" not in bitmap.columns:
-        # externally-assembled bitmap rows predating the stamp: the fill
-        # ratio is derivable from the words themselves
-        bitmap = bitmap.withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
-    if "bloom_family" not in bitmap.columns:
-        # pre-family bitmaps were all xxhash64-built
-        bitmap = bitmap.withColumn("bloom_family", F.lit("xx64"))
-    one = bitmap.agg(
-        F.count(F.lit(1)).alias("__n_rows"),
-        F.first("bloom").alias("bloom"),
-        F.first("bloom_num_bits").alias("bloom_num_bits"),
-        F.first("bloom_num_hashes").alias("bloom_num_hashes"),
-        F.first("bloom_family").alias("bloom_family"),
-        F.first("bloom_fill_ratio").alias("bloom_fill_ratio"),
+def _bloom_refusal(who: str, expect: str, max_fill: float = 1.0, prefix: str = ""):
+    """Why the bitmap summarized by `_bloom_stats` must not be used, or
+    NULL when it may.  In order: a duplicate shard row (it would fan its
+    shard's batch rows out N×); a missing row or an id outside
+    ``[0, bloom_shards)`` (a missing row would answer "proven novel" for
+    every fingerprint routed there — dropped duplicates); a stamp other
+    than ``expect`` (a SQL struct expression) on any row; a shard filled
+    past ``max_fill`` (a saturated bitmap answers "maybe" for nearly
+    everything: correct, but the prefilter stops pruning, which should
+    fail loud, not slow).  One SQL expression: built column by column,
+    the chain took about 0.06 s more driver time per probe."""
+    ids, lo, hi, fill = (prefix + c for c in ("ids", "lo", "hi", "fill"))
+    dup = (
+        f"{who} must be a single row per shard id: duplicate shard rows "
+        "(%d rows for %d shard ids)"
     )
-    geom_ok = (
-        (F.col("bloom_num_bits") == num_bits)
-        & (F.col("bloom_num_hashes") == num_hashes)
-        & (F.col("bloom_family") == family)
+    gap = (
+        f"{who} must be a single row per shard id in [0, %s): got %d rows with "
+        "shard ids %s..%s — build with bloom_bitmap, merge with bloom_union"
     )
-    fill_ok = F.col("bloom_fill_ratio") <= F.lit(float(max_fill))
-    ok = (F.col("__n_rows") == 1) & geom_ok & fill_ok
-    msg = (
-        F.when(
-            F.col("__n_rows") != 1,
-            F.concat(
-                F.lit("bloom bitmap must be a single row (got "),
-                F.col("__n_rows").cast("string"),
-                F.lit(") — build with bloom_bitmap, merge days with bloom_union"),
-            ),
-        )
-        .when(
-            ~geom_ok,
-            F.concat(
-                F.lit(
-                    f"bloom bitmap geometry mismatch: probe expects "
-                    f"num_bits={num_bits}, num_hashes={num_hashes}, "
-                    f"family={family}, index built with "
-                ),
-                F.col("bloom_num_bits").cast("string"),
-                F.lit("/"),
-                F.col("bloom_num_hashes").cast("string"),
-                F.lit("/"),
-                F.col("bloom_family"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("bloom bitmap saturated: fill_ratio="),
-                F.round("bloom_fill_ratio", 4).cast("string"),
-                F.lit(
-                    f" > max_fill={max_fill} — the prefilter would answer 'maybe' "
-                    f"for nearly everything (correct but prunes nothing); rebuild "
-                    f"with num_bits ≈ 1.44·n·log2(1/fpp) or shard the ledger"
-                ),
-            )
-        )
+    stamp = f"{who} stamp mismatch: expected %s, rows carry %s to %s"
+    full = (
+        f"{who} saturated: worst shard fill_ratio=%.4f > max_fill={max_fill} — "
+        "the prefilter would answer maybe for nearly everything; rebuild with "
+        "num_bits ≈ 1.44·(n/shards)·log2(1/fpp) or more shards"
     )
-    return one.where(F.assert_true(ok, msg).isNull()).select("bloom")
+    # density is checked first, against the rows' own stamp
+    return F.expr(
+        f"CASE WHEN size(array_distinct({ids})) != size({ids}) THEN format_string("
+        f"'{dup}', size({ids}), size(array_distinct({ids}))) "
+        f"WHEN NOT coalesce({ids} = sequence(0, {hi}.bloom_shards - 1), false) "
+        f"THEN format_string('{gap}', {hi}.bloom_shards, size({ids}), "
+        f"array_min({ids}), array_max({ids})) "
+        f"WHEN NOT coalesce({lo} = {expect} AND {hi} = {expect}, false) THEN "
+        f"format_string('{stamp}', to_json({expect}), to_json({lo}), to_json({hi})) "
+        f"WHEN {fill} > CAST({float(max_fill)!r} AS DOUBLE) "
+        f"THEN format_string('{full}', {fill}) END"
+    )
 
 
 def bloom_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two `bloom_bitmap` results — the daily ledger-maintenance
-    step: yesterday's bitmap ∪ a fold of ONLY today's novel fingerprints
-    equals a rebuild over the whole ledger (bit-exact, pinned by test),
-    so the cumulative ledger is never re-scanned.  Both sides are 1-row
-    relations; the merge is a broadcast zip_with of the word arrays.
-    Mismatched build geometries are REFUSED at runtime (the stamps must
-    agree — OR-ing bitmaps of different families would silently drop
-    membership), and each side is validated to be EXACTLY one row via an
-    aggregate count (a multi-row side would emit an N×M pairwise-OR'd
-    artifact whose error surfaces only at a later probe; an empty side
-    would silently yield an empty 'merged' bitmap).  The merged row is
-    re-stamped with its own fill ratio (OR-ing raises popcount, so
-    neither input's stamp is valid for the result)."""
-
-    def _single(df: DataFrame, side: str) -> DataFrame:
-        if "bloom_family" not in df.columns:
-            df = df.withColumn("bloom_family", F.lit("xx64"))
-        one = df.agg(
-            F.count(F.lit(1)).alias("__n_rows"),
-            F.first("bloom").alias("bloom"),
-            F.first("bloom_num_bits").alias("bloom_num_bits"),
-            F.first("bloom_num_hashes").alias("bloom_num_hashes"),
-            F.first("bloom_family").alias("bloom_family"),
-        )
-        return one.where(
-            F.assert_true(
-                F.col("__n_rows") == 1,
-                F.concat(
-                    F.lit(
-                        f"bloom_union: {side} side must be a single row "
-                        f"bloom_bitmap result (got "
-                    ),
-                    F.col("__n_rows").cast("string"),
-                    F.lit(")"),
-                ),
-            ).isNull()
-        ).drop("__n_rows")
-
-    rhs = _single(b, "right").select(
-        F.col("bloom").alias("__b2"),
-        F.col("bloom_num_bits").alias("__nb2"),
-        F.col("bloom_num_hashes").alias("__nh2"),
-        F.col("bloom_family").alias("__bf2"),
+    """OR-merge two `bloom_bitmap` results shard by shard — the daily
+    ledger-maintenance step: yesterday's bitmap ∪ a fold of ONLY today's
+    novel fingerprints equals a rebuild over the whole ledger
+    (bit-exact, pinned by test), so the cumulative ledger is never
+    re-scanned.  Each side must pass the probe's row checks against its
+    own stamp (one row per shard id, one stamp), and the two stamps must
+    agree; otherwise the union is refused at action time.  Merged rows
+    are re-stamped with their own fill ratios (OR-ing raises popcount).
+    If BOTH sides are statically empty the union is an empty relation,
+    which every probe refuses."""
+    l_hi, r_hi = F.col("l_hi"), F.col("r_hi")
+    refusal = F.coalesce(
+        _bloom_refusal("bloom_union: left side", "l_hi", prefix="l_"),
+        _bloom_refusal("bloom_union: right side", "r_hi", prefix="r_"),
+        F.when(
+            l_hi != r_hi,
+            F.format_string(
+                "bloom_union: mismatched bitmap geometries (left %s, right %s)",
+                F.to_json(l_hi),
+                F.to_json(r_hi),
+            ),
+        ),
     )
-    merged = _single(a, "left").crossJoin(F.broadcast(rhs))
-    ok = (
-        (F.col("bloom_num_bits") == F.col("__nb2"))
-        & (F.col("bloom_num_hashes") == F.col("__nh2"))
-        & (F.col("bloom_family") == F.col("__bf2"))
+    guard = (
+        _bloom_stats(a, "l_")
+        .crossJoin(_bloom_stats(b, "r_"))
+        .where(F.assert_true(refusal.isNull(), refusal).isNull())
+        .select(l_hi.alias("stamp"))
     )
-    return (
-        merged.where(
-            F.assert_true(
-                ok, F.lit("bloom_union: mismatched bitmap geometries")
-            ).isNull()
-        )
-        .select(
-            F.zip_with("bloom", "__b2", lambda x, y: x.bitwiseOR(y)).alias("bloom"),
-            "bloom_num_bits",
-            "bloom_num_hashes",
-            "bloom_family",
-        )
-        .withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
+    # full outer, not inner: with one side statically empty the join
+    # reduces to the other side, so the guard below still runs and refuses
+    merged = (
+        a.select("shard", "bloom")
+        .join(b.select("shard", F.col("bloom").alias("__b2")), "shard", "full_outer")
+        .crossJoin(F.broadcast(guard))
     )
+    return merged.select(
+        "shard",
+        F.zip_with("bloom", "__b2", lambda x, y: x.bitwiseOR(y)).alias("bloom"),
+        "stamp.*",
+    ).withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
 
 
 def bloom_might_contain(
@@ -843,81 +798,61 @@ def bloom_might_contain(
     return cond
 
 
-def dedup_against_seen_bloom(
-    new_docs: DataFrame,
-    seen_fingerprints: DataFrame,
+def bloom_probe(
+    batch: DataFrame,
+    bitmap: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     fp_col: str = "fp",
+    shards: int = 1,
     num_bits: int = 1 << 16,
     num_hashes: int = 4,
-    bitmap: DataFrame | None = None,
-    max_fill: float = 0.55,
     family: str = "xx64",
+    max_fill: float = 0.55,
+    broadcast: bool = True,
 ) -> DataFrame:
-    """`dedup_against_seen` with an EXPLICIT broadcast-Bloom prefilter —
-    the steady-state ingest shape when the seen ledger is so much larger
-    than the daily batch that even the runtime-injected bloom filter is
-    left on the table (it only fires when the join's creation-side scan
-    is cheap; a 100 TB ledger's isn't).
+    """``batch`` plus a boolean ``maybe_seen``: the Bloom verdict of each
+    row's ``fp_col`` against a `bloom_bitmap` result.  ``false`` is proof
+    that the fingerprint is not in the ledger; ``true`` means it may be
+    (a true duplicate or a false positive).  A NULL fingerprint the
+    family cannot place answers ``false``, as the exact anti-join does.
 
-    Plan: one ledger scan folds into a 1-row bitmap (`bloom_bitmap`),
-    broadcast onto the batch; rows whose bloom test is false are PROVEN
-    novel and never reach the exact join; only the `maybe` remainder
-    (true dupes + the fpp sliver) pays the shuffle anti-join against the
-    ledger.  Returns the NOVEL rows stamped with `fp_col` — the Bloom
-    never changes the answer (no false negatives), only how much of the
-    batch pays the exact join, so the result is oracle-exact.
+    Each batch row equi-joins its shard's row on the shard id, so it
+    reads only that shard's words.  The bitmap relation (all shards ×
+    ``num_bits``/8 bytes) is broadcast by default; past about 1 GiB in
+    total, pass ``broadcast=False`` to run the same join as a shuffle
+    (same answers, same refusals).
 
-    Pass a pre-built ``bitmap`` (a `bloom_bitmap` result) to amortize the
-    ledger fold across many batches — the streaming caller builds it
-    once per run and probes it every micro-batch.  A bitmap whose
-    stamped build geometry differs from this probe's
-    num_bits/num_hashes is REFUSED at runtime (a mismatch would produce
-    silent false negatives, i.e. dropped duplicates), as is a bitmap
-    filled past ``max_fill`` (default 0.55 — headroom above the 50%
-    design point so a correctly-sized bitmap isn't refused on noise; a
-    saturated bitmap answers "maybe" for everything and the prefilter
-    silently stops pruning; see `bloom_bitmap` for the sizing rule).
-    """
-    from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
-
-    if bitmap is None:
-        # no pre-built bitmap ⇒ the ledger fp relation has TWO consumers
-        # (the bitmap fold here AND the exact anti-join below), and its
-        # scan+md5 subtree would run once per consumer — checkpoint it so
-        # the ledger is fingerprinted once.  Batch-only API, so skipped
-        # for streaming frames (every streaming caller goes through
-        # foreachBatch with a pre-built bitmap anyway); unnecessary on
-        # the amortized path, where the anti-join is seen's only reader.
-        if not seen_fingerprints.isStreaming:
-            seen_fingerprints = seen_fingerprints.localCheckpoint(eager=False)
-        # lazy checkpoint: the 1-row bitmap is consumed by BOTH union
-        # branches (proven-novel filter + maybe-side verify); without it
-        # each branch re-runs the full ledger scan + bit fold.
-        # eager=False keeps plan construction free (materializes at the
-        # first action).
-        bitmap = bloom_bitmap(
-            seen_fingerprints,
-            fp_col=fp_col,
-            num_bits=num_bits,
-            num_hashes=num_hashes,
-            family=family,
-        ).localCheckpoint(eager=False)
-    bitmap = _bloom_checked(
-        bitmap, num_bits, num_hashes, family=family, max_fill=max_fill
+    The bitmap is refused at action time, never probed, when any shard
+    row is missing or duplicated, an id lies outside ``[0, shards)``,
+    any row's stamp differs from this probe's shards, num_bits,
+    num_hashes or family, or any shard is filled past ``max_fill``.
+    The default 0.55 sits just above the 50% design fill, so a
+    correctly sized bitmap is not refused on noise, while the false
+    positive rate (≈ fill^k) stays under twice the design rate."""
+    expect = (
+        f"named_struct('bloom_shards', {int(shards)}, 'bloom_num_bits', "
+        f"{int(num_bits)}, 'bloom_num_hashes', {int(num_hashes)}, "
+        f"'bloom_family', '{family}')"
     )
-    stamped = (
-        new_docs.withColumn(fp_col, fingerprint_md5(text_col))
-        .crossJoin(F.broadcast(bitmap))
+    refusal = _bloom_refusal("bloom bitmap", expect, max_fill)
+    guard = _bloom_stats(bitmap).where(
+        F.assert_true(refusal.isNull(), refusal).isNull()
+    )
+    # the guard rides in the bitmap relation as one extra row with shard
+    # -1, which no batch row joins: it is evaluated by the same broadcast,
+    # and a statically empty bitmap cannot prune it away.  (A NULL shard
+    # would not do: the join's inferred isnotnull filter prunes it.)
+    rhs = bitmap.select(F.col("shard").alias("__shard"), "bloom").unionByName(
+        guard.select(
+            F.lit(-1).cast("bigint").alias("__shard"),
+            F.lit(None).cast("array<bigint>").alias("bloom"),
+        )
+    )
+    return (
+        batch.withColumn("__shard", _bloom_shard_of(F.col(fp_col), shards, family))
+        .join(F.broadcast(rhs) if broadcast else rhs, "__shard", "left")
         .withColumn(
-            "__maybe_seen",
-            # coalesce: a NULL fingerprint (NULL text) yields NULL bit
-            # tests under the md5 family — without the coalesce such a
-            # row would match NEITHER where() branch and silently vanish
-            # (the plain anti-join classifies it novel, since NULL never
-            # equals a ledger fp; so must we)
+            "maybe_seen",
             F.coalesce(
                 bloom_might_contain(
                     F.col(fp_col),
@@ -929,358 +864,61 @@ def dedup_against_seen_bloom(
                 F.lit(False),
             ),
         )
-        .drop("bloom")
-    )
-    # the stamped batch feeds BOTH union branches; un-staged, each branch
-    # re-runs the batch scan + md5 + 4-probe bloom test (guide §2.4 —
-    # share one pass).  Batch-only API: foreachBatch callers pass batch
-    # frames, so the streaming guard keeps the operator stream-safe.
-    if not stamped.isStreaming:
-        stamped = stamped.localCheckpoint(eager=False)
-    proven_novel = stamped.where(~F.col("__maybe_seen"))
-    verified_novel = stamped.where(F.col("__maybe_seen")).join(
-        seen_fingerprints.select(fp_col), fp_col, "left_anti"
-    )
-    return proven_novel.unionByName(verified_novel).drop("__maybe_seen")
-
-
-# seed column for shard ROUTING — outside [0, num_hashes), so the shard
-# hash is independent of every bit-position hash (a shared seed would
-# correlate shard membership with bit 0, biasing per-shard fill)
-_BLOOM_SHARD_SEED = -1
-
-
-def _bloom_shard_of(col, shards: int, family: str = "xx64"):
-    """Shard router for the sharded Bloom family.  ``xx64``: seeded
-    xxhash64 — fastest, JVM-side, Spark-specific values.  ``md5``
-    (r11, the portable router the r10 build deferred): the first 8 hex
-    chars of a FRESH md5 over the fingerprint string, mod ``shards``.
-    Re-hashing — rather than reusing one of the fp's own four 8-hex
-    probe windows — keeps the routing value statistically independent
-    of the bit positions: with power-of-two shards and num_bits, a
-    window-reusing router would fix ``position % shards`` per shard and
-    concentrate that probe's bits on 1/shards of each bitmap.  Any
-    md5-capable engine reproduces the routing bit-for-bit (DuckDB:
-    ``('0x' || substr(md5(fp), 1, 8))::BIGINT % shards``), which makes
-    the SHARDED bitmap artifact itself cross-engine, completing the
-    portable Bloom family past the broadcast ceiling."""
-    if family == "md5":
-        return F.pmod(
-            F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint"),
-            F.lit(shards),
-        )
-    if family != "xx64":
-        raise ValueError(f"unknown bloom family {family!r} (xx64 or md5)")
-    return F.pmod(F.xxhash64(col, F.lit(_BLOOM_SHARD_SEED)), F.lit(shards))
-
-
-def bloom_bitmap_sharded(
-    fingerprints: DataFrame,
-    *,
-    fp_col: str = "fp",
-    shards: int = 8,
-    num_bits: int = 1 << 16,
-    num_hashes: int = 4,
-    family: str = "xx64",
-) -> DataFrame:
-    """The past-the-broadcast-ceiling form of `bloom_bitmap`: fingerprints
-    route to ``pmod(xxhash64(fp, seed), shards)`` (or, under the ``md5``
-    family, an md5-rehash prefix modulus any engine reproduces — see
-    `_bloom_shard_of`) and each shard folds
-    into its OWN packed bitmap row — an at-most-``shards``-row relation
-    carrying ``shards × num_bits`` total capacity with no single giant
-    row/broadcast (the 1-row form tops out around 10^9 bits ≈ 128 MiB;
-    see `bloom_bitmap`'s sizing note).  Probes join batch rows to their
-    shard's row on the shard id (`dedup_against_seen_bloom_sharded`), so
-    each row still crosses the wire once per executor, not per doc.
-
-    Same stamps as the 1-row form (geometry + per-shard fill ratio) plus
-    ``shard`` and ``bloom_shards`` (the routing modulus — a probe with a
-    different ``shards`` would route fingerprints to the wrong rows:
-    refused, like every other geometry mismatch).  A shard that received
-    no fingerprints has NO row; probes treat the missing row as the
-    all-zeros bitmap (proven novel), so sparse ledgers stay cheap.
-    Fold is one shuffle on (shard, word_idx) with map-side `bit_or`
-    partials, then one on shard — nothing is collected."""
-    if num_bits % 64:
-        raise ValueError(f"num_bits must be a multiple of 64, got {num_bits}")
-    if shards < 1:
-        raise ValueError(f"shards must be >= 1, got {shards}")
-    # a NULL fp routes to a NULL shard and derives NULL positions only
-    # (both come from the fp), so _bloom_fold_words' NULL-bit drop also
-    # keeps any NULL-shard row from materializing
-    bits = fingerprints.select(
-        _bloom_shard_of(F.col(fp_col), shards, family).alias("shard"),
-        F.explode(
-            F.array(*_bloom_positions(F.col(fp_col), num_bits, num_hashes, family))
-        ).alias("bit"),
-    )
-    return (
-        _bloom_fold_words(bits, num_bits // 64, "shard")
-        .select(
-            "shard",
-            "bloom",
-            F.lit(shards).alias("bloom_shards"),
-            F.lit(num_bits).alias("bloom_num_bits"),
-            F.lit(num_hashes).alias("bloom_num_hashes"),
-            F.lit(family).alias("bloom_family"),
-        )
-        .withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
+        .drop("bloom", "__shard")
     )
 
 
-def _bloom_sharded_checked(
-    bitmaps: DataFrame,
-    shards: int,
-    num_bits: int,
-    num_hashes: int,
-    *,
-    family: str = "xx64",
-    max_fill: float = 0.55,
-) -> DataFrame:
-    """`_bloom_checked`'s sharded sibling, same lazy 1-row-aggregate
-    pattern: refuse duplicate shard rows (each would fan its shard's
-    probe docs out N×), out-of-domain shard ids, a routing-modulus or
-    geometry stamp differing from the probe's, and any shard past
-    ``max_fill``.  ZERO rows is VALID here (an empty ledger builds no
-    shard rows; probes treat missing shards as all-zeros), so unlike the
-    1-row form the count check is uniqueness, not presence."""
-    if "bloom_fill_ratio" not in bitmaps.columns:
-        # externally-assembled shard rows predating the stamp: derivable
-        bitmaps = bitmaps.withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
-    if "bloom_family" not in bitmaps.columns:
-        # pre-family shard rows were all xxhash64-built (r11: the md5
-        # portable router stamps its family; legacy rows default)
-        bitmaps = bitmaps.withColumn("bloom_family", F.lit("xx64"))
-    geom_ok = (
-        (F.col("bloom_shards") == shards)
-        & (F.col("bloom_num_bits") == num_bits)
-        & (F.col("bloom_num_hashes") == num_hashes)
-        & (F.col("bloom_family") == family)
-    )
-    guard = bitmaps.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count_distinct(F.col("shard")).alias("__nd"),
-        F.min("shard").alias("__smin"),
-        F.max("shard").alias("__smax"),
-        # coalesce: a row with NULL stamps must count as a geometry
-        # FAILURE, not be skipped by min()'s NULL-ignoring aggregation —
-        # an unstamped row would otherwise be probed unverified
-        F.min(F.coalesce(geom_ok.cast("int"), F.lit(0))).alias("__geom_ok"),
-        F.max("bloom_fill_ratio").alias("__max_fill"),
-    )
-    ok = (
-        (F.col("__n") == F.col("__nd"))
-        & (F.col("__smin").isNull() | (F.col("__smin") >= 0))
-        & (F.col("__smax").isNull() | (F.col("__smax") < shards))
-        & (F.col("__geom_ok").isNull() | (F.col("__geom_ok") == 1))
-        & (F.col("__max_fill").isNull() | (F.col("__max_fill") <= F.lit(float(max_fill))))
-    )
-    msg = (
-        F.when(
-            F.col("__n") != F.col("__nd"),
-            F.lit(
-                "sharded bloom bitmap has duplicate shard rows — build with "
-                "bloom_bitmap_sharded, merge days with bloom_union_sharded"
-            ),
-        )
-        .when(
-            (F.col("__smin") < 0) | (F.col("__smax") >= shards),
-            F.concat(
-                F.lit("sharded bloom bitmap shard ids ["),
-                F.col("__smin").cast("string"),
-                F.lit(", "),
-                F.col("__smax").cast("string"),
-                F.lit(f"] outside this probe's routing domain [0, {shards})"),
-            ),
-        )
-        .when(
-            F.col("__geom_ok") == 0,
-            F.lit(
-                f"sharded bloom bitmap stamp mismatch: probe expects "
-                f"shards={shards}, num_bits={num_bits}, "
-                f"num_hashes={num_hashes}, family={family}"
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("sharded bloom bitmap saturated: worst shard fill_ratio="),
-                F.round("__max_fill", 4).cast("string"),
-                F.lit(
-                    f" > max_fill={max_fill} — raise num_bits or shards "
-                    f"(num_bits ≈ 1.44·(n/shards)·log2(1/fpp) per shard)"
-                ),
-            )
-        )
-    )
-    checked = guard.where(F.assert_true(ok, msg).isNull()).select(
-        F.lit(1).alias("__shards_checked")
-    )
-    return bitmaps.crossJoin(F.broadcast(checked)).select("shard", "bloom")
-
-
-def bloom_union_sharded(a: DataFrame, b: DataFrame) -> DataFrame:
-    """`bloom_union`'s sharded sibling: per-shard OR-merge via a full
-    outer join on the shard id — a shard present on only one side passes
-    through unchanged (the other side's bitmap is implicitly all-zeros),
-    so yesterday's sharded bitmap ∪ today's novel-only fold is
-    bit-exactly a full rebuild (pinned by test).  Like the 1-row form,
-    BOTH sides are validated before the merge: duplicate shard rows on
-    either side would fan out N×M through the outer join (a corrupted
-    multi-row-per-shard artifact whose error would otherwise only
-    surface at a later probe), and each side must carry exactly one
-    stamp triple — checked ACROSS sides too, even when the shard-id sets
-    are disjoint (the row-level check below can only compare stamps on
-    shards present on both sides).  Merged rows are re-stamped with
-    their own fill ratios."""
-
-    def _norm(df: DataFrame) -> DataFrame:
-        if "bloom_family" not in df.columns:
-            df = df.withColumn("bloom_family", F.lit("xx64"))
-        return df
-
-    a, b = _norm(a), _norm(b)
-
-    def _stats(df: DataFrame, side: str):
-        g = F.struct(
-            "bloom_shards", "bloom_num_bits", "bloom_num_hashes", "bloom_family"
-        )
-        return df.agg(
-            F.count(F.lit(1)).alias(f"__n_{side}"),
-            F.count_distinct(F.col("shard")).alias(f"__nd_{side}"),
-            F.count_distinct(g).alias(f"__ng_{side}"),
-            F.first(g).alias(f"__g_{side}"),
-        )
-
-    ok = (
-        (F.col("__n_l") == F.col("__nd_l"))
-        & (F.col("__n_r") == F.col("__nd_r"))
-        & (F.col("__ng_l") <= 1)
-        & (F.col("__ng_r") <= 1)
-        & (
-            (F.col("__n_l") == 0)
-            | (F.col("__n_r") == 0)
-            | (F.col("__g_l") == F.col("__g_r"))
-        )
-    )
-    msg = (
-        F.when(
-            (F.col("__n_l") != F.col("__nd_l"))
-            | (F.col("__n_r") != F.col("__nd_r")),
-            F.lit(
-                "bloom_union_sharded: a side has duplicate shard rows — "
-                "each must be a bloom_bitmap_sharded result (one row per shard)"
-            ),
-        )
-        .otherwise(F.lit("bloom_union_sharded: mismatched bitmap geometries"))
-    )
-    guard = (
-        _stats(a, "l")
-        .crossJoin(F.broadcast(_stats(b, "r")))
-        .where(F.assert_true(ok, msg).isNull())
-        .select(F.lit(1).alias("__union_checked"))
-    )
-    rhs = b.select(
-        F.col("shard"),
-        F.col("bloom").alias("__b2"),
-        F.col("bloom_shards").alias("__s2"),
-        F.col("bloom_num_bits").alias("__nb2"),
-        F.col("bloom_num_hashes").alias("__nh2"),
-        F.col("bloom_family").alias("__bf2"),
-        F.col("bloom_fill_ratio").alias("__fr2"),
-    )
-    # The aggregate guard hangs off the MERGED output, not either input
-    # (r11 ADVICE): attached to one side, a statically-empty side (e.g.
-    # .where(lit(False)) constant-folded to an empty LocalRelation) lets
-    # PropagateEmptyRelation prune the guard subtree, and a corrupt
-    # OTHER side would sail through the full-outer join unvalidated.
-    # Post-join, the guard survives whenever any row survives; if BOTH
-    # sides are statically empty the merge is vacuously valid anyway.
-    merged = (
-        a.join(rhs, "shard", "full_outer")
-        .crossJoin(F.broadcast(guard))
-        .drop("__union_checked")
-    )
-    both = F.col("bloom").isNotNull() & F.col("__b2").isNotNull()
-    ok = ~both | (
-        (F.col("bloom_shards") == F.col("__s2"))
-        & (F.col("bloom_num_bits") == F.col("__nb2"))
-        & (F.col("bloom_num_hashes") == F.col("__nh2"))
-        & (F.col("bloom_family") == F.col("__bf2"))
-    )
-    return (
-        merged.where(
-            F.assert_true(
-                ok, F.lit("bloom_union_sharded: mismatched bitmap geometries")
-            ).isNull()
-        )
-        .select(
-            "shard",
-            F.when(both, F.zip_with("bloom", "__b2", lambda x, y: x.bitwiseOR(y)))
-            .otherwise(F.coalesce("bloom", "__b2"))
-            .alias("bloom"),
-            F.coalesce("bloom_shards", "__s2").alias("bloom_shards"),
-            F.coalesce("bloom_num_bits", "__nb2").alias("bloom_num_bits"),
-            F.coalesce("bloom_num_hashes", "__nh2").alias("bloom_num_hashes"),
-            F.coalesce("bloom_family", "__bf2").alias("bloom_family"),
-        )
-        .withColumn("bloom_fill_ratio", _bloom_fill_ratio("bloom"))
-    )
-
-
-def dedup_against_seen_bloom_sharded(
+def dedup_against_seen_bloom(
     new_docs: DataFrame,
     seen_fingerprints: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     fp_col: str = "fp",
-    shards: int = 8,
+    shards: int = 1,
     num_bits: int = 1 << 16,
     num_hashes: int = 4,
-    bitmaps: DataFrame | None = None,
+    bitmap: DataFrame | None = None,
     max_fill: float = 0.55,
     family: str = "xx64",
     broadcast: bool = True,
 ) -> DataFrame:
-    """`dedup_against_seen_bloom` for ledgers whose Bloom capacity
-    outgrows one broadcastable row: the prefilter is a BROADCAST EQUI-
-    JOIN of the batch onto the at-most-``shards``-row bitmap relation on
-    the shard id (each batch doc reads exactly its shard's words), not a
-    crossJoin of one giant row.  A batch doc whose shard has no row is
-    PROVEN novel (that shard saw no fingerprints — the all-zeros bitmap
-    answer).  Same exactness contract as the 1-row form: the Bloom never
-    changes the answer, only how much of the batch pays the exact
-    anti-join, so the result is oracle-identical to the plain path.
+    """`dedup_against_seen` behind an explicit Bloom prefilter — the
+    steady-state ingest shape when the seen ledger is so much larger
+    than the daily batch that Spark's runtime-injected bloom filter is
+    left on the table (it only fires when the join's creation-side scan
+    is cheap; a 100 TB ledger's isn't).
 
-    At 100 TB: shards × num_bits scales the capacity linearly while
-    every row stays broadcast-sized; size per the per-shard rule
-    num_bits ≈ 1.44·(n/shards)·log2(1/fpp).  Pass pre-built ``bitmaps``
-    (a `bloom_bitmap_sharded` result) to amortize the ledger fold;
-    routing-modulus/geometry/fill/family mismatches are refused lazily
-    at action time (`_bloom_sharded_checked`).  ``family='md5'`` makes
-    routing AND positions md5-hex-derived, so the sharded artifact is
-    rebuildable and probe-able by any md5-capable engine (the portable
-    family past the broadcast ceiling; certified word-for-word by the
-    `dedup_bloom_sharded_portable` driver query).
+    Plan: the ledger folds into a `bloom_bitmap`, the batch is stamped
+    with ``fp_col`` and probed (`bloom_probe`); rows the Bloom answers
+    "not seen" are PROVEN novel and never reach the exact join; only the
+    "maybe" remainder (true dupes + the fpp sliver) pays the shuffle
+    anti-join against the ledger.  Returns the NOVEL rows stamped with
+    ``fp_col``.  The Bloom never changes the answer, only how much of
+    the batch pays the exact join, so the result equals the plain
+    anti-join's.
 
-    Broadcast-TOTAL ceiling (r10 verdict note): the broadcast ships ALL
-    shard rows to every executor — total ≈ shards × num_bits/8 bytes —
-    so per-row sizing alone isn't enough; past ~1 GiB total (e.g. 128
-    shards × 2^30 bits), pass ``broadcast=False`` to run the prefilter
-    as a SHUFFLE equi-join on the shard id instead (same answer, same
-    refusals — the shard-id join makes the switch a config flip, not a
-    redesign; plan shape pinned in tests/test_scale_behaviors.py)."""
+    Pass a pre-built ``bitmap`` (a `bloom_bitmap` result with the same
+    ``shards``, ``num_bits``, ``num_hashes`` and ``family``) to amortize
+    the ledger fold across batches; `bloom_probe` lists what is refused.
+
+    Eager work at construction: the ledger fingerprints, the bitmap
+    (when not passed in) and the probed batch are each staged with
+    ``localCheckpoint(eager=False)``.  Under adaptive query execution,
+    the session default, such a checkpoint still runs every shuffle and
+    broadcast stage of its plan when it is taken; only its final stage
+    waits for the first action.  So constructing this operator runs
+    Spark jobs (4 on a small input with AQE on, 1 with it off, whatever
+    ``shards`` is; pinned in tests/test_dedup.py)."""
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
 
-    if bitmaps is None:
-        # same two-consumer rule as the 1-row variant: the ledger fp
-        # relation feeds the shard fold AND the exact anti-join —
-        # checkpoint so the ledger is fingerprinted once (batch-only
-        # API; streaming callers pass pre-built bitmaps via foreachBatch)
+    if bitmap is None:
+        # the ledger fp relation feeds the bitmap fold AND the exact
+        # anti-join, and the bitmap feeds the probe AND its guard: stage
+        # both, so the ledger is fingerprinted and folded once
         if not seen_fingerprints.isStreaming:
             seen_fingerprints = seen_fingerprints.localCheckpoint(eager=False)
-        bitmaps = bloom_bitmap_sharded(
+        bitmap = bloom_bitmap(
             seen_fingerprints,
             fp_col=fp_col,
             shards=shards,
@@ -1288,41 +926,27 @@ def dedup_against_seen_bloom_sharded(
             num_hashes=num_hashes,
             family=family,
         ).localCheckpoint(eager=False)
-    checked = _bloom_sharded_checked(
-        bitmaps, shards, num_bits, num_hashes, family=family, max_fill=max_fill
+    stamped = bloom_probe(
+        new_docs.withColumn(fp_col, fingerprint_md5(text_col)),
+        bitmap,
+        fp_col=fp_col,
+        shards=shards,
+        num_bits=num_bits,
+        num_hashes=num_hashes,
+        family=family,
+        max_fill=max_fill,
+        broadcast=broadcast,
     )
-    rhs = checked.withColumnRenamed("shard", "__shard")
-    stamped = (
-        new_docs.withColumn(fp_col, fingerprint_md5(text_col))
-        .withColumn("__shard", _bloom_shard_of(F.col(fp_col), shards, family))
-        .join(F.broadcast(rhs) if broadcast else rhs, "__shard", "left")
-        .withColumn(
-            "__maybe_seen",
-            F.coalesce(
-                bloom_might_contain(
-                    F.col(fp_col),
-                    F.col("bloom"),
-                    num_bits=num_bits,
-                    num_hashes=num_hashes,
-                    family=family,
-                ),
-                F.lit(False),  # missing shard row == all-zeros bitmap
-            ),
-        )
-        .drop("bloom", "__shard")
-    )
-    # the stamped batch is NOT checkpointed here, unlike the 1-row
-    # variant: the broadcast=False contract pins the bitmap equi-join's
-    # strategy in the FINAL executed plan
-    # (tests/test_scale_behaviors.py::test_sharded_bloom_broadcast_knob_
-    # switches_to_shuffle_join), and a checkpoint would hide the join
-    # behind a Scan ExistingRDD.  The cost is one extra batch
-    # scan+md5+probe pass — batch-sized, not ledger-sized.
-    proven_novel = stamped.where(~F.col("__maybe_seen"))
-    verified_novel = stamped.where(F.col("__maybe_seen")).join(
+    # the probed batch feeds both verdict branches; staged, the batch
+    # scan, md5 and probe run once.  Streaming frames cannot be staged
+    # (foreachBatch callers pass batch frames)
+    if not stamped.isStreaming:
+        stamped = stamped.localCheckpoint(eager=False)
+    proven_novel = stamped.where(~F.col("maybe_seen"))
+    verified_novel = stamped.where(F.col("maybe_seen")).join(
         seen_fingerprints.select(fp_col), fp_col, "left_anti"
     )
-    return proven_novel.unionByName(verified_novel).drop("__maybe_seen")
+    return proven_novel.unionByName(verified_novel).drop("maybe_seen")
 
 
 def snapshot_diff(
@@ -1522,6 +1146,11 @@ def lsh_verified_pairs(
     `ngram_jaccard_pairs`, which is exact for ALL sharing pairs but
     pays the posting-list fan-out; this path trades its guaranteed
     recall for candidate-bounded cost.
+
+    Construction is not free: the verify join (`_verify_exact_jaccard`)
+    counts the candidate pairs while the plan is built, to choose
+    between a broadcast and a shuffled join, so building this plan runs
+    the whole candidate generation as Spark jobs before any action.
     """
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
@@ -1598,6 +1227,11 @@ def prefix_filter_pairs(
     corpus without ever paying the full posting-list volume in one run.
     (Cross-window pairs are the LSH path's job — the exactness audit
     proves the filter lossless per slice, and the slices rotate.)
+
+    Construction is not free: the verify join (`_verify_exact_jaccard`)
+    counts the candidate pairs while the plan is built, to choose
+    between a broadcast and a shuffled join, so building this plan runs
+    the whole candidate generation as Spark jobs before any action.
     """
     if sample_hex_cutoff is not None and sample_hex_window is not None:
         raise ValueError("pass at most one of sample_hex_cutoff / sample_hex_window")
@@ -2007,6 +1641,11 @@ def minhash_portable_pairs(
     costs ~2× xxhash64 JVM-side — the price of portability; at 100 TB
     pick this variant when signatures must be probed by a NON-Spark
     engine (e.g. a DuckDB/Trino dedup auditor over the same lakehouse).
+
+    Construction is not free: the verify join (`_verify_exact_jaccard`)
+    counts the candidate pairs while the plan is built, to choose
+    between a broadcast and a shuffled join, so building this plan runs
+    the whole candidate generation as Spark jobs before any action.
     """
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 

@@ -38,6 +38,17 @@ _PRIORITY = [
     "q3_shipping_priority",
     "agg_salted_hot_keys",
     "events_sketch_rollup",
+    "dedup_bloom_prefilter_novel",
+    "dedup_bloom_sharded_novel",
+    "dedup_bloom_portable_words",
+    "dedup_bloom_portable_flags",
+    "dedup_bloom_sharded_portable",
+    "dedup_bloom_sharded_portable_flags",
+    "dedup_bloom_sharded_portable_novel",
+    "pipeline_ingest_day",
+    "streaming_bloom_dedup",
+    "streaming_bloom_dedup_sharded",
+    "streaming_ingest_day",
     # ---- oracle SQL rebuilt from shared templates, same rows ----
     "similarity_lsh_topk",
     "similarity_ivf_topk",

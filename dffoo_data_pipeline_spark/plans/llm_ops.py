@@ -138,9 +138,9 @@ _BLOOM_NOVEL_ORACLE = r"""
 @_register("dedup_bloom_prefilter_novel", _BLOOM_NOVEL_ORACLE)
 def dedup_bloom_prefilter_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup behind an EXPLICIT broadcast-Bloom
-    prefilter (operators/dedup.py:dedup_against_seen_bloom): the seen
-    ledger folds into a 1-row packed bitmap (map-side bit_or, 8 KiB,
-    never collected), the batch tests it as a pure column expression,
+    prefilter (operators/dedup.py:dedup_against_seen_bloom at one shard):
+    the seen ledger folds into a one-row packed bitmap (map-side bit_or,
+    8 KiB, never collected), the batch tests it as a pure column expression,
     and only bloom-positive rows (true dupes + the fpp sliver) pay the
     exact shuffle anti-join.  Bloom false negatives are impossible, so
     the result is byte-identical to the plain anti-join — same oracle
@@ -162,8 +162,8 @@ def dedup_bloom_prefilter_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return novel.select("doc_id", "fp")
 
 
-# the sharded prefilter is answer-identical to the 1-row one (the Bloom
-# never changes the answer), so it certifies against the same
+# the sharded prefilter is answer-identical to the one-shard one (the
+# Bloom never changes the answer), so it certifies against the same
 # plain-NOT-EXISTS truth on a different batch split (% 9) — each path's
 # driver row evidences its own plan
 _BLOOM_SHARDED_ORACLE = r"""
@@ -182,27 +182,23 @@ _BLOOM_SHARDED_ORACLE = r"""
 @_register("dedup_bloom_sharded_novel", _BLOOM_SHARDED_ORACLE)
 def dedup_bloom_sharded_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_bloom_prefilter_novel past the broadcast ceiling
-    (operators/dedup.py:dedup_against_seen_bloom_sharded): fingerprints
-    route to pmod(xxhash64(fp), shards) and each shard folds into its
-    own packed bitmap row, so total Bloom capacity is shards × num_bits
-    while every row stays broadcast-sized — the form for a
-    multi-billion-fingerprint ledger, where one row would need ~10^10
-    bits (the r9 verdict's capacity caveat, closed as an operator rather
-    than a README footnote).  The prefilter is a broadcast EQUI-join of
-    the batch onto the ≤shards-row bitmap relation on the shard id (each
-    doc reads exactly its shard's words — no crossJoin of one giant
-    row); a batch doc whose shard has no row is PROVEN novel.  False
-    negatives remain impossible, so the result is byte-identical to the
-    plain anti-join truth.
+    (operators/dedup.py:dedup_against_seen_bloom with shards=8):
+    fingerprints route to pmod(xxhash64(fp), shards) and each shard folds
+    into its own packed bitmap row, so total Bloom capacity is
+    shards × num_bits while every row stays broadcast-sized — the form
+    for a multi-billion-fingerprint ledger, where one row would need
+    ~10^10 bits.  The prefilter is a broadcast EQUI-join of the batch
+    onto the shards-row bitmap relation on the shard id (each doc reads
+    exactly its shard's words).  False negatives remain impossible, so
+    the result is byte-identical to the plain anti-join truth.
 
     Scale: capacity grows linearly in `shards` with constant row size;
     the fold is one (shard, word) shuffle with map-side bit_or partials;
     per-shard fill ratios are stamped and probes refuse any shard past
-    50% (saturation fails loud, not slow — same contract as the 1-row
-    form).
+    max_fill (0.55 by default: saturation fails loud, not slow).
     """
     d = load_table(spark, sf_dir, "documents")
-    novel = dedup.dedup_against_seen_bloom_sharded(
+    novel = dedup.dedup_against_seen_bloom(
         new_docs=d.where(F.col("doc_id") % 9 < 2),
         seen_fingerprints=d.where(F.col("doc_id") % 9 >= 2).select(
             TX.fingerprint_md5("text").alias("fp")
@@ -253,7 +249,7 @@ def dedup_bloom_portable_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine derives the identical artifact.
 
     Scale: identical fold to the default family (map-side bit_or into a
-    1-row packed array, never collected); the unpack is posexplode of
+    one-row packed array, never collected); the unpack is posexplode of
     ≤1024 words."""
     d = load_table(spark, sf_dir, "documents")
     seen = (
@@ -312,37 +308,29 @@ def dedup_bloom_portable_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     own behavior).  A NULL-text doc has no fingerprint and flags
     maybe_seen=false (proven novel) in both engines.
 
-    Scale: the probe is the production shape — broadcast 1-row bitmap,
-    pure column-expression bit tests, no exact-join stage at all (this
-    query IS the prefilter output)."""
+    Scale: the probe is the production one (operators/dedup.py:
+    bloom_probe) — broadcast one-row bitmap, pure column-expression bit
+    tests, no exact-join stage at all (this query IS the prefilter
+    output)."""
     d = load_table(spark, sf_dir, "documents")
     seen = (
         d.where(F.col("doc_id") % 7 >= 2)
         .select(TX.fingerprint_md5("text").alias("fp"))
         .where(F.col("fp").isNotNull())
     )
-    bm = dedup._bloom_checked(
-        dedup.bloom_bitmap(seen, family="md5"), 1 << 16, 4, family="md5"
-    )
     batch = d.where(F.col("doc_id") % 7 < 2).withColumn(
         "fp", TX.fingerprint_md5("text")
     )
-    return batch.crossJoin(F.broadcast(bm)).select(
-        "doc_id",
-        F.coalesce(
-            dedup.bloom_might_contain(F.col("fp"), F.col("bloom"), family="md5"),
-            F.lit(False),
-        ).alias("maybe_seen"),
-    )
+    bm = dedup.bloom_bitmap(seen, family="md5")
+    return dedup.bloom_probe(batch, bm, family="md5").select("doc_id", "maybe_seen")
 
 
-# the md5 SHARDED artifact (r11 — the portable router r10 deferred):
-# routing is an md5-REHASH prefix modulus (('0x'||substr(md5(fp),1,8))
-# ::BIGINT % shards — rehashing keeps routing independent of the fp's
-# own four probe windows, so per-shard bit positions stay uniform), and
-# positions are the fp windows as in the 1-row portable family.  DuckDB
-# rebuilds every shard row word-for-word below, which closes the r10
-# gap "cross-engine probing past the broadcast ceiling not yet possible"
+# the md5 SHARDED artifact: routing is an md5-REHASH prefix modulus
+# (('0x'||substr(md5(fp),1,8))::BIGINT % shards — rehashing keeps
+# routing independent of the fp's own four probe windows, so per-shard
+# bit positions stay uniform), and positions are the fp windows as in
+# the one-shard portable family.  DuckDB rebuilds every non-zero word of
+# every shard row below, so the sharded artifact is cross-engine too
 _BLOOM_SHARDED_PORTABLE_ORACLE = r"""
     WITH fp AS (
         SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
@@ -365,14 +353,13 @@ _BLOOM_SHARDED_PORTABLE_ORACLE = r"""
 def dedup_bloom_sharded_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PORTABLE **sharded** Bloom bitmap, certified as an artifact:
     the ledger's md5-family sharded bitmap (operators/dedup.py:
-    bloom_bitmap_sharded with family='md5') unpacked to one
+    bloom_bitmap with shards=8, family='md5') unpacked to one
     (shard, word_idx, word) row per non-zero 64-bit word and value-hash
     compared against DuckDB deriving the identical shard rows from
     scratch — router included.  This is the capacity story and the
     portability story at once: shards × num_bits bits of ledger, every
     row broadcast-sized, and any md5-capable engine can rebuild, audit,
-    or probe the artifact bit-for-bit (the r10 verdict's one deferred
-    item).
+    or probe the artifact bit-for-bit.
 
     Scale: identical fold to the xx64 sharded form — one shuffle on
     (shard, word_idx) with map-side bit_or partials, then one on shard;
@@ -384,7 +371,7 @@ def dedup_bloom_sharded_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(TX.fingerprint_md5("text").alias("fp"))
         .where(F.col("fp").isNotNull())
     )
-    bm = dedup.bloom_bitmap_sharded(seen, shards=8, family="md5")
+    bm = dedup.bloom_bitmap(seen, shards=8, family="md5")
     return (
         bm.select("shard", F.posexplode("bloom").alias("word_idx", "word"))
         .where(F.col("word") != 0)
@@ -433,17 +420,17 @@ def dedup_bloom_sharded_portable_flags(spark: SparkSession, sf_dir: str) -> Data
     """The portable SHARDED Bloom's membership answers, certified
     exactly — false positives included: one (doc_id, maybe_seen) row per
     batch doc, probed against the md5-family sharded bitmap via the
-    production plan (broadcast equi-join on the md5-rehash shard id; a
-    missing shard row is proof of absence).  Same batch split as the
-    1-row `dedup_bloom_portable_flags`, deliberately: sharding
-    partitions the bit space, so the two paths' false-positive SETS
-    differ while both are deterministic and engine-independent — DuckDB
-    reproduces each byte-for-byte, pinning router, positions, and the
-    missing-shard semantics at once.  Completes the sharded family's
-    certification triple (artifact / flags / end-to-end novel), mirroring
-    the 1-row portable family's structure.
+    production plan (operators/dedup.py:bloom_probe — broadcast
+    equi-join on the md5-rehash shard id; an all-zeros shard row is
+    proof of absence).  Same batch split as the one-shard
+    `dedup_bloom_portable_flags`, deliberately: sharding partitions the
+    bit space, so the two paths' false-positive SETS differ while both
+    are deterministic and engine-independent — DuckDB reproduces each
+    byte-for-byte, pinning router and positions at once.  Completes the
+    sharded family's certification triple (artifact / flags /
+    end-to-end novel), mirroring the one-shard portable family's.
 
-    Scale: the probe is the production prefilter shape — ≤shards
+    Scale: the probe is the production prefilter shape — shards
     broadcast rows, pure column-expression bit tests, no exact-join
     stage (this query IS the prefilter output).  A NULL-text doc routes
     to a NULL shard, misses the join, and flags false in both engines."""
@@ -453,35 +440,19 @@ def dedup_bloom_sharded_portable_flags(spark: SparkSession, sf_dir: str) -> Data
         .select(TX.fingerprint_md5("text").alias("fp"))
         .where(F.col("fp").isNotNull())
     )
-    checked = dedup._bloom_sharded_checked(
-        dedup.bloom_bitmap_sharded(seen, shards=8, family="md5"),
-        8,
-        1 << 16,
-        4,
-        family="md5",
+    batch = d.where(F.col("doc_id") % 7 < 2).withColumn(
+        "fp", TX.fingerprint_md5("text")
     )
-    batch = (
-        d.where(F.col("doc_id") % 7 < 2)
-        .withColumn("fp", TX.fingerprint_md5("text"))
-        .withColumn("__shard", dedup._bloom_shard_of(F.col("fp"), 8, "md5"))
-    )
-    return batch.join(
-        F.broadcast(checked.withColumnRenamed("shard", "__shard")),
-        "__shard",
-        "left",
-    ).select(
-        "doc_id",
-        F.coalesce(
-            dedup.bloom_might_contain(F.col("fp"), F.col("bloom"), family="md5"),
-            F.lit(False),
-        ).alias("maybe_seen"),
+    bm = dedup.bloom_bitmap(seen, shards=8, family="md5")
+    return dedup.bloom_probe(batch, bm, shards=8, family="md5").select(
+        "doc_id", "maybe_seen"
     )
 
 
 # answer-identical to the plain anti-join truth (the Bloom never changes
 # the answer), certified on its own batch split (% 11) so each bloom
-# path's driver row evidences its own plan — % 7 is the 1-row portable
-# family's split, % 9 the xx64 sharded one
+# path's certification row evidences its own plan — % 7 is the one-shard
+# portable family's split, % 9 the xx64 sharded one
 _BLOOM_SHARDED_PORTABLE_NOVEL_ORACLE = r"""
     WITH fp AS (
         SELECT doc_id,
@@ -513,7 +484,7 @@ def dedup_bloom_sharded_portable_novel(spark: SparkSession, sf_dir: str) -> Data
     equi-join past ~1 GiB of total shard rows), exact anti-join only for
     the maybe-seen slice."""
     d = load_table(spark, sf_dir, "documents")
-    novel = dedup.dedup_against_seen_bloom_sharded(
+    novel = dedup.dedup_against_seen_bloom(
         new_docs=d.where(F.col("doc_id") % 11 < 2),
         seen_fingerprints=d.where(F.col("doc_id") % 11 >= 2).select(
             TX.fingerprint_md5("text").alias("fp")

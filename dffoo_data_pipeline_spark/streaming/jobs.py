@@ -1098,9 +1098,14 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dedup the INGEST STREAM behind a broadcast-Bloom prefilter —
     the streaming half of dedup_bloom_prefilter_novel (they share one
     oracle, since the bloom provably never changes the answer).  The
-    ledger bitmap is built ONCE per run (lazy localCheckpoint — the fold
-    materializes at the first micro-batch and every later batch reuses
-    the 1-row checkpointed relation); each arriving batch of documents
+    ledger bitmap is built ONCE per run and staged with
+    localCheckpoint(eager=False), which every micro-batch reuses.  That
+    stage is not free at construction: under adaptive execution, the
+    session default, taking it runs the fold's two shuffle stages as
+    Spark jobs before the stream starts (only the final stage waits for
+    the first micro-batch), and each micro-batch's probe stages its
+    batch the same way (see dedup_against_seen_bloom).  Each arriving
+    batch of documents
     (doc_id % 7 < 2 plays the incoming slice) tests it as a pure column
     expression, and ONLY bloom-positive rows pay the exact anti-join
     against the ledger.
@@ -1186,22 +1191,25 @@ def streaming_bloom_dedup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame
     """streaming_bloom_dedup past the broadcast ceiling: the ingest
     stream dedups behind the SHARDED Bloom prefilter — the shape when
     the cumulative ledger's bitmap outgrows one broadcastable row
-    (capacity = shards × num_bits at constant row size).  The ≤shards-row
-    bitmap relation is built ONCE per run (lazy localCheckpoint,
-    geometry/family/fill stamped — a stale or foreign bitmap is refused
-    loudly at the first micro-batch); each arriving batch equi-joins its
-    docs to their shard's row on the md5-routed shard id, and only
+    (capacity = shards × num_bits at constant row size).  The shards-row
+    bitmap relation is built ONCE per run (geometry/family/fill stamped
+    — a stale, foreign or truncated bitmap is refused loudly at the
+    first micro-batch) and staged with localCheckpoint(eager=False);
+    under adaptive execution that runs the fold's two shuffle stages as
+    Spark jobs at construction, before the stream starts, and each
+    micro-batch's probe stages its batch the same way (see
+    dedup_against_seen_bloom).  Each arriving batch equi-joins its docs
+    to their shard's row on the md5-routed shard id, and only
     bloom-positive rows pay the exact anti-join against the ledger.
-    Steady-state mostly-novel batches never touch the ledger at all;
-    a doc whose shard has no row is PROVEN novel without any probe.
+    Steady-state mostly-novel batches never touch the ledger at all.
 
     Per-doc verdicts touch only the doc and the STATIC sharded bitmap +
     ledger, so any micro-batching yields the batch twin's exact result
     (false negatives impossible ⇒ shares the NOT-EXISTS oracle shape).
     Sink is replay-idempotent (per-batch overwritten subdir).  At a real
     deployment's shard counts, pass broadcast=False inside the probe to
-    flip the prefilter to a shuffle equi-join (see
-    dedup_against_seen_bloom_sharded's broadcast-total ceiling note)."""
+    flip the prefilter to a shuffle equi-join (see bloom_probe's
+    broadcast-total ceiling note)."""
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
     from dffoo_data_pipeline_spark.operators import dedup
     from dffoo_data_pipeline_spark.sources.readers import load_table
@@ -1212,12 +1220,9 @@ def streaming_bloom_dedup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(F.col("doc_id") % 13 >= 2)
         .select(fingerprint_md5("text").alias("fp"))
     )
-    # family="md5" on BOTH build and probe so the routing really is the
-    # md5 portable router the docstring describes (r11 ADVICE: the code
-    # defaulted to xx64 while the doc claimed md5 — results were already
-    # identical because the Bloom never changes the answer, only which
-    # docs pay the exact anti-join)
-    bitmaps = dedup.bloom_bitmap_sharded(
+    # family="md5" on BOTH build and probe: the probe refuses a bitmap
+    # whose family stamp differs from its own
+    bitmap = dedup.bloom_bitmap(
         seen, shards=8, family="md5"
     ).localCheckpoint(eager=False)
     out_dir = tempfile.mkdtemp(prefix="sg_bloomshard_out_")
@@ -1225,8 +1230,8 @@ def streaming_bloom_dedup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        novel = dedup.dedup_against_seen_bloom_sharded(
-            batch_df, seen, shards=8, bitmaps=bitmaps, family="md5"
+        novel = dedup.dedup_against_seen_bloom(
+            batch_df, seen, shards=8, bitmap=bitmap, family="md5"
         ).select("doc_id", "fp")
         novel.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"b{batch_id:05d}")
@@ -1279,6 +1284,13 @@ def streaming_ingest_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     is replay-idempotent per-batch-overwrite (same).  The expensive
     shingling stage sees only docs that survived both cheaper stages —
     in a crawler stream, usually a small fraction of arrivals.
+
+    Construction is not free: the bitmap and the band index are staged
+    with localCheckpoint(eager=False), and under adaptive execution, the
+    session default, taking such a stage runs every shuffle stage of its
+    plan as a Spark job before the stream starts; only each stage's
+    final step waits for the first micro-batch.  Each micro-batch's
+    verdict chain stages its own intermediates the same way.
     """
     from dffoo_data_pipeline_spark.operators import dedup
     from dffoo_data_pipeline_spark.plans.llm_ops import ingest_day_verdicts

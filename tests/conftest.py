@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 from pathlib import Path
@@ -74,10 +75,15 @@ def sf_dir():
     return SF_CORRECTNESS
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def count_jobs(spark, fn) -> int:
-    """Spark jobs started while `fn` runs, counted through a job group."""
+    """Spark jobs started while `fn` runs, counted through a job group.
+    Each call gets a fresh group: a group named after ``id(fn)`` would
+    also count the jobs of an earlier, freed callable with the same id."""
     sc = spark.sparkContext
-    group = f"job-count-pin-{id(fn)}"
+    group = f"job-count-pin-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, "job-count pin")
     try:
         fn()

@@ -389,9 +389,9 @@ def test_bloom_prefilter_plan_materializes_bitmap_once(spark, sf_dir):
     checkpointed RDDs — stamped ×2 (the disjoint verdict branches) +
     ledger fp ×1 (the exact anti-join) — and contains NO parquet
     re-scan and no bitmap re-fold at all (the former shape paid the
-    batch scan twice and the ledger scan twice).  The bitmap
-    cross-joins live inside the stamped checkpoint now, so no
-    nested-loop join survives in the outer plan either."""
+    batch scan twice and the ledger scan twice).  The bitmap join
+    lives inside the stamped checkpoint, so no nested-loop join
+    survives in the outer plan either."""
     from dffoo_data_pipeline_spark.plans.llm_ops import QUERIES
 
     df = QUERIES["dedup_bloom_prefilter_novel"](spark, sf_dir)

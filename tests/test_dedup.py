@@ -751,7 +751,7 @@ def test_bloom_geometry_mismatch_is_refused(spark):
 
     seen = d.where(F.col("doc_id") >= 10).select(fingerprint_md5("text").alias("fp"))
     small = dedup.bloom_bitmap(seen, num_bits=256, num_hashes=2)
-    with pytest.raises(Exception, match="geometry mismatch"):
+    with pytest.raises(Exception, match="stamp mismatch"):
         dedup.dedup_against_seen_bloom(
             d.where(F.col("doc_id") < 10), seen, bitmap=small
         ).collect()
@@ -855,16 +855,16 @@ def test_bloom_fill_ratio_stamped_and_saturation_refused(spark):
 
 
 # ---------------------------------------------------------------------------
-# Sharded Bloom prefilter (bloom_bitmap_sharded / bloom_union_sharded /
-# dedup_against_seen_bloom_sharded) — the past-the-broadcast-ceiling form
+# Sharded Bloom prefilter (bloom_bitmap / bloom_union / dedup_against_seen_bloom
+# with shards > 1) — the past-the-broadcast-ceiling form
 # ---------------------------------------------------------------------------
 
 
 def test_sharded_bloom_matches_plain_and_unsharded(spark):
     """The sharded prefilter must return exactly the plain anti-join's
     novel set (same no-false-negatives contract as the 1-row form) —
-    including when some shards received no fingerprints (missing rows
-    read as all-zeros bitmaps)."""
+    including when some shards received no fingerprints (their rows are
+    all-zeros bitmaps)."""
     from pyspark.sql import functions as F
 
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
@@ -878,7 +878,7 @@ def test_sharded_bloom_matches_plain_and_unsharded(spark):
     for shards in (1, 4, 64):  # 64 shards over ~20 fps guarantees empties
         got = {
             r.doc_id
-            for r in dedup.dedup_against_seen_bloom_sharded(
+            for r in dedup.dedup_against_seen_bloom(
                 new, seen, shards=shards
             ).collect()
         }
@@ -886,10 +886,9 @@ def test_sharded_bloom_matches_plain_and_unsharded(spark):
 
 
 def test_sharded_bloom_empty_ledger_proves_all_novel(spark):
-    """An EMPTY ledger builds zero shard rows; every batch doc's left
-    join misses, coalesces to not-seen, and is proven novel without the
-    exact join — and without tripping any refusal (0 rows is the valid
-    empty state for the sharded form, unlike the 1-row form)."""
+    """An EMPTY ledger builds one all-zeros row per shard; every batch
+    doc tests not-seen and is proven novel without the exact join — and
+    without tripping any refusal."""
     from pyspark.sql import functions as F
 
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
@@ -898,7 +897,7 @@ def test_sharded_bloom_empty_ledger_proves_all_novel(spark):
     empty_seen = d.where(F.lit(False)).select(fingerprint_md5("text").alias("fp"))
     got = {
         r.doc_id
-        for r in dedup.dedup_against_seen_bloom_sharded(d, empty_seen).collect()
+        for r in dedup.dedup_against_seen_bloom(d, empty_seen, shards=8).collect()
     }
     assert got == {1, 2, 3}
 
@@ -906,7 +905,7 @@ def test_sharded_bloom_empty_ledger_proves_all_novel(spark):
 def test_sharded_bloom_union_equals_full_rebuild(spark, sf_dir):
     """Per-shard daily maintenance: yesterday's sharded bitmap ∪ a fold
     of only today's fingerprints is bit-exactly a full rebuild, shard by
-    shard — including shards present on only one side."""
+    shard — including shards that received fingerprints on one day only."""
     from pyspark.sql import functions as F
 
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
@@ -914,12 +913,10 @@ def test_sharded_bloom_union_equals_full_rebuild(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     fps = d.select("doc_id", fingerprint_md5("text").alias("fp"))
-    day1 = dedup.bloom_bitmap_sharded(fps.where(F.col("doc_id") % 3 == 0), shards=16)
-    day2 = dedup.bloom_bitmap_sharded(fps.where(F.col("doc_id") % 3 != 0), shards=16)
-    merged = {
-        r.shard: r.bloom for r in dedup.bloom_union_sharded(day1, day2).collect()
-    }
-    full = {r.shard: r.bloom for r in dedup.bloom_bitmap_sharded(fps, shards=16).collect()}
+    day1 = dedup.bloom_bitmap(fps.where(F.col("doc_id") % 3 == 0), shards=16)
+    day2 = dedup.bloom_bitmap(fps.where(F.col("doc_id") % 3 != 0), shards=16)
+    merged = {r.shard: r.bloom for r in dedup.bloom_union(day1, day2).collect()}
+    full = {r.shard: r.bloom for r in dedup.bloom_bitmap(fps, shards=16).collect()}
     assert merged == full
 
 
@@ -934,20 +931,20 @@ def test_sharded_bloom_refusals(spark):
     d = _docs_df(spark, texts)
     fps = d.select(fingerprint_md5("text").alias("fp"))
 
-    built4 = dedup.bloom_bitmap_sharded(fps, shards=4)
+    built4 = dedup.bloom_bitmap(fps, shards=4)
     with pytest.raises(Exception, match="stamp mismatch"):
-        dedup.dedup_against_seen_bloom_sharded(
-            d, fps, shards=8, bitmaps=built4
+        dedup.dedup_against_seen_bloom(
+            d, fps, shards=8, bitmap=built4
         ).collect()
     with pytest.raises(Exception, match="duplicate shard rows"):
-        dedup.dedup_against_seen_bloom_sharded(
-            d, fps, shards=4, bitmaps=built4.union(built4)
+        dedup.dedup_against_seen_bloom(
+            d, fps, shards=4, bitmap=built4.union(built4)
         ).collect()
-    tiny = dedup.bloom_bitmap_sharded(fps, shards=2, num_bits=64)
+    tiny = dedup.bloom_bitmap(fps, shards=2, num_bits=64)
     assert tiny.agg(F.max("bloom_fill_ratio")).collect()[0][0] > 0.5
     with pytest.raises(Exception, match="saturated"):
-        dedup.dedup_against_seen_bloom_sharded(
-            d, fps, shards=2, num_bits=64, bitmaps=tiny
+        dedup.dedup_against_seen_bloom(
+            d, fps, shards=2, num_bits=64, bitmap=tiny
         ).collect()
     # per-shard stamps present and consistent with a recount
     row = built4.collect()[0]
@@ -978,7 +975,7 @@ def test_portable_bloom_family(spark):
     assert got == want
 
     md5_bm = dedup.bloom_bitmap(seen, family="md5")
-    with pytest.raises(Exception, match="geometry mismatch"):
+    with pytest.raises(Exception, match="stamp mismatch"):
         dedup.dedup_against_seen_bloom(new, seen, bitmap=md5_bm).collect()
     with pytest.raises(Exception, match="mismatched bitmap geometries"):
         dedup.bloom_union(md5_bm, dedup.bloom_bitmap(seen)).collect()
@@ -1023,13 +1020,96 @@ def test_portable_bloom_null_text_not_dropped(spark):
     assert row["bloom_family"] == "md5" and len(row["bloom"]) == (1 << 16) // 64
 
 
+def test_sharded_bloom_truncated_bitmap_is_refused(spark):
+    """A pre-built sharded bitmap with a shard row missing must be
+    REFUSED, not probed: a missing row reads as "no fingerprint routed
+    here", so every ledger duplicate routed to that shard would come
+    back as novel.  Drop the row of a shard that holds a duplicate (and,
+    separately, keep only that one row) and probe with it."""
+    from pyspark.sql import functions as F
+
+    from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
+
+    texts = {i: f"truncated ledger doc {i}" for i in range(40)}
+    texts.update({1: texts[21], 3: texts[23]})  # cross-split dupes
+    d = _docs_df(spark, texts)
+    new = d.where(F.col("doc_id") < 10)
+    seen = d.where(F.col("doc_id") >= 10).select(fingerprint_md5("text").alias("fp"))
+    built = dedup.bloom_bitmap(seen, shards=4)
+    dup_shard = (
+        new.where(F.col("doc_id") == 1)
+        .select(dedup._bloom_shard_of(fingerprint_md5("text"), 4))
+        .collect()[0][0]
+    )
+    for bitmap in (
+        built.where(F.col("shard") != dup_shard),  # truncated
+        built.where(F.col("shard") == dup_shard),  # sparse
+    ):
+        with pytest.raises(Exception, match="must be a single row per shard id"):
+            dedup.dedup_against_seen_bloom(
+                new, seen, shards=4, bitmap=bitmap
+            ).collect()
+    # the intact bitmap finds both duplicates
+    got = {
+        r.doc_id
+        for r in dedup.dedup_against_seen_bloom(
+            new, seen, shards=4, bitmap=built
+        ).collect()
+    }
+    assert got == set(range(10)) - {1, 3}
+
+
+def test_bloom_dedup_job_counts_pinned(spark):
+    """Constructing the Bloom dedup is NOT free: its staged relations
+    (ledger fingerprints, bitmap, probed batch) are lazy checkpoints, and
+    under adaptive execution a lazy checkpoint still runs every shuffle
+    and broadcast stage of its plan when it is taken.  Pin construction
+    and total jobs at one shard and at eight: both shard counts stage the
+    same three relations, so they cost the same number of jobs."""
+    from pyspark.sql import functions as F
+
+    from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
+    from tests.conftest import count_jobs
+
+    texts = {i: f"pinned doc {i} words" for i in range(40)}
+    texts.update({1: texts[21], 3: texts[23]})
+    d = _docs_df(spark, texts)
+    new = d.where(F.col("doc_id") < 10)
+    seen = d.where(F.col("doc_id") >= 10).select(fingerprint_md5("text").alias("fp"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for shards in (1, 8):
+        box = {}
+
+        def build():
+            box["df"] = dedup.dedup_against_seen_bloom(new, seen, shards=shards)
+
+        def run():
+            box["rows"] = box["df"].collect()
+
+        construct = count_jobs(spark, build)
+        total = construct + count_jobs(spark, run)
+        assert (construct, total) == ((4, 8) if aqe else (1, 2)), shards
+        assert {r.doc_id for r in box["rows"]} == set(range(10)) - {1, 3}
+
+
+def _dense_bitmap(spark, shards, bloom, family="xx64"):
+    """A literal bitmap with one row per shard id in [0, shards): the
+    refusal branches below must run whatever the fixture's shard
+    occupancy, so the rows are written out rather than folded."""
+    return spark.createDataFrame(
+        [(i, bloom, shards, 64, 1, family, 1 / 64) for i in range(shards)],
+        "shard bigint, bloom array<bigint>, bloom_shards int, bloom_num_bits int,"
+        " bloom_num_hashes int, bloom_family string, bloom_fill_ratio double",
+    )
+
+
 def test_sharded_bloom_union_refusals(spark):
-    """bloom_union_sharded validates BOTH sides before the outer join
-    (self-review r10): a duplicated shard row would fan out N×M into a
-    corrupted multi-row-per-shard artifact, and two bitmaps built with
-    different routing moduli must be refused even when their shard-id
-    sets happen to be disjoint (the row-level stamp check only sees
-    shards present on both sides)."""
+    """bloom_union validates BOTH sides before the outer join: a
+    duplicated shard row would fan out N×M into a corrupted
+    multi-row-per-shard artifact, two bitmaps built with different
+    routing moduli must be refused, and an empty side is refused rather
+    than merged (a bitmap holds one row per shard, so an empty relation
+    is never a valid bitmap)."""
     from pyspark.sql import functions as F
 
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
@@ -1037,35 +1117,34 @@ def test_sharded_bloom_union_refusals(spark):
     texts = {i: f"union doc {i} text" for i in range(30)}
     d = _docs_df(spark, texts)
     fps = d.select(fingerprint_md5("text").alias("fp"))
-    day1 = dedup.bloom_bitmap_sharded(fps.limit(10), shards=4)
-    day2 = dedup.bloom_bitmap_sharded(fps, shards=4)
+    day1 = dedup.bloom_bitmap(fps.limit(10), shards=4)
+    day2 = dedup.bloom_bitmap(fps, shards=4)
     with pytest.raises(Exception, match="duplicate shard rows"):
-        dedup.bloom_union_sharded(day1.union(day1), day2).collect()
+        dedup.bloom_union(day1.union(day1), day2).collect()
     with pytest.raises(Exception, match="duplicate shard rows"):
-        dedup.bloom_union_sharded(day2, day1.union(day1)).collect()
-    # disjoint shard sets, different moduli: rows never meet in the
-    # outer join, so only the cross-side guard can catch it.  Literal
-    # one-row bitmaps with CHOSEN shard ids (r11 ADVICE): the branch
-    # must always run, not depend on fixture shard occupancy.
-    schema = (
-        "shard int, bloom array<bigint>, bloom_shards int, "
-        "bloom_num_bits int, bloom_num_hashes int, bloom_fill_ratio double"
-    )
-    m4 = spark.createDataFrame([(1, [1], 4, 64, 1, 1 / 64)], schema)
-    m8 = spark.createDataFrame([(5, [2], 8, 64, 1, 1 / 64)], schema)
+        dedup.bloom_union(day2, day1.union(day1)).collect()
+    # different moduli: refused by the cross-side stamp check
+    m4 = _dense_bitmap(spark, 4, [1])
+    m8 = _dense_bitmap(spark, 8, [2])
     with pytest.raises(Exception, match="mismatched bitmap geometries"):
-        dedup.bloom_union_sharded(m4, m8).collect()
-    # guard survives a STATICALLY-EMPTY side (r11 ADVICE): attached to
-    # one input, PropagateEmptyRelation would prune it with the whole
-    # side and a corrupt other side would pass unvalidated — post-join
-    # attachment keeps the refusal live.
+        dedup.bloom_union(m4, m8).collect()
+    # the guard survives a STATICALLY-EMPTY side: attached to one input,
+    # PropagateEmptyRelation would prune it with the whole side; the
+    # aggregate guard on the merged output keeps every refusal live
     empty4 = m4.where(F.lit(False))
+    with pytest.raises(Exception, match="left side must be a single row"):
+        dedup.bloom_union(empty4, m8.union(m8)).collect()
     with pytest.raises(Exception, match="duplicate shard rows"):
-        dedup.bloom_union_sharded(empty4, m8.union(m8)).collect()
-    with pytest.raises(Exception, match="duplicate shard rows"):
-        dedup.bloom_union_sharded(m4.union(m4), empty4).collect()
-    # and an empty side with a VALID other side still merges cleanly
-    assert dedup.bloom_union_sharded(empty4, m4).collect()[0]["bloom"] == [1]
+        dedup.bloom_union(m4.union(m4), empty4).collect()
+    # an empty side next to a VALID other side is refused too
+    with pytest.raises(Exception, match="left side must be a single row"):
+        dedup.bloom_union(empty4, m4).collect()
+    with pytest.raises(Exception, match="right side must be a single row"):
+        dedup.bloom_union(m4, empty4).collect()
+    # and two valid sides merge, re-stamped
+    merged = dedup.bloom_union(m4, m4.select(*m4.columns)).collect()
+    assert sorted(r.shard for r in merged) == [0, 1, 2, 3]
+    assert {tuple(r.bloom) for r in merged} == {(1,)}
 
 
 def test_sharded_bloom_md5_family(spark):
@@ -1089,51 +1168,44 @@ def test_sharded_bloom_md5_family(spark):
     for shards in (1, 4, 64):
         got = {
             r.doc_id
-            for r in dedup.dedup_against_seen_bloom_sharded(
+            for r in dedup.dedup_against_seen_bloom(
                 new, seen, shards=shards, family="md5"
             ).collect()
         }
         assert got == want, (shards, got ^ want)
     # family stamped on every shard row; routing differs from xx64's
-    md5_bm = dedup.bloom_bitmap_sharded(seen, shards=4, family="md5")
+    md5_bm = dedup.bloom_bitmap(seen, shards=4, family="md5")
     assert {r.bloom_family for r in md5_bm.collect()} == {"md5"}
     # cross-family probe refused (stamp mismatch, not silent false negs)
     with pytest.raises(Exception, match="stamp mismatch"):
-        dedup.dedup_against_seen_bloom_sharded(
-            new, seen, shards=4, bitmaps=md5_bm
+        dedup.dedup_against_seen_bloom(
+            new, seen, shards=4, bitmap=md5_bm
         ).collect()
     with pytest.raises(Exception, match="stamp mismatch"):
-        dedup.dedup_against_seen_bloom_sharded(
+        dedup.dedup_against_seen_bloom(
             new,
             seen,
             shards=4,
             family="md5",
-            bitmaps=dedup.bloom_bitmap_sharded(seen, shards=4),
+            bitmap=dedup.bloom_bitmap(seen, shards=4),
         ).collect()
-    # cross-family union refused, including on DISJOINT shard sets where
-    # only the aggregate cross-side guard can see the mismatch (literal
-    # rows: the branch must not depend on fixture shard occupancy)
-    xx_bm = dedup.bloom_bitmap_sharded(seen, shards=4)
+    # cross-family union refused, both on built bitmaps and on literal
+    # rows (the branch must not depend on fixture shard occupancy)
+    xx_bm = dedup.bloom_bitmap(seen, shards=4)
     with pytest.raises(Exception, match="mismatched bitmap geometries"):
-        dedup.bloom_union_sharded(md5_bm, xx_bm).collect()
-    lit_schema = (
-        "shard int, bloom array<bigint>, bloom_shards int, bloom_num_bits int,"
-        " bloom_num_hashes int, bloom_family string, bloom_fill_ratio double"
-    )
-    lit_md5 = spark.createDataFrame([(0, [1], 4, 64, 1, "md5", 1 / 64)], lit_schema)
-    lit_xx = spark.createDataFrame([(3, [2], 4, 64, 1, "xx64", 1 / 64)], lit_schema)
+        dedup.bloom_union(md5_bm, xx_bm).collect()
+    lit_md5 = _dense_bitmap(spark, 4, [1], family="md5")
+    lit_xx = _dense_bitmap(spark, 4, [2])
     with pytest.raises(Exception, match="mismatched bitmap geometries"):
-        dedup.bloom_union_sharded(lit_md5, lit_xx).collect()
+        dedup.bloom_union(lit_md5, lit_xx).collect()
     # md5-family union equals the md5-family full rebuild, bit-exactly
-    day1 = dedup.bloom_bitmap_sharded(seen.limit(5), shards=4, family="md5")
-    merged = {
-        r.shard: r.bloom for r in dedup.bloom_union_sharded(day1, md5_bm).collect()
-    }
+    day1 = dedup.bloom_bitmap(seen.limit(5), shards=4, family="md5")
+    merged = {r.shard: r.bloom for r in dedup.bloom_union(day1, md5_bm).collect()}
     full = {r.shard: r.bloom for r in md5_bm.collect()}
     assert merged == full
     # unknown family refused eagerly
     with pytest.raises(ValueError, match="unknown bloom family"):
-        dedup.bloom_bitmap_sharded(seen, shards=4, family="sha9")
+        dedup.bloom_bitmap(seen, shards=4, family="sha9")
 
 
 def test_shingler_uses_ascii_whitespace_spec(spark):

@@ -222,19 +222,19 @@ def test_bloom_dedup_empty_sides(spark, empty_docs):
 
 def test_sharded_bloom_dedup_empty_sides(spark, empty_docs):
     """Sharded sibling of the bloom empty-sides contract: an empty
-    ledger builds ZERO shard rows (valid — missing shards read as
-    all-zeros), every batch doc is proven novel; an empty batch yields
-    an empty result with the right schema."""
+    ledger builds one all-zeros row per shard, every batch doc is proven
+    novel; an empty batch yields an empty result with the right
+    schema."""
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
 
     empty_fps = empty_docs.select(fingerprint_md5("text").alias("fp"))
     some = spark.createDataFrame(
         [(1, "one two three four")], "doc_id bigint, text string"
     )
-    got = dedup.dedup_against_seen_bloom_sharded(some, empty_fps).collect()
+    got = dedup.dedup_against_seen_bloom(some, empty_fps, shards=8).collect()
     assert len(got) == 1 and got[0].doc_id == 1
-    out = dedup.dedup_against_seen_bloom_sharded(
-        empty_docs, some.select(fingerprint_md5("text").alias("fp"))
+    out = dedup.dedup_against_seen_bloom(
+        empty_docs, some.select(fingerprint_md5("text").alias("fp")), shards=8
     )
     assert out.count() == 0 and "fp" in out.columns
 

@@ -438,15 +438,15 @@ def test_bloom_prefilter_equals_plain_anti_join_on_random_corpora(
 
 
 @_settings
-@given(texts=_texts, family=st.sampled_from(["xx64", "md5"]), shards=st.sampled_from([0, 1, 4, 16]))
+@given(texts=_texts, family=st.sampled_from(["xx64", "md5"]), shards=st.sampled_from([1, 4, 16]))
 def test_bloom_prefilter_exactness_on_random_corpora(spark, texts, family, shards):
-    """For ANY corpus split and either hash family (and the sharded
-    form), the Bloom-prefiltered novel set must equal the plain
-    anti-join's — the no-false-negatives contract is what makes the
-    prefilter answer-invariant, so it must hold for arbitrary text
-    (including empty strings, repeated texts, and cross-split dupes
-    hypothesis composes), not just the fixtures.  shards=0 means the
-    1-row form (which is where the family knob applies)."""
+    """For ANY corpus split, either hash family and any shard count
+    (routing included: md5 routes by a rehash of the fingerprint), the
+    Bloom-prefiltered novel set must equal the plain anti-join's — the
+    no-false-negatives contract is what makes the prefilter
+    answer-invariant, so it must hold for arbitrary text (including
+    empty strings, repeated texts, and cross-split dupes hypothesis
+    composes), not just the fixtures."""
     from pyspark.sql import functions as F
 
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
@@ -461,8 +461,5 @@ def test_bloom_prefilter_exactness_on_random_corpora(spark, texts, family, shard
         fingerprint_md5("text").alias("fp")
     )
     want = {r.doc_id for r in dedup.dedup_against_seen(new, seen)[0].collect()}
-    if shards == 0:
-        got = dedup.dedup_against_seen_bloom(new, seen, family=family)
-    else:
-        got = dedup.dedup_against_seen_bloom_sharded(new, seen, shards=shards)
+    got = dedup.dedup_against_seen_bloom(new, seen, shards=shards, family=family)
     assert {r.doc_id for r in got.collect()} == want

@@ -384,12 +384,14 @@ def test_sharded_bloom_broadcast_knob_switches_to_shuffle_join(spark):
     """Past the broadcast-TOTAL ceiling (shards × row size ≳ 1 GiB) the
     sharded Bloom prefilter must run as a SHUFFLE equi-join on the shard
     id instead of shipping every shard row to every executor — the
-    `broadcast=False` knob (r10 verdict note, delivered r11).  Pin both
-    sides of the flip with auto-broadcast disabled: the default forces a
-    BroadcastHashJoin via its hint regardless of threshold, the knob'd
-    plan contains NO broadcast of the bitmap relation — and both return
-    the identical novel set (the knob changes distribution, not answers).
-    """
+    `broadcast=False` knob.  Pin both sides of the flip with
+    auto-broadcast disabled: the default forces a BroadcastHashJoin via
+    its hint regardless of threshold, the knob'd plan contains NO
+    broadcast of the bitmap relation — and both return the identical
+    novel set (the knob changes distribution, not answers).  The pinned
+    plan is `bloom_probe`'s: dedup_against_seen_bloom stages exactly that
+    relation (a checkpoint), so its own final plan only shows the scan
+    of the stage."""
     from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
     from dffoo_data_pipeline_spark.operators import dedup
 
@@ -412,18 +414,20 @@ def test_sharded_bloom_broadcast_knob_switches_to_shuffle_join(spark):
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         plans = {}
+        bitmap = dedup.bloom_bitmap(seen, shards=4)
+        batch = new.withColumn("fp", fingerprint_md5("text"))
         for knob in (True, False):
-            df = dedup.dedup_against_seen_bloom_sharded(
-                new, seen, shards=4, broadcast=knob
+            df = dedup.dedup_against_seen_bloom(
+                new, seen, shards=4, bitmap=bitmap, broadcast=knob
             )
             assert {r.doc_id for r in df.collect()} == want, knob
-            plans[knob] = df._jdf.queryExecution().executedPlan().toString()
+            probed = dedup.bloom_probe(batch, bitmap, shards=4, broadcast=knob)
+            probed.collect()
+            plans[knob] = probed._jdf.queryExecution().executedPlan().toString()
         # default: the explicit hint forces the broadcast even at -1
         assert "BroadcastHashJoin" in plans[True], plans[True]
         # knob'd: the bitmap equi-join runs as a shuffle (sort-merge or
-        # shuffled-hash) — no BroadcastHashJoin in the plan (the ≤1-row
-        # stamp guard keeps its broadcast NESTED-LOOP attach, which is
-        # the point: only the shards×row-size relation stops shipping)
+        # shuffled-hash) — no BroadcastHashJoin in the plan
         assert "BroadcastHashJoin" not in plans[False], plans[False]
         assert ("SortMergeJoin" in plans[False]) or (
             "ShuffledHashJoin" in plans[False]
