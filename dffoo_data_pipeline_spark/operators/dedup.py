@@ -678,14 +678,17 @@ def _bloom_fill_ratio(bloom_col: str):
 
 def _bloom_stats(bitmap: DataFrame, prefix: str = "") -> DataFrame:
     """One row of facts about a bitmap relation: its sorted shard ids,
-    its lowest and highest stamp, and its worst fill ratio.  A global
-    aggregate, so it has one row even over an empty (or statically
-    empty) relation — the refusal it feeds cannot be optimized away."""
+    its lowest and highest stamp, its shortest and longest word array,
+    and its worst fill ratio.  A global aggregate, so it has one row
+    even over an empty (or statically empty) relation — the refusal it
+    feeds cannot be optimized away."""
     stamp = f"struct({', '.join(_BLOOM_STAMP)})"
     return bitmap.agg(
         F.expr(f"array_sort(collect_list(shard)) AS {prefix}ids"),
         F.expr(f"min({stamp}) AS {prefix}lo"),
         F.expr(f"max({stamp}) AS {prefix}hi"),
+        F.expr(f"min(size(bloom)) AS {prefix}wlo"),
+        F.expr(f"max(size(bloom)) AS {prefix}whi"),
         F.expr(f"max(bloom_fill_ratio) AS {prefix}fill"),
     )
 
@@ -696,12 +699,17 @@ def _bloom_refusal(who: str, expect: str, max_fill: float = 1.0, prefix: str = "
     shard's batch rows out N×); a missing row or an id outside
     ``[0, bloom_shards)`` (a missing row would answer "proven novel" for
     every fingerprint routed there — dropped duplicates); a stamp other
-    than ``expect`` (a SQL struct expression) on any row; a shard filled
-    past ``max_fill`` (a saturated bitmap answers "maybe" for nearly
-    everything: correct, but the prefilter stops pruning, which should
-    fail loud, not slow).  One SQL expression: built column by column,
+    than ``expect`` (a SQL struct expression) on any row; a word array
+    other than ``bloom_num_bits/64`` long on any row (with ANSI off a
+    short row reads its missing words as "not seen" — dropped
+    duplicates; with ANSI on the probe dies on an index error); a shard
+    filled past ``max_fill`` (a saturated bitmap answers "maybe" for
+    nearly everything: correct, but the prefilter stops pruning, which
+    should fail loud, not slow).  One SQL expression: built column by column,
     the chain took about 0.06 s more driver time per probe."""
-    ids, lo, hi, fill = (prefix + c for c in ("ids", "lo", "hi", "fill"))
+    ids, lo, hi, wlo, whi, fill = (
+        prefix + c for c in ("ids", "lo", "hi", "wlo", "whi", "fill")
+    )
     dup = (
         f"{who} must be a single row per shard id: duplicate shard rows "
         "(%d rows for %d shard ids)"
@@ -711,6 +719,10 @@ def _bloom_refusal(who: str, expect: str, max_fill: float = 1.0, prefix: str = "
         "shard ids %s..%s — build with bloom_bitmap, merge with bloom_union"
     )
     stamp = f"{who} stamp mismatch: expected %s, rows carry %s to %s"
+    words = (
+        f"{who} word count mismatch: bloom_num_bits=%d needs %d words per row, "
+        "rows carry %d to %d — build with bloom_bitmap, merge with bloom_union"
+    )
     full = (
         f"{who} saturated: worst shard fill_ratio=%.4f > max_fill={max_fill} — "
         "the prefilter would answer maybe for nearly everything; rebuild with "
@@ -725,6 +737,9 @@ def _bloom_refusal(who: str, expect: str, max_fill: float = 1.0, prefix: str = "
         f"array_min({ids}), array_max({ids})) "
         f"WHEN NOT coalesce({lo} = {expect} AND {hi} = {expect}, false) THEN "
         f"format_string('{stamp}', to_json({expect}), to_json({lo}), to_json({hi})) "
+        f"WHEN NOT coalesce({wlo} = {hi}.bloom_num_bits DIV 64 "
+        f"AND {whi} = {hi}.bloom_num_bits DIV 64, false) THEN format_string("
+        f"'{words}', {hi}.bloom_num_bits, {hi}.bloom_num_bits DIV 64, {wlo}, {whi}) "
         f"WHEN {fill} > CAST({float(max_fill)!r} AS DOUBLE) "
         f"THEN format_string('{full}', {fill}) END"
     )

@@ -1,20 +1,43 @@
 """Embedding similarity search (SURVEY.md §2k; BASELINE north star).
 
-- `cosine_topk_bruteforce` / `cosine_neardup_pairs`: exact search using the
-  broadcast-index pattern — the corpus embedding matrix is broadcast to
-  executors as one numpy array, and queries stream through an
-  Arrow-batched `mapInPandas` doing float64 matmuls.  This is the
-  vectorized slow-path rule from the project brief: higher-order column
-  expressions (`zip_with`+`aggregate`) are interpreted per element in
-  Spark and lose to BLAS by ~100× on 64-dim dots.
-- `lsh_topk`: random-hyperplane LSH bucketing + exact re-rank within
-  buckets — the approximate path whose candidate cost is linear in corpus
-  size.
+Every search here is one composition of four steps, each defined once:
+
+1. **Scorer** — a block of query vectors against a block of index vectors
+   gives a ranking ``key`` and a reported ``cos`` matrix.  `_int_scores`
+   (integer codes: key d·|d|/(n2a·n2b), cos d/√(n2a·n2b), exact in any
+   engine) and `_float_scores` (raw floats: key S, cos round(S, 6)).
+2. **Selection** — `_rank_topk` (top-k per query row) and `_pairs`
+   (all pairs at or above a threshold, doc_a < doc_b).
+3. **Driver** — where the blocks come from: the grouped kernel
+   `_exact_cos_topk_kernel` (one bucket or cell per group; ``is_probe``
+   rows are queries only), the cogrouped `_exact_cos_probe_kernel`
+   (queries on the left, index members on the right) or the broadcast
+   driver `_broadcast_index_map` (a bounded index collected once,
+   queries streamed through `mapInPandas`).
+4. **Merge** — `_merge_topk`: multi-bucket paths rank per bucket, then
+   keep the global top-k per query on the kernel's exact ``rank_key``.
+
+Bucketing is shared too: `_sign_bucket` is the one sign-LSH bucket id
+and `_multiprobe_side` the one margin-ordered multi-probe schedule.
+
+Operators: exact broadcast search (`cosine_topk_bruteforce`,
+`cosine_neardup_pairs`, `cosine_topk_against_index`), float ANN
+(`lsh_topk`, `lsh_neardup_pairs`, `ivf_topk`), integer-exact ANN with
+value-hash oracles (`lsh_topk_int`, `lsh_multiprobe_topk_int`,
+`ivf_topk_int`, `lsh_probe_topk_int` over a `lsh_bucket_index_int`
+index) and the size-routed entry points (`cosine_topk_auto`,
+`cosine_neardup_auto`).
+
+Contract of every top-k: rows ordered ``(key DESC, neighbor_id ASC)``,
+ties at the k-th key resolved to the lowest neighbor ids whatever the
+input order, and a non-finite score (a zero-norm vector, a masked self
+match) is never a neighbor.
 
 Scale: the broadcast index must fit executor memory (~1.5 GB per 5M×64
-float64 vectors) — beyond that, partition the index (IVF-style, here
-`lsh_topk`) so each task scans one cell.  Queries never collect to the
-driver; only the bounded index does (explicitly, as an index build).
+float64 vectors) — beyond that, partition the index (`lsh_topk`,
+`ivf_topk`, the int paths) so each task scans one bucket or cell.
+Queries never collect to the driver; only the bounded index does
+(explicitly, as an index build).
 """
 
 from __future__ import annotations
@@ -34,6 +57,9 @@ from pyspark.sql import types as T
 # to the LSH-bucketed path instead of collecting.
 DEFAULT_MAX_INDEX_ROWS = 2_000_000
 
+_TOPK = ("query_id", "neighbor_id", "cos_sim")
+_PAIRS = ("doc_a", "doc_b", "cos_sim")
+
 
 class IndexTooLargeError(ValueError):
     """Raised when the exact broadcast-index path would materialize more
@@ -41,20 +67,141 @@ class IndexTooLargeError(ValueError):
     index (`lsh_topk` / `ivf_topk` / `lsh_neardup_pairs`) instead."""
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+def _schema(df: DataFrame, id_col: str, *names: str) -> T.StructType:
+    """Output schema of `names`: cos_sim and rank_key are doubles, rank an
+    int, and every other (id) column takes `id_col`'s type in `df`."""
+    id_type = df.schema[id_col].dataType
+    types = {"cos_sim": T.DoubleType(), "rank_key": T.DoubleType(), "rank": T.IntegerType()}
+    return T.StructType([T.StructField(n, types.get(n, id_type)) for n in names])
 
 
-def _norm(v):
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+def _stack(col: pd.Series) -> np.ndarray:
+    return np.stack(col.to_numpy()).astype(np.float64)
+
+
+def _int_scores(q: pd.DataFrame, i: pd.DataFrame):
+    """Exact-integer scorer over (c, n2) code frames.
+
+    The dot products are exact integers computed THROUGH float64 BLAS
+    (numpy's int64 matmul has no BLAS path): per-element products
+    ≤ 128² and row sums ≤ 128²·dim < 2²¹, so every partial sum is an
+    integer far below 2⁵³ and float64 accumulation is exact in any
+    summation order; rint only normalizes the sign of zero.  The key
+    d·|d|/(n2a·n2b) and cos d/√(n2a·n2b) are single correctly-rounded
+    IEEE ops on exact ≤2⁵³ integers (n2a·n2b ≤ 2⁴⁰) — bit-identical in
+    any engine, so the DuckDB oracle replays the ranking with no float
+    tolerance (dedup_semantic_int8's contract, plans/embeddings.py).
+    """
+    D = np.rint(_stack(q["c"]) @ _stack(i["c"]).T)
+    den = np.outer(q["n2"].to_numpy(np.float64), i["n2"].to_numpy(np.float64))
+    return D * np.abs(D) / den, D / np.sqrt(den)
+
+
+def _float_scores(Q: np.ndarray, M: np.ndarray):
+    """Float scorer: key = cosine S, reported cos = round(S, 6).  A
+    zero-norm vector scores NaN, which the selection drops."""
+    S = (Q @ M.T) / np.outer(np.linalg.norm(Q, axis=1), np.linalg.norm(M, axis=1))
+    return S, np.round(S, 6)
+
+
+def _float_frame_scores(q: pd.DataFrame, i: pd.DataFrame):
+    return _float_scores(_stack(q["v"]), _stack(i["v"]))
+
+
+def _rank_topk(ids_q, ids_i, key, cos, k: int, names, mask_self: bool = True):
+    """Top-k index columns per query row of a scored block, as a frame
+    of the `names` columns (query_id, neighbor_id, cos_sim, and
+    optionally rank_key = the exact key, rank = 1-based position).
+
+    Order is (key DESC, neighbor_id ASC).  argpartition alone picks
+    arbitrarily among keys tied with the k-th one, so the cut is
+    WIDENED to every column whose key reaches the k-th key and the
+    widened set is sorted by (key DESC, id ASC) before truncating to k —
+    exact for any data and still O(m) per row when ties are rare.
+    Self matches (equal ids, when `mask_self`) and non-finite keys are
+    set to -inf and never selected.  `key` is overwritten.
+    """
+    if mask_self:
+        key[ids_q[:, None] == ids_i[None, :]] = -np.inf
+    key[~np.isfinite(key)] = -np.inf
+    kk = min(k, key.shape[1])
+    part = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
+    bound = np.take_along_axis(key, part, axis=1).min(axis=1)
+    r, c = np.nonzero((key >= bound[:, None]) & (key > -np.inf))
+    order = np.lexsort((ids_i[c], -key[r, c], r))
+    r, c = r[order], c[order]
+    pos = np.arange(len(r)) - np.searchsorted(r, r)  # position within row
+    keep = pos < kk
+    r, c, pos = r[keep], c[keep], pos[keep]
+    cols = {
+        "query_id": ids_q[r],
+        "neighbor_id": ids_i[c],
+        "cos_sim": cos[r, c],
+        "rank_key": key[r, c],
+        "rank": pos + 1,
+    }
+    return pd.DataFrame({n: cols[n] for n in names})
+
+
+def _pairs(ids_q, Q, ids_i, M, threshold: float) -> pd.DataFrame:
+    """Every (doc_a < doc_b) pair whose rounded cosine is ≥ threshold."""
+    _, S = _float_scores(Q, M)
+    r, c = np.nonzero((S >= threshold) & (ids_q[:, None] < ids_i[None, :]))
+    return pd.DataFrame({"doc_a": ids_q[r], "doc_b": ids_i[c], "cos_sim": S[r, c]})
+
+
+def _exact_cos_topk_kernel(id_col: str, k: int, out_schema, score=_int_scores):
+    """applyInPandas kernel: exact cosine top-k inside one group.
+
+    Every row of the group is a query; the non-probe rows are the index.
+    `score` is `_int_scores` (columns id, c, n2, is_probe) or
+    `_float_frame_scores` (columns id, v, is_probe).  Multi-bucket
+    callers put ``rank_key`` in `out_schema` so the global merge orders
+    by the exact key the kernel ranked by: merging on the reported
+    ``cos_sim`` would be a second, independent rounding — two distinct
+    keys can round to equal cos values, and the merge's neighbor_id
+    tie-break would then diverge from the oracle at the k boundary.
+    """
+    names = out_schema.fieldNames()
+
+    def rank_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        idx = pdf[~pdf["is_probe"]]
+        if len(idx) == 0:
+            return pd.DataFrame({n: [] for n in names})
+        ids_q, ids_i = pdf[id_col].to_numpy(), idx[id_col].to_numpy()
+        return _rank_topk(ids_q, ids_i, *score(pdf, idx), k, names)
+
+    return rank_group
+
+
+def _exact_cos_probe_kernel(id_col: str, k: int, out_schema):
+    """Cogrouped ASYMMETRIC twin of `_exact_cos_topk_kernel`: left cogroup
+    side = query rows of one bucket (multiprobe duplicates included),
+    right side = index members of that bucket.  Only left rows are
+    ranked, only right rows are ranked into — the search(queries, index)
+    contract.  Cogroup (vs a unioned groupBy) is what lets a PERSISTED
+    hash-bucketed index satisfy its own side's distribution: the index
+    scan arrives pre-partitioned on `bucket` and only the query side
+    exchanges (pinned by tests/test_bucketing.py)."""
+    names = out_schema.fieldNames()
+
+    def rank_probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0 or len(right) == 0:
+            return pd.DataFrame({n: [] for n in names})
+        # right-side columns carry __i prefixes: distinct names keep the
+        # analyzer's self-lineage attribute dedup from pruning the index
+        # side when both cogroup sides derive from one codes frame
+        right = right.rename(columns={"__iid": id_col, "__ic": "c", "__in2": "n2"})
+        ids_q, ids_i = left[id_col].to_numpy(), right[id_col].to_numpy()
+        return _rank_topk(ids_q, ids_i, *_int_scores(left, right), k, names)
+
+    return rank_probe
 
 
 def _collect_index(
     df: DataFrame, id_col: str, vec_col: str, max_rows: int = DEFAULT_MAX_INDEX_ROWS
 ):
-    """Materialize the index side as numpy: ids, matrix, norms.
+    """Materialize the index side as numpy: ids and the float64 matrix.
 
     The collect is hard-bounded: at most `max_rows + 1` rows ever leave
     the executors, and exceeding `max_rows` raises `IndexTooLargeError`
@@ -62,9 +209,8 @@ def _collect_index(
     collect at sf0.1: limit-probe +43 ms vs a separate count() job
     +113 ms — the single bounded job wins.
     """
-    # NULL vectors participate in nothing (they have no geometry) —
-    # filtered here so np.stack never sees a ragged batch (r11 hostile
-    # embeddings sweep: one NULL row crashed the whole kernel)
+    # NULL vectors participate in nothing (they have no geometry), and
+    # filtering them here keeps np.stack from ever seeing a ragged batch
     pdf = (
         df.where(F.col(vec_col).isNotNull())
         .select(id_col, vec_col)
@@ -78,21 +224,40 @@ def _collect_index(
             "or raise max_index_rows explicitly"
         )
     ids = pdf[id_col].to_numpy()
-    if len(pdf) == 0:
-        return ids, np.zeros((0, 1)), np.zeros(0)
-    M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    return ids, M, norms
+    return ids, (_stack(pdf[vec_col]) if len(pdf) else np.zeros((0, 1)))
 
 
-def _out_schema(df: DataFrame, id_col: str) -> T.StructType:
-    id_type = df.schema[id_col].dataType
-    return T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+def _broadcast_index_map(
+    probe: DataFrame, index: DataFrame, id_col: str, vec_col: str, max_rows: int, schema, body
+) -> DataFrame:
+    """Broadcast-index driver: collect the bounded `index` once, broadcast
+    it, and stream the non-NULL `probe` rows through
+    ``body(ids_q, Q, ids_i, M)`` one Arrow batch at a time."""
+    ids, M = _collect_index(index, id_col, vec_col, max_rows)
+    b = probe.sparkSession.sparkContext.broadcast((ids, M))
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_i, M_i = b.value
+        for pb in batches:
+            if len(pb) and len(ids_i):
+                yield body(pb[id_col].to_numpy(), _stack(pb[vec_col]), ids_i, M_i)
+
+    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
+
+    probe = probe.where(F.col(vec_col).isNotNull()).select(id_col, vec_col)
+    return ensure_min_partitions(probe, id_col).mapInPandas(gen, schema)
+
+
+def _merge_topk(per_bucket: DataFrame, k: int) -> DataFrame:
+    """Global top-k per query over per-bucket top-ks, ordered on the
+    kernel's exact ``rank_key`` (then neighbor_id), which is dropped.
+    Equal to ranking the candidate union directly when each (query,
+    neighbor) pair is a candidate in at most one bucket."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("rank_key"), F.asc("neighbor_id"))
+    return (
+        per_bucket.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .drop("__rn", "rank_key")
     )
 
 
@@ -110,43 +275,14 @@ def cosine_topk_bruteforce(
     Raises `IndexTooLargeError` past `max_index_rows` — see
     `cosine_topk_auto` for the self-routing entry point.
     """
-    spark = df.sparkSession
-    df = df.where(F.col(vec_col).isNotNull())  # NULL vecs query nothing
-    ids, M, norms = _collect_index(df, id_col, vec_col, max_index_rows)
-    b = spark.sparkContext.broadcast((ids, M, norms))
-    schema = _out_schema(df, id_col)
+    names = _TOPK
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_ids, idx_M, idx_norms = b.value
-        for pb in batches:
-            if len(pb) == 0:
-                continue
-            q_ids = pb[id_col].to_numpy()
-            Q = np.stack(pb[vec_col].to_numpy()).astype(np.float64)
-            q_norms = np.linalg.norm(Q, axis=1)
-            S = (Q @ idx_M.T) / np.outer(q_norms, idx_norms)
-            # mask self-matches, then exact top-k with (sim desc, id asc) order
-            S[q_ids[:, None] == idx_ids[None, :]] = -np.inf
-            kk = min(k, S.shape[1] - 1)
-            part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-            out_q, out_n, out_s = [], [], []
-            for r in range(S.shape[0]):
-                # finite guard: a duplicated id leaves extra -inf
-                # self-mask columns inside the top-k cut, and a zero-norm
-                # vector yields NaN scores — neither is a real neighbor
-                cand = part[r][np.isfinite(S[r, part[r]])]
-                order = np.lexsort((idx_ids[cand], -S[r, cand]))
-                sel = cand[order]
-                out_q.extend([q_ids[r]] * len(sel))
-                out_n.extend(idx_ids[sel])
-                out_s.extend(np.round(S[r, sel], 6))
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s}
-            )
+    def body(ids_q, Q, ids_i, M):
+        return _rank_topk(ids_q, ids_i, *_float_scores(Q, M), k, names)
 
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
-
-    return ensure_min_partitions(df.select(id_col, vec_col), id_col).mapInPandas(gen, schema)
+    return _broadcast_index_map(
+        df, df, id_col, vec_col, max_index_rows, _schema(df, id_col, *names), body
+    )
 
 
 def cosine_neardup_pairs(
@@ -160,38 +296,60 @@ def cosine_neardup_pairs(
     doc_a < doc_b.  Same broadcast-index matmul pattern as top-k.
     Raises `IndexTooLargeError` past `max_index_rows` — see
     `cosine_neardup_auto`."""
-    spark = df.sparkSession
-    df = df.where(F.col(vec_col).isNotNull())  # NULL vecs pair with nothing
-    ids, M, norms = _collect_index(df, id_col, vec_col, max_index_rows)
-    b = spark.sparkContext.broadcast((ids, M, norms))
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("doc_a", id_type),
-            T.StructField("doc_b", id_type),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+
+    def body(ids_q, Q, ids_i, M):
+        return _pairs(ids_q, Q, ids_i, M, threshold)
+
+    return _broadcast_index_map(
+        df, df, id_col, vec_col, max_index_rows, _schema(df, id_col, *_PAIRS), body
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_ids, idx_M, idx_norms = b.value
-        for pb in batches:
-            if len(pb) == 0:
-                continue
-            q_ids = pb[id_col].to_numpy()
-            Q = np.stack(pb[vec_col].to_numpy()).astype(np.float64)
-            q_norms = np.linalg.norm(Q, axis=1)
-            S = (Q @ idx_M.T) / np.outer(q_norms, idx_norms)
-            Sr = np.round(S, 6)
-            keep = (Sr >= threshold) & (q_ids[:, None] < idx_ids[None, :])
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"doc_a": q_ids[r], "doc_b": idx_ids[c], "cos_sim": Sr[r, c]}
-            )
 
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
+def cosine_topk_against_index(
+    probe_df: DataFrame,
+    index_df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 5,
+    index_id_col: str | None = None,
+    index_vec_col: str | None = None,
+    max_index_rows: int = DEFAULT_MAX_INDEX_ROWS,
+) -> DataFrame:
+    """Exact top-k cosine of every probe against a SEPARATE bounded index
+    frame (the asymmetric sibling of `cosine_topk_bruteforce`, which
+    scores a corpus against itself and masks self-matches; here probe
+    and index are distinct frames — quantized indexes, frozen reference
+    sets — and a probe that also lives in the index keeps its match).
 
-    return ensure_min_partitions(df.select(id_col, vec_col), id_col).mapInPandas(gen, schema)
+    Returns (query_id, neighbor_id, cos_sim, rank), rank 1..k.  Ranking
+    sorts on the ROUNDED similarity (1e-6) with neighbor-id tiebreak —
+    the same total order a SQL `ROW_NUMBER() OVER (ORDER BY round DESC,
+    id)` produces, so an engine-independent oracle can reproduce the
+    winners even when two unrounded sims differ only in the last ulps.
+
+    Scale: index is collected via the bounded limit-probe guard
+    (`IndexTooLargeError` past `max_index_rows`) and broadcast; probes
+    stream through one Arrow-batched pass — no shuffle of the probe
+    side at all.  NULL probe vectors are dropped at the boundary (they
+    have no geometry to rank with — same contract as `_collect_index`),
+    and a zero-norm vector scores NaN against everything, so it has no
+    neighbors and is nobody's neighbor.
+    """
+    names = (*_TOPK, "rank")
+    index = index_df.select(
+        F.col(index_id_col or id_col).alias(id_col),
+        F.col(index_vec_col or vec_col).alias(vec_col),
+    )
+
+    def body(ids_q, Q, ids_i, M):
+        S, _ = _float_scores(Q, M)
+        # round_det's exact floor-half-up form, NOT np.round (half-even)
+        R = np.floor(S * 1e6 + 0.5) / 1e6
+        return _rank_topk(ids_q, ids_i, R, R, k, names, mask_self=False)
+
+    return _broadcast_index_map(
+        probe_df, index, id_col, vec_col, max_index_rows, _schema(probe_df, id_col, *names), body
+    )
 
 
 def ivf_topk(
@@ -211,18 +369,21 @@ def ivf_topk(
     driver materialization, `limit(sample_size)`), broadcast to executors.
     Search: every vector is assigned to its `n_probe` nearest cells, the
     corpus to its 1 nearest; exact cosine re-rank runs per cell via
-    applyInPandas.  Candidate cost ~ n_probe/n_cells of brute force;
-    recall rises with n_probe (measured in tests/test_similarity_ivf.py).
+    applyInPandas, then the per-cell top-ks merge on the unrounded cosine
+    (unique per (query, neighbor) pair — the `ivf_topk_int` argument).
+    Candidate cost ~ n_probe/n_cells of brute force; recall rises with
+    n_probe (measured in tests/test_similarity_ivf.py).
 
     Scale: one shuffle on cell id; cells partition the corpus, so no
     global index ever sits in one executor — the beyond-memory path, same
     shape as FAISS IVF-Flat distributed over Spark.
     """
     df = df.where(F.col(vec_col).isNotNull())  # NULL vecs have no cell
+    out_schema = _schema(df, id_col, *_TOPK, "rank_key")
     pdf = df.select(vec_col).limit(sample_size).toPandas()
     if len(pdf) == 0:
-        return df.sparkSession.createDataFrame([], _out_schema(df, id_col))
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        return df.sparkSession.createDataFrame([], _schema(df, id_col, *_TOPK))
+    X = _stack(pdf[vec_col])
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)
     n_cells = min(n_cells, len(X))
@@ -235,80 +396,39 @@ def ivf_topk(
                 C[c] = m.mean(axis=0)
         C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     bC = df.sparkSession.sparkContext.broadcast(C)
-
-    def assign_cells(probes: int):
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cm = bC.value
-            for pb in batches:
-                if len(pb) == 0:
-                    continue
-                Q = np.stack(pb[vec_col].to_numpy()).astype(np.float64)
-                Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-                S = Qn @ Cm.T
-                order = np.argsort(-S, axis=1)[:, :probes]
-                out = pb.loc[pb.index.repeat(probes)].reset_index(drop=True)
-                out["cell"] = order.ravel()
-                out["is_probe"] = np.tile(
-                    np.arange(probes) > 0, len(pb)
-                )  # probe>0 rows are query-only
-                yield out
-
-        return gen
-
-    id_type = df.schema[id_col].dataType
-    vec_type = df.schema[vec_col].dataType
-    assigned_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField(vec_col, vec_type),
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("is_probe", T.BooleanType()),
-        ]
-    )
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
-
-    base = ensure_min_partitions(df.select(id_col, vec_col), id_col)
     # a tiny corpus can have fewer cells than the requested probe count —
     # argsort can only yield n_cells columns, so clamp or the repeat/ravel
     # shapes disagree and the executor dies on a length mismatch
-    assigned = base.mapInPandas(assign_cells(min(n_probe, n_cells)), assigned_schema)
+    probes = min(n_probe, n_cells)
 
-    out_schema = _out_schema(df, id_col)
+    def assign_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        Cm = bC.value
+        for pb in batches:
+            if len(pb) == 0:
+                continue
+            Q = _stack(pb["v"])
+            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+            order = np.argsort(-(Qn @ Cm.T), axis=1)[:, :probes]
+            out = pb.loc[pb.index.repeat(probes)].reset_index(drop=True)
+            out["cell"] = order.ravel()
+            # probe > 0 rows are query-only: a vector is indexed in one cell
+            out["is_probe"] = np.tile(np.arange(probes) > 0, len(pb))
+            yield out
 
-    def rank_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        # queries: every row (incl. probe copies); index: primary rows only
-        idx = pdf[~pdf["is_probe"]]
-        if len(idx) == 0 or len(pdf) < 2:
-            return pd.DataFrame({c.name: [] for c in out_schema})
-        ids_q = pdf[id_col].to_numpy()
-        ids_i = idx[id_col].to_numpy()
-        Q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        M = np.stack(idx[vec_col].to_numpy()).astype(np.float64)
-        S = (Q @ M.T) / np.outer(
-            np.linalg.norm(Q, axis=1), np.linalg.norm(M, axis=1)
-        )
-        S[ids_q[:, None] == ids_i[None, :]] = -np.inf
-        kk = min(k, S.shape[1])
-        part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        out_q, out_n, out_s = [], [], []
-        for r in range(S.shape[0]):
-            cand = part[r][np.isfinite(S[r, part[r]])]
-            order = np.lexsort((ids_i[cand], -S[r, cand]))
-            sel = cand[order]
-            out_q.extend([ids_q[r]] * len(sel))
-            out_n.extend(ids_i[sel])
-            out_s.extend(np.round(S[r, sel], 6))
-        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s})
+    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
-    per_cell = assigned.groupBy("cell").applyInPandas(rank_cell, out_schema)
-    # merge probe-cell candidates: global top-k per query
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        per_cell.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    base = ensure_min_partitions(df.select(id_col, F.col(vec_col).alias("v")), id_col)
+    assigned = base.mapInPandas(
+        assign_cells,
+        T.StructType(
+            base.schema.fields
+            + [T.StructField("cell", T.IntegerType()), T.StructField("is_probe", T.BooleanType())]
+        ),
     )
+    per_cell = assigned.groupBy("cell").applyInPandas(
+        _exact_cos_topk_kernel(id_col, k, out_schema, _float_frame_scores), out_schema
+    )
+    return _merge_topk(per_cell, k)
 
 
 def int_lsh_weights(dim: int, planes: int) -> list[list[int]]:
@@ -338,140 +458,79 @@ def _intdot_col(a, b_lits: list[int]):
     )
 
 
-def _exact_cos_topk_kernel(id_col: str, k: int, out_schema):
-    """applyInPandas kernel: exact-integer cosine top-k inside one group.
-
-    Expects columns (id, c, n2, is_probe); index = non-probe rows.  All
-    dot products are int64 matmuls (exact); the ORDER key d·|d|/(n2a·n2b)
-    and the reported cos d/√(n2a·n2b) are single correctly-rounded IEEE
-    ops on exact ≤2⁵³ integers — bit-identical in any engine, so the
-    DuckDB oracle can replay the ranking with no float tolerance
-    (dedup_semantic_int8's contract, plans/embeddings.py:533).
-
-    The k-boundary is deterministic: argpartition alone picks arbitrarily
-    among exactly-tied keys (plausible with integer dots, e.g. key=0),
-    which would diverge from the oracle's ``ORDER BY key DESC,
-    neighbor_id``.  Instead the boundary is WIDENED to every column tied
-    with the k-th key, then a stable sort over index rows pre-sorted by
-    ascending neighbor id resolves ties to the lowest ids — exact for any
-    data, and still O(m) per row when ties are rare (measured ~10× faster
-    than a full per-row sort at 1000-row buckets).
-
-    ``emit_key=True`` (multi-bucket callers: multiprobe LSH, IVF) adds
-    the single-rounded ranking key itself as a ``rank_key`` column so the
-    GLOBAL merge can order by the exact key the kernel and the oracle
-    rank by.  Ordering the merge on the reported ``cos_sim`` instead
-    would be a second, independent rounding (÷√den vs ·|d|/den): two
-    distinct keys can round to equal cos values, and the merge's
-    neighbor_id tie-break would then diverge from the oracle at the k
-    boundary.
-    """
-    emit_key = any(f.name == "rank_key" for f in out_schema)
-
-    def rank_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = pdf[~pdf["is_probe"]]
-        if len(idx) == 0 or len(pdf) < 2:
-            return pd.DataFrame({c.name: [] for c in out_schema})
-        return _rank_topk_int(
-            pdf[id_col].to_numpy(),
-            np.stack(pdf["c"].to_numpy()).astype(np.int64),
-            pdf["n2"].to_numpy().astype(np.int64),
-            idx[id_col].to_numpy(),
-            np.stack(idx["c"].to_numpy()).astype(np.int64),
-            idx["n2"].to_numpy().astype(np.int64),
-            k,
-            emit_key,
-        )
-
-    return rank_group
+def _sign_bucket(dots: list):
+    """Sign-LSH bucket id (bigint): bit p is set iff projection p > 0."""
+    bits = [(d > 0).cast("bigint") for d in dots]
+    return sum((bit * F.lit(1 << i) for i, bit in enumerate(bits[1:], start=1)), bits[0])
 
 
-def _rank_topk_int(ids_q, Q, n2_q, ids_i, M, n2_i, k: int, emit_key: bool):
-    """Shared exact-integer ranking body of the symmetric
-    (`_exact_cos_topk_kernel`) and asymmetric (`_exact_cos_probe_kernel`)
-    kernels — see `_exact_cos_topk_kernel` for the numeric and
-    tie-breaking contract."""
-    by_id = np.argsort(ids_i, kind="stable")  # column order = id asc
-    ids_i, M, n2_i = ids_i[by_id], M[by_id], n2_i[by_id]
-    # Exact integer dot computed THROUGH float64 BLAS (r13): numpy's
-    # int64 matmul has no BLAS path (naive loops — measured the dominant
-    # cost of every int-ANN kernel at sf1).  Exactness is unchanged:
-    # per-element products ≤ 128² and row sums ≤ 128²·dim < 2²¹, so every
-    # partial sum is an integer far below 2⁵³ — float64 accumulation is
-    # exact for ANY summation order, and rint only normalizes the sign of
-    # zero.  D then carries the same integers the int64 product carried.
-    D = np.rint(Q.astype(np.float64) @ M.T.astype(np.float64))
-    den = np.outer(n2_q, n2_i)  # ≤ 2⁴⁰, exact in int64 AND float64
-    key = (D * np.abs(D)) / den.astype(np.float64)
-    key[ids_q[:, None] == ids_i[None, :]] = -np.inf
-    kk = min(k, D.shape[1])
-    part = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
-    # k-th largest key per row; widening to >= bound pulls in every
-    # boundary tie so the deterministic sort below can pick among them
-    bound = key[np.arange(key.shape[0])[:, None], part].min(axis=1)
-    out_q, out_n, out_s, out_k = [], [], [], []
-    for r in range(D.shape[0]):
-        cand = np.nonzero(key[r] >= bound[r])[0]  # id-ascending order
-        cand = cand[np.isfinite(key[r, cand])]
-        # stable sort on -key keeps the ascending-id order among ties,
-        # so truncating to kk is the oracle's exact tie-break
-        sel = cand[np.argsort(-key[r, cand], kind="stable")][:kk]
-        out_q.extend([ids_q[r]] * len(sel))
-        out_n.extend(ids_i[sel])
-        out_s.extend(
-            D[r, sel].astype(np.float64)
-            / np.sqrt((n2_q[r] * n2_i[sel]).astype(np.float64))
-        )
-        if emit_key:
-            out_k.extend(key[r, sel])
-    cols = {"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s}
-    if emit_key:
-        cols["rank_key"] = out_k
-    return pd.DataFrame(cols)
+def lsh_bucket_index_int(
+    codes: DataFrame,
+    id_col: str = "vec_id",
+    prefix_bits: int = 6,
+    dim: int = 64,
+) -> DataFrame:
+    """The PERSISTABLE ANN index: (id, c, n2, bucket) with bucket = the
+    integer-lattice sign-LSH bucket of each vector — the similarity
+    twin of `dedup.portable_band_index`.  This is the table the
+    steady-state ANN pipeline writes once (hash-bucketed on `bucket`
+    via `sources/writers.write_bucketed`) and probes per query batch
+    with `lsh_probe_topk_int(indexed=...)`, so the corpus is neither
+    re-quantized nor re-shuffled per search; bucket assignment is exact
+    integer arithmetic (`int_lsh_weights`), so any engine can rebuild
+    or verify the index from the formula alone."""
+    W = int_lsh_weights(dim, prefix_bits)
+    bucket = _sign_bucket([_intdot_col(F.col("c"), W[p]) for p in range(prefix_bits)])
+    return codes.where(F.col("n2") > 0).select(
+        F.col(id_col), "c", "n2", bucket.alias("bucket")
+    )
 
 
-def _exact_cos_probe_kernel(id_col: str, k: int, out_schema):
-    """Cogrouped ASYMMETRIC twin of `_exact_cos_topk_kernel`: left cogroup
-    side = query rows of one bucket (multiprobe duplicates included),
-    right side = index members of that bucket.  Only left rows are
-    ranked, only right rows are ranked into — the search(queries, index)
-    contract.  Cogroup (vs a unioned groupBy) is what lets a PERSISTED
-    hash-bucketed index satisfy its own side's distribution: the index
-    scan arrives pre-partitioned on `bucket` and only the query side
-    exchanges (pinned by tests/test_bucketing.py)."""
-    emit_key = any(f.name == "rank_key" for f in out_schema)
-
-    def rank_probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({c.name: [] for c in out_schema})
-        # right-side columns carry __i prefixes: distinct names keep the
-        # analyzer's self-lineage attribute dedup from pruning the index
-        # side when both cogroup sides derive from one codes frame
-        return _rank_topk_int(
-            left[id_col].to_numpy(),
-            np.stack(left["c"].to_numpy()).astype(np.int64),
-            left["n2"].to_numpy().astype(np.int64),
-            right["__iid"].to_numpy(),
-            np.stack(right["__ic"].to_numpy()).astype(np.int64),
-            right["__in2"].to_numpy().astype(np.int64),
-            k,
-            emit_key,
-        )
-
-    return rank_probe
-
-
-def _int_out_schema(
-    codes: DataFrame, id_col: str, with_key: bool = False
-) -> T.StructType:
-    fields = [
-        T.StructField("query_id", codes.schema[id_col].dataType),
-        T.StructField("neighbor_id", codes.schema[id_col].dataType),
-        T.StructField("cos_sim", T.DoubleType()),
+def _multiprobe_side(
+    codes: DataFrame, id_col: str, prefix_bits: int, dim: int, n_flip: int
+) -> DataFrame:
+    """The multi-probe query side (Lv et al. 2007): every live code once
+    in its own sign bucket (is_probe = False) and once in each of the
+    `n_flip` buckets reached by flipping its lowest-margin sign bits
+    (is_probe = True).  Margin = |d_p| with ties on plane index; the
+    probe bucket is the XOR of one bit, so the schedule is exact integer
+    arithmetic any engine replays, and the probed buckets are distinct."""
+    W = int_lsh_weights(dim, prefix_bits)
+    dots = [
+        _intdot_col(F.col("c"), W[p]).alias(f"d{p}") for p in range(prefix_bits)
     ]
-    if with_key:  # internal merge key, dropped before results surface
-        fields.append(T.StructField("rank_key", T.DoubleType()))
-    return T.StructType(fields)
+    base = codes.where(F.col("n2") > 0).select(F.col(id_col), "c", "n2", *dots)
+    d = [F.col(f"d{p}") for p in range(prefix_bits)]
+    # array_sort on (|d_p|, p, mask) structs = ORDER BY abs(d), p — the
+    # mask rides along so the flip is a pure XOR downstream (F.shiftleft
+    # needs a literal bit count)
+    margin = F.array(
+        *[
+            F.struct(
+                F.abs(d[p]).alias("m"),
+                F.lit(p).alias("p"),
+                F.lit(1 << p).cast("bigint").alias("mask"),
+            )
+            for p in range(prefix_bits)
+        ]
+    )
+    flips = F.slice(F.array_sort(margin), 1, min(n_flip, prefix_bits))
+    with_bucket = base.select(
+        F.col(id_col), "c", "n2", _sign_bucket(d).alias("bucket"), flips.alias("flips")
+    ).localCheckpoint(eager=False)  # feeds the own-bucket AND probe branches
+    own = with_bucket.select(
+        F.col(id_col), "c", "n2", "bucket", F.lit(False).alias("is_probe")
+    )
+    probes = with_bucket.select(
+        F.col(id_col),
+        "c",
+        "n2",
+        F.explode(
+            F.transform(F.col("flips"), lambda s: F.col("bucket").bitwiseXOR(s["mask"]))
+        ).alias("bucket"),
+        F.lit(True).alias("is_probe"),
+    )
+    return own.unionByName(probes)
 
 
 def lsh_topk_int(
@@ -492,15 +551,10 @@ def lsh_topk_int(
     shuffle on bucket, quadratic only inside buckets, nothing broadcast);
     the float-hyperplane variant stays for callers with raw embeddings.
     """
-    W = int_lsh_weights(dim, prefix_bits)
-    bits = [(_intdot_col(F.col("c"), W[p]) > 0).cast("bigint") for p in range(prefix_bits)]
-    bucket = sum(
-        (bit * F.lit(1 << i) for i, bit in enumerate(bits[1:], start=1)), bits[0]
+    bucketed = lsh_bucket_index_int(codes, id_col, prefix_bits, dim).withColumn(
+        "is_probe", F.lit(False)
     )
-    bucketed = codes.where(F.col("n2") > 0).select(
-        F.col(id_col), "c", "n2", bucket.alias("bucket"), F.lit(False).alias("is_probe")
-    )
-    out_schema = _int_out_schema(codes, id_col)
+    out_schema = _schema(codes, id_col, *_TOPK)
     return bucketed.groupBy("bucket").applyInPandas(
         _exact_cos_topk_kernel(id_col, k, out_schema), out_schema
     )
@@ -525,73 +579,25 @@ def lsh_multiprobe_topk_int(
     unchanged); only the QUERY side fans out 1+n_flip ways, so the
     shuffle grows by the probe factor while the index does not — the
     standard multi-probe trade.  Every step is exact integer arithmetic
-    (margin = |d_p| with ties on plane index, probe bucket = XOR of one
-    bit), so the whole probe schedule and ranking replays in any engine
-    and the full pipeline carries a value-hash oracle.  Candidates per
-    (query, neighbor) pair are unique — a neighbor is indexed in exactly
-    one bucket and the probed buckets are distinct — so the global top-k
-    over per-bucket top-ks equals ranking the candidate union directly
-    (the `ivf_topk_int` cut argument).
+    (`_multiprobe_side`), so the whole probe schedule and ranking
+    replays in any engine and the full pipeline carries a value-hash
+    oracle.  Candidates per (query, neighbor) pair are unique — a
+    neighbor is indexed in exactly one bucket and the probed buckets are
+    distinct — so the global top-k over per-bucket top-ks equals ranking
+    the candidate union directly (the `ivf_topk_int` cut argument).
 
     Recall vs the single-probe path is measured in
     tests/test_similarity_routing.py (monotone: the candidate set is a
     strict superset) and reported oracle-checked by
     `similarity_lsh_recall_report`'s multiprobe twin.
     """
-    W = int_lsh_weights(dim, prefix_bits)
-    dots = [
-        _intdot_col(F.col("c"), W[p]).alias(f"d{p}") for p in range(prefix_bits)
-    ]
-    base = codes.where(F.col("n2") > 0).select(F.col(id_col), "c", "n2", *dots)
-    bits = [(F.col(f"d{p}") > 0).cast("bigint") for p in range(prefix_bits)]
-    bucket = sum(
-        (bit * F.lit(1 << i) for i, bit in enumerate(bits[1:], start=1)), bits[0]
+    out_schema = _schema(codes, id_col, *_TOPK, "rank_key")
+    per_bucket = (
+        _multiprobe_side(codes, id_col, prefix_bits, dim, n_flip)
+        .groupBy("bucket")
+        .applyInPandas(_exact_cos_topk_kernel(id_col, k, out_schema), out_schema)
     )
-    # margin-ordered probe schedule: array_sort on (|d_p|, p, mask)
-    # structs = ORDER BY abs(d), p — the mask rides along so the flip is
-    # a pure XOR downstream (F.shiftleft needs a literal bit count)
-    margin = F.array(
-        *[
-            F.struct(
-                F.abs(F.col(f"d{p}")).alias("m"),
-                F.lit(p).alias("p"),
-                F.lit(1 << p).cast("bigint").alias("mask"),
-            )
-            for p in range(prefix_bits)
-        ]
-    )
-    flips = F.slice(F.array_sort(margin), 1, min(n_flip, prefix_bits))
-    with_bucket = base.select(
-        F.col(id_col), "c", "n2", bucket.alias("bucket"), flips.alias("flips")
-    ).localCheckpoint(eager=False)  # feeds the member AND probe branches
-    member = with_bucket.select(
-        F.col(id_col), "c", "n2", "bucket", F.lit(False).alias("is_probe")
-    )
-    probes = with_bucket.select(
-        F.col(id_col),
-        "c",
-        "n2",
-        F.explode(
-            F.transform(F.col("flips"), lambda s: F.col("bucket").bitwiseXOR(s["mask"]))
-        ).alias("bucket"),
-        F.lit(True).alias("is_probe"),
-    )
-    out_schema = _int_out_schema(codes, id_col, with_key=True)
-    per_bucket = member.unionByName(probes).groupBy("bucket").applyInPandas(
-        _exact_cos_topk_kernel(id_col, k, out_schema), out_schema
-    )
-    # merge on the kernel's exact single-rounded key, NOT the doubly-
-    # rounded cos_sim: distinct keys can round to equal cos values and
-    # the neighbor_id tie-break would diverge from the oracle's
-    # `ORDER BY d*|d|/(na2*nb2) DESC, neighbor_id` at the k boundary
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("rank_key"), F.asc("neighbor_id")
-    )
-    return (
-        per_bucket.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= k)
-        .drop("__rn", "rank_key")
-    )
+    return _merge_topk(per_bucket, k)
 
 
 def ivf_topk_int(
@@ -610,8 +616,12 @@ def ivf_topk_int(
     kmeans-trained variant (`ivf_topk`) stays as the quality path with
     measured recall.  Every vector joins its 1 nearest cell as index
     member and its `n_probe` nearest as query; exact-int re-rank per
-    cell, then global top-k per query (a superset-of-per-cell-top-k cut,
-    so the two-stage ranking equals ranking the union directly).
+    cell, then global top-k per query on the exact key.  The two-stage
+    ranking equals ranking the candidate union directly because each
+    (query, neighbor) pair is a candidate in exactly one cell: every
+    index vector is a member of exactly one cell, and a query's probed
+    cells are distinct.  So each pair is scored once and the per-cell
+    top-k is a superset of that cell's share of the global top-k.
 
     Scale: one broadcast of n_cells integer code rows + one shuffle on
     cell id — the IVF-Flat shape; nothing grows with corpus size on the
@@ -642,47 +652,11 @@ def ivf_topk_int(
             id_col, "c", "n2", "cell", (F.col("rn") > 1).alias("is_probe")
         )
     )
-    out_schema = _int_out_schema(codes, id_col, with_key=True)
+    out_schema = _schema(codes, id_col, *_TOPK, "rank_key")
     per_cell = assigned.groupBy("cell").applyInPandas(
         _exact_cos_topk_kernel(id_col, k, out_schema), out_schema
     )
-    # same merge-key discipline as lsh_multiprobe_topk_int: order on the
-    # kernel's exact ranking key so boundary ties match the oracle
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("rank_key"), F.asc("neighbor_id")
-    )
-    return (
-        per_cell.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= k)
-        .drop("__rn", "rank_key")
-    )
-
-
-def lsh_bucket_index_int(
-    codes: DataFrame,
-    id_col: str = "vec_id",
-    prefix_bits: int = 6,
-    dim: int = 64,
-) -> DataFrame:
-    """The PERSISTABLE ANN index: (id, c, n2, bucket) with bucket = the
-    integer-lattice sign-LSH bucket of each vector — the similarity
-    twin of `dedup.portable_band_index`.  This is the table the
-    steady-state ANN pipeline writes once (hash-bucketed on `bucket`
-    via `sources/writers.write_bucketed`) and probes per query batch
-    with `lsh_probe_topk_int(indexed=...)`, so the corpus is neither
-    re-quantized nor re-shuffled per search; bucket assignment is exact
-    integer arithmetic (`int_lsh_weights`), so any engine can rebuild
-    or verify the index from the formula alone."""
-    W = int_lsh_weights(dim, prefix_bits)
-    bits = [
-        (_intdot_col(F.col("c"), W[p]) > 0).cast("bigint") for p in range(prefix_bits)
-    ]
-    bucket = sum(
-        (bit * F.lit(1 << i) for i, bit in enumerate(bits[1:], start=1)), bits[0]
-    )
-    return codes.where(F.col("n2") > 0).select(
-        F.col(id_col), "c", "n2", bucket.alias("bucket")
-    )
+    return _merge_topk(per_cell, k)
 
 
 def lsh_probe_topk_int(
@@ -734,14 +708,13 @@ def lsh_probe_topk_int(
     elif validate_index:
         # a persisted index built with MORE prefix_bits than this probe
         # has buckets outside [0, 2**prefix_bits) — catch it from the
-        # data with a min/max agg over the bucket column.  LAZY (r9
-        # ADVICE): the check rides the probe plan as a 1-row asserted
-        # aggregate broadcast-crossJoined onto the member side, instead
-        # of an eager collect() at plan-construction time — constructing
-        # a probe stays free, and the domain scan runs (and repeats) only
-        # when the probe itself actually executes.  Built with FEWER
-        # bits (a strict subset of the domain) is NOT observable here —
-        # the registered plans close that direction with write_bucketed
+        # data with a min/max agg over the bucket column.  The check is
+        # LAZY: it rides the probe plan as a 1-row asserted aggregate
+        # broadcast-crossJoined onto the member side, so constructing a
+        # probe runs no job, and the domain scan runs (and repeats) only
+        # when the probe itself executes.  Built with FEWER bits (a
+        # strict subset of the domain) is NOT observable here — the
+        # registered plans close that direction with write_bucketed
         # TBLPROPERTIES (expect_table_properties); same asymmetry as the
         # dedup twin's band-domain check.  Pass validate_index=False on
         # repeat probes of a validated index (every registered plan
@@ -778,58 +751,17 @@ def lsh_probe_topk_int(
         F.col("n2").alias("__in2"),
         "bucket",
     )
-    W = int_lsh_weights(dim, prefix_bits)
-    dots = [
-        _intdot_col(F.col("c"), W[p]).alias(f"d{p}") for p in range(prefix_bits)
-    ]
-    base = query_codes.where(F.col("n2") > 0).select(F.col(id_col), "c", "n2", *dots)
-    bits = [(F.col(f"d{p}") > 0).cast("bigint") for p in range(prefix_bits)]
-    bucket = sum(
-        (bit * F.lit(1 << i) for i, bit in enumerate(bits[1:], start=1)), bits[0]
-    )
     if n_flip > 0:
-        margin = F.array(
-            *[
-                F.struct(
-                    F.abs(F.col(f"d{p}")).alias("m"),
-                    F.lit(p).alias("p"),
-                    F.lit(1 << p).cast("bigint").alias("mask"),
-                )
-                for p in range(prefix_bits)
-            ]
-        )
-        flips = F.slice(F.array_sort(margin), 1, min(n_flip, prefix_bits))
-        with_bucket = base.select(
-            F.col(id_col), "c", "n2", bucket.alias("bucket"), flips.alias("flips")
-        ).localCheckpoint(eager=False)  # feeds the own-bucket AND probe branches
-        own = with_bucket.select(F.col(id_col), "c", "n2", "bucket")
-        probes = with_bucket.select(
-            F.col(id_col),
-            "c",
-            "n2",
-            F.explode(
-                F.transform(
-                    F.col("flips"), lambda s: F.col("bucket").bitwiseXOR(s["mask"])
-                )
-            ).alias("bucket"),
-        )
-        qside = own.unionByName(probes)
+        qside = _multiprobe_side(query_codes, id_col, prefix_bits, dim, n_flip).drop("is_probe")
     else:
-        qside = base.select(F.col(id_col), "c", "n2", bucket.alias("bucket"))
-    out_schema = _int_out_schema(query_codes, id_col, with_key=True)
+        qside = lsh_bucket_index_int(query_codes, id_col, prefix_bits, dim)
+    out_schema = _schema(query_codes, id_col, *_TOPK, "rank_key")
     per_bucket = (
         qside.groupBy("bucket")
         .cogroup(member.groupBy("bucket"))
         .applyInPandas(_exact_cos_probe_kernel(id_col, k, out_schema), out_schema)
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("rank_key"), F.asc("neighbor_id")
-    )
-    return (
-        per_bucket.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= k)
-        .drop("__rn", "rank_key")
-    )
+    return _merge_topk(per_bucket, k)
 
 
 def _hyperplanes(dim: int, planes: int, seed: int = 42) -> np.ndarray:
@@ -849,31 +781,26 @@ def _lsh_bucketize(
 ) -> DataFrame:
     """(id, v, bucket) with bucket = first `prefix_bits` sign bits of the
     random-hyperplane projections — pure JVM column expressions, one pass."""
-    # NULL vectors have no signature and would put the whole NULL-bucket
-    # group's np.stack at crash risk — same boundary filter as
-    # _collect_index (r11 hostile embeddings sweep, extended per ADVICE)
+    # NULL vectors have no signature, and one NULL row in a bucket would
+    # make that group's np.stack fail — the same boundary filter as
+    # _collect_index
     df = df.where(F.col(vec_col).isNotNull())
     if dim is None:
         first = df.select(vec_col).head()
         dim = len(first[0]) if first is not None else 1
     hp = _hyperplanes(dim, planes, seed)[:prefix_bits]
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    sig_bits = [
-        (
-            F.aggregate(
-                F.zip_with(v, F.array(*[F.lit(c) for c in hp[p]]), lambda x, w: x * w),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0
-        ).cast("int")
+    dots = [
+        F.aggregate(
+            F.zip_with(v, F.array(*[F.lit(c) for c in hp[p]]), lambda x, w: x * w),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
         for p in range(prefix_bits)
     ]
-    bucket = sum(
-        (bit * F.lit(1 << i) for i, bit in enumerate(sig_bits[1:], start=1)),
-        sig_bits[0],
+    return df.select(
+        F.col(id_col), F.col(vec_col).alias("v"), _sign_bucket(dots).alias("bucket")
     )
-    return df.select(F.col(id_col), F.col(vec_col).alias("v"), bucket.alias("bucket"))
 
 
 def lsh_topk(
@@ -892,45 +819,21 @@ def lsh_topk(
     projections; exact cosine re-rank inside each bucket (grouped matmul
     in Arrow batches via applyInPandas).  Vectors in sparse buckets return
     fewer than k neighbors — the standard ANN recall/latency trade,
-    measured against brute force in tests/test_similarity.py.
+    measured against brute force in tests/test_similarity.py.  A
+    zero-norm vector has no neighbors and is nobody's neighbor.
 
     Scale: one shuffle on the bucket key (2^prefix_bits buckets; tune
     prefix_bits ≈ log2(n / target_bucket_size)); within-bucket work is
     quadratic in bucket size only, and no index is broadcast — this is
     the partitioned (IVF-style) path for corpora beyond executor memory.
     """
-    bucketed = _lsh_bucketize(df, id_col, vec_col, planes, prefix_bits, dim, seed)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    bucketed = _lsh_bucketize(
+        df, id_col, vec_col, planes, prefix_bits, dim, seed
+    ).withColumn("is_probe", F.lit(False))
+    out_schema = _schema(df, id_col, *_TOPK)
+    return bucketed.groupBy("bucket").applyInPandas(
+        _exact_cos_topk_kernel(id_col, k, out_schema, _float_frame_scores), out_schema
     )
-
-    def rank_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []})
-        ids = pdf[id_col].to_numpy()
-        M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(M, axis=1)
-        S = (M @ M.T) / np.outer(norms, norms)
-        np.fill_diagonal(S, -np.inf)
-        kk = min(k, n - 1)
-        part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        out_q, out_n, out_s = [], [], []
-        for r in range(n):
-            cand = part[r]
-            order = np.lexsort((ids[cand], -S[r, cand]))
-            sel = cand[order]
-            out_q.extend([ids[r]] * len(sel))
-            out_n.extend(ids[sel])
-            out_s.extend(np.round(S[r, sel], 6))
-        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s})
-
-    return bucketed.groupBy("bucket").applyInPandas(rank_bucket, schema)
 
 
 def lsh_neardup_pairs(
@@ -953,33 +856,17 @@ def lsh_neardup_pairs(
     bucket size only; nothing broadcast, nothing collected — the
     beyond-memory fallback `cosine_neardup_auto` routes to."""
     bucketed = _lsh_bucketize(df, id_col, vec_col, planes, prefix_bits, dim, seed)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("doc_a", id_type),
-            T.StructField("doc_b", id_type),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
 
     def pairs_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"doc_a": [], "doc_b": [], "cos_sim": []})
-        ids = pdf[id_col].to_numpy()
-        M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(M, axis=1)
-        S = np.round((M @ M.T) / np.outer(norms, norms), 6)
-        keep = (S >= threshold) & (ids[:, None] < ids[None, :])
-        r, c = np.nonzero(keep)
-        return pd.DataFrame({"doc_a": ids[r], "doc_b": ids[c], "cos_sim": S[r, c]})
+        ids, M = pdf[id_col].to_numpy(), _stack(pdf["v"])
+        return _pairs(ids, M, ids, M, threshold)
 
     # a pair can share several prefix buckets only when prefix hashes
     # collide across seeds; with a single signature each pair appears in
     # at most one bucket, but dropDuplicates keeps the contract explicit
     return (
         bucketed.groupBy("bucket")
-        .applyInPandas(pairs_bucket, schema)
+        .applyInPandas(pairs_bucket, _schema(df, id_col, *_PAIRS))
         .dropDuplicates(["doc_a", "doc_b"])
     )
 
@@ -1023,83 +910,3 @@ def cosine_neardup_auto(
         return lsh_neardup_pairs(
             df, id_col, vec_col, threshold=threshold, planes=planes, prefix_bits=prefix_bits
         )
-
-
-def cosine_topk_against_index(
-    probe_df: DataFrame,
-    index_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    index_id_col: str | None = None,
-    index_vec_col: str | None = None,
-    max_index_rows: int = DEFAULT_MAX_INDEX_ROWS,
-) -> DataFrame:
-    """Exact top-k cosine of every probe against a SEPARATE bounded index
-    frame (the asymmetric sibling of `cosine_topk_bruteforce`, which
-    scores a corpus against itself and masks self-matches; here probe
-    and index are distinct frames — quantized indexes, frozen reference
-    sets — and a probe that also lives in the index keeps its match).
-
-    Returns (query_id, neighbor_id, cos_sim, rank), rank 1..k.  Ranking
-    sorts on the ROUNDED similarity (1e-6) with neighbor-id tiebreak —
-    the same total order a SQL `ROW_NUMBER() OVER (ORDER BY round DESC,
-    id)` produces, so an engine-independent oracle can reproduce the
-    winners even when two unrounded sims differ only in the last ulps.
-
-    Scale: index is collected via the bounded limit-probe guard
-    (`IndexTooLargeError` past `max_index_rows`) and broadcast; probes
-    stream through one Arrow-batched pass — no shuffle of the probe
-    side at all.  NULL probe vectors are dropped at the boundary (they
-    have no geometry to rank with — same contract as `_collect_index`);
-    zero-norm vectors are the CALLER's contract to filter (division
-    here is IEEE: a zero norm yields ±inf/nan scores).
-    """
-    probe_df = probe_df.where(F.col(vec_col).isNotNull())
-    spark = probe_df.sparkSession
-    iid = index_id_col or id_col
-    ivec = index_vec_col or vec_col
-    idx_ids, idx_M, idx_norms = _collect_index(
-        index_df.select(
-            F.col(iid).alias(id_col), F.col(ivec).alias(vec_col)
-        ),
-        id_col,
-        vec_col,
-        max_index_rows,
-    )
-    b = spark.sparkContext.broadcast((idx_ids, idx_M, idx_norms))
-    base = _out_schema(probe_df, id_col)
-    schema = T.StructType(base.fields + [T.StructField("rank", T.IntegerType())])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_i, M_i, norms_i = b.value
-        for pb in batches:
-            if len(pb) == 0 or len(ids_i) == 0:
-                continue
-            q_ids = pb[id_col].to_numpy()
-            Q = np.stack(pb[vec_col].to_numpy()).astype(np.float64)
-            q_norms = np.linalg.norm(Q, axis=1)
-            # round_det's exact floor-half-up form, NOT np.round (half-even)
-            S = np.floor((Q @ M_i.T) / np.outer(q_norms, norms_i) * 1e6 + 0.5) / 1e6
-            kk = min(k, S.shape[1])
-            out_q, out_n, out_s, out_r = [], [], [], []
-            for r in range(S.shape[0]):
-                order = np.lexsort((ids_i, -S[r]))[:kk]
-                out_q.extend([q_ids[r]] * len(order))
-                out_n.extend(ids_i[order])
-                out_s.extend(S[r, order])
-                out_r.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "cos_sim": out_s,
-                    "rank": out_r,
-                }
-            )
-
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
-
-    return ensure_min_partitions(probe_df.select(id_col, vec_col), id_col).mapInPandas(
-        gen, schema
-    )

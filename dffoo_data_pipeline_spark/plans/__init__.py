@@ -49,13 +49,15 @@ _PRIORITY = [
     "streaming_bloom_dedup",
     "streaming_bloom_dedup_sharded",
     "streaming_ingest_day",
-    # ---- oracle SQL rebuilt from shared templates, same rows ----
     "similarity_lsh_topk",
     "similarity_ivf_topk",
     "similarity_lsh_multiprobe_topk",
     "similarity_lsh_probe_topk",
     "similarity_lsh_probe_indexed",
     "streaming_ann_probe",
+    "similarity_ann_recall_report",
+    "dedup_embedding_cosine",
+    # ---- oracle SQL rebuilt from shared templates, same rows ----
     "similarity_ivfpq_recall_report",
     "similarity_ivfpq_rerank_recall_report",
     "dedup_ngram_jaccard_pairs",
@@ -67,7 +69,6 @@ _PRIORITY = [
     "profile_approx_quantiles_lineitem",
     "dedup_incremental_neardup",
     "embedding_pca_project",
-    "similarity_ann_recall_report",
     "agg_skew_safe_count_distinct",
     "skew_heavy_hitter_report",
     "window_rank_top_orders",

@@ -610,7 +610,7 @@ def dedup_semantic_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         dup = np.zeros(len(pdf), dtype=bool)
         # the dot itself runs through float64 BLAS (numpy int64 matmul
-        # has no BLAS path — r13, same fix as _rank_topk_int): |G| ≤
+        # has no BLAS path — same argument as similarity._int_scores): |G| ≤
         # 128²·64 = 2²⁰, so every partial sum is exact in float64 and the
         # rint→int64 round-trip reproduces the integer product bit-for-
         # bit; the G²·10⁴ comparison below then runs in int64 as before

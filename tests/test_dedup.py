@@ -1059,6 +1059,30 @@ def test_sharded_bloom_truncated_bitmap_is_refused(spark):
     assert got == set(range(10)) - {1, 3}
 
 
+def test_bloom_short_word_array_is_refused(spark):
+    """A bitmap whose rows keep a valid stamp but carry fewer words than
+    bloom_num_bits/64 must be REFUSED under either ANSI mode: with ANSI
+    off the missing words read as "not seen", so a ledger duplicate
+    would come back as novel; with ANSI on the probe would die on an
+    array index error instead of naming the bad bitmap."""
+    from pyspark.sql import functions as F
+
+    from dffoo_data_pipeline_spark.functions.text import fingerprint_md5
+
+    d = _docs_df(spark, {1: "aa bb cc", 11: "aa bb cc", 12: "dd ee ff"})
+    new = d.where(F.col("doc_id") < 10)
+    seen = d.where(F.col("doc_id") >= 10).select(fingerprint_md5("text").alias("fp"))
+    short = dedup.bloom_bitmap(seen).withColumn("bloom", F.slice("bloom", 1, 4))
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            with pytest.raises(Exception, match="word count mismatch"):
+                dedup.dedup_against_seen_bloom(new, seen, bitmap=short).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_bloom_dedup_job_counts_pinned(spark):
     """Constructing the Bloom dedup is NOT free: its staged relations
     (ledger fingerprints, bitmap, probed batch) are lazy checkpoints, and

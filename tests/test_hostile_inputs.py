@@ -207,13 +207,22 @@ def test_hostile_probe_side_kernels_do_not_crash(spark, hostile_emb_sf):
         e, idx, id_col="vec_id", vec_col="embedding", k=3
     ).cache()
     # the NULL-vec probe is dropped at the boundary; the zero-norm probe
-    # degenerating to NULL/NaN sims is the documented caller contract
+    # scores NaN against everything, so it has no neighbors
     null_vec_ids = [
         r["vec_id"] for r in e.where("embedding IS NULL").collect()
     ]
+    non_finite = F.isnan("cos_sim") | F.col("cos_sim").isin(
+        float("inf"), float("-inf")
+    )
     assert out.count() > 0
     assert out.where(F.col("query_id").isin(null_vec_ids)).count() == 0
-    assert similarity.lsh_topk(e, "vec_id", "embedding", k=3).count() > 0
+    assert out.where(non_finite).count() == 0
+    # a zero-norm vector is neither its own neighbor nor anyone's
+    self_or_non_finite = (F.col("query_id") == F.col("neighbor_id")) | non_finite
+    n, bad = similarity.lsh_topk(e, "vec_id", "embedding", k=3).agg(
+        F.count(F.lit(1)), F.count(F.when(self_or_non_finite, 1))
+    ).first()
+    assert n > 0 and bad == 0
     assert (
         similarity.lsh_neardup_pairs(
             e, "vec_id", "embedding", threshold=0.99

@@ -61,17 +61,23 @@ def test_auto_neardup_routes_and_verifies(emb):
     assert bad.where(F.col("doc_a") >= F.col("doc_b")).count() == 0
 
 
-def test_exact_int_kernel_breaks_boundary_ties_by_id():
+@pytest.mark.parametrize("scorer", ["int", "float"])
+def test_exact_int_kernel_breaks_boundary_ties_by_id(scorer):
     """Exactly-tied ranking keys at the k-boundary (plausible with integer
-    dot products, e.g. orthogonal codes -> key 0) must resolve to the
-    LOWEST neighbor ids — the oracle's ORDER BY key DESC, neighbor_id —
-    regardless of the input row order (ADVICE r7: argpartition picked
-    arbitrarily among ties)."""
+    dot products, e.g. orthogonal codes -> key 0, and with duplicated
+    float vectors) must resolve to the LOWEST neighbor ids — the
+    oracle's ORDER BY key DESC, neighbor_id — regardless of the input
+    row order: argpartition alone picks arbitrarily among ties.  Both
+    scorers feed the one selection, so both must hold the contract."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from dffoo_data_pipeline_spark.operators.similarity import _exact_cos_topk_kernel
+    from dffoo_data_pipeline_spark.operators.similarity import (
+        _exact_cos_topk_kernel,
+        _float_frame_scores,
+        _int_scores,
+    )
 
     out_schema = T.StructType(
         [
@@ -91,10 +97,12 @@ def test_exact_int_kernel_breaks_boundary_ties_by_id():
             "vec_id": [r[0] for r in rows],
             "c": [np.array(r[1], dtype=np.int64) for r in rows],
             "n2": [1] * len(rows),
+            "v": [np.array(r[1], dtype=np.float64) for r in rows],
             "is_probe": [False] * len(rows),
         }
     )
-    out = _exact_cos_topk_kernel("vec_id", 3, out_schema)(pdf)
+    score = {"int": _int_scores, "float": _float_frame_scores}[scorer]
+    out = _exact_cos_topk_kernel("vec_id", 3, out_schema, score)(pdf)
     got_q1 = out[out["query_id"] == 1]["neighbor_id"].tolist()
     # key ranking for query 1: 6 (dot 1), then the 0-ties {2,3,4,5} ->
     # lowest ids 2, 3 fill the remaining two slots; 7 (dot -1) never
@@ -103,6 +111,35 @@ def test_exact_int_kernel_breaks_boundary_ties_by_id():
     # {1,6,7} at 0/-1; k=3 must take 3, 4, 5 in id order
     got_q2 = out[out["query_id"] == 2]["neighbor_id"].tolist()
     assert got_q2 == [3, 4, 5]
+
+
+def test_float_topk_paths_break_duplicate_ties_by_id(spark):
+    """Nine identical vectors under scrambled ids tie exactly with each
+    other, so every float top-k path (exact, LSH, IVF probing every
+    cell) must return, for each of them, the three LOWEST other ids."""
+    from pyspark.sql import types as T
+
+    dup_ids = [7, 3, 9, 1, 5, 8, 2, 6, 4]
+    other = {10: [4.0, -3.0, 2.0, -1.0], 11: [-2.0, 1.0, 0.0, 3.0], 12: [0.0, 0.0, 5.0, -4.0]}
+    rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in dup_ids] + list(other.items())
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    df = spark.createDataFrame(rows, schema)
+    want = {q: sorted(set(dup_ids) - {q})[:3] for q in dup_ids}
+    paths = {
+        "bruteforce": similarity.cosine_topk_bruteforce(df, "vec_id", "embedding", k=3),
+        "lsh": similarity.lsh_topk(df, "vec_id", "embedding", k=3),
+        "ivf": similarity.ivf_topk(df, "vec_id", "embedding", k=3, n_cells=4, n_probe=4),
+    }
+    for name, out in paths.items():
+        got = {}
+        for r in out.where(F.col("query_id") < 10).collect():
+            got.setdefault(r.query_id, []).append(r.neighbor_id)
+        assert {q: sorted(n) for q, n in got.items()} == want, name
 
 
 def test_multiprobe_lsh_superset_and_recall_lift(spark):
