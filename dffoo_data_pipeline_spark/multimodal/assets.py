@@ -709,12 +709,13 @@ def phash_neardup(codes: DataFrame, max_hamming: int = _PHASH_MAX_HAMMING) -> Da
     on ≥2 whole bands (pigeonhole), so grouping assets per (band_idx,
     band_value) bucket finds every true pair while touching only
     bucket-colliding candidates — never assets².  Candidate pairs are
-    generated combinatorially INSIDE each sorted posting list (the same
-    single-consumer plan as operators/dedup.py's MinHash stage — the
-    former band-table self-join recomputed the Python decode subtree
-    for its second side), then verified exactly with bit_count(xor) in
-    the JVM.  The exact-dup group size stays a groupBy+join rather than
-    a phash window: a boilerplate image repeated millions of times is a
+    generated combinatorially INSIDE each sorted posting list
+    (`all_pairs`, the same single-consumer plan as operators/dedup.py's
+    MinHash stage — the former band-table self-join recomputed the
+    Python decode subtree for its second side), then verified exactly
+    with bit_count(xor) in the JVM.  The exact-dup group size stays a
+    groupBy+join rather than a phash window: a boilerplate image
+    repeated millions of times is a
     skewed JOIN key (AQE splits it), but an unsplittable window
     partition.
 
@@ -732,6 +733,8 @@ def phash_neardup(codes: DataFrame, max_hamming: int = _PHASH_MAX_HAMMING) -> Da
     hash within max_hamming), which is exactly the old per-asset-pair
     min because each hash's minimum asset IS its representative.
     """
+    from dffoo_data_pipeline_spark.operators.dedup import all_pairs
+
     # The decode+hash subtree feeds THREE consumers (reps → bands, reps →
     # hash_info, and the final per-asset join) and `pairs` feeds the
     # neighbors union twice; without a lineage cut Catalyst re-expands
@@ -775,23 +778,14 @@ def phash_neardup(codes: DataFrame, max_hamming: int = _PHASH_MAX_HAMMING) -> Da
         )
         .where(F.size("xs") >= 2)
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(
-                    x["rep_id"].alias("a_rep"),
-                    y["rep_id"].alias("b_rep"),
-                    x["phash"].alias("a_hash"),
-                    y["phash"].alias("b_hash"),
-                ),
-            ),
-        )
-    )
     pairs = (
-        lists.select(F.explode(combos).alias("p"))
-        .select("p.a_rep", "p.b_rep", "p.a_hash", "p.b_hash")
+        lists.select(F.explode(all_pairs("xs")).alias("p"))
+        .select(
+            F.col("p.a.rep_id").alias("a_rep"),
+            F.col("p.b.rep_id").alias("b_rep"),
+            F.col("p.a.phash").alias("a_hash"),
+            F.col("p.b.phash").alias("b_hash"),
+        )
         .distinct()
         .where(
             F.bit_count(F.col("a_hash").bitwiseXOR(F.col("b_hash"))) <= max_hamming

@@ -1,16 +1,34 @@
 """Deduplication operators (SURVEY.md §2k; BASELINE north star).
 
-Four tiers, all pure DataFrame ops:
+All pure DataFrame ops; nothing is collected out of the cluster.
 
-- exact: content-hash groupBy — one shuffle on a uniform 128-bit key.
-- n-gram Jaccard: relational shingle self-join — exact near-dup, no
-  cross join (pairs materialize only when they share a shingle).
-- MinHash+LSH: linear-time candidate generation — the 100 TB path.
-- SimHash: single 64-bit signature per doc; near-dup = identical band.
+- Exact: `exact_keep_first` is a content-hash groupBy.  The ledger
+  checks (`dedup_against_seen`, its Bloom prefilter, `snapshot_diff`)
+  key on the md5 fingerprint of normalized text.
+- Shingles: `_shingles_udf` is the one word-n-gram tokenizer; its
+  whitespace class is the cross-engine spec every oracle spells.
+- Overlap core: `_shingle_overlap` counts exact shingle intersections
+  per sharing pair over posting lists; `ngram_jaccard_pairs` and
+  `shingle_containment_pairs` differ only in the final ratio.
+- Near-dup stack, built once with the hash family as data.
+  `_family` names the hash expressions of each family (the MinHash
+  shingle key and member, the band key, the SimHash token hash):
+  ``"xx64"`` (xxhash64; fast, Spark-specific values) or ``"md5"``
+  (md5-derived, so any engine with md5 reproduces every value and each
+  result has a SQL oracle) — the same names as the Bloom prefilter's
+  families.
+  - band builder: `_bands_from_posts` turns (id, shingle) posts into
+    (id, band_id, band_hash); `band_index` is the persistable index.
+  - over the bands: `lsh_candidates` (posting-list pairing),
+    `neardup_against_index` (batch probe) and `lsh_verified_pairs`
+    (candidates + exact Jaccard verify, `_verify_exact_jaccard`).
+  - SimHash: `_simhash_signatures` (token hash → ±1 votes → bits);
+    `simhash` per document, `simhash_pairs` over band posting lists.
+- `prefix_filter_pairs`: the lossless all-pairs audit.
+- `all_pairs` is the one sorted-list (i < j) pair combinator.
 
-Design for scale: shuffle keys are hashes/shingles (uniform), the only
-quadratic work is within LSH buckets (bounded by band width), and nothing
-touches the driver.
+Design for scale: shuffle keys are hashes/shingles (uniform), and the
+only quadratic work is inside a posting list, bounded by its cap.
 """
 
 from __future__ import annotations
@@ -18,7 +36,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -61,13 +79,12 @@ def _shingles_udf(n: int):
     '\\s+',' '), ' ')` — the cross-engine whitespace spec is RE2's \\s,
     i.e. [ \\t\\n\\r\\f] and NOTHING else (`functions.text.WS_CHARS`).
     It is deliberately NOT Python str.split()'s Unicode whitespace (a
-    U+00A0 doc must shingle identically in every engine probing the
-    portable index — r10 self-review) and NOT Java \\s either: Java \\s
-    additionally matches \\v (0x0B), which RE2 does not (r11 ADVICE —
-    verified live against DuckDB), so a \\v stays INSIDE a token here,
-    exactly as the oracles keep it.  Spark-side expression tokenizers
-    spell the same explicit class (`functions.text.WS_CLASS`) for the
-    same reason.
+    U+00A0 doc must shingle identically in every engine probing an md5
+    band index) and NOT Java \\s either: Java \\s additionally matches
+    \\v (0x0B), which RE2 does not (checked against DuckDB), so a \\v
+    stays INSIDE a token here, exactly as the oracles keep it.
+    Spark-side expression tokenizers spell the same explicit class
+    (`functions.text.WS_CLASS`) for the same reason.
     """
     # token regex = the complement of the portable whitespace class;
     # findall avoids the empty-edge tokens a split would need filtering
@@ -84,9 +101,9 @@ def _shingles_udf(n: int):
             # corpora carry NULL docs, and every shingle consumer
             # (near-dup pairs, band indexes, containment) treats "no
             # shingles" as "participates in nothing" — the same verdict
-            # the fingerprint family gives NULL docs (r11 hostile-input
-            # sweep; previously t.lower() raised AttributeError and took
-            # down every shingle-based query on the first NULL doc)
+            # the fingerprint family gives NULL docs.  t.lower() on a
+            # NULL would fail every shingle-based query on its first
+            # NULL doc.
             if t is None:
                 return []
             tl = t.lower()
@@ -115,6 +132,14 @@ def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     rows ~tokens-per-doc× before the downstream hash shuffle.  The scan is
     fanned out first so the UDF stage uses every core even when the input
     is one small file (no-op on a properly-split 100 TB input).
+
+    The shingler is exploded directly, never through a named array
+    column: exploding a UDF-computed column lets Catalyst infer
+    `size(sh) > 0` below the Generate and push it through the
+    projection, which evaluates the Arrow shingler a second time per
+    row.  Exploding the UDF expression is exempt from that inference
+    (SPARK-36715).  Callers that also need the arrays checkpoint them
+    first and explode the checkpointed column (`lsh_verified_pairs`).
     """
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
@@ -125,51 +150,61 @@ def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.2,
-    max_doc_frequency: int | None = 1000,
+def all_pairs(col: str) -> Column:
+    """Every (i < j) pair of the array column `col` as struct(a, b).
+
+    Over a SORTED array, a < b in every pair, so each unordered pair is
+    emitted once and needs no dedup.  The posting-list plans explode
+    this inside each list instead of self-joining the list relation:
+    pair work stays proportional to the squared list length, and each
+    list is read once.
+    """
+    arr = F.col(col)
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+
+
+def _shingle_overlap(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_doc_frequency: int | None
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle.
+    """(doc_a, doc_b, sz_a, sz_b, isect) for every pair sharing ≥1
+    shingle, doc_a < doc_b: the distinct shingle counts of both docs and
+    their exact intersection size.
 
-    Posting-list plan: one pass shingles each doc (Arrow-batched UDF) and
-    takes |A| = array_size inline, one shuffle groups doc ids per shingle,
-    pairs are generated combinatorially inside each posting list, and one
-    more shuffle counts |A∩B| per pair; |A∪B| = |A|+|B|-|A∩B|.  Returns
-    (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    Posting-list plan: one pass shingles each doc and takes |A| inline,
+    one shuffle groups (id, |A|) per shingle, pairs come from
+    `all_pairs` inside each sorted list, and one more shuffle counts
+    |A∩B| per pair.  The shingle subtree has exactly ONE consumer: no
+    self-join, so nothing to persist.
 
-    The shingle subtree has exactly ONE consumer — no self-join, so no
-    persist (the former self-join needed a cached shingle relation that
-    leaked across invocations) and half the shuffle volume.
-
-    Stop-shingle guard: posting lists longer than `max_doc_frequency` are
-    degenerate boilerplate (a shingle shared by 1% of a 100 TB corpus
-    makes any pairing quadratic in that bucket) and are dropped BEFORE
-    pair generation, which also bounds per-task memory for the collected
-    list (≤ max_doc_frequency structs) and pair fan-out (≤ C(max_df, 2)).
-    Sizes are taken before the explode, so dropped stop shingles still
-    count toward |A| and |B| — the jaccard of surviving pairs only loses
-    the stop shingle from the intersection, the standard stop-filter
-    semantics.  Testdata max DF is 7 (sf0.01) / 25 (sf0.1), so the
-    default guard of 1000 leaves oracle results bit-identical.
+    Stop-shingle guard: posting lists longer than `max_doc_frequency`
+    are degenerate boilerplate (a shingle shared by 1% of a 100 TB
+    corpus makes any pairing quadratic in that bucket) and are dropped
+    BEFORE pair generation, which also bounds per-task memory for the
+    collected list and the pair fan-out (≤ C(max_df, 2)).  Sizes are
+    taken before the explode, so dropped stop shingles still count
+    toward |A| and |B|; surviving pairs only lose the stop shingle from
+    the intersection, the standard stop-filter semantics.
     """
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
     base = ensure_min_partitions(df, id_col).select(
         F.col(id_col),
-        # asNondeterministic (guide §4.4): this plan needs BOTH |A| and
-        # the exploded shingles from one UDF call, so the array must be
-        # a named column — but exploding a UDF-computed column lets
-        # Catalyst infer size(__sh)>0 below the Generate and push it
-        # through the projection, re-evaluating the Arrow shingler once
-        # more per row (two stacked ArrowEvalPython in the plan).  The
-        # marked expression cannot be duplicated; the shingler runs once
-        # and the inferred filter stays above it as a cheap size(attr)
-        # check.  The function is pure; `df` is pre-filtered by callers,
-        # so no predicate needs to push past it.
+        # asNondeterministic: this plan needs BOTH |A| and the exploded
+        # shingles from one UDF call, so the array must be a named
+        # column, and `_shingle_rows` explains why exploding a named
+        # UDF column re-runs the shingler.  The marked expression cannot
+        # be duplicated; the shingler runs once and the inferred filter
+        # stays above it as a cheap size(attr) check.  The function is
+        # pure; `df` is pre-filtered by callers, so no predicate needs
+        # to push past it.
         _shingles_udf(n).asNondeterministic()(F.col(text_col)).alias("__sh"),
     )
     posts = base.select(
@@ -179,131 +214,321 @@ def ngram_jaccard_pairs(
     lists = posts.groupBy("shingle").agg(F.array_sort(F.collect_list("d")).alias("ds"))
     if max_doc_frequency is not None:
         lists = lists.where(F.size("ds") <= max_doc_frequency)
-    # all (i < j) combinations within the sorted posting list — doc_a < doc_b for free
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = lists.where(F.size("ds") >= 2).select(F.explode(combos).alias("p"))
-    inter = pairs.groupBy(
+    pairs = lists.where(F.size("ds") >= 2).select(F.explode(all_pairs("ds")).alias("p"))
+    return pairs.groupBy(
         F.col("p.a.id").alias("doc_a"),
         F.col("p.b.id").alias("doc_b"),
         F.col("p.a.sz").alias("sz_a"),
         F.col("p.b.sz").alias("sz_b"),
     ).agg(F.count(F.lit(1)).alias("isect"))
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.2,
+    max_doc_frequency: int | None = 1000,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle:
+    (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard ≥ `threshold`,
+    from `_shingle_overlap` with |A∪B| = |A|+|B|-|A∩B|.
+
+    Testdata max DF is 7 (sf0.01) / 25 (sf0.1), so the default
+    stop-shingle guard of 1000 leaves oracle results bit-identical.
+    """
+    inter = _shingle_overlap(df, id_col, text_col, n, max_doc_frequency)
     jac = F.col("isect") / (F.col("sz_a") + F.col("sz_b") - F.col("isect"))
     return inter.where(jac >= threshold).select(
         "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 64
+def shingle_containment_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.8,
+    max_doc_frequency: int | None = 1000,
 ) -> DataFrame:
-    """(id, signature array<long>) — minhash over word-n-gram shingles.
+    """Directed near-dup containment: emit (contained, container,
+    containment) where containment = |A∩B| / |A| ≥ threshold — the
+    asymmetric complement of Jaccard.  A short document fully embedded in
+    a longer one scores containment ≈ 1 while its Jaccard stays low
+    (|A∪B| is dominated by the long side), so symmetric dedup never sees
+    it; this is the quote/excerpt/wrapper-page detector.
 
-    Hash family: one xxhash64 per shingle (the only string hash), then 64
-    derived members h_i = xxhash64(h, i) — fixed-width JVM mixing of an
-    already-long input, ~60× cheaper than hashing the string 64 times.
-    ANSI-safe by construction: xxhash64 never overflows, unlike the affine
-    a_i·h+b_i mix this replaced, which threw ARITHMETIC_OVERFLOW on any
-    Spark 4 session with ANSI enabled (the driver's/stock-cluster default).
-    The signature is 64 column-wise MINs in one grouped aggregation
-    (map-side partial combine).
+    Same overlap core as `ngram_jaccard_pairs`; only the final ratio
+    differs: each undirected intersection row fans out to ≤2 directed
+    rows, filtered by isect/|A| ≥ threshold.
     """
-    return _minhash_signatures_from_posts(
-        _shingle_rows(df, id_col, text_col, n), id_col, num_hashes
-    )
-
-
-def _minhash_signatures_from_posts(
-    sh: DataFrame, id_col: str, num_hashes: int = 64
-) -> DataFrame:
-    """`minhash_signatures` over an exploded (id, shingle) posting frame —
-    the seam that lets a caller holding a checkpointed shingle relation
-    (e.g. `lsh_verified_pairs`, which also needs the arrays for its
-    verify join) feed the signature pipeline WITHOUT a second Arrow
-    shingler pass over the corpus."""
-    base = sh.select(id_col, F.xxhash64("shingle").alias("h"))
-    hashed = base.select(
-        id_col,
-        *[
-            F.xxhash64(F.col("h"), F.lit(i)).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    agged = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
-    )
-    return agged.select(
-        id_col, F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature")
-    )
-
-
-def band_signatures(
-    sig: DataFrame, id_col: str, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """(id, band_id, band_hash) from a minhash signature frame — the LSH
-    band table.  This IS the persistable near-dup index of a continuous
-    ingest pipeline: write it once per corpus snapshot, probe each new
-    batch against it (`neardup_against_index`) instead of re-pairing the
-    whole corpus."""
-    rows_per_band = num_hashes // bands
-    return sig.select(
-        id_col,
+    inter = _shingle_overlap(df, id_col, text_col, n, max_doc_frequency)
+    directed = inter.select(
         F.explode(
             F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[
-                                F.col("signature")[b * rows_per_band + r]
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
+                F.struct(
+                    F.col("doc_a").alias("contained"),
+                    F.col("doc_b").alias("container"),
+                    (F.col("isect") / F.col("sz_a")).alias("c"),
+                ),
+                F.struct(
+                    F.col("doc_b").alias("contained"),
+                    F.col("doc_a").alias("container"),
+                    (F.col("isect") / F.col("sz_b")).alias("c"),
+                ),
             )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_hash")
+        ).alias("d")
+    ).select("d.contained", "d.container", "d.c")
+    return directed.where(F.col("c") >= threshold).select(
+        "contained", "container", F.round("c", 4).alias("containment")
+    )
 
 
-def neardup_against_index(
-    new_df: DataFrame,
-    index: DataFrame,
+def _family(family: str):
+    """(shingle_key, member, band_key, token_hash) of a near-dup hash
+    family.
+
+    - member(shingle_key(s), i): the i-th MinHash member of shingle s;
+      a document's signature entry i is its MIN over the doc's
+      shingles.  The key is computed once per shingle and shared by
+      all members.
+    - band_key(cols): the key of one band's signature slice.
+    - token_hash(tok): the SimHash hash of one token, a bigint whose
+      low bits vote.
+
+    ``xx64``: key = xxhash64(s), member = xxhash64(key, i) — one string
+    hash per shingle, then fixed-width JVM mixing of a long, ~60×
+    cheaper than hashing the string per member, and ANSI-safe (xxhash64
+    never overflows); band key = xxhash64 over the slice; token hash =
+    xxhash64.  The values are Spark-specific.
+
+    ``md5``: key = s, member = md5('<i>:' || s), a lowercase hex
+    string whose string MIN is the signature entry; band key = md5 of
+    the '|'-joined slice; token hash = the top 60 bits of md5 as a bigint
+    (`conv(substr(md5(tok),1,15),16,10)`; DuckDB spells it
+    `CAST('0x'||substr(md5(tok),1,15) AS BIGINT)`).  Any engine with
+    md5 reproduces every value, so every result has a SQL oracle and a
+    persisted md5 band index can be probed by another engine.  md5 per
+    shingle costs ~2× xxhash64.
+    """
+    if family == "xx64":
+        return (
+            F.xxhash64,
+            lambda k, i: F.xxhash64(k, F.lit(i)),
+            lambda cols: F.xxhash64(*cols),
+            F.xxhash64,
+        )
+    if family == "md5":
+        return (
+            lambda s: s,
+            lambda s, i: F.md5(F.concat(F.lit(f"{i}:"), s)),
+            lambda cols: F.md5(F.concat_ws("|", *cols)),
+            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
+        )
+    raise ValueError(f"unknown near-dup hash family {family!r} (xx64 or md5)")
+
+
+def _bands_from_posts(
+    posts: DataFrame, id_col: str, num_hashes: int, bands: int, family: str
+) -> DataFrame:
+    """(id, band_id, band_hash) from an exploded (id, shingle) posting
+    frame: the per-doc MinHash signature is `num_hashes` column-wise
+    MINs in one grouped aggregation (map-side partial combine), cut into
+    `bands` slices of num_hashes/bands members, each keyed by the
+    family's band key.  ``band_hash`` is a bigint under ``xx64`` and an
+    md5 hex string under ``md5``.
+
+    Takes POSTS, not text: a caller holding checkpointed shingle arrays
+    (`lsh_verified_pairs`, which also needs them for its verify join)
+    feeds them here without a second Arrow shingler pass.  A ragged
+    split (bands not dividing num_hashes) is refused rather than
+    silently dropping the trailing hashes from every band key.
+    """
+    shingle_key, member, band_key, _ = _family(family)
+    if bands <= 0 or num_hashes % bands:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a positive multiple of bands "
+            f"({bands}): a ragged split would silently drop the trailing "
+            f"{num_hashes % bands if bands > 0 else num_hashes} hashes from every "
+            "band key, quietly weakening recall instead of failing loudly"
+        )
+    rows = num_hashes // bands
+    # the key takes the shingle's place; an identity key (md5) leaves a
+    # no-op projection that the optimizer removes
+    keyed = posts.select(id_col, shingle_key(F.col("shingle")).alias("shingle"))
+    sig = keyed.groupBy(id_col).agg(
+        *[F.min(member(F.col("shingle"), i)).alias(f"h{i}") for i in range(num_hashes)]
+    )
+    keys = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            band_key([F.col(f"h{b * rows + r}") for r in range(rows)]).alias("band_hash"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(id_col, F.explode(F.array(*keys)).alias("band")).select(
+        id_col, "band.band_id", "band.band_hash"
+    )
+
+
+def band_index(
+    df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
+    family: str = "xx64",
 ) -> DataFrame:
-    """Probe a NEW batch against an existing LSH band index — the
-    incremental near-dup shape of a continuous crawl: the corpus-sized
-    side is a pre-built table (`band_signatures` output, re-read from
-    storage), only the batch is shingled/hashed per run.
+    """The PERSISTABLE near-dup index: (id, band_id, band_hash) per
+    document.  A continuous ingest pipeline writes it once per corpus
+    snapshot (hash-bucketed on the band key — `sources/writers.
+    write_bucketed`) and probes each batch against it with
+    `neardup_against_index(index_bands=...)`, so only the batch is
+    shingled and hashed per run and the probe join shuffles the batch
+    side only.  An ``md5`` index can be rebuilt or probed by any engine
+    with md5.
+
+    Defaults: 16 bands × 4 rows over 64 hashes put ~50% capture at
+    Jaccard ≈ (1/16)^(1/4) ≈ 0.5.
+    """
+    return _bands_from_posts(
+        _shingle_rows(df, id_col, text_col, n), id_col, num_hashes, bands, family
+    )
+
+
+def _candidates_from_posts(
+    posts: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    family: str,
+    max_bucket: int | None,
+) -> DataFrame:
+    """(doc_a, doc_b, n_shared_bands), doc_a < doc_b, for every pair
+    sharing ≥1 band key: doc ids are grouped per (band_id, band_hash)
+    bucket, paired by `all_pairs` inside each sorted list, and the
+    shared bands counted per pair.  Callers that want distinct pairs
+    select doc_a, doc_b (the count is then pruned away).
+
+    Scale: one shuffle on the band key, then one on the pair.
+    Quadratic work exists only inside a bucket; `max_bucket` drops
+    degenerate buckets (boilerplate shared by >1000 docs would pair
+    quadratically and is better handled by exact dedup first).
+    """
+    banded = _bands_from_posts(posts, id_col, num_hashes, bands, family)
+    lists = banded.groupBy("band_id", "band_hash").agg(
+        F.array_sort(F.collect_list(F.col(id_col))).alias("ids")
+    )
+    lists = lists.where(F.size("ids") >= 2)
+    if max_bucket is not None:
+        lists = lists.where(F.size("ids") <= max_bucket)
+    pairs = lists.select(F.explode(all_pairs("ids")).alias("p"))
+    return pairs.groupBy(
+        F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
+    ).agg(F.count(F.lit(1)).alias("n_shared_bands"))
+
+
+def lsh_candidates(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+    max_bucket: int | None = 1000,
+    family: str = "xx64",
+) -> DataFrame:
+    """Near-dup candidate pairs via banded MinHash-LSH, WITHOUT a verify:
+    (doc_a, doc_b, n_shared_bands) — the raw S-curve output, for quality
+    measurement and for pipelines that verify downstream.  Testdata
+    buckets hold ≤7 docs, far under the `max_bucket` guard."""
+    return _candidates_from_posts(
+        _shingle_rows(df, id_col, text_col, n),
+        id_col, num_hashes, bands, family, max_bucket,
+    )
+
+
+def _band_domain_guard(index_bands: DataFrame, bands: int) -> DataFrame:
+    """`index_bands` unchanged, but refused at action time unless its
+    band_id domain is exactly range(`bands`).  Every indexed doc emits
+    one row per band, so a non-empty index built with `bands` bands has
+    exactly `bands` distinct ids, min 0 and max bands-1; an empty index
+    has nothing to collide with and passes.  The check is a 1-row
+    asserted aggregate (map-side combined over one int column),
+    broadcast-crossJoined onto the index, so building the probe runs no
+    job."""
+    nd, lo, hi = F.col("__nd"), F.col("__bmin"), F.col("__bmax")
+    ok = (nd == 0) | ((nd == bands) & (lo == 0) & (hi == bands - 1))
+    msg = F.format_string(
+        f"index band_id domain (%d ids in [%s, %s]) != range({bands}): the "
+        "persisted index was built with a different `bands` (probe params "
+        "must equal the index build params)",
+        nd, lo, hi,
+    )
+    guard = (
+        index_bands.agg(
+            F.count_distinct("band_id").alias("__nd"),
+            F.min("band_id").alias("__bmin"),
+            F.max("band_id").alias("__bmax"),
+        )
+        .where(F.assert_true(ok, msg).isNull())
+        .select(F.lit(1).alias("__band_domain_checked"))
+    )
+    return index_bands.crossJoin(F.broadcast(guard)).drop("__band_domain_checked")
+
+
+def neardup_against_index(
+    new_df: DataFrame,
+    index_df: DataFrame | None,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+    index_bands: DataFrame | None = None,
+    validate_index: bool = True,
+    family: str = "xx64",
+) -> DataFrame:
+    """Probe a NEW batch against an existing corpus — the incremental
+    near-dup shape of a continuous crawl.  Pass exactly one of
+    ``index_df`` (raw documents, banded here per run) or ``index_bands``
+    (a `band_index` table, typically persisted hash-bucketed on the band
+    key: it is neither re-shingled nor re-shuffled, since its bucketed
+    scan satisfies the probe join's distribution, so only the batch
+    side exchanges).
 
     Returns one row per new document: (id, matched_id, n_shared_bands,
     novel) — matched_id is the strongest index match (most shared bands,
     ties to the smallest id), NULL + novel=1 when no band collides.
 
+    **The probe's (n, num_hashes, bands, family) MUST equal the index's
+    build parameters**: band hashes from another signature family never
+    collide, and every batch document would silently report novel=1.
+    With ``validate_index=True`` an ``index_bands`` probe checks the one
+    parameter observable from the data, the band_id domain
+    (`_band_domain_guard`), at action time.  A wrong n/num_hashes is not
+    detectable from band hashes alone; co-version those with the index
+    (`dedup_incremental_indexed` checks them from table properties).
+    Pass ``validate_index=False`` for repeat probes against an
+    already-validated index.
+
     Scale: the probe joins on (band_id, band_hash) — batch-sized × the
-    colliding slice of the index, never index × index; the index itself
-    is hash-partitioned on the join key at write time (write_bucketed)
-    so steady-state probes shuffle only the new batch.
+    colliding slice of the index, never index × index.
     """
-    probe = band_signatures(
-        minhash_signatures(new_df, id_col, text_col, n, num_hashes), id_col, num_hashes, bands
-    ).localCheckpoint(eager=False)
-    idx = index.select(
-        F.col(id_col).alias("matched_id"), "band_id", "band_hash"
+    if (index_df is None) == (index_bands is None):
+        raise ValueError("pass exactly one of index_df (raw docs) or index_bands "
+                         "(a persisted band_index table)")
+    probe = _bands_from_posts(
+        _shingle_rows(new_df, id_col, text_col, n), id_col, num_hashes, bands, family
     )
+    if index_bands is None:
+        index_bands = band_index(index_df, id_col, text_col, n, num_hashes, bands, family)
+    elif validate_index:
+        index_bands = _band_domain_guard(index_bands, bands)
+    idx = index_bands.select(F.col(id_col).alias("matched_id"), "band_id", "band_hash")
     hits = (
         probe.join(idx, ["band_id", "band_hash"])
         .groupBy(id_col, "matched_id")
@@ -331,154 +556,121 @@ def neardup_against_index(
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket: int | None = 1000,
+def _simhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, sig_bits: int, family: str
 ) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash-LSH.
-
-    bands=16 × rows=4 over 64 hashes ⇒ the classic S-curve with ~50%
-    capture at Jaccard ≈ (1/16)^(1/4) ≈ 0.5.  Returns distinct
-    (doc_a, doc_b, n_shared_bands).
-
-    Posting-list plan (the same shape as `ngram_jaccard_pairs`): group
-    doc ids per (band_id, band_hash) bucket, generate the (i < j)
-    combinations inside each sorted list, count shared bands per pair.
-    The signature subtree has exactly ONE consumer — the former
-    formulation self-joined the band table, which needed a
-    localCheckpoint to avoid computing the 64-min-agg pipeline twice and
-    paid a full eager physical-plan compile (~1s) at every call site
-    plus an extra shuffle for the join's second side.
-
-    Scale: one shuffle on (band_id, band_hash) — uniform 64-bit keys —
-    then one on the pair.  Quadratic work exists only inside a bucket;
-    `max_bucket` drops degenerate buckets (near-identical boilerplate
-    shared by >1000 docs would pair quadratically and is better handled
-    by exact dedup first), bounding per-task memory for the collected
-    list and the pair fan-out, exactly like `ngram_jaccard_pairs`'s
-    stop-shingle guard.  Testdata buckets are ≤7 docs, far under the
-    guard, so results are identical.
-    """
-    return _lsh_candidates_from_posts(
-        _shingle_rows(df, id_col, text_col, n), id_col, num_hashes, bands, max_bucket
-    )
-
-
-def _lsh_candidates_from_posts(
-    sh: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    max_bucket: int | None,
-) -> DataFrame:
-    """`minhash_lsh_candidates` over an exploded (id, shingle) posting
-    frame — the seam for callers that already hold a (checkpointed)
-    shingle relation and must not pay a second shingler pass."""
-    sig = _minhash_signatures_from_posts(sh, id_col, num_hashes)
-    banded = band_signatures(sig, id_col, num_hashes, bands)
-    lists = banded.groupBy("band_id", "band_hash").agg(
-        F.array_sort(F.collect_list(F.col(id_col))).alias("ids")
-    )
-    lists = lists.where(F.size("ids") >= 2)
-    if max_bucket is not None:
-        lists = lists.where(F.size("ids") <= max_bucket)
-    combos = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = lists.select(F.explode(combos).alias("p"))
-    return pairs.groupBy(
-        F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
-    ).agg(F.count(F.lit(1)).alias("n_shared_bands"))
-
-
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document + 4×16-bit band keys.
-
-    Per token: xxhash64; per bit: vote +1/-1 weighted by token frequency;
-    signature bit = sign of the vote sum.  All column expressions — the
-    64 votes are one grouped aggregation over the exploded token stream.
-    """
+    """(id, sig): a `sig_bits`-bit SimHash per document.  Per token
+    OCCURRENCE the family's token hash votes +1 on each of its low
+    `sig_bits` bits that is set and -1 on each that is clear
+    (frequency-weighted); signature bit k is 1 iff vote sum k is
+    strictly positive.  With sig_bits=64, bit 63 is the sign bit of the
+    bigint.  The votes are one grouped aggregation over the exploded
+    token stream (map-side-combined sums)."""
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
+    token_hash = _family(family)[3]
     toks = ensure_min_partitions(df, id_col).select(
         F.col(id_col),
         F.explode(TX.tokens(TX.normalized_text(F.col(text_col)))).alias("tok"),
-    ).withColumn("th", F.xxhash64("tok"))
+    ).withColumn("th", token_hash(F.col("tok")))
     votes = toks.groupBy(id_col).agg(
         *[
-            F.sum(
-                F.when(F.shiftright(F.col("th"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(64)
+            F.sum(F.shiftright(F.col("th"), i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"v{i}")
+            for i in range(sig_bits)
         ]
     )
-    # assemble the signed-64-bit signature: bit 63 contributes the sign bit
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        for i in range(63)
+    bits = [
+        F.when(F.col(f"v{i}") > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long"))
+        .otherwise(F.lit(0).cast("long"))
+        for i in range(sig_bits)
     ]
-    bit_terms.append(
-        F.when(F.col("v63") > 0, F.lit(-(1 << 63)).cast("long")).otherwise(F.lit(0).cast("long"))
-    )
-    sig = votes.select(
-        id_col,
-        sum(bit_terms[1:], bit_terms[0]).alias("simhash64"),
-    )
+    return votes.select(id_col, sum(bits[1:], bits[0]).alias("sig"))
+
+
+def _sig_bands(sig: Column, sig_bits: int, bands: int) -> list[Column]:
+    """The `bands` consecutive (sig_bits/bands)-bit slices of `sig`,
+    lowest first.  Two signatures within hamming distance < bands agree
+    on at least one slice (pigeonhole), so pairing by slice is complete
+    for that distance.  A ragged split is refused: it would leave the
+    top bits outside every band and void that guarantee."""
+    if bands <= 0 or sig_bits % bands:
+        raise ValueError(
+            f"sig_bits ({sig_bits}) must be a positive multiple of bands "
+            f"({bands}): a ragged band split leaves the top "
+            f"{sig_bits % bands if bands > 0 else sig_bits} signature bits outside "
+            "every band, silently voiding the pigeonhole completeness guarantee "
+            "for hamming <= bands-1"
+        )
+    width = sig_bits // bands
+    return [
+        F.shiftrightunsigned(sig, width * b).bitwiseAND(F.lit((1 << width) - 1))
+        for b in range(bands)
+    ]
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash64, band_0..band_3): the 64-bit ``xx64`` SimHash per
+    document (`_simhash_signatures`) and its four 16-bit band keys."""
+    sig = _simhash_signatures(df, id_col, text_col, 64, "xx64")
     return sig.select(
         id_col,
-        "simhash64",
-        *[
-            F.shiftrightunsigned(F.col("simhash64"), 16 * b)
-            .bitwiseAND(F.lit(0xFFFF))
-            .alias(f"band_{b}")
-            for b in range(4)
-        ],
+        F.col("sig").alias("simhash64"),
+        *[c.alias(f"band_{b}") for b, c in enumerate(_sig_bands(F.col("sig"), 64, 4))],
     )
 
 
-def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs: candidates share ≥1 identical 16-bit simhash band
-    (guaranteed complete for hamming ≤ 3 by pigeonhole over 4 bands),
-    verified by exact popcount of the XOR."""
-    sig = simhash(df, id_col, text_col)
-    bands = sig.select(
-        id_col,
-        "simhash64",
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("band_id"), F.col(f"band_{b}").alias("band_val")) for b in range(4)])
-        ).alias("b"),
-    ).select(id_col, "simhash64", "b.band_id", "b.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a.simhash64").alias("sig_a"),
-            F.col("b.simhash64").alias("sig_b"),
-        )
-        .distinct()
+def simhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    sig_bits: int = 64,
+    bands: int = 4,
+    max_hamming: int = 3,
+    max_bucket: int | None = None,
+    family: str = "xx64",
+) -> DataFrame:
+    """SimHash near-dup pairs (doc_a, doc_b, hamming), doc_a < doc_b:
+    candidates share ≥1 of the `bands` signature slices (`_sig_bands`;
+    complete for hamming ≤ bands−1 by pigeonhole) and are verified with
+    exact bit_count(sig_a XOR sig_b) ≤ `max_hamming`.  Under ``md5``
+    every step is integer/string arithmetic any engine evaluates
+    identically, so the pair set has a full SQL oracle.
+
+    Scale: one grouped aggregation over the exploded token stream, one
+    shuffle on the band bucket, pairs from `all_pairs` inside each
+    bucket, an exact popcount on 8-byte signatures.  A pair sharing
+    several bands is emitted only by the LOWEST band it shares (the
+    first all-zero slice of sig_a XOR sig_b), so no distinct shuffle
+    is needed.  Band cardinality is 2^(sig_bits/bands) (65536 at 64/4,
+    4096 at 48/4); at corpus scale pass `max_bucket` to drop degenerate
+    buckets (boilerplate collapses many docs onto one band value; such
+    docs are better handled by exact dedup first).  A pair whose lowest
+    shared band is dropped is not emitted.  The registered queries
+    leave it None so the oracle, which has no guard, stays the exact
+    twin.
+    """
+    slices = _sig_bands(F.col("sig"), sig_bits, bands)
+    sig = _simhash_signatures(df, id_col, text_col, sig_bits, family)
+    banded = sig.select(
+        F.col(id_col).alias("id"),
+        "sig",
+        F.posexplode(F.array(*slices)).alias("band_id", "band_val"),
     )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cands.select("doc_a", "doc_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
+    lists = banded.groupBy("band_id", "band_val").agg(
+        F.array_sort(F.collect_list(F.struct("id", "sig"))).alias("ds")
+    ).where(F.size("ds") >= 2)
+    if max_bucket is not None:
+        lists = lists.where(F.size("ds") <= max_bucket)
+    pairs = lists.select("band_id", F.explode(all_pairs("ds")).alias("p"))
+    xor = F.col("p.a.sig").bitwiseXOR(F.col("p.b.sig"))
+    lowest = F.array_min(  # array_min skips the NULLs of unequal slices
+        F.array(*[F.when(c == 0, b) for b, c in enumerate(_sig_bands(xor, sig_bits, bands))])
     )
+    return pairs.where(lowest == F.col("band_id")).select(
+        F.col("p.a.id").alias("doc_a"),
+        F.col("p.b.id").alias("doc_b"),
+        F.bit_count(xor).alias("hamming"),
+    ).where(F.col("hamming") <= max_hamming)
 
 
 def dedup_against_seen(
@@ -520,7 +712,7 @@ def _bloom_positions(col, num_bits: int, num_hashes: int, family: str = "xx64"):
     hex parsing reproduces the positions bit-for-bit, which makes the
     BITMAP ARTIFACT itself (and every membership answer, false positives
     included) value-hash oracle-able and probe-able outside Spark: the
-    Bloom sibling of the md5-portable MinHash/SimHash families."""
+    Bloom member of the ``md5`` near-dup family (`_family`)."""
     if family == "xx64":
         return [
             F.pmod(F.xxhash64(col, F.lit(i)), F.lit(num_bits))
@@ -1005,77 +1197,6 @@ def snapshot_diff(
     return o.join(n, id_col, "full_outer").select(id_col, status.alias("status"))
 
 
-def shingle_containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_doc_frequency: int | None = 1000,
-) -> DataFrame:
-    """Directed near-dup containment: emit (contained, container,
-    containment) where containment = |A∩B| / |A| ≥ threshold — the
-    asymmetric complement of Jaccard.  A short document fully embedded in
-    a longer one scores containment ≈ 1 while its Jaccard stays low
-    (|A∪B| is dominated by the long side), so symmetric dedup never sees
-    it; this is the quote/excerpt/wrapper-page detector.
-
-    Same posting-list plan as `ngram_jaccard_pairs` (one shingle pass, one
-    shuffle per stage, stop-shingle guard bounds bucket fan-out); the only
-    change is the final ratio: each undirected intersection row fans out
-    to ≤2 directed rows, filtered by isect/|A| ≥ threshold.
-    """
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
-
-    base = ensure_min_partitions(df, id_col).select(
-        F.col(id_col),
-        # asNondeterministic: same single-evaluation pin as
-        # ngram_jaccard_pairs — see the comment there (guide §4.4)
-        _shingles_udf(n).asNondeterministic()(F.col(text_col)).alias("__sh"),
-    )
-    posts = base.select(
-        F.struct(F.col(id_col).alias("id"), F.size("__sh").alias("sz")).alias("d"),
-        F.explode("__sh").alias("shingle"),
-    )
-    lists = posts.groupBy("shingle").agg(F.array_sort(F.collect_list("d")).alias("ds"))
-    if max_doc_frequency is not None:
-        lists = lists.where(F.size("ds") <= max_doc_frequency)
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = lists.where(F.size("ds") >= 2).select(F.explode(combos).alias("p"))
-    inter = pairs.groupBy(
-        F.col("p.a.id").alias("doc_a"),
-        F.col("p.b.id").alias("doc_b"),
-        F.col("p.a.sz").alias("sz_a"),
-        F.col("p.b.sz").alias("sz_b"),
-    ).agg(F.count(F.lit(1)).alias("isect"))
-    directed = inter.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("contained"),
-                    F.col("doc_b").alias("container"),
-                    (F.col("isect") / F.col("sz_a")).alias("c"),
-                ),
-                F.struct(
-                    F.col("doc_b").alias("contained"),
-                    F.col("doc_a").alias("container"),
-                    (F.col("isect") / F.col("sz_b")).alias("c"),
-                ),
-            )
-        ).alias("d")
-    ).select("d.contained", "d.container", "d.c")
-    return directed.where(F.col("c") >= threshold).select(
-        "contained", "container", F.round("c", 4).alias("containment")
-    )
-
 
 # Candidate-broadcast row bound for the near-dup verify joins.  A
 # broadcast build of the (doc_a, doc_b) candidate set is the fast verify
@@ -1097,10 +1218,9 @@ def _verify_exact_jaccard(
 ) -> DataFrame:
     """Exact-Jaccard verification of (doc_a, doc_b) candidates against the
     (lazily checkpointed) shingle relation `sh` — the shared verify join
-    behind lsh_verified_pairs / prefix_filter_pairs /
-    minhash_portable_pairs.
+    behind lsh_verified_pairs and prefix_filter_pairs.
 
-    Join strategy (guide §3.1), SIZE-GUARDED: the candidate set is
+    Join strategy, SIZE-GUARDED: the candidate set is
     materialized (lazy localCheckpoint + count — candidate generation ran
     exactly once either way, the count just fronts it) and broadcast only
     while it fits (`_VERIFY_BROADCAST_MAX_ROWS`); past the bound both
@@ -1108,7 +1228,10 @@ def _verify_exact_jaccard(
     per-partition-bounded instead of whole-relation-in-every-executor.
     The corpus-sized shingle relation is NEVER the broadcast side in
     either branch, and the second attach stays a shuffled hash join
-    (sort-merge would re-sort doc-length arrays).  A value of
+    (sort-merge would re-sort doc-length arrays).  Left to itself the
+    planner broadcast the checkpointed CORPUS shingle relation for the
+    second attach: a corpus-sized broadcast build per run, 3× the whole
+    verify cost at sf0.1 (3.57 s → 1.18 s, identical output).  A value of
     SPARK_GRAFT_VERIFY_BROADCAST_MAX_ROWS that is not a non-negative
     integer raises ValueError naming it, before any job runs.
     """
@@ -1144,20 +1267,22 @@ def lsh_verified_pairs(
     threshold: float = 0.5,
     num_hashes: int = 64,
     bands: int = 16,
+    max_bucket: int | None = 1000,
+    family: str = "xx64",
 ) -> DataFrame:
     """THE production near-dup plan: MinHash-LSH candidate generation
-    (linear shuffle) followed by EXACT Jaccard verification computed
-    only on the candidates — never all pairs, never the full posting
-    lists.  Returns (doc_a, doc_b, jaccard) for candidates at or above
-    `threshold`; every emitted pair carries its true (not estimated)
-    similarity, and misses are exactly the LSH S-curve's misses
-    (measured by dedup_lsh_quality_report).
+    (`_candidates_from_posts`, linear shuffle) followed by EXACT Jaccard
+    verification computed only on the candidates — never all pairs,
+    never the full posting lists.  Returns (doc_a, doc_b, jaccard) for
+    candidates at or above `threshold`; every emitted pair carries its
+    true (not estimated) similarity, and misses are exactly the LSH
+    S-curve's misses (measured by dedup_lsh_quality_report and, for
+    ``md5``, dedup_portable_quality_report).
 
     Scale: candidates are ≪ corpus² by banding; verification joins each
     candidate to its two shingle SETS (doc-sized arrays move only for
     candidate docs) and intersects per pair with array_intersect — cost
-    proportional to candidate count × doc length, the same work a
-    suffix-check pass does in production dedup.  Compare
+    proportional to candidate count × doc length.  Compare
     `ngram_jaccard_pairs`, which is exact for ALL sharing pairs but
     pays the posting-list fan-out; this path trades its guaranteed
     recall for candidate-bounded cost.
@@ -1170,25 +1295,16 @@ def lsh_verified_pairs(
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
     # fan the narrow scan out BEFORE the Arrow shingler (same rule as
-    # _shingle_rows): a single-file corpus otherwise runs the UDF and
-    # everything up to the first exchange on one core.  ONE shingler
-    # pass: the checkpointed relation feeds the signature/banding
-    # pipeline (via the posts seam) AND both sides of the verify join —
-    # the former layout shingled the corpus twice, once inside
-    # minhash_lsh_candidates and once here.
+    # _shingle_rows).  ONE shingler pass: the checkpointed arrays feed
+    # the band builder (exploding a materialized column cannot re-run
+    # the UDF) AND both sides of the verify join.
     sh = ensure_min_partitions(df, id_col).select(
         F.col(id_col), _shingles_udf(n)(F.col(text_col)).alias("sh")
     ).localCheckpoint(eager=False)
-    cand = _lsh_candidates_from_posts(
+    cand = _candidates_from_posts(
         sh.select(F.col(id_col), F.explode("sh").alias("shingle")),
-        id_col, num_hashes, bands, 1000,
+        id_col, num_hashes, bands, family, max_bucket,
     ).select("doc_a", "doc_b")
-    # Verify-join strategy pinned + size-guarded (guide §3.1, r12 fix +
-    # r13 guard): see _verify_exact_jaccard.  Left to itself the planner
-    # broadcast the checkpointed CORPUS shingle relation for the second
-    # attach — a corpus-sized broadcast build per run, never sane at
-    # scale and 3× the whole verify cost at sf0.1 (measured 3.57 s →
-    # 1.18 s, identical output).
     return _verify_exact_jaccard(cand, sh, id_col, threshold)
 
 
@@ -1299,15 +1415,6 @@ def prefix_filter_pairs(
         .agg(F.array_sort(F.collect_list("d")).alias("ds"))
         .where(F.size("ds") >= 2)
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     # Two more LOSSLESS prunes before the distinct/verify (ppjoin's
     # filters, Xiao et al. 2008):
     # - length: J ≥ t ⟹ min(sz) ≥ t·max(sz) (exact for dyadic t);
@@ -1327,7 +1434,7 @@ def prefix_filter_pairs(
         F.col("p.a.sz") - F.col("p.a.rn"), F.col("p.b.sz") - F.col("p.b.rn")
     )
     cand = (
-        lists.select(F.explode(combos).alias("p"))
+        lists.select(F.explode(all_pairs("ds")).alias("p"))
         .where(
             # a.id != b.id: two same-doc shingles colliding to one hash
             # would otherwise emit a degenerate self-pair (impossible in
@@ -1342,459 +1449,7 @@ def prefix_filter_pairs(
         .select(F.col("p.a.id").alias("doc_a"), F.col("p.b.id").alias("doc_b"))
         .distinct()
     )
-    # Same verify-join pinning as lsh_verified_pairs, size-guarded — this
-    # operator's candidate set is by contract a LOSSLESS all-pairs audit,
-    # unbounded on dup-heavy corpora, so the guard matters most here
-    # (guide §3.1; see _verify_exact_jaccard).
+    # this operator's candidate set is by contract a LOSSLESS all-pairs
+    # audit, unbounded on dup-heavy corpora, so the verify join's size
+    # guard matters most here (see _verify_exact_jaccard)
     return _verify_exact_jaccard(cand, sh, id_col, threshold)
-
-
-def _portable_bands_from_posts(
-    posts: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band_id, band_hash) from an exploded (id, shingle) posting
-    frame via the md5-string-min portable hash family: h_i = MIN over
-    shingles of md5('<i>:'||shingle); band key = md5 of the '|'-joined
-    signature slice.  One grouped aggregation (the mins partial-combine
-    map-side) plus a projection — shared by `minhash_portable_pairs`
-    (self-pairing) and `portable_neardup_against_index` (batch-vs-index
-    probing), and this band table IS the persistable cross-engine
-    near-dup index (any engine with md5 can rebuild or probe it).
-
-    Takes POSTS, not the shingle array: callers that shingle inline
-    build them with `_shingle_rows` (explode directly over the UDF
-    call), because exploding a UDF-computed array COLUMN lets
-    InferFiltersFromGenerate add `size(sh)>0 AND sh IS NOT NULL` below
-    the Generate, and pushing that filter through the projection
-    re-evaluates the Arrow shingler once more per row (two stacked
-    ArrowEvalPython nodes per site — guide §4.4's duplication, measured
-    in the r12 before-plans).  Exploding the UDF expression directly is
-    exempt from the inference (SPARK-36715), and the inferred filter
-    only dropped rows explode discards anyway."""
-    if bands <= 0 or num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of bands "
-            f"({bands}): a ragged split would silently drop the trailing "
-            f"{num_hashes % bands if bands > 0 else num_hashes} hashes from every "
-            "band key, quietly weakening recall instead of failing loudly"
-        )
-    rows_per_band = num_hashes // bands
-    sig = posts.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"h{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_hash")
-
-
-def _portable_candidates_from_posts(
-    posts: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    max_bucket: int | None,
-) -> DataFrame:
-    """Distinct (doc_a, doc_b) candidate pairs sharing ≥1 portable band
-    key — the bucketed posting-list pairing over
-    `_portable_bands_from_posts`, shared by the pair operator and the
-    banding quality report."""
-    banded = _portable_bands_from_posts(posts, id_col, num_hashes, bands)
-    lists = banded.groupBy("band_id", "band_hash").agg(
-        F.array_sort(F.collect_list(F.col(id_col))).alias("ids")
-    )
-    lists = lists.where(F.size("ids") >= 2)
-    if max_bucket is not None:
-        lists = lists.where(F.size("ids") <= max_bucket)
-    combos = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    return (
-        lists.select(F.explode(combos).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .distinct()
-    )
-
-
-def minhash_portable_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 15,
-    bands: int = 5,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Distinct portable-band candidate pairs WITHOUT the exact-Jaccard
-    verify — the raw S-curve output, for quality measurement
-    (dedup_portable_quality_report) and for pipelines that verify
-    downstream."""
-    return _portable_candidates_from_posts(
-        _shingle_rows(df, id_col, text_col, n), id_col, num_hashes, bands, max_bucket
-    )
-
-
-def portable_band_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 15,
-    bands: int = 5,
-) -> DataFrame:
-    """The PERSISTABLE cross-engine near-dup index: (id, band_id,
-    band_hash) from the md5-portable band family.  This is the table the
-    steady-state incremental pipeline writes once (hash-bucketed on the
-    band key — `sources/writers.write_bucketed`) and probes per ingest
-    batch via `portable_neardup_against_index(index_bands=...)`, so only
-    the batch is shingled/hashed per run and the probe join shuffles the
-    batch side only.  Any engine with md5 can rebuild or probe it.
-
-    `_shingle_rows` fans the scan out before the shingler + 15-md5 min
-    aggregation (measured at sf0.1: 2.64 s → 1.65 s for the 1-file
-    ledger build; no-op on a properly split cluster input) and explodes
-    the UDF directly, so the shingler runs ONCE per row (see
-    `_portable_bands_from_posts` on the inferred-filter duplication)."""
-    return _portable_bands_from_posts(
-        _shingle_rows(df, id_col, text_col, n), id_col, num_hashes, bands
-    )
-
-
-def portable_neardup_against_index(
-    new_df: DataFrame,
-    index_df: DataFrame | None,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 15,
-    bands: int = 5,
-    index_bands: DataFrame | None = None,
-    validate_index: bool = True,
-) -> DataFrame:
-    """Probe a NEW batch against an existing corpus with the PORTABLE md5
-    band family — the cross-engine twin of `neardup_against_index`
-    (xxhash64).  Because every band hash is md5-derived, the index built
-    here is probe-able (and re-derivable) by any engine with md5, and the
-    whole probe result has an exact SQL oracle.
-
-    **The probe's (n, num_hashes, bands) MUST equal the parameters the
-    persisted index was built with** — band hashes from a different
-    signature family simply never collide, and every batch document
-    would silently report novel=1.  With ``validate_index=True``
-    (default) the ``index_bands`` path cheaply cross-checks the one
-    parameter that is observable from the data — the index's band_id
-    domain must equal ``range(bands)`` — via a LAZY asserted aggregate
-    riding the probe plan (map-side-combined over a single int column;
-    probe construction stays free, the refusal fires at action time —
-    same pattern as the ANN twin).  A wrong ``n``/``num_hashes`` is NOT
-    detectable from band
-    hashes alone; co-version those with the index (the
-    `dedup_incremental_indexed` plan pins all three in one place).
-    Pass ``validate_index=False`` on latency-critical repeat probes
-    against an already-validated index.
-
-    Returns one row per new document: (id, matched_id, n_shared_bands,
-    novel) — matched_id is the strongest index match (most shared bands,
-    ties to the smallest id), NULL + novel=1 when no band collides.
-    Zero-shingle docs (shorter than the shingle width) never reach the
-    signature stage and still return novel=1.
-
-    Scale: same contract as `neardup_against_index` — the probe joins on
-    (band_id, band_hash), batch-sized × the colliding slice of the index.
-    In steady state pass ``index_bands`` — the PERSISTED
-    `portable_band_index` table, hash-bucketed on the band key at write
-    time (`write_bucketed`) — instead of ``index_df``: the index is
-    neither re-shingled nor re-shuffled per run (its bucketed scan
-    satisfies the join's distribution), so only the batch side of the
-    probe join exchanges.  ``index_df`` (raw documents, banded here per
-    run) remains for one-shot use.
-    """
-    if (index_df is None) == (index_bands is None):
-        raise ValueError("pass exactly one of index_df (raw docs) or index_bands "
-                         "(a persisted portable_band_index table)")
-    probe = _portable_bands_from_posts(
-        _shingle_rows(new_df, id_col, text_col, n), id_col, num_hashes, bands
-    )
-    if index_bands is not None:
-        if validate_index:
-            # every indexed doc emits one row per band, so any non-empty
-            # index built with `bands` bands covers exactly range(bands) —
-            # equivalently (pigeonhole over distinct ints): exactly
-            # `bands` distinct ids, min 0, max bands-1.  LAZY, same
-            # pattern as the ANN twin (r9 ADVICE there): a 1-row asserted
-            # aggregate broadcast-crossJoined onto the index side, so
-            # probe construction is free and the (map-side-combined,
-            # single-int-column) domain scan runs only at action time.
-            # an EMPTY index is tolerated (nothing to collide with),
-            # matching the eager check's `if got and ...`
-            dom_ok = (F.col("__nd") == 0) | (
-                (F.col("__nd") == bands)
-                & (F.col("__bmin") == 0)
-                & (F.col("__bmax") == bands - 1)
-            )
-            guard = (
-                index_bands.agg(
-                    F.count_distinct(F.col("band_id")).alias("__nd"),
-                    F.min("band_id").alias("__bmin"),
-                    F.max("band_id").alias("__bmax"),
-                )
-                .where(
-                    F.assert_true(
-                        dom_ok,
-                        F.concat(
-                            F.lit("index band_id domain ("),
-                            F.col("__nd").cast("string"),
-                            F.lit(" ids in ["),
-                            F.col("__bmin").cast("string"),
-                            F.lit(", "),
-                            F.col("__bmax").cast("string"),
-                            F.lit(
-                                f"]) != range({bands}): the persisted index "
-                                f"was built with a different `bands` (probe "
-                                f"params must equal the index build params)"
-                            ),
-                        ),
-                    ).isNull()
-                )
-                .select(F.lit(1).alias("__band_domain_checked"))
-            )
-            index_bands = index_bands.crossJoin(F.broadcast(guard)).drop(
-                "__band_domain_checked"
-            )
-        idx = index_bands.select(
-            F.col(id_col).alias("matched_id"), "band_id", "band_hash"
-        )
-    else:
-        idx = _portable_bands_from_posts(
-            _shingle_rows(index_df, id_col, text_col, n), id_col, num_hashes, bands
-        ).select(F.col(id_col).alias("matched_id"), "band_id", "band_hash")
-    hits = (
-        probe.join(idx, ["band_id", "band_hash"])
-        .groupBy(id_col, "matched_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("n_shared_bands").desc(), F.col("matched_id")
-    )
-    best = (
-        hits.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-    ids = new_df.select(id_col).distinct()
-    return ids.join(best, id_col, "left").select(
-        id_col,
-        "matched_id",
-        F.coalesce("n_shared_bands", F.lit(0)).cast("bigint").alias("n_shared_bands"),
-        F.col("matched_id").isNull().cast("int").alias("novel"),
-    )
-
-
-def minhash_portable_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 15,
-    bands: int = 5,
-    threshold: float = 0.7,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs with an ENGINE-PORTABLE hash family.
-
-    The xxhash64 family (`minhash_lsh_candidates`) is the fast path, but
-    its hash values are Spark-specific, so its output can only be
-    rows-only-checked against another engine.  This variant defines the
-    i-th signature member as
-
-        h_i(doc) = MIN over shingles s of md5(concat('<i>:', s))
-
-    — a plain STRING min over lowercase md5 hex digests, bit-identical in
-    any engine that has md5 (Spark, DuckDB, Trino, Postgres...), so the
-    whole near-dup definition — signatures, band keys, candidate set,
-    verified pairs — is reproducible cross-engine and SQL-oracle-able.
-    Band key = md5 of the '|'-joined signature slice.  Candidates sharing
-    ≥1 of the `bands` band keys are verified with exact Jaccard and kept
-    at or above `threshold`.
-
-    Default S-curve: bands=5 × rows=3 over 15 hashes ⇒ ~50% capture at
-    Jaccard ≈ (1/5)^(1/3) ≈ 0.58, ~88% at the 0.7 verify threshold —
-    a candidate generator matched to a high-precision near-dup gate.
-
-    Scale: identical plan shape to `minhash_lsh_candidates` — the 15 mins
-    are one grouped aggregation (map-side combined) over the exploded
-    shingle stream; one shuffle on (band_id, band_hash); quadratic work
-    only inside buckets with the same `max_bucket` degenerate guard; then
-    the candidate-bounded exact-Jaccard verify join.  md5-per-shingle
-    costs ~2× xxhash64 JVM-side — the price of portability; at 100 TB
-    pick this variant when signatures must be probed by a NON-Spark
-    engine (e.g. a DuckDB/Trino dedup auditor over the same lakehouse).
-
-    Construction is not free: the verify join (`_verify_exact_jaccard`)
-    counts the candidate pairs while the plan is built, to choose
-    between a broadcast and a shuffled join, so building this plan runs
-    the whole candidate generation as Spark jobs before any action.
-    """
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
-
-    # fan out before the shingler (same rule as _shingle_rows)
-    sh = ensure_min_partitions(df, id_col).select(
-        F.col(id_col), _shingles_udf(n)(F.col(text_col)).alias("sh")
-    ).localCheckpoint(eager=False)  # feeds signatures + both verify sides
-    # exploding the CHECKPOINTED array is duplication-safe: the inferred
-    # size(sh)>0 filter lands on a materialized attribute, not the UDF
-    cand = _portable_candidates_from_posts(
-        sh.select(F.col(id_col), F.explode("sh").alias("shingle")),
-        id_col, num_hashes, bands, max_bucket,
-    )
-    # Same verify-join pinning as lsh_verified_pairs, size-guarded
-    # (guide §3.1; see _verify_exact_jaccard) — never broadcast the
-    # corpus-sized shingle relation.
-    return _verify_exact_jaccard(cand, sh, id_col, threshold)
-
-
-def simhash_portable_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    sig_bits: int = 48,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup pairs with an ENGINE-PORTABLE hash family.
-
-    Per-token hash = the top 60 bits of md5 read as a BIGINT
-    (`conv(substr(md5(tok),1,15),16,10)` here; DuckDB spells the same
-    value `CAST('0x'||substr(md5(tok),1,15) AS BIGINT)`), of which the
-    low `sig_bits` feed the signature.  Per bit: vote ±1 per token
-    OCCURRENCE (frequency-weighted, like `simhash`); signature bit k is
-    1 iff the vote sum is strictly positive.  Candidates share ≥1 of the
-    `bands` (sig_bits/bands)-wide bit-slices — complete for hamming ≤
-    bands−1 by pigeonhole — and are verified with exact
-    bit_count(sig_a XOR sig_b) ≤ `max_hamming`.
-
-    Every step is integer/string arithmetic both engines evaluate
-    identically, so unlike the xxhash64 `simhash` this pair set has a
-    full SQL oracle (the cross-engine contract matters when a non-Spark
-    auditor re-derives near-dup evidence from the same tables).
-
-    Scale: one grouped aggregation over the exploded token stream (the
-    `sig_bits` votes are map-side-combined sums), one shuffle on the
-    band bucket, pair fan-out bounded by bucket sizes, exact popcount
-    verify on 8-byte signatures.  Band cardinality is 2^(sig_bits/bands)
-    (4096 at the 48/4 default) — at corpus scale pass `max_bucket` to
-    drop degenerate buckets (boilerplate-heavy corpora collapse many
-    docs onto one band value; like `minhash_lsh_candidates`' guard, such
-    docs are better handled by exact dedup first).  The registered query
-    leaves it None so the DuckDB oracle — which has no guard — remains
-    the exact twin.
-    """
-    from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
-
-    if bands <= 0 or sig_bits % bands:
-        raise ValueError(
-            f"sig_bits ({sig_bits}) must be a positive multiple of bands "
-            f"({bands}): a ragged band split leaves the top "
-            f"{sig_bits % bands if bands > 0 else sig_bits} signature bits outside "
-            "every band, silently voiding the pigeonhole completeness guarantee "
-            "for hamming <= bands-1"
-        )
-    band_width = sig_bits // bands
-    toks = (
-        ensure_min_partitions(df, id_col)
-        .select(
-            F.col(id_col),
-            F.explode(TX.tokens(TX.normalized_text(F.col(text_col)))).alias("tok"),
-        )
-        .withColumn(
-            "th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-        )
-    )
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.shiftright(F.col("th"), i).bitwiseAND(F.lit(1)) * 2 - 1
-            ).alias(f"v{i}")
-            for i in range(sig_bits)
-        ]
-    )
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for i in range(sig_bits)
-    ]
-    sig = votes.select(id_col, sum(bit_terms[1:], bit_terms[0]).alias("sig"))
-    banded = sig.select(
-        F.col(id_col),
-        F.col("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftrightunsigned(F.col("sig"), band_width * b)
-                        .bitwiseAND(F.lit((1 << band_width) - 1))
-                        .alias("band_val"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(id_col, "sig", "b.band_id", "b.band_val")
-    lists = banded.groupBy("band_id", "band_val").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sig")))
-        ).alias("ds")
-    ).where(F.size("ds") >= 2)
-    if max_bucket is not None:
-        lists = lists.where(F.size("ds") <= max_bucket)
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = (
-        lists.select(F.explode(combos).alias("p"))
-        .select(
-            F.col("p.a.id").alias("doc_a"),
-            F.col("p.b.id").alias("doc_b"),
-            F.bit_count(F.col("p.a.sig").bitwiseXOR(F.col("p.b.sig"))).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-    )
-    return pairs.where(F.col("hamming") <= max_hamming)

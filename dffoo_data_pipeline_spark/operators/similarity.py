@@ -472,7 +472,7 @@ def lsh_bucket_index_int(
 ) -> DataFrame:
     """The PERSISTABLE ANN index: (id, c, n2, bucket) with bucket = the
     integer-lattice sign-LSH bucket of each vector — the similarity
-    twin of `dedup.portable_band_index`.  This is the table the
+    twin of `dedup.band_index`.  This is the table the
     steady-state ANN pipeline writes once (hash-bucketed on `bucket`
     via `sources/writers.write_bucketed`) and probes per query batch
     with `lsh_probe_topk_int(indexed=...)`, so the corpus is neither
@@ -694,7 +694,7 @@ def lsh_probe_topk_int(
     re-shuffled per batch — each search pays a query-batch-sized exchange
     only (plan-pinned by tests/test_bucketing.py; the shape
     `streaming_ann_probe` runs per micro-batch, and the dedup twin of
-    this contract is `portable_neardup_against_index(index_bands=...)`).
+    this contract is `neardup_against_index(index_bands=...)`).
     Every step is exact integer arithmetic, so the whole
     index+probe+search pipeline carries a value-hash SQL oracle.
     """

@@ -28,6 +28,18 @@ _PRIORITY = [
     "similarity_lsh_probe_recall_report",
     "similarity_ivf_recall_report",
     # ---- changed plans awaiting re-certification ----
+    "dedup_minhash_portable",
+    "dedup_portable_quality_report",
+    "dedup_simhash_portable",
+    "dedup_incremental_portable",
+    "dedup_incremental_indexed",
+    "dedup_lsh_verified",
+    "dedup_shingle_containment",
+    "streaming_neardup_probe",
+    "multimodal_phash_neardup",
+    "orders_market_basket",
+    "dedup_ngram_jaccard_pairs",
+    "dedup_prefix_filter_pairs",
     "linkage_blocked_match",
     "graph_pagerank_nations",
     "graph_triangle_count",
@@ -60,9 +72,6 @@ _PRIORITY = [
     # ---- oracle SQL rebuilt from shared templates, same rows ----
     "similarity_ivfpq_recall_report",
     "similarity_ivfpq_rerank_recall_report",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_prefix_filter_pairs",
-    "dedup_lsh_verified",
     # ---- carried-over queue ----
     "corpus_bpe_learn",
     "corpus_bpe_encode",
@@ -74,7 +83,6 @@ _PRIORITY = [
     "window_rank_top_orders",
     "scalar_string_functions",
     "scalar_map_functions",
-    "orders_market_basket",
     "abilities_parse_scaled",
     "scalar_variant_extraction",
     "integrity_report",
@@ -92,7 +100,6 @@ _PRIORITY = [
     "curation_contrastive_negatives",
     "curation_trainonly_scaler",
     "abilities_from_pysource",
-    "multimodal_phash_neardup",
     "multimodal_audio_segments",
     "dedup_semantic_int8",
     "similarity_pq_topk",

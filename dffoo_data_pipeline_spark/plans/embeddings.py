@@ -558,7 +558,7 @@ def dedup_semantic_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair test shuffles ONCE on cluster_id — candidate pairs are per-
     cluster, never corpus².  Real deployments pick k ≈ √N so expected
     cluster size stays √N (per-cluster pairs ~N total), and sub-bucket
-    any skewed cluster with LSH (operators/dedup.py:minhash_lsh_pairs is
+    any skewed cluster with LSH (operators/dedup.py:lsh_candidates is
     the same banding trick).  Here k=8 seed vectors (vec_id < 8) keeps
     the fixture deterministic.
     """

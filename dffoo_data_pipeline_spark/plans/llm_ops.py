@@ -1047,7 +1047,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is linear in corpus size.  Pair quality is unit-tested
     against exact Jaccard (tests/test_dedup.py)."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_candidates(
+    return dedup.lsh_candidates(
         d, id_col="doc_id", text_col="text", n=3, num_hashes=64, bands=16
     )
 
@@ -1066,11 +1066,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     for hamming ≤ 3 over 4×16-bit bands) + exact popcount verification —
     the full candidate→verify loop, linear-shuffle candidate generation."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_near_dup_pairs(d, id_col="doc_id", text_col="text", max_hamming=3)
+    return dedup.simhash_pairs(d, id_col="doc_id", text_col="text", max_hamming=3)
 
 
 def _minhash_portable_oracle(num_hashes: int = 15, bands: int = 5, threshold: float = 0.7) -> str:
-    """DuckDB twin of `dedup.minhash_portable_pairs`: the md5-string-min
+    """DuckDB twin of `dedup.lsh_verified_pairs(family="md5")`: the md5-string-min
     hash family makes every stage — signature, band key, candidate set,
     verified pairs — bit-identical cross-engine."""
     rows = num_hashes // bands
@@ -1129,7 +1129,7 @@ WHERE i.isect * 1.0 / (sa.sz + sb.sz - i.isect) >= {threshold}
 @_register("dedup_minhash_portable", _minhash_portable_oracle())
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs with the engine-PORTABLE md5 hash family
-    (operators/dedup.py:minhash_portable_pairs): h_i = string-MIN of
+    (operators/dedup.py:lsh_verified_pairs, family="md5"): h_i = string-MIN of
     md5('<i>:'||shingle), band key = md5 of the joined signature slice,
     candidates verified with exact Jaccard ≥ 0.7.  Unlike the xxhash64
     fast path (dedup_minhash_lsh, rows-only), every value here is
@@ -1143,20 +1143,21 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale would otherwise silently diverge from the value oracle.  The
     guard stays available on the operator for at-scale production runs."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_portable_pairs(
+    return dedup.lsh_verified_pairs(
         d,
         id_col="doc_id",
         text_col="text",
         n=3,
+        threshold=0.7,
         num_hashes=15,
         bands=5,
-        threshold=0.7,
         max_bucket=None,  # oracle has no bucket cap — keep the twin exact
+        family="md5",
     )
 
 
 def _simhash_portable_oracle(sig_bits: int = 48, bands: int = 4, max_hamming: int = 3) -> str:
-    """DuckDB twin of `dedup.simhash_portable_pairs`: per-token 60-bit
+    """DuckDB twin of `dedup.simhash_pairs(family="md5")`: per-token 60-bit
     md5-derived integers, ±1 frequency-weighted bit votes, band-sliced
     candidate join, exact popcount verify — all integer arithmetic both
     engines evaluate identically."""
@@ -1296,9 +1297,10 @@ def dedup_portable_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs = dedup.ngram_jaccard_pairs(
         d, id_col="doc_id", text_col="text", n=3, threshold=0.0, max_doc_frequency=None
     )
-    cand = dedup.minhash_portable_candidates(
-        d, id_col="doc_id", text_col="text", max_bucket=None
-    ).withColumn("captured", F.lit(1))
+    cand = dedup.lsh_candidates(
+        d, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5,
+        max_bucket=None, family="md5",
+    ).select("doc_a", "doc_b", F.lit(1).alias("captured"))
     j = pairs.join(cand, ["doc_a", "doc_b"], "left")
     bucket = F.least(F.floor(F.col("jaccard") * 10), F.lit(9)).cast("bigint")
     return (
@@ -1319,15 +1321,16 @@ def dedup_portable_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame
 @_register("dedup_simhash_portable", _simhash_portable_oracle())
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs with the engine-PORTABLE md5 hash family
-    (operators/dedup.py:simhash_portable_pairs): per-token hash = top 60
+    (operators/dedup.py:simhash_pairs, family="md5"): per-token hash = top 60
     md5 bits as BIGINT, 48-bit signature from frequency-weighted ±1 bit
     votes, 4×12-bit band candidates (pigeonhole-complete for hamming ≤ 3),
     exact popcount verify.  The portable twin of dedup_simhash_pairs
     (xxhash64, rows-only) — this one's full pipeline is value-hash
     oracled against DuckDB."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_portable_pairs(
-        d, id_col="doc_id", text_col="text", sig_bits=48, bands=4, max_hamming=3
+    return dedup.simhash_pairs(
+        d, id_col="doc_id", text_col="text", sig_bits=48, bands=4, max_hamming=3,
+        family="md5",
     )
 
 
@@ -2365,18 +2368,14 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash tests; batch/index split semantics are pinned in
     tests/test_dedup.py.
 
-    Scale: only the batch is shingled/minhashed per run — the index is
-    a pre-built band table re-read from storage (band_signatures +
-    write_bucketed on the band key makes steady-state probes shuffle
-    the batch only).
+    Scale: the corpus is banded in-plan here; the steady-state shape
+    persists it once (`band_index` + write_bucketed on the band key, as
+    dedup_incremental_indexed does) so each probe shuffles the batch only.
     """
     d = load_table(spark, sf_dir, "documents")
     new = d.where(F.col("doc_id") % 10 == 0)
     old = d.where(F.col("doc_id") % 10 != 0)
-    index = dedup.band_signatures(
-        dedup.minhash_signatures(old, "doc_id", "text"), "doc_id"
-    )
-    return dedup.neardup_against_index(new, index, id_col="doc_id", text_col="text")
+    return dedup.neardup_against_index(new, old, id_col="doc_id", text_col="text")
 
 
 def _portable_band_cte_sql(num_hashes: int = 15, bands: int = 5) -> str:
@@ -2416,7 +2415,7 @@ bands AS (
 
 
 def _incremental_portable_oracle(num_hashes: int = 15, bands: int = 5) -> str:
-    """DuckDB twin of `dedup.portable_neardup_against_index` over the same
+    """DuckDB twin of `dedup.neardup_against_index(family="md5")` over the same
     batch/index split as dedup_incremental_neardup (doc_id % 10)."""
     return f"""
 WITH {_portable_band_cte_sql(num_hashes, bands)},
@@ -2447,7 +2446,7 @@ LEFT JOIN best b USING (doc_id)
 def dedup_incremental_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_incremental_neardup's cross-engine twin: probe the incoming
     batch (doc_id % 10 == 0) against the corpus band index built with the
-    PORTABLE md5 family (operators/dedup.py:portable_neardup_against_index).
+    PORTABLE md5 family (operators/dedup.py:neardup_against_index, family="md5").
     Because the band hashes are md5-derived, the persisted index is
     probe-able by any engine with md5 — and unlike the xxhash64 original
     (rows-only), this probe's full result — strongest match, shared-band
@@ -2455,8 +2454,9 @@ def dedup_incremental_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     new = d.where(F.col("doc_id") % 10 == 0)
     old = d.where(F.col("doc_id") % 10 != 0)
-    return dedup.portable_neardup_against_index(
-        new, old, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5
+    return dedup.neardup_against_index(
+        new, old, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5,
+        family="md5",
     )
 
 
@@ -2517,7 +2517,7 @@ def ingest_day_verdicts(
     once-per-run pre-built ``bitmap`` AND ``index_bands`` — without the
     latter every micro-batch would re-shingle and re-minhash the whole
     ledger for the near-dup stage; with it only the batch is hashed per
-    trigger).  ``index_bands`` must be a `portable_band_index` built
+    trigger).  ``index_bands`` must be an md5 `band_index` built
     with the probe parameters pinned here (n=3, num_hashes=15,
     bands=5); validation is skipped since both ends live in this
     function's callers within one run.  One row per batch doc:
@@ -2545,15 +2545,15 @@ def ingest_day_verdicts(
     qualified = gated.where(F.col("__passes")).select("doc_id", "text")
     lowq = gated.where(~F.col("__passes")).select("doc_id")
     if index_bands is not None:
-        probe = dedup.portable_neardup_against_index(
+        probe = dedup.neardup_against_index(
             qualified, None, id_col="doc_id", text_col="text",
             n=3, num_hashes=15, bands=5,
-            index_bands=index_bands, validate_index=False,
+            index_bands=index_bands, validate_index=False, family="md5",
         )
     else:
-        probe = dedup.portable_neardup_against_index(
+        probe = dedup.neardup_against_index(
             qualified, ledger, id_col="doc_id", text_col="text",
-            n=3, num_hashes=15, bands=5,
+            n=3, num_hashes=15, bands=5, family="md5",
         )
     nulid = F.lit(None).cast("bigint")
     dup_exact = batch.join(gated.select("doc_id"), "doc_id", "left_anti").select(
@@ -2644,7 +2644,7 @@ def _run_scoped(which: str):
 def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_incremental_portable through the STEADY-STATE path the
     incremental docstrings promise: the corpus band index is built once
-    (`operators/dedup.py:portable_band_index`), PERSISTED hash-bucketed
+    (`operators/dedup.py:band_index`, family="md5"), PERSISTED hash-bucketed
     on the band key (`sources/writers.write_bucketed`), and the batch is
     probed against the bucketed TABLE — the index is neither re-shingled
     nor re-shuffled per run; its bucketed scan satisfies the probe
@@ -2669,14 +2669,15 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = d.where(F.col("doc_id") % 10 == 0)
     old = d.where(F.col("doc_id") % 10 != 0)
     params = {"sg.n": "3", "sg.num_hashes": "15", "sg.bands": "5"}
-    idx = dedup.portable_band_index(
-        old, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5
+    idx = dedup.band_index(
+        old, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5,
+        family="md5",
     )
     table = _run_scoped("band").replace(
         spark, idx, ["band_id", "band_hash"], num_buckets=16, properties=params
     )
     expect_table_properties(spark, table, params)  # probe/build co-versioned
-    return dedup.portable_neardup_against_index(
+    return dedup.neardup_against_index(
         new,
         None,
         id_col="doc_id",
@@ -2684,6 +2685,7 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3,
         num_hashes=15,
         bands=5,
+        family="md5",
         index_bands=spark.table(table),
         # the TBLPROPERTIES check above already verified ALL build params
         # from the catalog (no data scanned); the default band_id-domain
@@ -2903,7 +2905,7 @@ def dedup_lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     truth = dedup.ngram_jaccard_pairs(d, "doc_id", "text", threshold=0.5)
-    cand = dedup.minhash_lsh_candidates(d, "doc_id", "text").select("doc_a", "doc_b")
+    cand = dedup.lsh_candidates(d, "doc_id", "text").select("doc_a", "doc_b")
     truth = truth.localCheckpoint(eager=False)
     cand = cand.localCheckpoint(eager=False)
     hits = truth.join(cand, ["doc_a", "doc_b"], "semi")

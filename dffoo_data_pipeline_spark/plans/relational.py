@@ -2624,6 +2624,8 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     that Spark's groupBy counted, shifting every lift denominator (r12
     hostile sweep).
     """
+    from dffoo_data_pipeline_spark.operators.dedup import all_pairs
+
     li = load_table(spark, sf_dir, "lineitem")
     baskets = (
         li.select("l_orderkey", "l_partkey")
@@ -2637,17 +2639,8 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     pc = baskets.select(F.explode("parts").alias("l_partkey")).groupBy(
         "l_partkey"
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_part"))
-    combos = F.flatten(
-        F.transform(
-            F.col("parts"),
-            lambda x, i: F.transform(
-                F.slice(F.col("parts"), i + 2, F.size(F.col("parts"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     pairs = (
-        baskets.select(F.explode(combos).alias("p"))
+        baskets.select(F.explode(all_pairs("parts")).alias("p"))
         .groupBy(F.col("p.a").alias("part_a"), F.col("p.b").alias("part_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
         .where(F.col("n_ab") >= _BASKET_MIN_SUPPORT)

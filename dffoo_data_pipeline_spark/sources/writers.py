@@ -228,7 +228,7 @@ def expect_table_properties(
 ) -> None:
     """Assert that a persisted index table carries the parameters the
     probe is about to use — the metadata half of the params-must-match
-    contract (`operators/dedup.py:portable_neardup_against_index`
+    contract (`operators/dedup.py:neardup_against_index`
     documents why: signatures from a different parameter family simply
     never collide, so a mismatch 'works' and silently reports garbage).
     Build-side writers stamp the params via ``write_bucketed(...,

@@ -1034,7 +1034,7 @@ def streaming_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: foreachBatch re-plans the index side per batch (a growing
     index is picked up without restart); in steady state the index is
-    the PERSISTED band table (`_portable_bands_from_posts` output,
+    the PERSISTED band table (an md5 `band_index`,
     hash-bucketed on the band key at write time) so only the batch is
     shingled/hashed per trigger, and the probe join shuffles the batch
     against the colliding index slice only.  The parquet sink stands in
@@ -1057,8 +1057,9 @@ def streaming_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        res = dedup.portable_neardup_against_index(
-            batch_df, index_docs, id_col="doc_id", text_col="text"
+        res = dedup.neardup_against_index(
+            batch_df, index_docs, id_col="doc_id", text_col="text",
+            n=3, num_hashes=15, bands=5, family="md5",
         )
         # overwrite a per-batch subdir: replaying batch N after a partial
         # write replaces its rows instead of duplicating them
@@ -1306,8 +1307,8 @@ def streaming_ingest_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch re-shingles + re-minhashes the whole ledger; with it
     # only the batch is hashed per trigger (params pinned to
     # ingest_day_verdicts' probe)
-    bands_idx = dedup.portable_band_index(
-        ledger, "doc_id", "text", n=3, num_hashes=15, bands=5
+    bands_idx = dedup.band_index(
+        ledger, "doc_id", "text", n=3, num_hashes=15, bands=5, family="md5"
     ).localCheckpoint(eager=False)
     out_dir = tempfile.mkdtemp(prefix="sg_ingestday_out_")
 

@@ -209,17 +209,16 @@ def test_persisted_band_index_probe_shuffles_batch_only(spark, sf_dir, tmp_path)
     vs banding the raw corpus in-plan."""
     from pyspark.sql import functions as F
 
-    from dffoo_data_pipeline_spark.operators.dedup import (
-        portable_band_index,
-        portable_neardup_against_index,
-    )
+    from dffoo_data_pipeline_spark.operators.dedup import band_index, neardup_against_index
     from dffoo_data_pipeline_spark.sources.writers import write_bucketed
+
+    md5 = dict(n=3, num_hashes=15, bands=5, family="md5")
 
     d = load_table(spark, sf_dir, "documents")
     new = d.where(F.col("doc_id") % 10 == 0)
     old = d.where(F.col("doc_id") % 10 != 0)
     write_bucketed(
-        portable_band_index(old, "doc_id", "text"),
+        band_index(old, "doc_id", "text", **md5),
         "band_idx_plan_t",
         ["band_id", "band_hash"],
         num_buckets=8,
@@ -228,7 +227,7 @@ def test_persisted_band_index_probe_shuffles_batch_only(spark, sf_dir, tmp_path)
     try:
         idx = spark.table("band_idx_plan_t")
         with _forced_smj(spark):
-            probe = portable_band_index(new, "doc_id", "text").select(
+            probe = band_index(new, "doc_id", "text", **md5).select(
                 F.col("doc_id").alias("probe_id"), "band_id", "band_hash"
             )
             j = probe.join(
@@ -244,10 +243,10 @@ def test_persisted_band_index_probe_shuffles_batch_only(spark, sf_dir, tmp_path)
             assert plan.count("Exchange hashpartitioning(band_id") == 1, plan
             assert "Bucketed: true" in plan, plan
         # verdict parity: persisted-index probe == band-the-raw-corpus probe
-        via_table = portable_neardup_against_index(
-            new, None, "doc_id", "text", index_bands=idx
+        via_table = neardup_against_index(
+            new, None, "doc_id", "text", index_bands=idx, **md5
         )
-        via_raw = portable_neardup_against_index(new, old, "doc_id", "text")
+        via_raw = neardup_against_index(new, old, "doc_id", "text", **md5)
         assert sorted(map(tuple, via_table.collect())) == sorted(
             map(tuple, via_raw.collect())
         )
@@ -255,31 +254,31 @@ def test_persisted_band_index_probe_shuffles_batch_only(spark, sf_dir, tmp_path)
         spark.sql("DROP TABLE IF EXISTS band_idx_plan_t")
 
 
-def test_neardup_index_band_domain_guard(spark, sf_dir):
+@pytest.mark.parametrize("family", ["md5", "xx64"])
+def test_neardup_index_band_domain_guard(spark, sf_dir, family):
     """Probing a persisted index with a different `bands` than it was
-    built with must fail loudly, not silently report everything novel
-    (r8 ADVICE): band hashes from another signature family never
-    collide, so without the guard the probe would 'work' and lie."""
-    from dffoo_data_pipeline_spark.operators.dedup import (
-        portable_band_index,
-        portable_neardup_against_index,
-    )
+    built with must fail loudly, not silently report everything novel:
+    band hashes from another signature family never collide, so without
+    the guard the probe would 'work' and lie.  Both hash families."""
+    from dffoo_data_pipeline_spark.operators.dedup import band_index, neardup_against_index
 
     d = load_table(spark, sf_dir, "documents").limit(20)
-    idx3 = portable_band_index(d, "doc_id", "text", num_hashes=15, bands=3)
-    probe = portable_neardup_against_index(
-        d, None, "doc_id", "text", num_hashes=15, bands=5, index_bands=idx3
-    )  # construction must NOT scan the index (lazy guard, r10)
+    idx3 = band_index(d, "doc_id", "text", num_hashes=15, bands=3, family=family)
+    probe = neardup_against_index(
+        d, None, "doc_id", "text", num_hashes=15, bands=5, index_bands=idx3,
+        family=family,
+    )  # construction must NOT scan the index (the guard is lazy)
     with pytest.raises(Exception, match="band_id domain"):
         probe.collect()
     # matching params pass the guard; validate_index=False skips the scan
-    ok = portable_neardup_against_index(
-        d, None, "doc_id", "text", num_hashes=15, bands=3, index_bands=idx3
+    ok = neardup_against_index(
+        d, None, "doc_id", "text", num_hashes=15, bands=3, index_bands=idx3,
+        family=family,
     )
     assert ok.count() == 20
-    skip = portable_neardup_against_index(
+    skip = neardup_against_index(
         d, None, "doc_id", "text", num_hashes=15, bands=5,
-        index_bands=idx3, validate_index=False,
+        index_bands=idx3, validate_index=False, family=family,
     )
     assert skip.count() == 20  # documented escape hatch: no validation job
 
@@ -368,17 +367,14 @@ def test_persisted_ann_index_probe_shuffles_batch_only(spark, sf_dir, tmp_path):
 
 def test_neardup_index_args_are_mutually_exclusive(spark, sf_dir):
     """Passing both or neither of index_df/index_bands must fail loudly."""
-    from dffoo_data_pipeline_spark.operators.dedup import (
-        portable_band_index,
-        portable_neardup_against_index,
-    )
+    from dffoo_data_pipeline_spark.operators.dedup import band_index, neardup_against_index
 
     d = load_table(spark, sf_dir, "documents").limit(10)
-    bands = portable_band_index(d, "doc_id", "text")
+    bands = band_index(d, "doc_id", "text")
     with pytest.raises(ValueError, match="exactly one"):
-        portable_neardup_against_index(d, d, "doc_id", "text", index_bands=bands)
+        neardup_against_index(d, d, "doc_id", "text", index_bands=bands)
     with pytest.raises(ValueError, match="exactly one"):
-        portable_neardup_against_index(d, None, "doc_id", "text")
+        neardup_against_index(d, None, "doc_id", "text")
 
 
 def test_bloom_prefilter_plan_materializes_bitmap_once(spark, sf_dir):

@@ -116,7 +116,7 @@ def test_minhash_lsh_pair_quality(spark):
     }
     cands = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_candidates(_docs_df(spark, texts), "doc_id", "text").collect()
+        for r in dedup.lsh_candidates(_docs_df(spark, texts), "doc_id", "text").collect()
     }
     assert (1, 2) in cands
     assert (1, 3) not in cands and (2, 3) not in cands
@@ -186,8 +186,7 @@ def test_containment_matches_python_oracle(spark):
 
 def test_neardup_against_index_matches_and_novel(spark):
     from dffoo_data_pipeline_spark.operators.dedup import (
-        band_signatures,
-        minhash_signatures,
+        band_index,
         neardup_against_index,
     )
 
@@ -204,8 +203,11 @@ def test_neardup_against_index_matches_and_novel(spark):
         ],
         "doc_id long, text string",
     )
-    index = band_signatures(minhash_signatures(old, "doc_id", "text"), "doc_id")
-    got = {r.doc_id: r for r in neardup_against_index(new, index, "doc_id", "text").collect()}
+    index = band_index(old, "doc_id", "text")
+    got = {
+        r.doc_id: r
+        for r in neardup_against_index(new, None, "doc_id", "text", index_bands=index).collect()
+    }
     assert set(got) == {10, 11, 12}  # exactly one verdict per new doc
     assert got[10].matched_id == 1 and got[10].novel == 0
     assert got[10].n_shared_bands == 16  # identical text: every band collides
@@ -219,8 +221,7 @@ def test_neardup_against_index_keeps_short_docs(spark):
     novel=1 (one row per new document is the contract; dropping it would
     silently lose the doc from an index-append pipeline)."""
     from dffoo_data_pipeline_spark.operators.dedup import (
-        band_signatures,
-        minhash_signatures,
+        band_index,
         neardup_against_index,
     )
 
@@ -232,8 +233,11 @@ def test_neardup_against_index_keeps_short_docs(spark):
         [(20, "too short"), (21, "some indexed corpus document with plenty of words " * 3)],
         "doc_id long, text string",
     )
-    index = band_signatures(minhash_signatures(old, "doc_id", "text"), "doc_id")
-    got = {r.doc_id: r for r in neardup_against_index(new, index, "doc_id", "text").collect()}
+    index = band_index(old, "doc_id", "text")
+    got = {
+        r.doc_id: r
+        for r in neardup_against_index(new, None, "doc_id", "text", index_bands=index).collect()
+    }
     assert set(got) == {20, 21}
     assert got[20].matched_id is None and got[20].novel == 1
     assert got[21].novel == 0
@@ -523,7 +527,10 @@ PORTABLE_TEXTS = {
 
 def test_minhash_portable_matches_python_twin(spark):
     got = _collect_pairs(
-        dedup.minhash_portable_pairs(_docs_df(spark, PORTABLE_TEXTS), "doc_id", "text")
+        dedup.lsh_verified_pairs(
+            _docs_df(spark, PORTABLE_TEXTS), "doc_id", "text",
+            n=3, threshold=0.7, num_hashes=15, bands=5, family="md5",
+        )
     )
     want = _py_minhash_portable(PORTABLE_TEXTS)
     assert got == pytest.approx(want)
@@ -534,8 +541,8 @@ def test_minhash_portable_matches_python_twin(spark):
 def test_simhash_portable_matches_python_twin(spark):
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_portable_pairs(
-            _docs_df(spark, PORTABLE_TEXTS), "doc_id", "text"
+        for r in dedup.simhash_pairs(
+            _docs_df(spark, PORTABLE_TEXTS), "doc_id", "text", sig_bits=48, family="md5"
         ).collect()
     }
     want = _py_simhash_portable(PORTABLE_TEXTS)
@@ -550,7 +557,7 @@ def test_portable_neardup_against_index_contract(spark):
     """The portable (md5-family) probe keeps the xxhash probe's exact
     contract: one verdict per new doc, exact copies collide on every
     band, zero-shingle docs still come back novel=1."""
-    from dffoo_data_pipeline_spark.operators.dedup import portable_neardup_against_index
+    from dffoo_data_pipeline_spark.operators.dedup import neardup_against_index
 
     base = "the quick brown fox jumps over the lazy dog near the old river bank " * 3
     old = spark.createDataFrame(
@@ -568,7 +575,9 @@ def test_portable_neardup_against_index_contract(spark):
     )
     got = {
         r.doc_id: r
-        for r in portable_neardup_against_index(new, old, "doc_id", "text").collect()
+        for r in neardup_against_index(
+            new, old, "doc_id", "text", n=3, num_hashes=15, bands=5, family="md5"
+        ).collect()
     }
     assert set(got) == {10, 11, 12, 13}
     assert got[10].matched_id == 1 and got[10].novel == 0 and got[10].n_shared_bands == 5
@@ -584,14 +593,96 @@ def test_portable_band_split_must_divide(spark):
     voiding the pigeonhole completeness guarantee (ADVICE r7)."""
     d = _docs_df(spark, PORTABLE_TEXTS)
     with pytest.raises(ValueError, match="num_hashes"):
-        dedup.minhash_portable_pairs(d, "doc_id", "text", num_hashes=16, bands=5)
+        dedup.lsh_verified_pairs(d, "doc_id", "text", num_hashes=16, bands=5, family="md5")
     with pytest.raises(ValueError, match="num_hashes"):
-        dedup.minhash_portable_candidates(d, "doc_id", "text", num_hashes=14, bands=4)
+        dedup.lsh_candidates(d, "doc_id", "text", num_hashes=14, bands=4, family="md5")
     with pytest.raises(ValueError, match="sig_bits"):
-        dedup.simhash_portable_pairs(d, "doc_id", "text", sig_bits=50, bands=4)
+        dedup.simhash_pairs(d, "doc_id", "text", sig_bits=50, bands=4, family="md5")
     # the divisible configs still construct fine
-    dedup.minhash_portable_pairs(d, "doc_id", "text", num_hashes=10, bands=5)
-    dedup.simhash_portable_pairs(d, "doc_id", "text", sig_bits=48, bands=3)
+    dedup.lsh_verified_pairs(d, "doc_id", "text", num_hashes=10, bands=5, family="md5")
+    dedup.simhash_pairs(d, "doc_id", "text", sig_bits=48, bands=3, family="md5")
+
+
+def test_banding_refuses_ragged_split_and_unknown_family(spark):
+    """Both hash families refuse, while the plan is built and before any
+    Spark job runs, a band split that does not divide num_hashes (it
+    would silently drop the trailing hashes from every band key), bands=0
+    and a family they do not know.  Each error names the bad value."""
+    from tests.conftest import count_jobs
+
+    d = _docs_df(spark, PORTABLE_TEXTS)
+
+    def build():
+        for family in ("xx64", "md5"):
+            with pytest.raises(ValueError, match=r"num_hashes \(64\).*bands \(10\)"):
+                dedup.lsh_candidates(
+                    d, "doc_id", "text", num_hashes=64, bands=10, family=family
+                )
+            with pytest.raises(ValueError, match=r"bands \(0\)"):
+                dedup.band_index(d, "doc_id", "text", bands=0, family=family)
+        for op in (dedup.band_index, dedup.lsh_candidates, dedup.simhash_pairs):
+            with pytest.raises(ValueError, match="'sha1'"):
+                op(d, "doc_id", "text", family="sha1")
+        with pytest.raises(ValueError, match="'sha1'"):
+            dedup.neardup_against_index(d, d, "doc_id", "text", family="sha1")
+
+    assert count_jobs(spark, build) == 0
+
+
+def test_near_dup_job_counts_pinned(spark):
+    """Construction and total Spark jobs of each near-dup operator under
+    both hash families, on a 40-row corpus.  Staging a relation (a
+    checkpoint, an eager count) changes these numbers and fails here.
+    The verified pairs count their candidates while the plan is built
+    (`_verify_exact_jaccard`), so only they run jobs at construction."""
+    from pyspark.sql import functions as F
+
+    from tests.conftest import count_jobs
+
+    texts = {
+        i: f"the quick brown fox {i % 8} jumps over the lazy dog near river bank {i % 3}"
+        for i in range(40)
+    }
+    d = _docs_df(spark, texts)
+    new, old = d.where(F.col("doc_id") < 10), d.where(F.col("doc_id") >= 10)
+    md5 = dict(n=3, num_hashes=15, bands=5, family="md5")
+    verified, probe, other = ((5, 9), (1, 3)), ((0, 7), (0, 1)), ((0, 3), (0, 1))
+    # name: (build, ((construct, total) with AQE on, the same with AQE off))
+    cases = {
+        "candidates/xx64": (
+            lambda: dedup.lsh_candidates(d, "doc_id", "text"), ((0, 4), (0, 1))
+        ),
+        "candidates/md5": (
+            lambda: dedup.lsh_candidates(d, "doc_id", "text", **md5), ((0, 4), (0, 1))
+        ),
+        "verified/xx64": (lambda: dedup.lsh_verified_pairs(d, "doc_id", "text"), verified),
+        "verified/md5": (
+            lambda: dedup.lsh_verified_pairs(d, "doc_id", "text", threshold=0.7, **md5),
+            verified,
+        ),
+        "probe/xx64": (lambda: dedup.neardup_against_index(new, old, "doc_id", "text"), probe),
+        "probe/md5": (
+            lambda: dedup.neardup_against_index(new, old, "doc_id", "text", **md5), probe
+        ),
+        "simhash/xx64": (lambda: dedup.simhash_pairs(d, "doc_id", "text"), other),
+        "simhash/md5": (
+            lambda: dedup.simhash_pairs(d, "doc_id", "text", sig_bits=48, family="md5"),
+            other,
+        ),
+        "ngram": (lambda: dedup.ngram_jaccard_pairs(d, "doc_id", "text"), other),
+    }
+    aqe = spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for name, (build, (on, off)) in cases.items():
+        box = {}
+        construct = count_jobs(spark, lambda: box.update(df=build()))
+        total = construct + count_jobs(spark, lambda: box["df"].collect())
+        want = on if aqe else off
+        if name.startswith("probe") and aqe:
+            # under AQE the probe runs 5 or 7 jobs from run to run (same
+            # rows): the upper figure is the pin
+            assert construct == want[0] and total in (5, want[1]), (name, total)
+        else:
+            assert (construct, total) == want, name
 
 
 # ---------------------------------------------------------------------------

@@ -26,22 +26,27 @@ def test_parse_empty_lines(spark):
 def test_dedup_operators_empty(spark, empty_docs):
     assert dedup.exact_keep_first(empty_docs, "text", "doc_id").count() == 0
     assert dedup.ngram_jaccard_pairs(empty_docs, "doc_id", "text").count() == 0
-    assert dedup.minhash_lsh_candidates(empty_docs, "doc_id", "text").count() == 0
+    assert dedup.lsh_candidates(empty_docs, "doc_id", "text").count() == 0
     assert dedup.simhash(empty_docs, "doc_id", "text").count() == 0
 
 
 def test_portable_dedup_operators_empty(spark, empty_docs):
-    out = dedup.minhash_portable_pairs(empty_docs, "doc_id", "text")
+    out = dedup.lsh_verified_pairs(
+        empty_docs, "doc_id", "text", threshold=0.7, num_hashes=15, bands=5, family="md5"
+    )
     assert out.count() == 0 and out.columns == ["doc_a", "doc_b", "jaccard"]
-    out = dedup.simhash_portable_pairs(empty_docs, "doc_id", "text")
+    out = dedup.simhash_pairs(empty_docs, "doc_id", "text", sig_bits=48, family="md5")
     assert out.count() == 0 and out.columns == ["doc_a", "doc_b", "hamming"]
-    assert dedup.minhash_portable_candidates(empty_docs, "doc_id", "text").count() == 0
+    assert dedup.lsh_candidates(
+        empty_docs, "doc_id", "text", num_hashes=15, bands=5, family="md5"
+    ).count() == 0
     # empty BATCH -> empty verdicts; empty INDEX -> every batch doc novel
     some = spark.createDataFrame(
         [(1, "one two three four five six seven eight")], "doc_id bigint, text string"
     )
-    assert dedup.portable_neardup_against_index(empty_docs, some, "doc_id", "text").count() == 0
-    got = dedup.portable_neardup_against_index(some, empty_docs, "doc_id", "text").collect()
+    md5 = dict(n=3, num_hashes=15, bands=5, family="md5")
+    assert dedup.neardup_against_index(empty_docs, some, "doc_id", "text", **md5).count() == 0
+    got = dedup.neardup_against_index(some, empty_docs, "doc_id", "text", **md5).collect()
     assert len(got) == 1 and got[0].novel == 1 and got[0].matched_id is None
 
 
@@ -178,11 +183,7 @@ def test_semantic_dedup_empty(spark, monkeypatch):
 def test_round3_closing_operators_empty(spark, empty_docs):
     from dffoo_data_pipeline_spark.multimodal.assets import audio_activity_segments
     from dffoo_data_pipeline_spark.operators.bpe import apply_bpe_merges, learn_bpe_merges
-    from dffoo_data_pipeline_spark.operators.dedup import (
-        band_signatures,
-        minhash_signatures,
-        neardup_against_index,
-    )
+    from dffoo_data_pipeline_spark.operators.dedup import band_index, neardup_against_index
     from dffoo_data_pipeline_spark.operators.graph import pagerank
 
     empty_vocab = spark.createDataFrame([], "word string, freq long")
@@ -193,8 +194,8 @@ def test_round3_closing_operators_empty(spark, empty_docs):
     seg = audio_activity_segments(empty_rms)
     assert seg.count() == 0 and "start_window" in seg.columns
 
-    idx = band_signatures(minhash_signatures(empty_docs, "doc_id", "text"), "doc_id")
-    probe = neardup_against_index(empty_docs, idx, "doc_id", "text")
+    idx = band_index(empty_docs, "doc_id", "text")
+    probe = neardup_against_index(empty_docs, None, "doc_id", "text", index_bands=idx)
     assert probe.count() == 0 and "novel" in probe.columns
 
     nodes = spark.createDataFrame([], "node string")

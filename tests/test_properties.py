@@ -375,7 +375,9 @@ def test_minhash_portable_equals_python_twin_on_random_corpora(spark, texts):
     )
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.minhash_portable_pairs(df, "doc_id", "text").collect()
+        for r in dedup.lsh_verified_pairs(
+            df, "doc_id", "text", threshold=0.7, num_hashes=15, bands=5, family="md5"
+        ).collect()
     }
     want = _py_minhash_portable(corpus)
     assert got == pytest.approx(want)
@@ -393,7 +395,7 @@ def test_simhash_portable_equals_python_twin_on_random_corpora(spark, texts):
     )
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_portable_pairs(df, "doc_id", "text").collect()
+        for r in dedup.simhash_pairs(df, "doc_id", "text", sig_bits=48, family="md5").collect()
     }
     want = _py_simhash_portable(corpus)
     assert got == want

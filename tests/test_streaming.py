@@ -464,9 +464,7 @@ def test_multibatch_neardup_probe_matches_batch(spark):
     operator's one-shot result."""
     import tempfile
 
-    from dffoo_data_pipeline_spark.operators.dedup import (
-        portable_neardup_against_index,
-    )
+    from dffoo_data_pipeline_spark.operators.dedup import neardup_against_index
     from dffoo_data_pipeline_spark.streaming.jobs import _DOCS_SCHEMA
 
     docs = load_table(spark, SF_SMOKE, "documents")
@@ -482,8 +480,8 @@ def test_multibatch_neardup_probe_matches_batch(spark):
         if batch_df.isEmpty():
             return
         n_batches.append(batch_id)
-        portable_neardup_against_index(
-            batch_df, old, id_col="doc_id", text_col="text"
+        neardup_against_index(
+            batch_df, old, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5, family="md5"
         ).write.mode("append").parquet(out_dir)
 
     q = (
@@ -502,8 +500,8 @@ def test_multibatch_neardup_probe_matches_batch(spark):
     want = sorted(
         map(
             tuple,
-            portable_neardup_against_index(
-                new, old, id_col="doc_id", text_col="text"
+            neardup_against_index(
+                new, old, id_col="doc_id", text_col="text", n=3, num_hashes=15, bands=5, family="md5"
             ).collect(),
         )
     )
