@@ -5,7 +5,8 @@ Every search here is one composition of four steps, each defined once:
 1. **Scorer** — a block of query vectors against a block of index vectors
    gives a ranking ``key`` and a reported ``cos`` matrix.  `_int_scores`
    (integer codes: key d·|d|/(n2a·n2b), cos d/√(n2a·n2b), exact in any
-   engine) and `_float_scores` (raw floats: key S, cos round(S, 6)).
+   engine) and `_float_scores` (raw floats: key S, cos round(S, 6)); both
+   take the two stacked float64 matrices.
 2. **Selection** — `_rank_topk` (top-k per query row) and `_pairs`
    (all pairs at or above a threshold, doc_a < doc_b).
 3. **Driver** — where the blocks come from: the grouped kernel
@@ -13,20 +14,30 @@ Every search here is one composition of four steps, each defined once:
    rows are queries only), the cogrouped `_exact_cos_probe_kernel`
    (queries on the left, index members on the right) or the broadcast
    driver `_broadcast_index_map` (a bounded index collected once,
-   queries streamed through `mapInPandas`).
+   queries streamed through `mapInPandas` and scored `_SCORE_BLOCK` rows
+   at a time).
 4. **Merge** — `_merge_topk`: multi-bucket paths rank per bucket, then
    keep the global top-k per query on the kernel's exact ``rank_key``.
 
-Bucketing is shared too: `_sign_bucket` is the one sign-LSH bucket id
-and `_multiprobe_side` the one margin-ordered multi-probe schedule.
+Bucketing is shared too: `_sign_bucket` is the one sign-LSH bucket id,
+`_multiprobe_side` the one margin-ordered multi-probe schedule and
+`_nearest_seeds` the one integer seed assignment (seeded IVF cells,
+dedup_semantic_int8's clusters).
+
+`dot` is the package's one vector dot product as a Spark column: a left
+fold over ``zip_with`` in bigint (exact) or double (element order), with
+a weight vector passed as one numpy-array literal.
+
+`exact_topk_int` is the exact integer truth of every integer recall
+report: the broadcast driver with `_int_scores` and `_rank_topk`.
 
 Operators: exact broadcast search (`cosine_topk_bruteforce`,
 `cosine_neardup_pairs`, `cosine_topk_against_index`), float ANN
 (`lsh_topk`, `lsh_neardup_pairs`, `ivf_topk`), integer-exact ANN with
 value-hash oracles (`lsh_topk_int`, `lsh_multiprobe_topk_int`,
 `ivf_topk_int`, `lsh_probe_topk_int` over a `lsh_bucket_index_int`
-index) and the size-routed entry points (`cosine_topk_auto`,
-`cosine_neardup_auto`).
+index), their exact truth `exact_topk_int` and the size-routed entry
+points (`cosine_topk_auto`, `cosine_neardup_auto`).
 
 Contract of every top-k: rows ordered ``(key DESC, neighbor_id ASC)``,
 ties at the k-th key resolved to the lowest neighbor ids whatever the
@@ -57,6 +68,11 @@ from pyspark.sql import types as T
 # to the LSH-bucketed path instead of collecting.
 DEFAULT_MAX_INDEX_ROWS = 2_000_000
 
+# Query rows the broadcast driver scores at once: a Python worker holds
+# _SCORE_BLOCK × |index| scores, not Arrow-batch × |index| (at 20k index
+# rows, ~40 MB per score matrix instead of ~1.6 GB).
+_SCORE_BLOCK = 256
+
 _TOPK = ("query_id", "neighbor_id", "cos_sim")
 _PAIRS = ("doc_a", "doc_b", "cos_sim")
 
@@ -79,22 +95,25 @@ def _stack(col: pd.Series) -> np.ndarray:
     return np.stack(col.to_numpy()).astype(np.float64)
 
 
-def _int_scores(q: pd.DataFrame, i: pd.DataFrame):
-    """Exact-integer scorer over (c, n2) code frames.
+def _int_scores(Q: np.ndarray, M: np.ndarray):
+    """Exact-integer scorer over stacked integer codes (as float64).
 
-    The dot products are exact integers computed THROUGH float64 BLAS
-    (numpy's int64 matmul has no BLAS path): per-element products
-    ≤ 128² and row sums ≤ 128²·dim < 2²¹, so every partial sum is an
-    integer far below 2⁵³ and float64 accumulation is exact in any
-    summation order; rint only normalizes the sign of zero.  The key
-    d·|d|/(n2a·n2b) and cos d/√(n2a·n2b) are single correctly-rounded
-    IEEE ops on exact ≤2⁵³ integers (n2a·n2b ≤ 2⁴⁰) — bit-identical in
-    any engine, so the DuckDB oracle replays the ranking with no float
-    tolerance (dedup_semantic_int8's contract, plans/embeddings.py).
+    The dot products and squared norms n2 are exact integers computed
+    THROUGH float64 BLAS (numpy's int64 matmul has no BLAS path):
+    per-element products ≤ 128² and row sums ≤ 128²·dim < 2²¹, so every
+    partial sum is an integer far below 2⁵³ and float64 accumulation is
+    exact in any summation order; rint only normalizes the sign of zero.
+    The key d·|d|/(n2a·n2b) and cos d/√(n2a·n2b) are single
+    correctly-rounded IEEE ops on exact ≤2⁵³ integers (n2a·n2b ≤ 2⁴⁰) —
+    bit-identical in any engine, so the DuckDB oracle replays the ranking
+    with no float tolerance (dedup_semantic_int8's contract,
+    plans/embeddings.py).  A zero-norm code scores NaN, which the
+    selection drops.
     """
-    D = np.rint(_stack(q["c"]) @ _stack(i["c"]).T)
-    den = np.outer(q["n2"].to_numpy(np.float64), i["n2"].to_numpy(np.float64))
-    return D * np.abs(D) / den, D / np.sqrt(den)
+    D = np.rint(Q @ M.T)
+    den = np.outer(np.einsum("ij,ij->i", Q, Q), np.einsum("ij,ij->i", M, M))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return D * np.abs(D) / den, D / np.sqrt(den)
 
 
 def _float_scores(Q: np.ndarray, M: np.ndarray):
@@ -102,10 +121,6 @@ def _float_scores(Q: np.ndarray, M: np.ndarray):
     zero-norm vector scores NaN, which the selection drops."""
     S = (Q @ M.T) / np.outer(np.linalg.norm(Q, axis=1), np.linalg.norm(M, axis=1))
     return S, np.round(S, 6)
-
-
-def _float_frame_scores(q: pd.DataFrame, i: pd.DataFrame):
-    return _float_scores(_stack(q["v"]), _stack(i["v"]))
 
 
 def _rank_topk(ids_q, ids_i, key, cos, k: int, names, mask_self: bool = True):
@@ -150,12 +165,12 @@ def _pairs(ids_q, Q, ids_i, M, threshold: float) -> pd.DataFrame:
     return pd.DataFrame({"doc_a": ids_q[r], "doc_b": ids_i[c], "cos_sim": S[r, c]})
 
 
-def _exact_cos_topk_kernel(id_col: str, k: int, out_schema, score=_int_scores):
+def _exact_cos_topk_kernel(id_col: str, k: int, out_schema, score=_int_scores, vec="c"):
     """applyInPandas kernel: exact cosine top-k inside one group.
 
     Every row of the group is a query; the non-probe rows are the index.
-    `score` is `_int_scores` (columns id, c, n2, is_probe) or
-    `_float_frame_scores` (columns id, v, is_probe).  Multi-bucket
+    `score` is `_int_scores` over the codes column `vec` = "c" or
+    `_float_scores` over the float column `vec` = "v".  Multi-bucket
     callers put ``rank_key`` in `out_schema` so the global merge orders
     by the exact key the kernel ranked by: merging on the reported
     ``cos_sim`` would be a second, independent rounding — two distinct
@@ -169,7 +184,7 @@ def _exact_cos_topk_kernel(id_col: str, k: int, out_schema, score=_int_scores):
         if len(idx) == 0:
             return pd.DataFrame({n: [] for n in names})
         ids_q, ids_i = pdf[id_col].to_numpy(), idx[id_col].to_numpy()
-        return _rank_topk(ids_q, ids_i, *score(pdf, idx), k, names)
+        return _rank_topk(ids_q, ids_i, *score(_stack(pdf[vec]), _stack(idx[vec])), k, names)
 
     return rank_group
 
@@ -188,12 +203,9 @@ def _exact_cos_probe_kernel(id_col: str, k: int, out_schema):
     def rank_probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
             return pd.DataFrame({n: [] for n in names})
-        # right-side columns carry __i prefixes: distinct names keep the
-        # analyzer's self-lineage attribute dedup from pruning the index
-        # side when both cogroup sides derive from one codes frame
-        right = right.rename(columns={"__iid": id_col, "__ic": "c", "__in2": "n2"})
-        ids_q, ids_i = left[id_col].to_numpy(), right[id_col].to_numpy()
-        return _rank_topk(ids_q, ids_i, *_int_scores(left, right), k, names)
+        ids_q, ids_i = left[id_col].to_numpy(), right["__iid"].to_numpy()
+        scores = _int_scores(_stack(left["c"]), _stack(right["__ic"]))
+        return _rank_topk(ids_q, ids_i, *scores, k, names)
 
     return rank_probe
 
@@ -232,15 +244,20 @@ def _broadcast_index_map(
 ) -> DataFrame:
     """Broadcast-index driver: collect the bounded `index` once, broadcast
     it, and stream the non-NULL `probe` rows through
-    ``body(ids_q, Q, ids_i, M)`` one Arrow batch at a time."""
+    ``body(ids_q, Q, ids_i, M)`` in blocks of `_SCORE_BLOCK` rows of each
+    Arrow batch.  Every body is row-wise (a query row's output depends on
+    that row and the index only), so the blocking never changes a row."""
     ids, M = _collect_index(index, id_col, vec_col, max_rows)
     b = probe.sparkSession.sparkContext.broadcast((ids, M))
+    block = _SCORE_BLOCK
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_i, M_i = b.value
         for pb in batches:
             if len(pb) and len(ids_i):
-                yield body(pb[id_col].to_numpy(), _stack(pb[vec_col]), ids_i, M_i)
+                ids_q, Q = pb[id_col].to_numpy(), _stack(pb[vec_col])
+                for lo in range(0, len(pb), block):
+                    yield body(ids_q[lo : lo + block], Q[lo : lo + block], ids_i, M_i)
 
     from dffoo_data_pipeline_spark.sources.readers import ensure_min_partitions
 
@@ -352,6 +369,28 @@ def cosine_topk_against_index(
     )
 
 
+def exact_topk_int(
+    queries: DataFrame, index: DataFrame, id_col: str = "vec_id", k: int = 5
+) -> DataFrame:
+    """EXACT top-k (query_id, neighbor_id, rank) of the `queries` codes
+    against the `index` codes (int8_codes frames: id, c, n2) — the truth
+    of every integer recall report.  Ranked by the integer ANN paths' own key
+    (`_int_scores`) with a neighbor_id tiebreak; self matches are masked
+    and non-finite keys dropped, so a zero-norm code on either side takes
+    no part.  The broadcast driver scores `_SCORE_BLOCK` query rows at a
+    time in BLAS; past `DEFAULT_MAX_INDEX_ROWS` index codes it raises
+    `IndexTooLargeError` — then measure a deterministic query slice
+    against an index that fits (similarity_lsh_recall_sampled's shape)."""
+    names = ("query_id", "neighbor_id", "rank")
+
+    def body(ids_q, Q, ids_i, M):
+        return _rank_topk(ids_q, ids_i, *_int_scores(Q, M), k, names)
+
+    return _broadcast_index_map(
+        queries, index, id_col, "c", DEFAULT_MAX_INDEX_ROWS, _schema(queries, id_col, *names), body
+    )
+
+
 def ivf_topk(
     df: DataFrame,
     id_col: str,
@@ -426,7 +465,7 @@ def ivf_topk(
         ),
     )
     per_cell = assigned.groupBy("cell").applyInPandas(
-        _exact_cos_topk_kernel(id_col, k, out_schema, _float_frame_scores), out_schema
+        _exact_cos_topk_kernel(id_col, k, out_schema, _float_scores, "v"), out_schema
     )
     return _merge_topk(per_cell, k)
 
@@ -448,12 +487,17 @@ def int_lsh_weights(dim: int, planes: int) -> list[list[int]]:
     ]
 
 
-def _intdot_col(a, b_lits: list[int]):
-    """Exact BIGINT dot of an array<bigint> column with literal weights."""
-    w = F.array(*[F.lit(x).cast("bigint") for x in b_lits])
+def dot(a, b, dtype: str = "double") -> F.Column:
+    """``a · b`` as a left fold over ``zip_with``, every element cast to
+    `dtype` first: "bigint" (exact, order-free) or "double" (summed in
+    element order, as DuckDB's list folds do).  `a` is an array column;
+    `b` is an array column or a weight vector, which becomes ONE
+    numpy-array literal instead of a Column expression per element."""
+    if not isinstance(b, (F.Column, str)):
+        b = F.lit(np.asarray(b, dtype={"bigint": np.int64, "double": np.float64}[dtype]))
     return F.aggregate(
-        F.zip_with(a, w, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
+        F.zip_with(a, b, lambda x, y: x.cast(dtype) * y.cast(dtype)),
+        F.lit(0).cast(dtype),
         lambda acc, x: acc + x,
     )
 
@@ -480,7 +524,7 @@ def lsh_bucket_index_int(
     integer arithmetic (`int_lsh_weights`), so any engine can rebuild
     or verify the index from the formula alone."""
     W = int_lsh_weights(dim, prefix_bits)
-    bucket = _sign_bucket([_intdot_col(F.col("c"), W[p]) for p in range(prefix_bits)])
+    bucket = _sign_bucket([dot("c", W[p], "bigint") for p in range(prefix_bits)])
     return codes.where(F.col("n2") > 0).select(
         F.col(id_col), "c", "n2", bucket.alias("bucket")
     )
@@ -496,9 +540,7 @@ def _multiprobe_side(
     probe bucket is the XOR of one bit, so the schedule is exact integer
     arithmetic any engine replays, and the probed buckets are distinct."""
     W = int_lsh_weights(dim, prefix_bits)
-    dots = [
-        _intdot_col(F.col("c"), W[p]).alias(f"d{p}") for p in range(prefix_bits)
-    ]
+    dots = [dot("c", W[p], "bigint").alias(f"d{p}") for p in range(prefix_bits)]
     base = codes.where(F.col("n2") > 0).select(F.col(id_col), "c", "n2", *dots)
     d = [F.col(f"d{p}") for p in range(prefix_bits)]
     # array_sort on (|d_p|, p, mask) structs = ORDER BY abs(d), p — the
@@ -600,6 +642,31 @@ def lsh_multiprobe_topk_int(
     return _merge_topk(per_bucket, k)
 
 
+def _nearest_seeds(
+    rows: DataFrame, codes: DataFrame, id_col: str, n_seeds: int, n: int
+) -> DataFrame:
+    """`rows` (id, c, ...) with the `n` nearest of `n_seeds` deterministic
+    seeds each: the live `codes` with id < n_seeds, one output row per
+    (row, seed) pair with columns cell (the seed id), sn2, d and rn (its
+    1-based rank).  Seeds rank by d·|d|/sn2 DESC, seed id ASC — monotone
+    in cosine-to-seed, exact ints ≤ 2⁴⁰ through one IEEE division, so any
+    engine replays the assignment.  Callers choose which rows take part:
+    a zero-norm row scores 0 against every seed and takes the lowest."""
+    seeds = codes.where((F.col(id_col) < n_seeds) & (F.col("n2") > 0)).select(
+        F.col(id_col).alias("cell"), F.col("c").alias("sc"), F.col("n2").alias("sn2")
+    )
+    d = F.col("d")
+    w = Window.partitionBy(id_col).orderBy(
+        F.desc((d * F.abs(d)).cast("double") / F.col("sn2").cast("double")), F.asc("cell")
+    )
+    return (
+        rows.crossJoin(F.broadcast(seeds))
+        .withColumn("d", dot("c", "sc", "bigint"))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= n)
+    )
+
+
 def ivf_topk_int(
     codes: DataFrame,
     id_col: str = "vec_id",
@@ -628,29 +695,8 @@ def ivf_topk_int(
     driver.
     """
     live = codes.where(F.col("n2") > 0)
-    seeds = live.where(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col("c").alias("sc"), F.col("n2").alias("sn2")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("c"), F.col("sc"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = live.crossJoin(F.broadcast(seeds)).select(
-        id_col, "c", "n2", "cell", "sn2", d.alias("d")
-    )
-    # assignment key d·|d|/sn2 is monotone in cosine-to-seed; exact ints
-    # ≤2⁴⁰ through one IEEE division — deterministic in any engine
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc((F.col("d") * F.abs("d")).cast("double") / F.col("sn2").cast("double")),
-        F.asc("cell"),
-    )
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max(n_probe, 1))
-        .select(
-            id_col, "c", "n2", "cell", (F.col("rn") > 1).alias("is_probe")
-        )
+    assigned = _nearest_seeds(live, codes, id_col, n_cells, max(n_probe, 1)).select(
+        id_col, "c", "n2", "cell", (F.col("rn") > 1).alias("is_probe")
     )
     out_schema = _schema(codes, id_col, *_TOPK, "rank_key")
     per_cell = assigned.groupBy("cell").applyInPandas(
@@ -745,11 +791,11 @@ def lsh_probe_topk_int(
             .select(F.lit(1).alias("__domain_checked"))
         )
         indexed = indexed.crossJoin(F.broadcast(guard)).drop("__domain_checked")
+    # index columns carry __i prefixes: distinct names keep the analyzer's
+    # self-lineage attribute dedup from pruning the index side when both
+    # cogroup sides derive from one codes frame
     member = indexed.select(
-        F.col(id_col).alias("__iid"),
-        F.col("c").alias("__ic"),
-        F.col("n2").alias("__in2"),
-        "bucket",
+        F.col(id_col).alias("__iid"), F.col("c").alias("__ic"), "bucket"
     )
     if n_flip > 0:
         qside = _multiprobe_side(query_codes, id_col, prefix_bits, dim, n_flip).drop("is_probe")
@@ -789,15 +835,7 @@ def _lsh_bucketize(
         first = df.select(vec_col).head()
         dim = len(first[0]) if first is not None else 1
     hp = _hyperplanes(dim, planes, seed)[:prefix_bits]
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dots = [
-        F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(c) for c in hp[p]]), lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for p in range(prefix_bits)
-    ]
+    dots = [dot(vec_col, hp[p]) for p in range(prefix_bits)]
     return df.select(
         F.col(id_col), F.col(vec_col).alias("v"), _sign_bucket(dots).alias("bucket")
     )
@@ -832,7 +870,7 @@ def lsh_topk(
     ).withColumn("is_probe", F.lit(False))
     out_schema = _schema(df, id_col, *_TOPK)
     return bucketed.groupBy("bucket").applyInPandas(
-        _exact_cos_topk_kernel(id_col, k, out_schema, _float_frame_scores), out_schema
+        _exact_cos_topk_kernel(id_col, k, out_schema, _float_scores, "v"), out_schema
     )
 
 

@@ -21,13 +21,15 @@ from __future__ import annotations
 # previous window, in its order.  Queries not listed follow in module
 # order and keep their existing certification.
 _PRIORITY = [
-    # ---- plans rebuilt on the shared exact-truth helper ----
+    # ---- changed plans awaiting re-certification ----
     "similarity_lsh_recall_report",
     "similarity_lsh_recall_sampled",
     "similarity_lsh_multiprobe_recall_report",
     "similarity_lsh_probe_recall_report",
     "similarity_ivf_recall_report",
-    # ---- changed plans awaiting re-certification ----
+    "similarity_ivfpq_recall_report",
+    "similarity_ivfpq_rerank_recall_report",
+    "dedup_semantic_int8",
     "dedup_minhash_portable",
     "dedup_portable_quality_report",
     "dedup_simhash_portable",
@@ -69,9 +71,6 @@ _PRIORITY = [
     "streaming_ann_probe",
     "similarity_ann_recall_report",
     "dedup_embedding_cosine",
-    # ---- oracle SQL rebuilt from shared templates, same rows ----
-    "similarity_ivfpq_recall_report",
-    "similarity_ivfpq_rerank_recall_report",
     # ---- carried-over queue ----
     "corpus_bpe_learn",
     "corpus_bpe_encode",
@@ -101,7 +100,6 @@ _PRIORITY = [
     "curation_trainonly_scaler",
     "abilities_from_pysource",
     "multimodal_audio_segments",
-    "dedup_semantic_int8",
     "similarity_pq_topk",
     "embedding_kmeans_train",
     "embedding_covariance",

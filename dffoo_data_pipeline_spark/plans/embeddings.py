@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dffoo_data_pipeline_spark.functions import numeric as N
+from dffoo_data_pipeline_spark.operators.similarity import _nearest_seeds, dot
 from dffoo_data_pipeline_spark.sources.readers import load_table
 
 QUERIES: dict = {}
@@ -46,15 +47,6 @@ def _sumsq(v) -> F.Column:
     doubles)."""
     return F.aggregate(
         v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-    )
-
-
-def _dot(a, b) -> F.Column:
-    """Dot product as a double left-fold over zip_with."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -154,7 +146,7 @@ def embedding_nearest_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = nonzero.where(F.col("vec_id") < _N_SEEDS).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("seed_vec")
     )
-    cos = _dot(F.col("embedding"), F.col("seed_vec")) / (
+    cos = dot("embedding", "seed_vec") / (
         F.sqrt(_sumsq(F.col("embedding"))) * F.sqrt(_sumsq(F.col("seed_vec")))
     )
     scored = nonzero.join(F.broadcast(seeds)).select(
@@ -430,15 +422,6 @@ def embedding_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEM_N_SEEDS = 8
 _SEM_TAU2_X1E4 = 1225  # tau = 0.35 → tau² · 10⁴ (fixture-tuned: ~28% dups)
 
-def _intdot(a, b):
-    """Exact BIGINT dot product fold — order-free (integer addition)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
 def int8_codes(e: DataFrame) -> DataFrame:
     """(vec_id, c: array<bigint>, n2) — centered int8 codes + squared
     norm for any frame with (vec_id, embedding).  Pure projections, so it
@@ -464,7 +447,7 @@ def int8_codes(e: DataFrame) -> DataFrame:
     return (
         e.select("vec_id", F.col("embedding").alias("emb"), lo.alias("lo"), hi.alias("hi"))
         .select("vec_id", c.alias("c"))
-        .select("vec_id", "c", _intdot(F.col("c"), F.col("c")).alias("n2"))
+        .select("vec_id", "c", dot("c", "c", "bigint").alias("n2"))
     )
 
 
@@ -574,21 +557,10 @@ def dedup_semantic_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer reads the one materialized copy instead of re-running
     # scan+quantize (9 scans without it)
     norms = int8_codes(e).localCheckpoint(eager=False)
-    intdot = _intdot
-    seeds = (
-        norms.where((F.col("vec_id") < _SEM_N_SEEDS) & (F.col("n2") > 0))
-        .select(F.col("vec_id").alias("seed_id"), F.col("c").alias("sc"), F.col("n2").alias("sn2"))
-    )
-    dots = norms.crossJoin(F.broadcast(seeds)).select(
-        "vec_id", "seed_id", "sn2", intdot(F.col("c"), F.col("sc")).alias("d")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        (F.col("d").cast("double") * F.abs("d") / F.col("sn2")).desc(), "seed_id"
-    )
-    assign = (
-        dots.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", F.col("seed_id").alias("cluster_id"))
+    # every code is assigned, zero-norm ones included (the oracle's `dots`
+    # crosses all of `norms` with the live seeds)
+    assign = _nearest_seeds(norms, norms, "vec_id", _SEM_N_SEEDS, 1).select(
+        "vec_id", F.col("cell").alias("cluster_id")
     )
     members = assign.join(norms, "vec_id")
 
@@ -1230,9 +1202,9 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     # a NULL embedding has no geometry to cluster: excluded, matching
-    # the oracle whose per-element unnest yields no rows for it (r11
-    # hostile embeddings sweep — unexcluded, its NULL distance ranked
-    # NULLS-FIRST and won an arbitrary cluster)
+    # the oracle whose per-element unnest yields no rows for it (kept,
+    # its NULL distance would rank NULLS FIRST and win an arbitrary
+    # cluster)
     vec = (
         e.where(F.col("embedding").isNotNull())
         .select(
@@ -1249,14 +1221,7 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     wmin = Window.partitionBy("vec_id").orderBy("d2", "cid")
     assign = None
     for t in range(_KM_T):
-        d2 = N.round_det(
-            F.aggregate(
-                F.zip_with("v", "c", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        )
+        d2 = N.round_det(_l2sq("v", "c"), 9)
         assign = (
             vec.crossJoin(F.broadcast(cent))
             .select("vec_id", "cid", d2.alias("d2"))
@@ -1405,16 +1370,5 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             v = -v
         comps.append(v)
     e = load_table(spark, sf_dir, "embeddings")
-    arrs = [F.array(*[F.lit(float(c)) for c in comp]) for comp in comps]
-    proj = [
-        N.round_det(
-            F.aggregate(
-                F.zip_with("embedding", arr, lambda x, w: x.cast("double") * w),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        for arr in arrs
-    ]
+    proj = [N.round_det(dot("embedding", comp), 6) for comp in comps]
     return e.select("vec_id", proj[0].alias("pc1"), proj[1].alias("pc2"))

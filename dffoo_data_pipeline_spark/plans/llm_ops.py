@@ -1526,7 +1526,7 @@ def _int_recall_oracle(
 ) -> str:
     """Recall@5 of a path (`cands` as in `_int_topk_oracle`) against the
     exact top-5 of the live query slice over the live index slice — the
-    SQL twin of `_recall_summary(_exact_topk_int(queries, index), path)`."""
+    SQL twin of `_recall_summary(exact_topk_int(queries, index), path)`."""
     return (
         cands
         + f""",
@@ -1711,46 +1711,6 @@ def similarity_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _exact_topk_int(queries: DataFrame, index: DataFrame, k: int = 5) -> DataFrame:
-    """EXACT top-k (query_id, neighbor_id) of the `queries` codes against
-    the `index` codes (int8_codes frames: vec_id, c, n2): live rows
-    (n2 > 0) only, self-pairs excluded, ranked by the ANN paths' own key
-    with a neighbor_id tiebreak — the truth of every integer recall
-    report.
-
-    Scale: a broadcast-NLJ all-pairs rank, quadratic by design — it is
-    the auditor, not the audited path.  At 100 TB pass it a deterministic
-    md5-prefix query slice (similarity_lsh_recall_sampled), never the
-    full corpus."""
-    from pyspark.sql.window import Window
-
-    a = queries.where(F.col("n2") > 0).select(
-        F.col("vec_id").alias("query_id"), F.col("c").alias("ca"), F.col("n2").alias("na2")
-    )
-    b = index.where(F.col("n2") > 0).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cb"), F.col("n2").alias("nb2")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d.alias("d"), "na2", "nb2")
-    )
-    key = (F.col("d") * F.abs("d")).cast("double") / (
-        F.col("na2") * F.col("nb2")
-    ).cast("double")
-    w = Window.partitionBy("query_id").orderBy(F.desc(key), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id")
-    )
-
-
 def _recall_summary(
     truth: DataFrame,
     approx: DataFrame,
@@ -1759,14 +1719,16 @@ def _recall_summary(
 ) -> DataFrame:
     """One-row (n_queries, n_truth, n_hits, <recall_col>) summary of how
     much of `truth` the `approx` pairs cover — the shared tail of every
-    oracled recall report (`_recall_summary_sql` is its DuckDB twin)."""
+    oracled recall report (`_recall_summary_sql` is its DuckDB twin).
+    `truth` carries each pair's 1-based `rank`, so a query is counted by
+    its rank-1 row: no distinct, hence no shuffle on the query id."""
     from dffoo_data_pipeline_spark.functions.numeric import round_det
 
     hits = approx.select(*keys, F.lit(1).alias("hit"))
     n_truth = F.count(F.lit(1))
     n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0)))
     return truth.join(hits, list(keys), "left").agg(
-        F.countDistinct(keys[0]).cast("bigint").alias("n_queries"),
+        F.count_if(F.col("rank") == 1).cast("bigint").alias("n_queries"),
         n_truth.cast("bigint").alias("n_truth"),
         n_hits.cast("bigint").alias("n_hits"),
         round_det(n_hits / n_truth, 6).alias(recall_col),
@@ -1793,7 +1755,7 @@ def similarity_lsh_probe_recall_report(spark: SparkSession, sf_dir: str) -> Data
     probe = similarity.lsh_probe_topk_int(
         queries, index, k=5, prefix_bits=6, dim=64, n_flip=2
     )
-    return _recall_summary(_exact_topk_int(queries, index), probe)
+    return _recall_summary(similarity.exact_topk_int(queries, index), probe)
 
 
 @_register("similarity_lsh_recall_report", _int_recall_oracle(_lsh_cands_sql()))
@@ -1819,7 +1781,7 @@ def similarity_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds LSH + truth
     lsh = similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64)
-    return _recall_summary(_exact_topk_int(codes, codes), lsh)
+    return _recall_summary(similarity.exact_topk_int(codes, codes), lsh)
 
 
 @_register(
@@ -1840,7 +1802,8 @@ def similarity_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds LSH + truth
     in_slice = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) < F.lit("4")
     lsh = similarity.lsh_topk_int(codes, k=5, prefix_bits=6, dim=64)
-    return _recall_summary(_exact_topk_int(codes.where(in_slice), codes), lsh)
+    truth = similarity.exact_topk_int(codes.where(in_slice), codes)
+    return _recall_summary(truth, lsh)
 
 
 @_register(
@@ -1857,7 +1820,7 @@ def similarity_lsh_multiprobe_recall_report(spark: SparkSession, sf_dir: str) ->
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds probe + truth
     mp = similarity.lsh_multiprobe_topk_int(codes, k=5, prefix_bits=6, dim=64, n_flip=2)
-    return _recall_summary(_exact_topk_int(codes, codes), mp)
+    return _recall_summary(similarity.exact_topk_int(codes, codes), mp)
 
 
 @_register("similarity_ivf_recall_report", _int_recall_oracle(_ivf_cands_sql()))
@@ -1878,13 +1841,14 @@ def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     codes = int8_codes(e).localCheckpoint(eager=False)  # feeds IVF + truth
     ivf = similarity.ivf_topk_int(codes, k=5, n_cells=16, n_probe=2)
-    return _recall_summary(_exact_topk_int(codes, codes), ivf)
+    return _recall_summary(similarity.exact_topk_int(codes, codes), ivf)
 
 
 def _exact_l2_truth_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT squared-L2 top-_PQ_TOPK per probe over the PQ index subset
-    (vec_id < _PQ_N_INDEX) with the family's determinism discipline —
-    the shared ground truth for the IVF-PQ recall reports."""
+    """EXACT squared-L2 top-_PQ_TOPK (vec_id, index_id, rank) per probe
+    over the PQ index subset (vec_id < _PQ_N_INDEX) with the family's
+    determinism discipline — the shared ground truth for the IVF-PQ
+    recall reports."""
     from pyspark.sql.window import Window
 
     from dffoo_data_pipeline_spark.functions.numeric import round_det
@@ -1896,21 +1860,14 @@ def _exact_l2_truth_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = e.where(F.col("vec_id") < EMB._PQ_N_INDEX).select(
         F.col("vec_id").alias("index_id"), emb_d.alias("i_emb")
     )
-    d2 = round_det(
-        F.aggregate(
-            F.zip_with(F.col("q_emb"), F.col("i_emb"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    d2 = round_det(EMB._l2sq("q_emb", "i_emb"), 6)
     w = Window.partitionBy("vec_id").orderBy("d2", "index_id")
     return (
         probes.crossJoin(F.broadcast(cands))
         .select("vec_id", "index_id", d2.alias("d2"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= EMB._PQ_TOPK)
-        .select("vec_id", "index_id")
+        .select("vec_id", "index_id", F.col("rn").alias("rank"))
     )
 
 

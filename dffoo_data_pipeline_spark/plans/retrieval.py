@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from dffoo_data_pipeline_spark.functions import text as TX
 from dffoo_data_pipeline_spark.functions.numeric import round_det
 from dffoo_data_pipeline_spark.operators import dedup
+from dffoo_data_pipeline_spark.operators.similarity import dot
 from dffoo_data_pipeline_spark.sources.readers import load_table
 
 QUERIES: dict = {}
@@ -561,8 +562,8 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column — but exploding a UDF-computed column lets Catalyst infer
     # size(__sh)>0 below the Generate and push it through the
     # projection, re-evaluating the Arrow shingler once more per row
-    # (two stacked ArrowEvalPython per side in the r12 before-plan).
-    # The guide-§4.4 fix: a nondeterministic-marked expression cannot be
+    # (two stacked ArrowEvalPython per side without the marking).
+    # The fix: a nondeterministic-marked expression cannot be
     # duplicated or reordered, so the shingler runs once and the
     # inferred filter stays above it as a cheap size(attr) check.  The
     # function itself is pure; no filters need to push past it (both
@@ -610,12 +611,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("se"),
         F.col("sumsq").alias("ssq"),
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "se", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cs = dot / (F.sqrt("sumsq") * F.sqrt("ssq"))
+    cs = dot("embedding", "se") / (F.sqrt("sumsq") * F.sqrt("ssq"))
     cos = (
         nz.join(F.broadcast(seeds))
         .where(F.col("vec_id") != F.col("seed_id"))

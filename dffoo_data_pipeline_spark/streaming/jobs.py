@@ -1393,10 +1393,8 @@ def streaming_embedding_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact; d·|d| ≤ 1.1e12 < 2⁵³ so the double score divides
     identically in both engines.
     """
-    from dffoo_data_pipeline_spark.plans.embeddings import (
-        _SEM_N_SEEDS,
-        int8_codes,
-    )
+    from dffoo_data_pipeline_spark.operators.similarity import dot
+    from dffoo_data_pipeline_spark.plans.embeddings import _SEM_N_SEEDS, int8_codes
     from dffoo_data_pipeline_spark.sources.readers import load_table
 
     seeds = (
@@ -1406,20 +1404,9 @@ def streaming_embedding_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream_codes = int8_codes(read_embeddings_stream(spark, sf_dir))
 
-    def _intdot_lit(code_col, seed_vec):
-        return F.aggregate(
-            F.zip_with(
-                code_col,
-                F.array(*[F.lit(int(v)).cast("bigint") for v in seed_vec]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
     choices = []
     for s in sorted(seeds, key=lambda r: r.vec_id):
-        d = _intdot_lit(F.col("c"), s.c)
+        d = dot("c", s.c, "bigint")
         score = d.cast("double") * F.abs(d) / F.lit(float(s.n2))
         choices.append(
             F.struct(

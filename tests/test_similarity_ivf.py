@@ -325,7 +325,7 @@ def test_lsh_probe_rejects_foreign_bucket_domain(spark, emb):
 
 
 # (n_queries, n_truth, n_hits, recall) of each oracled recall report,
-# keyed by scale.  The Spark reports share `_exact_topk_int` /
+# keyed by scale.  The Spark reports share `similarity.exact_topk_int` /
 # `_recall_summary` and their DuckDB oracles share one SQL template, so a
 # mistake common to both would still pass the oracle comparison; these
 # numbers pin the measurement itself.

@@ -75,7 +75,7 @@ def test_exact_int_kernel_breaks_boundary_ties_by_id(scorer):
 
     from dffoo_data_pipeline_spark.operators.similarity import (
         _exact_cos_topk_kernel,
-        _float_frame_scores,
+        _float_scores,
         _int_scores,
     )
 
@@ -101,8 +101,8 @@ def test_exact_int_kernel_breaks_boundary_ties_by_id(scorer):
             "is_probe": [False] * len(rows),
         }
     )
-    score = {"int": _int_scores, "float": _float_frame_scores}[scorer]
-    out = _exact_cos_topk_kernel("vec_id", 3, out_schema, score)(pdf)
+    score, vec = {"int": (_int_scores, "c"), "float": (_float_scores, "v")}[scorer]
+    out = _exact_cos_topk_kernel("vec_id", 3, out_schema, score, vec)(pdf)
     got_q1 = out[out["query_id"] == 1]["neighbor_id"].tolist()
     # key ranking for query 1: 6 (dot 1), then the 0-ties {2,3,4,5} ->
     # lowest ids 2, 3 fill the remaining two slots; 7 (dot -1) never
@@ -233,3 +233,133 @@ def test_lsh_probe_asymmetric_contract(spark):
         similarity.lsh_probe_topk_int(qcodes, icodes, indexed=icodes)
     with pytest.raises(ValueError, match="exactly one"):
         similarity.lsh_probe_topk_int(qcodes)
+
+
+# 12 integer codes: 7 is zero-norm, 6 duplicates 5, 9 is 1 scaled (its key
+# against 5 ties 1's), and query 1's third slot is a three-way tie
+# {5, 6, 10} at key 0.5 that must resolve to the lowest id.
+_TRUTH_CODES = {
+    1: [1, 0, 0, 0], 2: [0, 1, 0, 0], 3: [0, 0, 1, 0], 4: [0, 0, 0, 1],
+    5: [1, 1, 0, 0], 6: [1, 1, 0, 0], 7: [0, 0, 0, 0], 8: [-1, 0, 0, 0],
+    9: [2, 0, 0, 0], 10: [1, -1, 0, 0], 11: [3, 1, 2, 0], 12: [0, 2, 0, -1],
+}
+
+
+def _codes_frame(spark, ids):
+    """(vec_id, c, n2, embedding) rows of `_TRUTH_CODES` in scrambled
+    order, all in ONE partition so a broadcast-driver batch holds them
+    all: the extra empty partitions keep `ensure_min_partitions` from
+    spreading the rows out."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("c", T.ArrayType(T.LongType())),
+            T.StructField("n2", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    rows = [
+        (i, c, sum(x * x for x in c), [float(x) for x in c])
+        for i, c in sorted(_TRUTH_CODES.items(), key=lambda kv: (kv[0] * 7) % 13)
+        if i in ids
+    ]
+    pad = spark.sparkContext.defaultParallelism + 1
+    empty = spark.createDataFrame([], schema).repartition(pad)
+    return spark.createDataFrame(rows, schema).coalesce(1).union(empty)
+
+
+def _brute_int_topk(qids, iids, k):
+    """Python twin of the integer truth: key d·|d|/(na2·nb2), self and
+    zero-norm excluded, (key DESC, neighbor_id ASC), first k, as
+    (query_id, neighbor_id, rank) rows."""
+    out = set()
+    for q in qids:
+        a = _TRUTH_CODES[q]
+        na2 = sum(x * x for x in a)
+        if na2 == 0:
+            continue
+        keyed = []
+        for i in iids:
+            b = _TRUTH_CODES[i]
+            nb2 = sum(x * x for x in b)
+            if i == q or nb2 == 0:
+                continue
+            d = sum(x * y for x, y in zip(a, b))
+            keyed.append((-(d * abs(d) / (na2 * nb2)), i))
+        out |= {(q, i, r) for r, (_, i) in enumerate(sorted(keyed)[:k], start=1)}
+    return out
+
+
+def test_exact_int_truth_equals_python_brute_force(spark):
+    """The integer recall truth equals a brute force over a corpus with a
+    k-th-key tie, a zero-norm code and a duplicate, both symmetric and
+    asymmetric (queries not in the index)."""
+    ids = set(_TRUTH_CODES)
+    codes = _codes_frame(spark, ids)
+    got = {tuple(r) for r in similarity.exact_topk_int(codes, codes, k=3).collect()}
+    want = _brute_int_topk(ids, ids, 3)
+    assert got == want
+    assert {(n, r) for q, n, r in want if q == 1} == {(9, 1), (11, 2), (5, 3)}  # tie took 5
+    assert not {p for p in got if 7 in p[:2]}  # zero-norm: no neighbors, nobody's
+    qids = {i for i in ids if i % 3 == 0}
+    queries, index = _codes_frame(spark, qids), _codes_frame(spark, ids - qids)
+    got = {tuple(r) for r in similarity.exact_topk_int(queries, index, k=3).collect()}
+    assert got == _brute_int_topk(qids, ids - qids, 3)
+
+
+def test_broadcast_driver_rows_do_not_depend_on_score_block(spark, monkeypatch):
+    """Scoring an Arrow batch in 2-row blocks returns the rows of the
+    default block, on every broadcast-driver path."""
+    ids = set(_TRUTH_CODES)
+    df = _codes_frame(spark, ids)
+    probe, index = _codes_frame(spark, {1, 5, 9, 12}), _codes_frame(spark, ids - {9})
+    assert max(df.rdd.glom().map(len).collect()) == len(ids)
+
+    def run():
+        outs = (
+            similarity.cosine_topk_bruteforce(df, "vec_id", "embedding", k=3),
+            similarity.cosine_neardup_pairs(df, "vec_id", "embedding", threshold=0.5),
+            similarity.cosine_topk_against_index(probe, index, "vec_id", "embedding", k=3),
+            similarity.exact_topk_int(df, df, k=3),
+        )
+        return [sorted(map(tuple, o.collect())) for o in outs]
+
+    default = run()
+    assert all(default)
+    monkeypatch.setattr(similarity, "_SCORE_BLOCK", 2)
+    assert run() == default
+
+
+def test_dot_matches_python_sums(spark):
+    """`dot` folds left in element order: bigint sums stay exact past 2⁵³
+    and double sums round exactly as Python's left-to-right `sum` does,
+    with the second operand a column or a literal weight vector."""
+    from pyspark.sql import types as T
+
+    a, b = [2**31, 3, -7], [2**31 + 1, 5, 11]
+    x, y = [1e16, 1.0, -1e16, 1.0], [1.0, 1.0, 1.0, 1.0]
+    schema = T.StructType(
+        [
+            T.StructField("a", T.ArrayType(T.LongType())),
+            T.StructField("b", T.ArrayType(T.LongType())),
+            T.StructField("x", T.ArrayType(T.FloatType())),
+            T.StructField("xd", T.ArrayType(T.DoubleType())),
+            T.StructField("y", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    xf = [1.5, -2.25, 3.0, 0.125]
+    df = spark.createDataFrame([(a, b, xf, x, y)], schema)
+    row = df.select(
+        similarity.dot("a", "b", "bigint").alias("ab"),
+        similarity.dot(F.col("a"), b, "bigint").alias("ab_lit"),
+        similarity.dot("xd", "y").alias("xy"),
+        similarity.dot("xd", y).alias("xy_lit"),
+        similarity.dot("x", x).alias("xf_lit"),
+    ).first()
+    want_ab = sum(p * q for p, q in zip(a, b))
+    assert want_ab > 2**53
+    assert row.ab == row.ab_lit == want_ab
+    assert row.xy == row.xy_lit == sum(p * q for p, q in zip(x, y)) == 1.0
+    assert row.xf_lit == sum(p * q for p, q in zip(xf, x))

@@ -2,8 +2,10 @@
 """Isolated per-query timing: warm once, then N noop-sink reps (guide §1.4).
 
 Usage: python tools/time_query.py <query> [reps=4]
-Prints per-rep seconds and the min.  For A/B comparisons run the before
-and after builds back-to-back so host weather cancels.
+Prints, per rep, the plan-construction seconds (building the DataFrame,
+including any eager work it does) and the action seconds (the noop
+write), then the min of each.  For A/B comparisons run the before and
+after builds back-to-back so host weather cancels.
 """
 
 from __future__ import annotations
@@ -29,12 +31,16 @@ def main() -> None:
     queries, _ = all_queries()
     spark.sparkContext.setJobDescription(name)
     queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()  # warm
-    times = []
+    build, act = [], []
     for _ in range(reps):
         t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        times.append(time.perf_counter() - t0)
-    print(name, " ".join(f"{t:.3f}" for t in times), "min", f"{min(times):.3f}")
+        df = queries[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        build.append(t1 - t0)
+        act.append(time.perf_counter() - t1)
+    for label, times in (("construct", build), ("action", act)):
+        print(name, label, " ".join(f"{t:.3f}" for t in times), "min", f"{min(times):.3f}")
 
 
 if __name__ == "__main__":
